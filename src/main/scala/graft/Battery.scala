@@ -512,9 +512,9 @@ object Battery {
         case f: FileSourceScanExec => Seq(f)
         case other => other.children.flatMap(allScans)
       }
-      val priorIsin = s.conf.getOption("spark.graft.pq.isinMaxIds")
+      val priorIsin = s.conf.getOption("spark.graft.index.isinMaxIds")
       try {
-        s.conf.set("spark.graft.pq.isinMaxIds", "1") // force the range branch
+        s.conf.set("spark.graft.index.isinMaxIds", "1") // force the range branch
         val probed = PQ.probePqIndexWith(s, probeFrame, path, 4, 5)
         probed.collect()
         val coldScan = allScans(probed.queryExecution.executedPlan)
@@ -526,8 +526,8 @@ object Battery {
         val scanned = coldScan.map(_.metrics("numOutputRows").value).sum
         println(s"""{"battery":"pqrange","vectors":$n,"probed_cell_rows":$probedCellRows,"range_scan_rows":$scanned,"row_groups_pruned":${scanned < probedCellRows}}""")
       } finally priorIsin match {
-        case Some(v) => s.conf.set("spark.graft.pq.isinMaxIds", v)
-        case None => s.conf.unset("spark.graft.pq.isinMaxIds")
+        case Some(v) => s.conf.set("spark.graft.index.isinMaxIds", v)
+        case None => s.conf.unset("spark.graft.index.isinMaxIds")
       }
 
       // Production-class sizing: M=8 x K=256 byte codes — the round-15
@@ -878,7 +878,7 @@ object Battery {
       val (top, pSec) = timed(SQ8.probeSq8Index(s, root, path, 5)
         .select("qid", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))))
       val (_, aSec) = timed(SQ8.appendToSq8Index(s, appendVecs, path))
-      val (_, rSec) = timed(SQ8.rebalanceSq8Index(s, path))
+      val (_, rSec) = timed(SQ8.rebalance(s, path))
       println(f"""{"battery":"ladder","rung":"sq8","vectors":$n,"build_sec":$bSec%.1f,"probe_sec":$pSec%.1f,"append_sec":$aSec%.1f,"rebalance_sec":$rSec%.1f,"rank_bytes":$codesBytes,"cold_bytes":$vecBytes,"bytes_ratio":${vecBytes.toDouble / codesBytes}%.1f,"recall_at5":"${recall(top, exact)}/${exact.length}"}""")
     }
     // Binary (1-bit signature) rung.
@@ -890,7 +890,7 @@ object Battery {
       val (top, pSec) = timed(BinarySig.probeBinIndex(s, root, path, 5)
         .select("qid", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))))
       val (_, aSec) = timed(BinarySig.appendToBinIndex(s, appendVecs, path))
-      val (_, rSec) = timed(BinarySig.rebalanceBinIndex(s, path))
+      val (_, rSec) = timed(BinarySig.rebalance(s, path))
       println(f"""{"battery":"ladder","rung":"binary","vectors":$n,"build_sec":$bSec%.1f,"probe_sec":$pSec%.1f,"append_sec":$aSec%.1f,"rebalance_sec":$rSec%.1f,"rank_bytes":$codesBytes,"cold_bytes":$vecBytes,"bytes_ratio":${vecBytes.toDouble / codesBytes}%.1f,"recall_at5":"${recall(top, exact)}/${exact.length}"}""")
     }
     // IVF + SQ8 composed rung (round-15 verdict task 2): the route
@@ -1039,7 +1039,7 @@ object Battery {
       Tables.embeddings(s, root).filter(col("vec_id") < 10)
         .select("vec_id", "embedding"),
       path, 4, 5, allowed = Some(allowed)).collect())
-    val (_, dSec) = timed(IvfSq8.deleteFromIvfSq8Index(s,
+    val (_, dSec) = timed(IvfSq8.delete(s,
       Tables.embeddings(s, root).filter(col("vec_id") % 10 === 4).select("vec_id"),
       path))
     val (tombRows, tombSec) = probe()
@@ -1051,7 +1051,7 @@ object Battery {
       go(new java.io.File(p.stripPrefix("file:")))
     }
     val delBytes = lb(s"$r0/deletes")
-    val (_, rSec) = timed(IvfSq8.rebalanceIvfSq8Index(s, path))
+    val (_, rSec) = timed(IvfSq8.rebalance(s, path))
     val (_, warm2) = probe() // fresh version: codegen/listing warm-up again
     val (cleanRows2, clean2Sec) = probe()
     println(f"""{"battery":"tombstone","vectors":$n,"cells":$nCells,"build_sec":$bSec%.1f,"probe_clean_sec":$cleanSec%.2f,"probe_filtered_sec":$filtSec%.2f,"delete_sec":$dSec%.1f,"probe_tombstoned_sec":$tombSec%.2f,"deletes_bytes":$delBytes,"reclaim_sec":$rSec%.1f,"probe_reclaimed_sec":$clean2Sec%.2f,"rows":"${cleanRows.length}/${filtRows.length}/${tombRows.length}/${cleanRows2.length}","warm":"$warm%.2f/$warm2%.2f"}""")
@@ -1197,7 +1197,7 @@ object Battery {
   /** The END-TO-END index lifecycle at scale (round-14 verdict task 8
     * — the 4M evidence covered build + serve only): build(n) ->
     * drift-shaped append(+n/10, all near one direction) -> the
-    * measured trigger drops the due marker -> maintainPqIndex runs the
+    * measured trigger drops the due marker -> PQ.maintain runs the
     * deferred rebalance -> serve curve, with walls per stage and
     * recall before/after the rebalance (vs the exact scan over the
     * GROWN lake, so the drift rows count). */
@@ -1232,7 +1232,7 @@ object Battery {
     val (_, aSec) = timed(PQ.appendToPqIndex(s, drift, path, autoRebalance = Some(4)))
     val due = operators.IndexSwap.fsOf(s, path)
       .exists(new org.apache.hadoop.fs.Path(s"$path/_rebalance_due"))
-    val (ran, mSec) = timed(PQ.maintainPqIndex(s, path))
+    val (ran, mSec) = timed(PQ.maintain(s, path))
     val cellsAfter = operators.Similarity.ivfCellStats(s, path).size
     // Exact ground truth over the GROWN lake (original + drift).
     val grown = Tables.embeddings(s, root)

@@ -32,32 +32,32 @@ import org.apache.spark.sql.functions._
   * Unlike SQ8/PQ the encoder is PARAMETER-FREE (sign of each dim), so
   * there is no frozen-envelope side and appends can never saturate:
   * [[appendToBinIndex]] is O(new) with bit-identical encoding to the
-  * build, and [[rebalanceBinIndex]] exists for COMPACTION (re-sort +
+  * build, and [[rebalance]] exists for COMPACTION (re-sort +
   * re-write both tiers from the grown cold lake under the crash-safe
   * swap — appends fragment the sorted point-read layout) and is a
   * deterministic fixpoint (BinarySigSpec). The compaction cadence is
   * MEASURED, not caller discipline (round-15 verdict task 5):
   * `appendToBinIndex(autoCompact = Some(maxFiles))` audits the codes
   * side's file count after the append and defers a compaction through
-  * the `_rebalance_due` marker [[maintainBinIndex]] consumes — the
+  * the `_rebalance_due` marker [[maintain]] consumes — the
   * PQ/IVF fire-and-defer pattern, with file fragmentation standing in
   * for drift as the metric this rung actually accumulates. A fresh build probed
   * through [[probeBinIndex]] replays the qn34 oracle bit-exactly (the
   * qn34b driver gate): same signature fold, same 16-wide Hamming
   * shortlist, same exact cosine re-rank.
   */
-object BinarySig {
+object BinarySig extends IndexRung {
 
   /** The index's swappable sides (the [[IndexSwap]] protocol). */
-  private val binSides = Seq("codes", "vectors")
+  val sides: Seq[String] = Seq("codes", "vectors")
+
+  /** Live rows: the codes side's footer count. */
+  protected def liveRows(s: SparkSession, root: String): Long =
+    Similarity.parquetRowCount(s, IndexSwap.sideAt(root, "codes"))
 
   /** Hamming shortlist width the exact refine re-ranks (the qn34
     * contract). */
   private val shortlistWidth = 16
-
-  /** [[SQ8]]'s isin dispatch, sig edition. */
-  private def isinMaxIds(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.bin.isinMaxIds").map(_.toInt).getOrElse(10000)
 
   /** Sign-bit signature over a 64-dim float `embedding`: bit d set iff
     * dim d > 0, folded into one long. Bit 63 wraps to Long.MinValue
@@ -146,11 +146,11 @@ object BinarySig {
     * both sides, same atomic commit. */
   def buildBinIndexFrom(s: SparkSession, corpus: DataFrame, path: String,
       dim: Int): Unit = {
-    recoverBinRebalance(s, path)
+    recover(s, path)
     val v = corpus.select(col("vec_id"), col("embedding"),
       l2normNative(col("embedding")).as("nrm"))
     stageSides(path, v, dim)
-    IndexSwap.commit(s, path, binSides)
+    IndexSwap.commit(s, path, sides)
   }
 
   /** The stored corpus dimensionality, from one cold-side row (the
@@ -168,7 +168,7 @@ object BinarySig {
     * then silently dropped by the refine join). */
   def appendToBinIndex(s: SparkSession, newVecs: DataFrame, path: String,
       autoCompact: Option[Int] = None): Unit = {
-    recoverBinRebalance(s, path)
+    recover(s, path)
     // ONE version resolution for both side writes (round-15 ADVICE): a
     // rebalance committing between them would otherwise split the
     // append across versions — cold rows into the retiring version
@@ -191,38 +191,13 @@ object BinarySig {
     // whole-side listing+open per probe. The metric is the CODES
     // side's data-file count (a driver-side listing, O(files), no
     // Spark job); past `maxFiles` the append drops the due marker and
-    // returns at append cost — [[maintainBinIndex]] runs the
+    // returns at append cost — [[maintain]] runs the
     // compaction on the maintenance cadence.
     autoCompact.foreach { maxFiles =>
       val files = graft.sources.LakeListing.dataFiles(
         s.sessionState.newHadoopConf(),
         new org.apache.hadoop.fs.Path(IndexSwap.sideAt(root, "codes"))).size
-      if (files > maxFiles) {
-        val fs = IndexSwap.fsOf(s, path)
-        fs.create(rebalanceDue(path), true).close()
-      }
-    }
-  }
-
-  /** The deferred-compaction marker [[appendToBinIndex]]'s trigger
-    * drops and [[maintainBinIndex]] consumes. */
-  private def rebalanceDue(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$path/_rebalance_due")
-
-  /** The maintenance entry point (the [[PQ.maintainPqIndex]] contract):
-    * heal any interrupted swap, then run the compaction a deferred
-    * trigger requested. The due marker is deleted only AFTER the swap
-    * commits — a crash between commit and delete re-runs the
-    * compaction, which is a deterministic fixpoint over the same lake
-    * (BinarySigSpec). Returns whether a compaction ran. */
-  def maintainBinIndex(s: SparkSession, path: String): Boolean = {
-    recoverBinRebalance(s, path)
-    val fs = IndexSwap.fsOf(s, path)
-    if (!fs.exists(rebalanceDue(path))) false
-    else {
-      rebalanceBinIndex(s, path)
-      fs.delete(rebalanceDue(path), false): Unit
-      true
+      if (files > maxFiles) markRebalanceDue(s, path)
     }
   }
 
@@ -231,8 +206,8 @@ object BinarySig {
     * the signatures themselves never drift because the encoder is
     * parameter-free, so this is a deterministic fixpoint). Crash-safe
     * under the [[IndexSwap]] two-phase swap. */
-  def rebalanceBinIndex(s: SparkSession, path: String): Unit = {
-    recoverBinRebalance(s, path)
+  def rebalance(s: SparkSession, path: String): Unit = {
+    recover(s, path)
     val root = IndexSwap.liveRoot(s, path)
     val dim = storedDim(s, root)
     // Tombstones reclaim physically here (the fresh version dir
@@ -241,37 +216,13 @@ object BinarySig {
       s.read.parquet(IndexSwap.sideAt(root, "vectors"))
         .select(col("vec_id"), col("embedding"), col("nrm")))
     stageSides(path, v, dim)
-    IndexSwap.commit(s, path, binSides)
+    IndexSwap.commit(s, path, sides)
   }
 
-  /** DELETE vectors from the index (round 17 — the
-    * [[graft.operators.IvfSq8]] tombstone semantics at the 1-bit
-    * rung): O(deleted) tombstone append, rank-stage anti-join makes
-    * exclusion immediate, physical reclaim is [[rebalanceBinIndex]]'s
-    * version swap. `autoRebalance = Some(rate)` defers a reclaim via
-    * the `_rebalance_due` marker once tombstones/live exceeds the
-    * rate. vec_ids are permanent identities: re-appending a tombstoned
-    * id is a caller error. */
+  /** [[delete]] under the name existing callers use. */
   def deleteFromBinIndex(s: SparkSession, ids: DataFrame, path: String,
-      autoRebalance: Option[Double] = None): Unit = {
-    recoverBinRebalance(s, path)
-    val root = IndexSwap.liveRoot(s, path)
-    IndexSwap.appendTombstones(root, ids)
-    autoRebalance.foreach { maxRate =>
-      // Footer-walk count (zero Spark jobs) — a .count() scan here
-      // would make the documented O(deleted) delete pay O(N) per call.
-      val live = Similarity.parquetRowCount(s, IndexSwap.sideAt(root, "codes"))
-      val dead = IndexSwap.tombstonesAt(s, root).map(_.count()).getOrElse(0L)
-      if (IndexSwap.tombstoneReclaimDue(s, live, dead, maxRate)) {
-        val fs = IndexSwap.fsOf(s, path)
-        fs.create(rebalanceDue(path), true).close()
-      }
-    }
-  }
-
-  /** Heal an interrupted swap (both polarities). */
-  def recoverBinRebalance(s: SparkSession, path: String): Unit =
-    IndexSwap.recover(s, path, binSides)
+      autoRebalance: Option[Double] = None): Unit =
+    delete(s, ids, path, autoRebalance)
 
   /** Probe with the declared fixture probe set (vec_id < 10) — the
     * qn34b driver gate's entry. */
@@ -305,16 +256,7 @@ object BinarySig {
   private def probeBinResolved(s: SparkSession, probes: DataFrame,
       root: String, k: Int, allowed: Option[DataFrame],
       form: Option[(Boolean, Int)]): DataFrame = {
-    val probesRaw = probes.select(col("vec_id"), col("embedding"),
-      l2normNative(col("embedding")).as("nrm"))
-    val probeRows = probesRaw.limit(PQ.maxProbeBatch + 1).collect()
-    require(probeRows.length <= PQ.maxProbeBatch,
-      s"probeBinIndexWith: probe batch exceeds ${PQ.maxProbeBatch} rows — the " +
-        "shortlist collect is bounded at probes x 16 <= 1e6; signature probing " +
-        "is for probe BATCHES; a corpus-sized probe set should rank through a " +
-        "cell-assigned equi-join (the qn20 shape)")
-    val probesV = s.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesRaw.schema)
+    val (_, probesV) = IndexSwap.localProbes(s, probes, "probeBinIndexWith")
     // The stored signature form decides the rank loop: LongType is the
     // 64-dim one-long format (xor + bit_count — two ALU ops); an
     // array<long> is the dim-parameterized multi-word format, ranked
@@ -357,26 +299,9 @@ object BinarySig {
     // Manifest-class shortlist (probes x 16, hard-bounded above) ->
     // vec_id pushdown against the sorted 1 MB-row-group cold layout
     // (the SQ8/PQ point-read discipline).
-    val slRows = sl.collect()
-    val slIds = slRows.map(_.getLong(1)).distinct.toSeq
-    val localSl = s.createDataFrame(java.util.Arrays.asList(slRows: _*), sl.schema)
-    val slPush =
-      if (slIds.isEmpty) lit(false)
-      else if (slIds.length <= isinMaxIds(s)) col("vec_id").isin(slIds: _*)
-      else col("vec_id").between(slIds.min, slIds.max)
-    val cold = s.read.parquet(IndexSwap.sideAt(root, "vectors")).filter(slPush)
-      .select(col("vec_id"), col("embedding").as("de"), col("nrm").as("dn"))
-    val refScore = e6(cosine(
-      graft.functions.VectorExprs.dotNative(col("qe"), col("de")), col("qn"), col("dn")))
-    val wRef = Window.partitionBy(col("qid")).orderBy(col("score_e6").desc, col("vec_id").asc)
-    broadcast(localSl).join(broadcast(probesV.select(col("vec_id").as("qid"),
-        col("embedding").as("qe"), col("nrm").as("qn"))), Seq("qid"))
-      .join(cold, Seq("vec_id"))
-      .select(col("qid"), col("vec_id"), col("hamming"), refScore.as("score_e6"))
-      .withColumn("rnk", row_number().over(wRef)).filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk").cast("long").as("rnk"), col("vec_id"),
-        col("hamming"), col("score_e6"))
-      .orderBy("qid", "rnk")
+    IndexSwap.exactRefine(s, sl, probesV, k, Seq("hamming")) { (push, _) =>
+      s.read.parquet(IndexSwap.sideAt(root, "vectors")).filter(push)
+    }
   }
 
   /** Serve-session handle for the binary rung — the
@@ -404,15 +329,11 @@ object BinarySig {
     }
   }
 
-  /** DESCRIBE the live index — the [[IndexSwap.describeIndex]] verb. */
-  def describeBinIndex(s: SparkSession, path: String): DataFrame =
-    IndexSwap.describeIndex(s, path, binSides)
-
   /** Open a serve-session handle: resolve the version once, read the
     * stored signature form once. */
   def openBinIndex(s: SparkSession, path: String): BinIndexHandle = {
     val version = IndexSwap.liveVersion(s, path)
-    val root = if (version == 0L) path else s"$path/v$version"
+    val root = IndexSwap.rootAt(path, version)
     val mw = s.read.parquet(IndexSwap.sideAt(root, "codes"))
       .schema("sig").dataType != org.apache.spark.sql.types.LongType
     BinIndexHandle(path, version, root, mw, if (mw) storedDim(s, root) else 64)

@@ -335,6 +335,15 @@ object Dedup {
     (ranked.withColumn("gpos", offCol + col("lr")).drop("pid", "lr"), total)
   }
 
+  /** The driver-rank arm's vocab order: (df asc, tok asc) with tokens
+    * compared as Spark compares strings — by UTF-8 bytes, i.e. code
+    * points — so the driver and [[globalRanks]] assign the same dense
+    * ids even where UTF-16 order disagrees (supplementary characters
+    * sort before U+E000..U+FFFF in UTF-16, after them in code points). */
+  private[graft] def driverRank(vocab: Seq[(String, Long)]): Seq[(String, Long)] =
+    vocab.sortBy { case (tok, df) =>
+      (df, org.apache.spark.unsafe.types.UTF8String.fromString(tok)) }
+
   private def jaccardPairs(t: DataFrame, p: Int, q: Int,
       tag: String = "tokenset"): DataFrame = {
     // Materialization barrier. The token-set expression is referenced by
@@ -378,8 +387,7 @@ object Dedup {
     val smallVocab = rankCap > 0 && vocabHead.length <= rankCap
     val (vocab, vocabN, occUpperThunk) =
       if (smallVocab) {
-        val ranksD = vocabHead.map(r => (r.getString(0), r.getLong(1)))
-          .sortBy { case (tok, df) => (df, tok) }
+        val ranksD = driverRank(vocabHead.map(r => (r.getString(0), r.getLong(1))).toSeq)
         // Driver-side df upper bound, BigInt-clamped like occLower.
         val up = {
           val b = ranksD.iterator.map { case (_, df) => BigInt(df) * (df - 1) }.sum / 2
@@ -393,7 +401,7 @@ object Dedup {
             org.apache.spark.sql.types.StringType, false),
           org.apache.spark.sql.types.StructField("tid",
             org.apache.spark.sql.types.IntegerType, false))))
-        (broadcast(lv), ranksD.length.toLong, () => up)
+        (sized(s, lv, ranksD.length.toLong), ranksD.length.toLong, () => up)
       } else {
         val (ranked, n) = globalRanks(dfreq, col("df"), col("tok"))
         // ~64 B/row budget: vocab rows carry the token STRING (3-word

@@ -1,13 +1,19 @@
 package graft.operators
 
+import graft.functions.TextFns.{cosine, e6}
+import graft.functions.VectorExprs.{dotNative, l2normNative}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 /** VERSIONED-DIRECTORY index commit — the crash-safe AND reader-safe
-  * rebuild protocol shared by every persisted index
-  * ([[PQ.buildPqIndex]]/[[PQ.rebalancePqIndex]],
-  * [[Similarity.buildIvfIndex]]/[[Similarity.rebalanceIvfIndex]],
-  * [[SQ8]], [[BinarySig]]).
+  * rebuild protocol shared by every persisted index rung: IVF
+  * ([[Similarity]]), [[SQ8]], [[IvfSq8]], [[PQ]], [[BinarySig]],
+  * [[Matryoshka]] and [[TextIndex]]. Each rung is an [[IndexRung]]:
+  * it declares its sides, its rebalance and its live row count, and
+  * the trait owns the lifecycle verbs (recover, describe, delete,
+  * maintain) written once against this protocol.
   *
   * Round-14 verdict: the previous marker+rename protocol was crash-safe
   * but had a CONCURRENT-READER window — between `rename(live, old)` and
@@ -134,23 +140,34 @@ private[graft] object IndexSwap {
     * same overlap fills straggler gaps (FIFO scheduling gives the
     * earlier job priority). The atomic-rename commit still happens
     * strictly AFTER every staged side returns — callers invoke this
-    * BEFORE [[commit]], so the crash-window story is unchanged: a
-    * failure here rethrows (first error wins) and leaves only staging
-    * debris the recover path already clears. */
+    * BEFORE [[commit]], so the crash-window story is unchanged.
+    *
+    * Failure: every side is waited for BEFORE the first error (in side
+    * order; later ones ride along as suppressed) rethrows, so no
+    * staging write outlives the call — a surviving side still writing
+    * into `.stage` would race an immediate retry's
+    * [[IndexRung.recover]]. The debris a failed call leaves is what the
+    * next recover drops. */
   def stageConcurrently(tasks: Seq[() => Unit]): Unit =
     if (tasks.size <= 1) tasks.foreach(_())
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(tasks.size, 4))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
       try {
-        val all = scala.concurrent.Future.sequence(
-          tasks.map(t => scala.concurrent.Future(t())))
-        scala.concurrent.Await.result(all, scala.concurrent.duration.Duration.Inf): Unit
-      } finally { pool.shutdownNow(): Unit }
+        val futures = tasks.map(t => pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = t()
+        }))
+        val errors = futures.flatMap { f =>
+          try { f.get(); None }
+          catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+        }
+        errors.headOption.foreach { first =>
+          errors.tail.foreach(first.addSuppressed)
+          throw first
+        }
+      } finally { pool.shutdown() }
     }
 
-  private def stageRoot(path: String): Path = new Path(s"$path/.stage")
+  private[operators] def stageRoot(path: String): Path = new Path(s"$path/.stage")
 
   private val VerRe = "^v([0-9]+)$".r
 
@@ -176,10 +193,13 @@ private[graft] object IndexSwap {
     * `$path/v{N}` for a versioned index, `$path` itself for a legacy
     * unversioned layout (version 0) — so pre-versioned indexes keep
     * serving unchanged. */
-  def liveRoot(s: SparkSession, path: String): String = {
-    val n = liveVersion(s, path)
-    if (n == 0L) path else s"$path/v$n"
-  }
+  def liveRoot(s: SparkSession, path: String): String =
+    rootAt(path, liveVersion(s, path))
+
+  /** The root of committed version `version` (0 = the legacy layout at
+    * `path` itself) — the pin every serve handle opens against. */
+  def rootAt(path: String, version: Long): String =
+    if (version == 0L) path else s"$path/v$version"
 
   /** Resolved directory of one side of the live version. ONE version
     * resolution per call — a multi-side reader or appender must NOT
@@ -241,14 +261,6 @@ private[graft] object IndexSwap {
     }
   }
 
-  /** Heal an interrupted rebuild: drop any partial stage (the one
-    * crash state with residue — the live version was never touched;
-    * a crash after the commit rename needs nothing). */
-  def recover(s: SparkSession, path: String, sides: Seq[String]): Unit = {
-    val fs = fsOf(s, path)
-    if (fs.exists(stageRoot(path))) fs.delete(stageRoot(path), true): Unit
-  }
-
   /** The serve-handle staleness step every rung's handle shares: ONE
     * liveVersion re-check (a LIST) per call; when a rebuild has
     * committed since, re-open through `reopen` and CACHE the fresh
@@ -288,5 +300,178 @@ private[graft] object IndexSwap {
       org.apache.spark.sql.types.StructField("n_rows",
         org.apache.spark.sql.types.LongType, false)))
     s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  // ---- probe plumbing every shortlist rung shares ----
+
+  /** Materialize a probe batch ONCE as a local relation (vec_id,
+    * embedding, nrm) plus its rows: every later stage of a probe runs
+    * its own action, and a lazy probe frame would re-scan its source
+    * per action. The collect is LIMIT-bounded before it runs — past
+    * [[PQ.maxProbeBatch]] rows the shortlist collect could pass 1e6
+    * rows, so `entry` fails loudly instead of OOMing the driver. */
+  def localProbes(s: SparkSession, probes: DataFrame,
+      entry: String): (Array[Row], DataFrame) = {
+    val raw = probes.select(col("vec_id"), col("embedding"),
+      l2normNative(col("embedding")).as("nrm"))
+    val rows = raw.limit(PQ.maxProbeBatch + 1).collect()
+    require(rows.length <= PQ.maxProbeBatch,
+      s"$entry: probe batch exceeds ${PQ.maxProbeBatch} rows — the shortlist " +
+        "collect is bounded at 1e6 rows; index probing is for probe BATCHES, and " +
+        "a corpus-sized probe set should assign both sides to cells and " +
+        "equi-join on cent_id (the qn20 shape)")
+    (rows, s.createDataFrame(java.util.Arrays.asList(rows: _*), raw.schema))
+  }
+
+  /** Max distinct ids inlined as a literal `vec_id IN (...)` on a cold
+    * point-read (exact row-group + page pruning via the parquet IN
+    * pushdown). Above it the pushdown degrades to `BETWEEN(min, max)` —
+    * a 1e6-literal IN is itself a driver-memory and plan-analysis
+    * hazard; exactness rides the join after the read either way. One
+    * bound for every rung (`spark.graft.index.isinMaxIds`, default
+    * 10000) — conf-overridable so specs and the battery can force the
+    * range branch at fixture size. */
+  def isinMaxIds(s: SparkSession): Int =
+    s.conf.getOption("spark.graft.index.isinMaxIds").map(_.toInt).getOrElse(10000)
+
+  /** The vec_id pushdown for a collected id set: nothing, the exact IN
+    * list up to [[isinMaxIds]], the BETWEEN range above it. */
+  def idPush(s: SparkSession, ids: Seq[Long]): Column =
+    if (ids.isEmpty) lit(false)
+    else if (ids.length <= isinMaxIds(s)) col("vec_id").isin(ids: _*)
+    else col("vec_id").between(ids.min, ids.max)
+
+  /** The two-temperature tail of every shortlist rung: collect the
+    * manifest-class shortlist `sl` (qid, vec_id, extra...) — bounded by
+    * the callers' probe-batch limit — push its ids into the cold read
+    * `coldRead(push, shortlistRows)` (a (vec_id, embedding, nrm) frame;
+    * the rows let a cell-partitioned rung scope the listing), re-rank by
+    * exact e6 cosine against the local probes `probesV` (vec_id,
+    * embedding, nrm) and keep rank <= k per probe. Output: (qid, rnk,
+    * vec_id, extra..., score_e6) ordered by (qid, rnk); ties break by
+    * vec_id asc, the oracle rule. */
+  def exactRefine(s: SparkSession, sl: DataFrame, probesV: DataFrame, k: Int,
+      extra: Seq[String] = Nil)(coldRead: (Column, Array[Row]) => DataFrame): DataFrame = {
+    val slRows = sl.collect()
+    val localSl = s.createDataFrame(java.util.Arrays.asList(slRows: _*), sl.schema)
+    val cold = coldRead(idPush(s, slRows.map(_.getAs[Long]("vec_id")).distinct.toSeq), slRows)
+      .select(col("vec_id"), col("embedding").as("de"), col("nrm").as("dn"))
+    val refScore = e6(cosine(dotNative(col("qe"), col("de")), col("qn"), col("dn")))
+    val wRef = Window.partitionBy(col("qid")).orderBy(col("score_e6").desc, col("vec_id").asc)
+    val extraCols = extra.map(col)
+    broadcast(localSl.select((col("qid") +: col("vec_id") +: extraCols): _*))
+      .join(broadcast(probesV.select(col("vec_id").as("qid"),
+        col("embedding").as("qe"), col("nrm").as("qn"))), Seq("qid"))
+      .join(cold, Seq("vec_id"))
+      .select((col("qid") +: col("vec_id") +: extraCols :+ refScore.as("score_e6")): _*)
+      .withColumn("rnk", row_number().over(wRef)).filter(col("rnk") <= k)
+      .select((col("qid") +: col("rnk").cast("long").as("rnk") +: col("vec_id") +:
+        extraCols :+ col("score_e6")): _*)
+      .orderBy("qid", "rnk")
+  }
+}
+
+/** One persisted index rung's lifecycle, written once. A rung supplies
+  * its committed [[sides]], its [[rebalance]] (rebuild every side from
+  * the live version's own cold lake minus tombstones, staged and
+  * committed through [[IndexSwap.commit]]) and its [[liveRows]] footer
+  * count; the trait owns the verbs every rung shares:
+  *
+  *  - [[recover]] heals an interrupted rebuild;
+  *  - [[describe]] is the zero-job DESCRIBE ([[IndexSwap.describeIndex]]);
+  *  - [[delete]] tombstones ids, with an optional reclaim audit;
+  *  - [[maintain]] runs the rebalance a deferred trigger requested.
+  *
+  * Deferred triggers (an append's drift/fragmentation audit, a delete's
+  * tombstone audit) drop the `_rebalance_due` marker at the index root
+  * through [[markRebalanceDue]] and return at their own cost;
+  * [[maintain]] consumes it on the maintenance cadence. */
+trait IndexRung {
+
+  /** The sides every committed version carries (the [[IndexSwap.commit]]
+    * list). */
+  def sides: Seq[String]
+
+  /** Rebuild every side from the live version's cold lake minus its
+    * tombstones — the drift/compaction/reclaim answer, crash-safe under
+    * the staged swap and a deterministic fixpoint over the same lake. */
+  def rebalance(s: SparkSession, path: String): Unit
+
+  /** Live row count of a PINNED version root, from parquet footers —
+    * zero Spark jobs, so the delete audit stays O(deleted). */
+  protected def liveRows(s: SparkSession, root: String): Long
+
+  /** The id column [[delete]] reads its tombstones from. */
+  protected def idCol: String = "vec_id"
+
+  /** Heal an interrupted rebuild: drop any partial stage — the one
+    * crash state with residue (the live version is never touched
+    * before the atomic rename, and after it nothing is left to do). */
+  def recover(s: SparkSession, path: String): Unit = {
+    val fs = IndexSwap.fsOf(s, path)
+    if (fs.exists(IndexSwap.stageRoot(path))) fs.delete(IndexSwap.stageRoot(path), true): Unit
+  }
+
+  /** DESCRIBE the live version: (side, n_rows) per present side, plus
+    * `deletes` once tombstones exist. */
+  def describe(s: SparkSession, path: String): DataFrame =
+    IndexSwap.describeIndex(s, path, sides)
+
+  /** DELETE ids from the index — the verb a takedown or a dedup
+    * retraction needs. Logical-then-physical:
+    *
+    *  - the delete itself is O(deleted): the ids append to the optional
+    *    `deletes` side under the pinned version root, and every probe
+    *    anti-joins its rank stage against it, so a deleted row can
+    *    neither surface nor crowd a live row out of a shortlist
+    *    (effective immediately, no rewrite of any side);
+    *  - physical reclaim is [[rebalance]]'s version swap: the fresh
+    *    version dir has no `deletes` side.
+    *
+    * `autoRebalance = Some(rate)` makes the reclaim cadence MEASURED
+    * ([[IndexSwap.tombstoneReclaimDue]]): past tombstones/live > rate
+    * or the absolute `spark.graft.index.maxTombstones` cap,
+    * [[onReclaimDue]] runs — by default it drops the deferred marker
+    * [[maintain]] consumes. Ids are permanent identities: re-appending
+    * a tombstoned id is a caller error (the tombstone keeps winning
+    * until a rebuild, after which the id is gone — never resurrected);
+    * deleting an id the index never held is a harmless no-op
+    * tombstone. */
+  def delete(s: SparkSession, ids: DataFrame, path: String,
+      autoRebalance: Option[Double] = None): Unit = {
+    recover(s, path)
+    val root = IndexSwap.liveRoot(s, path)
+    IndexSwap.appendTombstones(root, ids.select(col(idCol).as("vec_id")))
+    autoRebalance.foreach { maxRate =>
+      val dead = IndexSwap.tombstonesAt(s, root).map(_.count()).getOrElse(0L)
+      if (IndexSwap.tombstoneReclaimDue(s, liveRows(s, root), dead, maxRate))
+        onReclaimDue(s, path)
+    }
+  }
+
+  /** What a due tombstone reclaim does: defer it to [[maintain]]. */
+  protected def onReclaimDue(s: SparkSession, path: String): Unit =
+    markRebalanceDue(s, path)
+
+  private def rebalanceDue(path: String): Path = new Path(s"$path/_rebalance_due")
+
+  /** Drop the deferred-rebalance marker [[maintain]] consumes. */
+  protected def markRebalanceDue(s: SparkSession, path: String): Unit =
+    IndexSwap.fsOf(s, path).create(rebalanceDue(path), true).close()
+
+  /** The maintenance entry point: heal any interrupted swap, then run
+    * the rebalance a deferred trigger requested. The marker is deleted
+    * only AFTER the swap commits — a crash between commit and delete
+    * re-runs the rebalance, a deterministic fixpoint over the same
+    * lake. Returns whether a rebalance ran. */
+  def maintain(s: SparkSession, path: String): Boolean = {
+    recover(s, path)
+    val fs = IndexSwap.fsOf(s, path)
+    if (!fs.exists(rebalanceDue(path))) false
+    else {
+      rebalance(s, path)
+      fs.delete(rebalanceDue(path), false): Unit
+      true
+    }
   }
 }

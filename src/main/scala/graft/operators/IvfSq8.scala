@@ -42,10 +42,14 @@ import org.apache.spark.sql.functions._
   * affine byte map with `(a - a%b)/b` flooring), so the qn45 driver
   * gate replays the whole route+rank+refine chain in DuckDB.
   */
-object IvfSq8 {
+object IvfSq8 extends IndexRung {
 
   /** The index's swappable sides (the [[IndexSwap]] protocol). */
-  private val sides = Seq("centroids", "stats", "codes", "vectors")
+  val sides: Seq[String] = Seq("centroids", "stats", "codes", "vectors")
+
+  /** Live rows: the vector lake's per-cell footer counts. */
+  protected def liveRows(s: SparkSession, root: String): Long =
+    Similarity.ivfCellStatsAt(s, root).values.sum
 
   /** In-cell byte-distance shortlist width the exact refine re-ranks
     * (the qn38 contract carried over). */
@@ -63,7 +67,7 @@ object IvfSq8 {
     * dim-parameterized discipline — nothing here is 64-pinned). */
   def buildIvfSq8IndexFrom(s: SparkSession, corpus: DataFrame, nCentroids: Int,
       path: String): Unit = {
-    recoverIvfSq8Rebalance(s, path)
+    recover(s, path)
     val v = corpus.select(col("vec_id"), col("embedding"),
       l2normNative(col("embedding")).as("nrm"))
     val cents = Similarity.ivfCents(v, nCentroids)
@@ -117,11 +121,6 @@ object IvfSq8 {
     IndexSwap.commit(s, path, sides)
   }
 
-  /** Heal an interrupted build/rebuild (the one crash polarity of the
-    * versioned protocol). */
-  def recoverIvfSq8Rebalance(s: SparkSession, path: String): Unit =
-    IndexSwap.recover(s, path, sides)
-
   /** Assign NEW vectors against the STORED centroids, encode against
     * the STORED envelope (clamped — the SQ8 append saturation rule),
     * and append to both cell-partitioned tiers: O(new) work, no
@@ -138,13 +137,13 @@ object IvfSq8 {
     * vector lake's parquet FOOTERS (driver metadata — O(files), no
     * Spark job), and if the hottest cell holds more than k x the mean
     * over the declared cell count, the `_rebalance_due` marker drops —
-    * the append itself stays O(new), and [[maintainIvfSq8Index]] runs
+    * the append itself stays O(new), and [[maintain]] runs
     * the rebuild on the maintenance cadence. A drifting stream
     * otherwise concentrates appends into a few stale cells, and every
     * probe routed there degrades toward a linear scan of the drift. */
   def appendToIvfSq8Index(s: SparkSession, newVecs: DataFrame, path: String,
       autoRebalance: Option[Int] = None): Unit = {
-    recoverIvfSq8Rebalance(s, path)
+    recover(s, path)
     val root = IndexSwap.liveRoot(s, path)
     val cents = s.read.parquet(IndexSwap.sideAt(root, "centroids"))
     val (mna, spa) = SQ8.collectStats(
@@ -168,82 +167,19 @@ object IvfSq8 {
       val stats = Similarity.ivfCellStatsAt(s, root)
       if (stats.nonEmpty) {
         val mean = math.max(1.0, stats.values.sum.toDouble / math.max(1L, nCells))
-        if (stats.values.max > k * mean) {
-          val fs = IndexSwap.fsOf(s, path)
-          fs.create(rebalanceDue(path), true).close()
-        }
+        if (stats.values.max > k * mean) markRebalanceDue(s, path)
       }
     }
   }
 
-  /** The deferred-rebalance marker [[appendToIvfSq8Index]]'s trigger
-    * drops and [[maintainIvfSq8Index]] consumes. */
-  private def rebalanceDue(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$path/_rebalance_due")
-
-  /** DELETE vectors from the index — the lifecycle verb a takedown or
-    * a dedup retraction needs (round 17). Logical-then-physical, the
-    * same two-temperature discipline as everything else here:
-    *
-    *  - the delete itself is O(deleted): tombstone ids append to an
-    *    optional `deletes` side under the pinned version root; probes
-    *    anti-join the RANK stage against it, so a deleted row can
-    *    never crowd the shortlist, let alone surface (effective
-    *    immediately, no rewrite of the cell files);
-    *  - physical reclaim is DEFERRED to the rebuild it already shares
-    *    with drift: [[rebalanceIvfSq8Index]] re-derives every side
-    *    from the cold lake MINUS the tombstones, and the fresh version
-    *    dir has no `deletes` side — reclaim is the version swap.
-    *
-    * `autoRebalance = Some(rate)` makes the reclaim cadence MEASURED
-    * (the audit-at-append pattern, [[IndexSwap.tombstoneReclaimDue]]):
-    * past tombstones/live > rate OR the absolute
-    * `spark.graft.index.maxTombstones` cap (default 10M — the
-    * probe-side anti-join's build side stays broadcast-class at any
-    * corpus size) the `_rebalance_due` marker drops and
-    * [[maintainIvfSq8Index]] pays the rebuild off the delete path —
-    * unreclaimed tombstones are rank rows read and thrown away per
-    * probe, so the ratio bounds the wasted rank IO directly. vec_ids are permanent identities:
-    * re-appending a tombstoned id is a caller error (the tombstone
-    * keeps winning until a rebuild, after which the id is simply
-    * gone — never resurrected). Deleting an id the index never held
-    * is a harmless no-op tombstone. */
+  /** [[delete]] under the name existing callers use. */
   def deleteFromIvfSq8Index(s: SparkSession, ids: DataFrame, path: String,
-      autoRebalance: Option[Double] = None): Unit = {
-    recoverIvfSq8Rebalance(s, path)
-    val root = IndexSwap.liveRoot(s, path)
-    IndexSwap.appendTombstones(root, ids)
-    autoRebalance.foreach { maxRate =>
-      val live = Similarity.ivfCellStatsAt(s, root).values.sum
-      val dead = IndexSwap.tombstonesAt(s, root).map(_.count()).getOrElse(0L)
-      if (IndexSwap.tombstoneReclaimDue(s, live, dead, maxRate)) {
-        val fs = IndexSwap.fsOf(s, path)
-        fs.create(rebalanceDue(path), true).close()
-      }
-    }
-  }
-
-  /** The maintenance entry point (the [[PQ.maintainPqIndex]] /
-    * [[BinarySig.maintainBinIndex]] contract): heal any interrupted
-    * swap, then run the rebuild a deferred trigger requested. The due
-    * marker is deleted only AFTER the swap commits — a crash between
-    * commit and delete re-runs the rebuild, which is a deterministic
-    * fixpoint over the same lake (IvfSq8Spec). Returns whether a
-    * rebuild ran. */
-  def maintainIvfSq8Index(s: SparkSession, path: String): Boolean = {
-    recoverIvfSq8Rebalance(s, path)
-    val fs = IndexSwap.fsOf(s, path)
-    if (!fs.exists(rebalanceDue(path))) false
-    else {
-      rebalanceIvfSq8Index(s, path)
-      fs.delete(rebalanceDue(path), false): Unit
-      true
-    }
-  }
+      autoRebalance: Option[Double] = None): Unit =
+    delete(s, ids, path, autoRebalance)
 
   /** Re-derive ALL FOUR sides from the grown cold lake — the drift
     * answer. Centroids re-seed from the √(grown N) vectors with the
-    * lowest `xxhash64(vec_id)` (the [[Similarity.rebalanceIvfIndex]]
+    * lowest `xxhash64(vec_id)` (the [[Similarity.rebalance]]
     * rule: deterministic, distribution-free over an appended lake's
     * arbitrary id space, and the cell count ADAPTS to the grown corpus
     * instead of freezing the build-time k); the envelope re-freezes
@@ -251,8 +187,8 @@ object IvfSq8 {
     * exact again (appends between rebuilds saturate against the prior
     * envelope — the declared SQ8 append semantics). Deterministic
     * fixpoint; crash-safe under the versioned [[IndexSwap]] commit. */
-  def rebalanceIvfSq8Index(s: SparkSession, path: String): Unit = {
-    recoverIvfSq8Rebalance(s, path)
+  def rebalance(s: SparkSession, path: String): Unit = {
+    recover(s, path)
     val root = IndexSwap.liveRoot(s, path)
     // Tombstones reclaim PHYSICALLY here: the rebuild reads the cold
     // lake minus the deleted ids, and the fresh version dir carries no
@@ -308,15 +244,7 @@ object IvfSq8 {
       mna: Array[Long], spa: Array[Long], nProbe: Int, k: Int,
       route: Either[DataFrame, Similarity.CentArrays],
       allowed: Option[DataFrame] = None): DataFrame = {
-    val probesRaw = probes.select(col("vec_id"), col("embedding"),
-      l2normNative(col("embedding")).as("nrm"))
-    val probeRows = probesRaw.limit(PQ.maxProbeBatch + 1).collect()
-    require(probeRows.length <= PQ.maxProbeBatch,
-      s"probeIvfSq8IndexWith: probe batch exceeds ${PQ.maxProbeBatch} rows — " +
-        "a corpus-sized probe set should assign both sides to cells and " +
-        "equi-join on cent_id (the qn20 shape)")
-    val probesV = s.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesRaw.schema)
+    val (probeRows, probesV) = IndexSwap.localProbes(s, probes, "probeIvfSq8IndexWith")
     // Route: in-process over the handle's cached arrays when a serve
     // session supplied them ([[Similarity.driverRoutePairs]] — same
     // e6/tie rules, zero Spark jobs), the flat argsort routing job
@@ -377,28 +305,13 @@ object IvfSq8 {
       .select(col("qid"), col("vec_id"), col("cent_id"), qd2.as("qd2"))
       .withColumn("rn", row_number().over(wSl)).filter(col("rn") <= shortlistWidth)
       .select(col("qid"), col("vec_id"), col("cent_id"), col("qd2"))
-    // Refine: manifest-class shortlist (probes x 16) — collect it so
-    // the cold read composes the cell scope with a vec_id pushdown
-    // against the sorted 1 MB row groups.
-    val slRows = sl.collect()
-    val localSl = s.createDataFrame(java.util.Arrays.asList(slRows: _*), sl.schema)
-    val slIds = slRows.map(_.getLong(1)).distinct.toSeq
-    val slCells = slRows.map(_.getLong(2)).distinct.toSeq
-    val slPush = if (slIds.isEmpty) lit(false) else col("vec_id").isin(slIds: _*)
-    val cold = Similarity.cellScopedReadAt(s, root, "vectors", slCells)
-      .filter(slPush)
-      .select(col("vec_id"), col("embedding").as("de"), col("nrm").as("dn"))
-    val refScore = e6(cosine(dotNative(col("qe"), col("de")), col("qn"), col("dn")))
-    val wRef = Window.partitionBy(col("qid")).orderBy(col("score_e6").desc, col("vec_id").asc)
-    broadcast(localSl.select(col("qid"), col("vec_id"), col("qd2")))
-      .join(broadcast(probesV.select(col("vec_id").as("qid"),
-        col("embedding").as("qe"), col("nrm").as("qn"))), Seq("qid"))
-      .join(cold, Seq("vec_id"))
-      .select(col("qid"), col("vec_id"), col("qd2"), refScore.as("score_e6"))
-      .withColumn("rnk", row_number().over(wRef)).filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk").cast("long").as("rnk"), col("vec_id"),
-        col("qd2"), col("score_e6"))
-      .orderBy("qid", "rnk")
+    // Refine: manifest-class shortlist (probes x 16) — collected so the
+    // cold read composes the shortlisted cells' scope with a vec_id
+    // pushdown against the sorted 1 MB row groups.
+    IndexSwap.exactRefine(s, sl, probesV, k, Seq("qd2")) { (push, slRows) =>
+      Similarity.cellScopedReadAt(s, root, "vectors",
+        slRows.map(_.getAs[Long]("cent_id")).distinct.toSeq).filter(push)
+    }
   }
 
   /** A SERVE-SESSION handle for the composed index (the
@@ -433,15 +346,11 @@ object IvfSq8 {
     }
   }
 
-  /** DESCRIBE the live index — the [[IndexSwap.describeIndex]] verb. */
-  def describeIvfSq8Index(s: SparkSession, path: String): DataFrame =
-    IndexSwap.describeIndex(s, path, sides)
-
   /** Open a serve-session handle: resolve the version once, collect
     * the centroid table (√N rows) and the D-row envelope once. */
   def openIvfSq8Index(s: SparkSession, path: String): IvfSq8IndexHandle = {
     val version = IndexSwap.liveVersion(s, path)
-    val root = if (version == 0L) path else s"$path/v$version"
+    val root = IndexSwap.rootAt(path, version)
     val ca = Similarity.collectCents(s.read.parquet(s"$root/centroids"))
     val (mna, spa) = SQ8.collectStats(s.read.parquet(s"$root/stats"))
     IvfSq8IndexHandle(path, version, root, ca, mna, spa)

@@ -31,29 +31,29 @@ import org.apache.spark.sql.functions._
   * as the stored `pre` width and re-read by append/rebalance/probe —
   * nothing re-infers it from data. Like [[BinarySig]] the encoder is
   * otherwise parameter-free (a slice), so there is no frozen-envelope
-  * side, appends never saturate, and [[rebalanceMatryoshkaIndex]]
+  * side, appends never saturate, and [[rebalance]]
   * exists for COMPACTION (appends fragment the sorted point-read
   * layout): a deterministic fixpoint under the crash-safe swap, with
   * the measured `autoCompact` file-count trigger deferring through
-  * the `_rebalance_due` marker [[maintainMatryoshkaIndex]] consumes.
+  * the `_rebalance_due` marker [[maintain]] consumes.
   *
   * A fresh build probed through [[probeMatryoshkaIndexWith]] replays
   * the qn48 oracle bit-exactly (the qn49 driver gate): same e6 prefix
   * cosine with the ppn/pnrm zero-norm guards, same 32-wide shortlist,
   * same exact full-width re-rank, same tie rules.
   */
-object Matryoshka {
+object Matryoshka extends IndexRung {
 
   /** The index's swappable sides (the [[IndexSwap]] protocol). */
-  private val mSides = Seq("prefix", "vectors")
+  val sides: Seq[String] = Seq("prefix", "vectors")
+
+  /** Live rows: the prefix side's footer count. */
+  protected def liveRows(s: SparkSession, root: String): Long =
+    Similarity.parquetRowCount(s, IndexSwap.sideAt(root, "prefix"))
 
   /** Prefix-score shortlist width the exact refine re-ranks (the
     * qn35/qn48 contract). */
   private val shortlistWidth = 32
-
-  /** [[SQ8]]'s isin dispatch, prefix edition. */
-  private def isinMaxIds(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.mat.isinMaxIds").map(_.toInt).getOrElse(10000)
 
   /** The prefix slice with the loud width/NULL guard (the
     * [[SQ8.q8Col]] discipline, and the [[BinarySig]] stored-dim rule
@@ -94,7 +94,7 @@ object Matryoshka {
     * corpus row; `prefix` must be a strict, positive sub-width. */
   def buildMatryoshkaIndexFrom(s: SparkSession, corpus: DataFrame, prefix: Int,
       path: String): Unit = {
-    recoverMatryoshkaRebalance(s, path)
+    recover(s, path)
     val fullDim = corpus.select(size(col("embedding"))).head().getInt(0)
     require(prefix >= 1 && prefix < fullDim,
       s"Matryoshka: prefix $prefix must be in [1, $fullDim) — a prefix at the" +
@@ -102,7 +102,7 @@ object Matryoshka {
     val v = corpus.select(col("vec_id"), col("embedding"),
       l2normNative(col("embedding")).as("nrm"))
     stageSides(path, v, fullDim, prefix)
-    IndexSwap.commit(s, path, mSides)
+    IndexSwap.commit(s, path, sides)
   }
 
   /** The stored full dimensionality, from one cold-side row. */
@@ -128,7 +128,7 @@ object Matryoshka {
     * append cost. */
   def appendToMatryoshkaIndex(s: SparkSession, newVecs: DataFrame, path: String,
       autoCompact: Option[Int] = None): Unit = {
-    recoverMatryoshkaRebalance(s, path)
+    recover(s, path)
     val root = IndexSwap.liveRoot(s, path)
     val fullDim = storedDim(s, root)
     val prefix = storedPrefix(s, root)
@@ -145,30 +145,7 @@ object Matryoshka {
       val files = graft.sources.LakeListing.dataFiles(
         s.sessionState.newHadoopConf(),
         new org.apache.hadoop.fs.Path(IndexSwap.sideAt(root, "prefix"))).size
-      if (files > maxFiles) {
-        val fs = IndexSwap.fsOf(s, path)
-        fs.create(rebalanceDue(path), true).close()
-      }
-    }
-  }
-
-  /** The deferred-compaction marker [[appendToMatryoshkaIndex]]'s
-    * trigger drops and [[maintainMatryoshkaIndex]] consumes. */
-  private def rebalanceDue(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$path/_rebalance_due")
-
-  /** The maintenance entry point (the sibling rungs' contract): heal
-    * any interrupted swap, then run the compaction a deferred trigger
-    * requested. The due marker is deleted only AFTER the swap commits.
-    * Returns whether a compaction ran. */
-  def maintainMatryoshkaIndex(s: SparkSession, path: String): Boolean = {
-    recoverMatryoshkaRebalance(s, path)
-    val fs = IndexSwap.fsOf(s, path)
-    if (!fs.exists(rebalanceDue(path))) false
-    else {
-      rebalanceMatryoshkaIndex(s, path)
-      fs.delete(rebalanceDue(path), false): Unit
-      true
+      if (files > maxFiles) markRebalanceDue(s, path)
     }
   }
 
@@ -176,8 +153,8 @@ object Matryoshka {
     * STORED prefix — the COMPACTION answer (a deterministic fixpoint:
     * the encoder is a parameter-free slice). Crash-safe under the
     * [[IndexSwap]] two-phase swap. */
-  def rebalanceMatryoshkaIndex(s: SparkSession, path: String): Unit = {
-    recoverMatryoshkaRebalance(s, path)
+  def rebalance(s: SparkSession, path: String): Unit = {
+    recover(s, path)
     val root = IndexSwap.liveRoot(s, path)
     val fullDim = storedDim(s, root)
     val prefix = storedPrefix(s, root)
@@ -187,38 +164,13 @@ object Matryoshka {
       s.read.parquet(IndexSwap.sideAt(root, "vectors"))
         .select(col("vec_id"), col("embedding"), col("nrm")))
     stageSides(path, v, fullDim, prefix)
-    IndexSwap.commit(s, path, mSides)
+    IndexSwap.commit(s, path, sides)
   }
 
-  /** DELETE vectors from the index (round 17 — the
-    * [[graft.operators.IvfSq8]] tombstone semantics at the prefix
-    * rung): O(deleted) tombstone append, rank-stage anti-join makes
-    * exclusion immediate, physical reclaim is
-    * [[rebalanceMatryoshkaIndex]]'s version swap.
-    * `autoRebalance = Some(rate)` defers a reclaim via the
-    * `_rebalance_due` marker once tombstones/live exceeds the rate.
-    * vec_ids are permanent identities: re-appending a tombstoned id is
-    * a caller error. */
+  /** [[delete]] under the name existing callers use. */
   def deleteFromMatryoshkaIndex(s: SparkSession, ids: DataFrame, path: String,
-      autoRebalance: Option[Double] = None): Unit = {
-    recoverMatryoshkaRebalance(s, path)
-    val root = IndexSwap.liveRoot(s, path)
-    IndexSwap.appendTombstones(root, ids)
-    autoRebalance.foreach { maxRate =>
-      // Footer-walk count (zero Spark jobs) — a .count() scan here
-      // would make the documented O(deleted) delete pay O(N) per call.
-      val live = Similarity.parquetRowCount(s, IndexSwap.sideAt(root, "prefix"))
-      val dead = IndexSwap.tombstonesAt(s, root).map(_.count()).getOrElse(0L)
-      if (IndexSwap.tombstoneReclaimDue(s, live, dead, maxRate)) {
-        val fs = IndexSwap.fsOf(s, path)
-        fs.create(rebalanceDue(path), true).close()
-      }
-    }
-  }
-
-  /** Heal an interrupted swap (both polarities). */
-  def recoverMatryoshkaRebalance(s: SparkSession, path: String): Unit =
-    IndexSwap.recover(s, path, mSides)
+      autoRebalance: Option[Double] = None): Unit =
+    delete(s, ids, path, autoRebalance)
 
   /** Probe with the declared fixture probe set (vec_id < 10) — the
     * qn49 driver gate's entry. */
@@ -254,24 +206,15 @@ object Matryoshka {
   private def probeMatryoshkaResolved(s: SparkSession, probes: DataFrame,
       root: String, fullDim: Int, prefix: Int,
       k: Int, allowed: Option[DataFrame]): DataFrame = {
-    val probesRaw = probes.select(col("vec_id"), col("embedding"),
-      l2normNative(col("embedding")).as("nrm"))
-    val probeRows = probesRaw.limit(PQ.maxProbeBatch + 1).collect()
-    require(probeRows.length <= PQ.maxProbeBatch,
-      s"probeMatryoshkaIndexWith: probe batch exceeds ${PQ.maxProbeBatch} rows — " +
-        "a corpus-sized probe set should rank through a cell-assigned " +
-        "equi-join (the qn20 shape)")
-    val probesV = s.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesRaw.schema)
+    val (_, probesV) = IndexSwap.localProbes(s, probes, "probeMatryoshkaIndexWith")
     val ppre = preGuarded(col("embedding"), fullDim, prefix)
     val psig = probesV.select(col("vec_id").as("qid"),
-      col("embedding").as("pe"), col("nrm").as("pn"),
       ppre.as("ppre"), l2normNative(ppre).as("ppn"))
     val wSl = Window.partitionBy(col("qid")).orderBy(col("pscore").desc, col("vec_id").asc)
     val sl = allowed.foldLeft(IndexSwap.exceptTombstones(s, root,
         s.read.parquet(IndexSwap.sideAt(root, "prefix")))) { (c, a) =>
         c.join(a.select(col("vec_id")), Seq("vec_id"), "left_semi") }
-      .join(broadcast(psig.select(col("qid"), col("ppre"), col("ppn"))), expr("true"))
+      .join(broadcast(psig), expr("true"))
       .filter(col("vec_id") =!= col("qid") && col("ppn") > 0 && col("pnrm") > 0)
       .select(col("qid"), col("vec_id"),
         e6(cosine(dotNative(col("ppre"), col("pre")), col("ppn"), col("pnrm"))).as("pscore"))
@@ -279,24 +222,9 @@ object Matryoshka {
       .select(col("qid"), col("vec_id"))
     // Manifest-class shortlist (probes x 32, hard-bounded above) ->
     // vec_id pushdown against the sorted 1 MB-row-group cold layout.
-    val slRows = sl.collect()
-    val slIds = slRows.map(_.getLong(1)).distinct.toSeq
-    val localSl = s.createDataFrame(java.util.Arrays.asList(slRows: _*), sl.schema)
-    val slPush =
-      if (slIds.isEmpty) lit(false)
-      else if (slIds.length <= isinMaxIds(s)) col("vec_id").isin(slIds: _*)
-      else col("vec_id").between(slIds.min, slIds.max)
-    val cold = s.read.parquet(IndexSwap.sideAt(root, "vectors")).filter(slPush)
-      .select(col("vec_id"), col("embedding").as("de"), col("nrm").as("dn"))
-    val refScore = e6(cosine(dotNative(col("pe"), col("de")), col("pn"), col("dn")))
-    val wRef = Window.partitionBy(col("qid")).orderBy(col("score_e6").desc, col("vec_id").asc)
-    broadcast(localSl).join(broadcast(psig.select(col("qid"), col("pe"), col("pn"))), Seq("qid"))
-      .join(cold, Seq("vec_id"))
-      .select(col("qid"), col("vec_id"), refScore.as("score_e6"))
-      .withColumn("rnk", row_number().over(wRef)).filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk").cast("long").as("rnk"), col("vec_id"),
-        col("score_e6"))
-      .orderBy("qid", "rnk")
+    IndexSwap.exactRefine(s, sl, probesV, k) { (push, _) =>
+      s.read.parquet(IndexSwap.sideAt(root, "vectors")).filter(push)
+    }
   }
 
   /** Serve-session handle for the matryoshka rung — the
@@ -322,15 +250,11 @@ object Matryoshka {
     }
   }
 
-  /** DESCRIBE the live index — the [[IndexSwap.describeIndex]] verb. */
-  def describeMatryoshkaIndex(s: SparkSession, path: String): DataFrame =
-    IndexSwap.describeIndex(s, path, mSides)
-
   /** Open a serve-session handle: resolve the version once, read both
     * stored widths once. */
   def openMatryoshkaIndex(s: SparkSession, path: String): MatryoshkaIndexHandle = {
     val version = IndexSwap.liveVersion(s, path)
-    val root = if (version == 0L) path else s"$path/v$version"
+    val root = IndexSwap.rootAt(path, version)
     MatryoshkaIndexHandle(path, version, root,
       storedDim(s, root), storedPrefix(s, root))
   }

@@ -52,7 +52,7 @@ import org.apache.spark.sql.functions._
   *    (R=16) alone pays a full-precision read for the exact cosine
   *    re-rank — the two-stage retrieval a production vector store runs.
   */
-object PQ {
+object PQ extends IndexRung {
 
   /** PQ sizing: M subspaces of `subDim` dims (m * subDim = embedding
     * dim), K codewords per subspace. The FIXTURE default is 4 x 16
@@ -88,15 +88,6 @@ object PQ {
     * construction; corpus-sized probe sets belong on the cent_id
     * assignment-join path (the qn20 shape). */
   private[graft] val maxProbeBatch: Int = 1000000 / adcTopR
-
-  /** Max distinct shortlist ids inlined as a literal `vec_id IN (...)`
-    * on the refine's cold read (exact row-group + page pruning via the
-    * parquet IN pushdown). Above it the pushdown degrades to the
-    * BETWEEN range form — a 1e6-literal IN is itself a driver-memory
-    * and plan-analysis hazard. Conf-overridable so the spec and battery
-    * can force the range branch at fixture size. */
-  private def isinMaxIds(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.pq.isinMaxIds").map(_.toInt).getOrElse(10000)
 
   // ---- Spark side ---------------------------------------------------
 
@@ -216,7 +207,7 @@ object PQ {
   /** Deterministic Lloyd training over ANY (vec_id, emb6) e6 frame —
     * shared by the plain (qn30) and residual (qn36) trainings. Seeds
     * by the STRIDE rule (dense id space — the build-time contract;
-    * [[rebalancePqIndex]] retrains with [[hashSeedVecs]] instead,
+    * [[rebalance]] retrains with [[hashSeedVecs]] instead,
     * because an appended lake's id space is arbitrary). `iters`
     * unrolls extra Lloyd steps (each step re-seeds from the previous
     * step's means — still RNG-free, and oracle-replayable as a chained
@@ -246,7 +237,7 @@ object PQ {
   }
 
   /** Codebook seeds for an ARBITRARY id space: the K vectors with the
-    * lowest `xxhash64(vec_id)` (the [[Similarity.rebalanceIvfIndex]]
+    * lowest `xxhash64(vec_id)` (the [[Similarity.rebalance]]
     * seed rule applied to the codebook) — deterministic,
     * distribution-free over the ids. TakeOrderedAndProject: no sort
     * materialization; K rows collect. Sorted by cid so the code ranks
@@ -672,7 +663,7 @@ object PQ {
       sqlIvfPq("SELECT vec_id, embedding FROM embeddings", fixturePq,
         candFilter = "a.vec_id % 7 <> 0")) { (s, dir) =>
       val path = IndexMemo.mutableCopy(s, dir, "pq")(buildPqIndex(s, dir, _))
-      deleteFromPqIndex(s,
+      delete(s,
         Tables.embeddings(s, dir).filter(col("vec_id") % 7 === 0).select("vec_id"),
         path)
       probePqIndex(s, dir, path, 4, 5)
@@ -1304,7 +1295,7 @@ object PQ {
       "buildPqIndex: learned rotation composes with whole-space codes only — " +
         "residual encoding subtracts RAW-space centroids, which a rotated " +
         "codebook cannot score")
-    recoverPqRebalance(s, path) // clear any interrupted prior swap/build staging
+    recover(s, path) // clear any interrupted prior swap/build staging
     val v = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"), l2normNative(col("embedding")).as("nrm"))
     val cents = coarseCents(v, nCells)
@@ -1373,7 +1364,7 @@ object PQ {
     * frame every stage re-reads is localCheckpoint'd instead. */
   private[graft] def buildPqIndexFrom(s: SparkSession, vecs: DataFrame,
       path: String, nCells: Int, params: PqParams, iters: Int = 1): Unit = {
-    recoverPqRebalance(s, path)
+    recover(s, path)
     val v = vecs.select(col("vec_id"), col("embedding"),
       l2normNative(col("embedding")).as("nrm")).localCheckpoint(true)
     val cents = coarseCents(v, nCells)
@@ -1438,7 +1429,7 @@ object PQ {
         learnedR.foreach(r => stageRotation(s, path, r, dimOf(localCents)))
         writeMeta(s, path, residual, collectCb(cb)._2)
       }))
-    IndexSwap.commit(s, path, pqSides)
+    IndexSwap.commit(s, path, sides)
   }
 
   /** Literal-route bound of the native exact assignment
@@ -1523,13 +1514,13 @@ object PQ {
     * probe (the probe's scoring dispatches on the same row). Codebooks
     * and centroids stay frozen at build time: re-deriving either per
     * append would silently stale every already-written code; drift is
-    * a REBUILD ([[rebalancePqIndex]]), with `autoRebalance = Some(k)`
+    * a REBUILD ([[rebalance]]), with `autoRebalance = Some(k)`
     * making the cadence MEASURED (the appendToIvfIndex trigger:
     * per-cell footer counts after the append; hottest cell > k x the
     * mean over the declared cell count). A fired trigger DEFERS: it
     * drops a `_rebalance_due` marker and returns at append cost — a
     * full retrain inside a micro-batch append would make ingest
-    * latency unbounded at 100 TB; [[maintainPqIndex]] (a maintenance
+    * latency unbounded at 100 TB; [[maintain]] (a maintenance
     * entry point, run on the operator's cadence or per micro-batch
     * where stop-the-world is acceptable) consumes the marker and runs
     * the crash-safe swap.
@@ -1544,7 +1535,7 @@ object PQ {
     * not just dead bytes. `newVecs`: (vec_id, embedding). */
   def appendToPqIndex(s: SparkSession, newVecs: DataFrame, path: String,
       autoRebalance: Option[Int] = None): Unit = {
-    recoverPqRebalance(s, path) // heal any interrupted prior swap first
+    recover(s, path) // heal any interrupted prior swap first
     // ONE version resolution for every side read and write below
     // (round-15 ADVICE): an append racing a rebalance commit must
     // never mix metadata from one version with writes into another.
@@ -1591,69 +1582,24 @@ object PQ {
       if (stats.nonEmpty) {
         val nCells = math.max(1L, Similarity.parquetRowCount(s, centsDir))
         val mean = math.max(1.0, stats.values.sum.toDouble / nCells)
-        if (stats.values.max > k * mean) {
-          val fs = IndexSwap.fsOf(s, path)
-          fs.create(rebalanceDue(path), true).close()
-        }
+        if (stats.values.max > k * mean) markRebalanceDue(s, path)
       }
     }
   }
 
-  /** The deferred-rebalance marker [[appendToPqIndex]]'s trigger drops
-    * and [[maintainPqIndex]] consumes. */
-  /** DELETE vectors from the index (round 17 — the lifecycle verb a
-    * takedown or a dedup retraction needs, uniform across the family:
-    * the [[graft.operators.IvfSq8]] tombstone semantics): O(deleted)
-    * tombstone append to the optional `deletes` side under the pinned
-    * version root; the ADC rank stage anti-joins it, so exclusion is
-    * immediate; physical reclaim is [[rebalancePqIndex]]'s version
-    * swap (the fresh version dir simply lacks the side).
-    * `autoRebalance = Some(rate)` defers a reclaim via the
-    * `_rebalance_due` marker once tombstones/live exceeds the rate —
-    * unreclaimed tombstones are rank rows read and discarded per
-    * probe, so the ratio bounds the wasted rank IO directly. vec_ids
-    * are permanent identities: re-appending a tombstoned id is a
-    * caller error (the tombstone wins until a rebuild, after which the
-    * id is gone — never resurrected). */
+  /** [[delete]] under the name existing callers use. */
   def deleteFromPqIndex(s: SparkSession, ids: DataFrame, path: String,
-      autoRebalance: Option[Double] = None): Unit = {
-    recoverPqRebalance(s, path)
-    val root = IndexSwap.liveRoot(s, path)
-    IndexSwap.appendTombstones(root, ids)
-    autoRebalance.foreach { maxRate =>
-      val live = Similarity.ivfCellStatsAt(s, root).values.sum
-      val dead = IndexSwap.tombstonesAt(s, root).map(_.count()).getOrElse(0L)
-      if (IndexSwap.tombstoneReclaimDue(s, live, dead, maxRate)) {
-        val fs = IndexSwap.fsOf(s, path)
-        fs.create(rebalanceDue(path), true).close()
-      }
-    }
-  }
-
-  private def rebalanceDue(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$path/_rebalance_due")
-
-  /** The maintenance entry point: heal any interrupted swap, then run
-    * the rebalance a deferred trigger requested. The due marker is
-    * deleted only AFTER the swap commits — a crash between the commit
-    * and the delete re-runs the rebalance on the next call, which is a
-    * deterministic fixpoint over the same lake (PqRebalanceSpec).
-    * Returns whether a rebalance ran. */
-  def maintainPqIndex(s: SparkSession, path: String): Boolean = {
-    recoverPqRebalance(s, path)
-    val fs = IndexSwap.fsOf(s, path)
-    if (!fs.exists(rebalanceDue(path))) false
-    else {
-      rebalancePqIndex(s, path)
-      fs.delete(rebalanceDue(path), false): Unit
-      true
-    }
-  }
+      autoRebalance: Option[Double] = None): Unit =
+    delete(s, ids, path, autoRebalance)
 
   /** The PQ index's swappable sides (the [[IndexSwap]] protocol): both
     * temperature tiers, both metadata tables, and the meta row — a
     * build or rebalance rewrites all five consistently or not at all. */
-  private val pqSides = Seq("codes", "vectors", "codebooks", "centroids", "meta")
+  val sides: Seq[String] = Seq("codes", "vectors", "codebooks", "centroids", "meta")
+
+  /** Live rows: the vector lake's per-cell footer counts. */
+  protected def liveRows(s: SparkSession, root: String): Long =
+    Similarity.ivfCellStatsAt(s, root).values.sum
 
   /** Re-cluster AND re-train a persisted IVFADC index in place from its
     * own cold lake — the drift answer ([[appendToPqIndex]]'s trigger
@@ -1662,7 +1608,7 @@ object PQ {
     * Everything re-derives from the lake under the REBUILD seed rules
     * (an appended lake's id space is arbitrary, so stride seeding is
     * out): coarse seeds are the sqrt(N) lowest-`xxhash64(vec_id)`
-    * vectors (the rebalanceIvfIndex rule — deterministic,
+    * vectors (the [[Similarity.rebalance]] rule — deterministic,
     * distribution-free, cell count adapted to the GROWN corpus), and
     * the codebook retrains one Lloyd step from the K
     * lowest-`xxhash64(vec_id, salt')` seed vectors ([[hashSeedVecs]]).
@@ -1675,11 +1621,11 @@ object PQ {
     * Crash safety is the [[IndexSwap]] versioned commit over all five
     * sides: one staged write set, one atomic version-dir rename — a
     * crash before the rename leaves the live version untouched and
-    * heals on the next [[recoverPqRebalance]] (run by append and
+    * heals on the next [[recover]] (run by append and
     * rebalance entry); concurrent READERS keep their resolved version
     * for a full rebuild cycle (the reader-grace contract). */
-  def rebalancePqIndex(s: SparkSession, path: String): Unit = {
-    recoverPqRebalance(s, path)
+  def rebalance(s: SparkSession, path: String): Unit = {
+    recover(s, path)
     val (residual, p) = indexMeta(s, path)
     val rebRoot = IndexSwap.liveRoot(s, path)
     // Tombstones reclaim physically here (the fresh version dir
@@ -1735,15 +1681,8 @@ object PQ {
       .parquet(IndexSwap.tmp(path, "centroids").toString)
     rotStored.foreach { case (r, d) => stageRotation(s, path, r, d) }
     writeMeta(s, path, residual, collectCb(cb)._2)
-    IndexSwap.commit(s, path, pqSides)
+    IndexSwap.commit(s, path, sides)
   }
-
-  /** Heal an interrupted [[rebalancePqIndex]]: drop any partial stage
-    * — the one crash state with residue under the versioned
-    * [[IndexSwap]] commit (the live version is never touched before
-    * the atomic rename, and after it nothing is left to do). */
-  def recoverPqRebalance(s: SparkSession, path: String): Unit =
-    IndexSwap.recover(s, path, pqSides)
 
   /** Probe a persisted IVFADC index: route each probe to its `nProbe`
     * coarse cells via the stored centroids (manifest-class collect, the
@@ -1829,10 +1768,10 @@ object PQ {
     }
   }
 
-  /** DESCRIBE the live index — the [[IndexSwap.describeIndex]] verb
-    * (the optional `rotation` side reports when present). */
-  def describePqIndex(s: SparkSession, path: String): DataFrame =
-    IndexSwap.describeIndex(s, path, pqSides :+ "rotation")
+  /** DESCRIBE the live index; the optional `rotation` side reports
+    * when present. */
+  override def describe(s: SparkSession, path: String): DataFrame =
+    IndexSwap.describeIndex(s, path, sides :+ "rotation")
 
   /** Open a serve-session handle: resolve the version once, read meta
     * once, and collect the centroid + codebook tables (sqrt(N) and
@@ -1840,7 +1779,7 @@ object PQ {
     * probe plans against without touching the store. */
   def openPqIndex(s: SparkSession, path: String): PqIndexHandle = {
     val version = IndexSwap.liveVersion(s, path)
-    val root = if (version == 0L) path else s"$path/v$version"
+    val root = IndexSwap.rootAt(path, version)
     val (residual, p) = indexMetaAt(s, root)
     val cents = s.read.parquet(s"$root/centroids")
     val localCents = s.createDataFrame(
@@ -1889,22 +1828,9 @@ object PQ {
       nProbe: Int, k: Int, cachedCents: Option[Similarity.CentArrays],
       rot: Option[(Array[Double], Int)] = None,
       allowed: Option[DataFrame] = None): DataFrame = {
-    // Probes materialize ONCE as a local relation (manifest-class):
-    // the routing, the ADC-table build, the shortlist, and the refine
-    // each run their own action, and a lazy probe frame would re-scan
-    // a corpus file per action. The collect is LIMIT-bounded before it
-    // runs — the routeCells discipline, applied one stage earlier.
-    val probesRaw = probes
-      .select(col("vec_id"), col("embedding"), l2normNative(col("embedding")).as("nrm"))
-    val probeRows = probesRaw.limit(maxProbeBatch + 1).collect()
-    require(probeRows.length <= maxProbeBatch,
-      s"probePqIndexWith: probe batch exceeds $maxProbeBatch rows — the ADC " +
-        s"shortlist collect is bounded at probes x adcTopR($adcTopR) <= 1e6 " +
-        "(the routeCells contract); PQ probing is for probe BATCHES; a " +
-        "corpus-sized probe set should assign both sides to cells and " +
-        "equi-join on cent_id (the qn20 shape)")
-    val probesV = s.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesRaw.schema)
+    // The routing, the ADC-table build, the shortlist and the refine
+    // each run their own action over ONE local probe relation.
+    val (probeRows, probesV) = IndexSwap.localProbes(s, probes, "probePqIndexWith")
     // Routing: in-process over the handle's cached arrays when a
     // serve-session supplied them ([[driverRoute]]), the Spark routing
     // job otherwise — identical pairs either way (PQSpec pins the
@@ -1981,7 +1907,7 @@ object PQ {
     // predicates: the probed-cell partition filter AND a vec_id
     // pushdown — against the point-read layout [[buildPqIndex]] writes,
     // row groups without a shortlisted id never leave disk. The vec_id
-    // form DISPATCHES on shortlist size ([[isinMaxIds]]): up to the
+    // form DISPATCHES on shortlist size ([[IndexSwap.isinMaxIds]]): up to the
     // threshold it is the exact `IN (ids...)` literal list; above it, a
     // plan with ~1e6 literals is itself the hazard (driver memory +
     // analysis cost), so the pushdown degrades to the RANGE
@@ -1995,24 +1921,10 @@ object PQ {
     // shortlist join with no pushdown at all would read every probed
     // cell's floats whole, making the refine cost what the ADC tier
     // just saved.
-    val slRows = sl.collect()
-    val slIds = slRows.map(_.getLong(1)).distinct.toSeq
-    val localSl = s.createDataFrame(java.util.Arrays.asList(slRows: _*), sl.schema)
-    val slPush =
-      if (slIds.length <= isinMaxIds(s)) col("vec_id").isin(slIds: _*)
-      else col("vec_id").between(slIds.min, slIds.max)
-    val cold = Similarity.cellScopedReadAt(s, root, "vectors", cells)
-      .filter(col("cent_id").isin(cells: _*) && slPush)
-      .select(col("vec_id"), col("embedding").as("de"), col("nrm").as("dn"))
-    val refScore = e6(cosine(dotNative(col("qe"), col("de")), col("qn"), col("dn")))
-    val wRef = Window.partitionBy(col("qid")).orderBy(col("score_e6").desc, col("vec_id").asc)
-    broadcast(localSl).join(broadcast(probesV.select(col("vec_id").as("qid"),
-        col("embedding").as("qe"), col("nrm").as("qn"))), Seq("qid"))
-      .join(cold, Seq("vec_id"))
-      .select(col("qid"), col("vec_id"), refScore.as("score_e6"))
-      .withColumn("rnk", row_number().over(wRef)).filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk").cast("long").as("rnk"), col("vec_id"), col("score_e6"))
-      .orderBy("qid", "rnk")
+    IndexSwap.exactRefine(s, sl, probesV, k) { (push, _) =>
+      Similarity.cellScopedReadAt(s, root, "vectors", cells)
+        .filter(col("cent_id").isin(cells: _*) && push)
+    }
   }
 
   /** Route a probe frame to its nProbe coarse cells and collect the

@@ -37,30 +37,28 @@ import org.apache.spark.sql.functions._
   * affine map cannot represent values outside the build-time envelope;
   * saturation is a bounded rank-stage error the exact refine absorbs
   * for shortlisted rows). A drifted corpus is a REBUILD:
-  * [[rebalanceSq8Index]] recomputes the envelope over the grown cold
+  * [[rebalance]] recomputes the envelope over the grown cold
   * lake and re-encodes every code, crash-safe under the same
-  * stage+atomic-rename discipline as [[PQ.rebalancePqIndex]] — and
+  * stage+atomic-rename discipline as [[PQ.rebalance]] — and
   * the rebuild is MEASURED, not caller discipline (round 17, the
   * sibling rungs' deferred-marker pattern):
   * `appendToSq8Index(autoRebalance = Some(rate))` audits the appended
   * batch's out-of-envelope saturation rate, drops `_rebalance_due`
-  * past it, and [[maintainSq8Index]] pays the re-stat off the append
+  * past it, and [[maintain]] pays the re-stat off the append
   * hot path.
   */
-object SQ8 {
+object SQ8 extends IndexRung {
 
   /** The index's swappable sides (the [[IndexSwap]] protocol). */
-  private val sq8Sides = Seq("codes", "vectors", "stats")
+  val sides: Seq[String] = Seq("codes", "vectors", "stats")
+
+  /** Live rows: the codes side's footer count. */
+  protected def liveRows(s: SparkSession, root: String): Long =
+    Similarity.parquetRowCount(s, IndexSwap.sideAt(root, "codes"))
 
   /** Byte-distance shortlist width the exact refine re-ranks (the
     * qn38 contract). */
   private val shortlistWidth = 16
-
-  /** [[PQ.isinMaxIds]]'s dispatch, SQ8 edition: above this many
-    * distinct shortlist ids the cold-read pushdown degrades from the
-    * exact IN literal to BETWEEN(min, max). */
-  private def isinMaxIds(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.sq8.isinMaxIds").map(_.toInt).getOrElse(10000)
 
   private[graft] def ve6Of(v: DataFrame): DataFrame =
     v.select(col("vec_id"), transform(col("embedding"),
@@ -156,11 +154,11 @@ object SQ8 {
     * change; the q8Col guard enforces corpus/envelope width equality
     * loudly. */
   def buildSq8IndexFrom(s: SparkSession, corpus: DataFrame, path: String): Unit = {
-    recoverSq8Rebalance(s, path)
+    recover(s, path)
     val v = corpus.select(col("vec_id"), col("embedding"),
       l2normNative(col("embedding")).as("nrm"))
     stageSides(s, path, v, statsOf(ve6Of(v)))
-    IndexSwap.commit(s, path, sq8Sides)
+    IndexSwap.commit(s, path, sides)
   }
 
   /** Encode NEW vectors against the FROZEN stored envelope and append
@@ -171,7 +169,7 @@ object SQ8 {
     * join). Out-of-envelope dims clamp — see the object doc. */
   def appendToSq8Index(s: SparkSession, newVecs: DataFrame, path: String,
       autoRebalance: Option[Double] = None): Unit = {
-    recoverSq8Rebalance(s, path)
+    recover(s, path)
     // ONE version resolution for the stats read and both side writes
     // (round-15 ADVICE): a rebalance committing mid-append would
     // otherwise split the append across versions — codes encoded
@@ -195,7 +193,7 @@ object SQ8 {
     // audit measures exactly that: the fraction of appended (row, dim)
     // cells falling OUTSIDE the stored envelope, one O(new) aggregate
     // over the batch just encoded. Past `maxOobRate` the append drops
-    // the due marker and returns at append cost; [[maintainSq8Index]]
+    // the due marker and returns at append cost; [[maintain]]
     // re-stats the envelope over the grown lake on the maintenance
     // cadence. In-distribution streams never fire it (build-corpus
     // rows are in-envelope by construction).
@@ -210,32 +208,8 @@ object SQ8 {
           lit(0L), (acc, e) => acc + e)).as("oob"),
         count(lit(1)).as("n")).head()
       val oob = if (audit.isNullAt(0)) 0L else audit.getLong(0)
-      if (oob.toDouble / math.max(1L, audit.getLong(1) * mna.length) > maxOobRate) {
-        val fs = IndexSwap.fsOf(s, path)
-        fs.create(rebalanceDue(path), true).close()
-      }
-    }
-  }
-
-  /** The deferred-rebuild marker [[appendToSq8Index]]'s saturation
-    * audit drops and [[maintainSq8Index]] consumes. */
-  private def rebalanceDue(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$path/_rebalance_due")
-
-  /** The maintenance entry point (the [[PQ.maintainPqIndex]] contract):
-    * heal any interrupted swap, then run the re-stat rebuild a deferred
-    * saturation trigger requested. The due marker is deleted only AFTER
-    * the swap commits — a crash between commit and delete re-runs the
-    * rebuild, a deterministic fixpoint over the same lake. Returns
-    * whether a rebuild ran. */
-  def maintainSq8Index(s: SparkSession, path: String): Boolean = {
-    recoverSq8Rebalance(s, path)
-    val fs = IndexSwap.fsOf(s, path)
-    if (!fs.exists(rebalanceDue(path))) false
-    else {
-      rebalanceSq8Index(s, path)
-      fs.delete(rebalanceDue(path), false): Unit
-      true
+      if (oob.toDouble / math.max(1L, audit.getLong(1) * mna.length) > maxOobRate)
+        markRebalanceDue(s, path)
     }
   }
 
@@ -245,8 +219,8 @@ object SQ8 {
     * re-encodes every byte vector). Crash-safe: the [[IndexSwap]]
     * versioned commit over all three sides. Deterministic: same lake
     * in, same index out. */
-  def rebalanceSq8Index(s: SparkSession, path: String): Unit = {
-    recoverSq8Rebalance(s, path)
+  def rebalance(s: SparkSession, path: String): Unit = {
+    recover(s, path)
     val root = IndexSwap.liveRoot(s, path)
     // Tombstones reclaim physically here: the rebuild reads the cold
     // lake minus the deleted ids, and the fresh version dir carries no
@@ -255,41 +229,13 @@ object SQ8 {
       s.read.parquet(IndexSwap.sideAt(root, "vectors"))
         .select(col("vec_id"), col("embedding"), col("nrm")))
     stageSides(s, path, v, statsOf(ve6Of(v)))
-    IndexSwap.commit(s, path, sq8Sides)
+    IndexSwap.commit(s, path, sides)
   }
 
-  /** DELETE vectors from the index (round 17 — the lifecycle verb a
-    * takedown or a dedup retraction needs; the [[graft.operators.IvfSq8]]
-    * tombstone semantics at the flat rung): O(deleted) tombstone
-    * append, rank-stage anti-join makes exclusion immediate, physical
-    * reclaim is [[rebalanceSq8Index]]'s version swap.
-    * `autoRebalance = Some(rate)` defers a reclaim via the
-    * `_rebalance_due` marker once tombstones/live exceeds the rate —
-    * unreclaimed tombstones are rank rows read and discarded per
-    * probe, so the ratio bounds the wasted rank IO directly. vec_ids
-    * are permanent identities: re-appending a tombstoned id is a
-    * caller error. */
+  /** [[delete]] under the name existing callers use. */
   def deleteFromSq8Index(s: SparkSession, ids: DataFrame, path: String,
-      autoRebalance: Option[Double] = None): Unit = {
-    recoverSq8Rebalance(s, path)
-    val root = IndexSwap.liveRoot(s, path)
-    IndexSwap.appendTombstones(root, ids)
-    autoRebalance.foreach { maxRate =>
-      // Footer-walk count (zero Spark jobs) — a .count() scan here
-      // would make the documented O(deleted) delete pay O(N) per call.
-      val live = Similarity.parquetRowCount(s, IndexSwap.sideAt(root, "codes"))
-      val dead = IndexSwap.tombstonesAt(s, root).map(_.count()).getOrElse(0L)
-      if (IndexSwap.tombstoneReclaimDue(s, live, dead, maxRate)) {
-        val fs = IndexSwap.fsOf(s, path)
-        fs.create(rebalanceDue(path), true).close()
-      }
-    }
-  }
-
-  /** Heal an interrupted swap (both polarities — the
-    * [[PQ.recoverPqRebalance]] contract). */
-  def recoverSq8Rebalance(s: SparkSession, path: String): Unit =
-    IndexSwap.recover(s, path, sq8Sides)
+      autoRebalance: Option[Double] = None): Unit =
+    delete(s, ids, path, autoRebalance)
 
   /** Probe with the declared fixture probe set (vec_id < 10) — the
     * qn38b driver gate's entry. */
@@ -324,16 +270,7 @@ object SQ8 {
   private def probeSq8Resolved(s: SparkSession, probes: DataFrame,
       root: String, mna: Array[Long], spa: Array[Long],
       k: Int, allowed: Option[DataFrame]): DataFrame = {
-    val probesRaw = probes.select(col("vec_id"), col("embedding"),
-      l2normNative(col("embedding")).as("nrm"))
-    val probeRows = probesRaw.limit(PQ.maxProbeBatch + 1).collect()
-    require(probeRows.length <= PQ.maxProbeBatch,
-      s"probeSq8IndexWith: probe batch exceeds ${PQ.maxProbeBatch} rows — the " +
-        "shortlist collect is bounded at probes x 16 <= 1e6; SQ8 probing is for " +
-        "probe BATCHES; a corpus-sized probe set should rank through a " +
-        "cell-assigned equi-join (the qn20 shape)")
-    val probesV = s.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesRaw.schema)
+    val (_, probesV) = IndexSwap.localProbes(s, probes, "probeSq8IndexWith")
     // Probe bytes quantize against the STORED envelope, clamped (an
     // out-of-corpus probe may fall outside it; identity for in-range
     // probes, so the qn38 parity is unaffected).
@@ -359,28 +296,10 @@ object SQ8 {
     // Shortlist is manifest-class (probes x 16, hard-bounded above):
     // collect it so the cold read carries the vec_id pushdown against
     // the sorted 1 MB-row-group layout — the [[PQ.probePqIndexWith]]
-    // point-read discipline, isin up to the dispatch bound, BETWEEN
-    // range above it (exactness rides the inner join either way).
-    val slRows = sl.collect()
-    val slIds = slRows.map(_.getLong(1)).distinct.toSeq
-    val localSl = s.createDataFrame(java.util.Arrays.asList(slRows: _*), sl.schema)
-    val slPush =
-      if (slIds.isEmpty) lit(false)
-      else if (slIds.length <= isinMaxIds(s)) col("vec_id").isin(slIds: _*)
-      else col("vec_id").between(slIds.min, slIds.max)
-    val cold = s.read.parquet(IndexSwap.sideAt(root, "vectors")).filter(slPush)
-      .select(col("vec_id"), col("embedding").as("de"), col("nrm").as("dn"))
-    val refScore = e6(cosine(
-      graft.functions.VectorExprs.dotNative(col("qe"), col("de")), col("qn"), col("dn")))
-    val wRef = Window.partitionBy(col("qid")).orderBy(col("score_e6").desc, col("vec_id").asc)
-    broadcast(localSl).join(broadcast(probesV.select(col("vec_id").as("qid"),
-        col("embedding").as("qe"), col("nrm").as("qn"))), Seq("qid"))
-      .join(cold, Seq("vec_id"))
-      .select(col("qid"), col("vec_id"), col("qd2"), refScore.as("score_e6"))
-      .withColumn("rnk", row_number().over(wRef)).filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk").cast("long").as("rnk"), col("vec_id"),
-        col("qd2"), col("score_e6"))
-      .orderBy("qid", "rnk")
+    // point-read discipline ([[IndexSwap.exactRefine]]).
+    IndexSwap.exactRefine(s, sl, probesV, k, Seq("qd2")) { (push, _) =>
+      s.read.parquet(IndexSwap.sideAt(root, "vectors")).filter(push)
+    }
   }
 
   /** RANGE search with the declared fixture probe set (vec_id < 10) —
@@ -412,7 +331,7 @@ object SQ8 {
     *
     * Scale shape: unlike knn there is no fixed-width shortlist — range
     * output is data-dependent by definition — so the cold refine
-    * DISPATCHES on the measured survivor count (the isinMaxIds
+    * DISPATCHES on the measured survivor count (the [[IndexSwap.isinMaxIds]]
     * discipline): up to [[rangeCollectMax]] survivors are collected
     * and the float side is POINT-READ under an isin/between pushdown
     * (measured at 1M x 70 survivors: the distributed-join form paid a
@@ -473,11 +392,7 @@ object SQ8 {
     val refined = if (survRows.length <= cap) {
       val localSurv = s.createDataFrame(
         java.util.Arrays.asList(survRows: _*), surv.schema)
-      val ids = survRows.map(_.getLong(1)).distinct.toSeq
-      val push =
-        if (ids.isEmpty) lit(false)
-        else if (ids.length <= isinMaxIds(s)) col("vec_id").isin(ids: _*)
-        else col("vec_id").between(ids.min, ids.max)
+      val push = IndexSwap.idPush(s, survRows.map(_.getLong(1)).distinct.toSeq)
       val cold = ve6Of(coldAll.filter(push))
         .select(col("vec_id"), col("emb6").as("de6"))
       broadcast(localSurv).join(cold, Seq("vec_id")).join(pe6b, Seq("qid"))
@@ -536,17 +451,11 @@ object SQ8 {
     }
   }
 
-  /** DESCRIBE the live index — (side, n_rows) per present side, the
-    * [[IndexSwap.describeIndex]] footer-walk verb (qn67 gates it on
-    * this rung). */
-  def describeSq8Index(s: SparkSession, path: String): DataFrame =
-    IndexSwap.describeIndex(s, path, sq8Sides)
-
   /** Open a serve-session handle: resolve the version once, collect
     * the D-row envelope once. */
   def openSq8Index(s: SparkSession, path: String): Sq8IndexHandle = {
     val version = IndexSwap.liveVersion(s, path)
-    val root = if (version == 0L) path else s"$path/v$version"
+    val root = IndexSwap.rootAt(path, version)
     val (mna, spa) = collectStats(s.read.parquet(IndexSwap.sideAt(root, "stats")))
     Sq8IndexHandle(path, version, root, mna, spa)
   }

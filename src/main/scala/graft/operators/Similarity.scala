@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * ordering key is the floor-scaled integer `e6(score)` so rank cutoffs
   * cannot diverge on float ties.
   */
-object Similarity {
+object Similarity extends IndexRung {
 
   /** Max embedding dimension at which qn08's lossless angular grid is
     * still the right plan. The grid's two cell coordinates concentrate
@@ -658,7 +658,7 @@ object Similarity {
       // never land in qn45/qn53's shared tree.
       val path = IndexMemo.mutableCopy(s, dir, "ivfsq8_16")(
         IvfSq8.buildIvfSq8Index(s, dir, 16, _))
-      IvfSq8.deleteFromIvfSq8Index(s,
+      IvfSq8.delete(s,
         Tables.embeddings(s, dir).filter(col("vec_id") % 7 === 0).select("vec_id"),
         path)
       IvfSq8.probeIvfSq8Index(s, dir, path, 4, 5)
@@ -699,7 +699,7 @@ object Similarity {
         ivfOracleSql(candFilter = "a.vec_id % 7 <> 0")) { (s, dir) =>
       val path = IndexMemo.mutableCopy(s, dir, "ivf16")(
         buildIvfIndex(s, dir, nCentroids = 16, _))
-      deleteFromIvfIndex(s,
+      delete(s,
         Tables.embeddings(s, dir).filter(col("vec_id") % 7 === 0).select("vec_id"),
         path)
       probeIvfIndex(s, dir, path, nProbe = 4, k = 5)
@@ -724,7 +724,7 @@ object Similarity {
         sqlQn34("s.vec_id % 7 <> 0")) { (s, dir) =>
       val path = IndexMemo.mutableCopy(s, dir, "bin64")(
         BinarySig.buildBinIndex(s, dir, _))
-      BinarySig.deleteFromBinIndex(s,
+      BinarySig.delete(s,
         Tables.embeddings(s, dir).filter(col("vec_id") % 7 === 0).select("vec_id"),
         path)
       BinarySig.probeBinIndex(s, dir, path, 5)
@@ -749,7 +749,7 @@ object Similarity {
     Q("qn60_ann_sq8_deletes",
         sqlQn38("s.vec_id % 7 <> 0")) { (s, dir) =>
       val path = IndexMemo.mutableCopy(s, dir, "sq8_64")(SQ8.buildSq8Index(s, dir, _))
-      SQ8.deleteFromSq8Index(s,
+      SQ8.delete(s,
         Tables.embeddings(s, dir).filter(col("vec_id") % 7 === 0).select("vec_id"),
         path)
       SQ8.probeSq8Index(s, dir, path, 5)
@@ -774,7 +774,7 @@ object Similarity {
       val wv = wideVecs(s, dir)
       val path = IndexMemo.mutableCopy(s, dir, "matry64w")(
         Matryoshka.buildMatryoshkaIndexFrom(s, wv, 64, _))
-      Matryoshka.deleteFromMatryoshkaIndex(s,
+      Matryoshka.delete(s,
         Tables.embeddings(s, dir).filter(col("vec_id") % 7 === 0).select("vec_id"),
         path)
       Matryoshka.probeMatryoshkaIndexWith(s, wv.filter(col("vec_id") < 10), path, 5)
@@ -818,7 +818,7 @@ object Similarity {
     Q("qn66_ann_sq8_range_filtered",
         sqlQn64("s.vec_id % 7 <> 0 AND s.vec_id % 3 = 1")) { (s, dir) =>
       val path = IndexMemo.mutableCopy(s, dir, "sq8_64")(SQ8.buildSq8Index(s, dir, _))
-      SQ8.deleteFromSq8Index(s,
+      SQ8.delete(s,
         Tables.embeddings(s, dir).filter(col("vec_id") % 7 === 0).select("vec_id"),
         path)
       SQ8.rangeSq8IndexWith(s,
@@ -1060,10 +1060,10 @@ object Similarity {
       |  UNION ALL SELECT 'vectors', CAST(COUNT(*) AS BIGINT) FROM embeddings)
       |ORDER BY side""".stripMargin) { (s, dir) =>
     val path = IndexMemo.mutableCopy(s, dir, "sq8_64")(SQ8.buildSq8Index(s, dir, _))
-    SQ8.deleteFromSq8Index(s,
+    SQ8.delete(s,
       Tables.embeddings(s, dir).filter(col("vec_id") % 7 === 0).select("vec_id"),
       path)
-    SQ8.describeSq8Index(s, path).orderBy("side")
+    SQ8.describe(s, path).orderBy("side")
   }
 
   /** qn64's radius: the ~1% quantile of probe-corpus e6² distances on
@@ -1931,7 +1931,7 @@ object Similarity {
     * between an ANN service and a full scan per query batch. */
   def buildIvfIndex(s: SparkSession, dir: String, nCentroids: Int, path: String,
       pred: Column = lit(true), sampleKey: Column = col("vec_id")): Unit = {
-    recoverRebalance(s, path) // drop any stale stage from a crashed build
+    recover(s, path) // drop any stale stage from a crashed build
     val v = vecs(s, dir).filter(pred)
     // Centroids are nCentroids rows by declaration: collect ONCE into a
     // local relation so the assignment write and the centroid write
@@ -1949,7 +1949,7 @@ object Similarity {
         .partitionBy("cent_id").parquet(IndexSwap.tmp(path, "vectors").toString),
       () => localCents.coalesce(1).write.mode("overwrite")
         .parquet(IndexSwap.tmp(path, "centroids").toString)))
-    IndexSwap.commit(s, path, ivfSides)
+    IndexSwap.commit(s, path, sides)
   }
 
   /** Assign NEW vectors against the STORED centroids and append them to
@@ -1965,13 +1965,13 @@ object Similarity {
     * after the append, per-cell row counts come off the lake's parquet
     * FOOTERS (driver metadata — O(files), the zone/bloom walk class),
     * and if the hottest cell holds more than k x the mean over the
-    * DECLARED cell count, [[rebalanceIvfIndex]] runs. A drifting stream
+    * DECLARED cell count, [[rebalance]] runs. A drifting stream
     * otherwise concentrates appends into a few stale cells, and every
     * probe routed there degrades toward a linear scan of the drift —
     * unbounded for any fixed k threshold without the trigger. */
   def appendToIvfIndex(s: SparkSession, newVecs: DataFrame, path: String,
       autoRebalance: Option[Int] = None): Unit = {
-    recoverRebalance(s, path) // heal any interrupted prior swap first
+    recover(s, path) // heal any interrupted prior swap first
     // ONE version resolution for the centroid read, the vector write,
     // and the trigger audit (round-15 ADVICE): never split an append
     // across a mid-call rebalance commit.
@@ -1988,34 +1988,26 @@ object Similarity {
       if (stats.nonEmpty) {
         val nCells = math.max(1L, parquetRowCount(s, centsDir))
         val mean = math.max(1.0, stats.values.sum.toDouble / nCells)
-        if (stats.values.max > k * mean) rebalanceIvfIndex(s, path)
+        if (stats.values.max > k * mean) rebalance(s, path)
       }
     }
   }
 
-  /** DELETE vectors from the index (round 17 — the
-    * [[graft.operators.IvfSq8]] tombstone semantics at the
-    * full-precision tier): O(deleted) tombstone append to the optional
-    * `deletes` side under the pinned version root; [[probeCellsTail]]
-    * anti-joins it, so exclusion is immediate for both the per-call
-    * entry and the serve handle; physical reclaim is
-    * [[rebalanceIvfIndex]]'s version swap. `autoRebalance = Some(rate)`
-    * rebalances INLINE past tombstones/live > rate — this index's
-    * append trigger is inline too (it predates the siblings'
-    * deferred-marker pattern), and the delete verb follows its host's
-    * cadence convention. vec_ids are permanent identities: re-appending
-    * a tombstoned id is a caller error. */
+  /** [[delete]] under the name existing callers use. */
   def deleteFromIvfIndex(s: SparkSession, ids: DataFrame, path: String,
-      autoRebalance: Option[Double] = None): Unit = {
-    recoverRebalance(s, path)
-    val root = IndexSwap.liveRoot(s, path)
-    IndexSwap.appendTombstones(root, ids)
-    autoRebalance.foreach { maxRate =>
-      val live = ivfCellStatsAt(s, root).values.sum
-      val dead = IndexSwap.tombstonesAt(s, root).map(_.count()).getOrElse(0L)
-      if (IndexSwap.tombstoneReclaimDue(s, live, dead, maxRate)) rebalanceIvfIndex(s, path)
-    }
-  }
+      autoRebalance: Option[Double] = None): Unit =
+    delete(s, ids, path, autoRebalance)
+
+  /** A due tombstone reclaim rebalances INLINE, no deferred marker:
+    * this index's append trigger is inline too (it predates the
+    * siblings' deferred-marker pattern), and the delete verb follows
+    * its host's cadence convention. */
+  override protected def onReclaimDue(s: SparkSession, path: String): Unit =
+    rebalance(s, path)
+
+  /** Live rows: the vector lake's per-cell footer counts. */
+  protected def liveRows(s: SparkSession, root: String): Long =
+    ivfCellStatsAt(s, root).values.sum
 
   /** Per-cell row counts of a persisted IVF index, from the vector
     * lake's parquet footers — the occupancy audit the rebalance trigger
@@ -2056,10 +2048,10 @@ object Similarity {
     * one atomic rename makes them version N+1, and version N is
     * retained a full cycle so a reader that resolved it mid-rebalance
     * finishes against its snapshot. A crash before the rename leaves a
-    * partial stage [[recoverRebalance]] drops (run by append and
+    * partial stage [[recover]] drops (run by append and
     * rebalance entry) — no state loses the only copy of the index. */
-  def rebalanceIvfIndex(s: SparkSession, path: String): Unit = {
-    recoverRebalance(s, path)
+  def rebalance(s: SparkSession, path: String): Unit = {
+    recover(s, path)
     val rebRoot = IndexSwap.liveRoot(s, path)
     // Tombstones reclaim physically here (the fresh version dir
     // carries no deletes side).
@@ -2085,18 +2077,11 @@ object Similarity {
         .partitionBy("cent_id").parquet(IndexSwap.tmp(path, "vectors").toString),
       () => localCents.coalesce(1).write.mode("overwrite")
         .parquet(IndexSwap.tmp(path, "centroids").toString)))
-    IndexSwap.commit(s, path, ivfSides)
+    IndexSwap.commit(s, path, sides)
   }
 
   /** The IVF index's swappable sides (the [[IndexSwap]] protocol). */
-  private val ivfSides = Seq("vectors", "centroids")
-
-  /** Heal an interrupted build/[[rebalanceIvfIndex]]: drop any partial
-    * stage — the one crash state with residue under the versioned
-    * [[IndexSwap]] commit (the live version is never touched before
-    * the atomic rename, and after it nothing is left to do). */
-  def recoverRebalance(s: SparkSession, path: String): Unit =
-    IndexSwap.recover(s, path, ivfSides)
+  val sides: Seq[String] = Seq("vectors", "centroids")
 
   /** Probe a persisted IVF index: route probes via the stored centroid
     * table, then scan ONLY the probed cells — `cent_id IN (...)` lands
@@ -2218,15 +2203,11 @@ object Similarity {
     }
   }
 
-  /** DESCRIBE the live IVF index — the [[IndexSwap.describeIndex]] verb. */
-  def describeIvfIndex(s: SparkSession, path: String): DataFrame =
-    IndexSwap.describeIndex(s, path, ivfSides)
-
   /** Open an IVF serve-session handle: one version resolve + one
     * centroid collect. */
   def openIvfIndex(s: SparkSession, path: String): IvfIndexHandle = {
     val version = IndexSwap.liveVersion(s, path)
-    val root = if (version == 0L) path else s"$path/v$version"
+    val root = IndexSwap.rootAt(path, version)
     IvfIndexHandle(path, version, root,
       collectCents(s.read.parquet(s"$root/centroids")))
   }

@@ -36,18 +36,26 @@ import org.apache.spark.sql.functions._
   * Lifecycle verbs follow the family discipline: [[appendToTextIndex]]
   * is O(new) (postings/doclen append + one stats delta; appended
   * doc_ids must be fresh — the permanent-identity contract),
-  * [[deleteFromTextIndex]] tombstones doc_ids for immediate candidate
+  * [[delete]] tombstones doc_ids for immediate candidate
   * exclusion (df and the N/T stats stay the stored corpus's — the
   * index-predates-the-delete semantics every rung shares),
   * [[probeTextIndexWith]] takes the `allowed` frame, and
-  * [[rebalanceTextIndex]] rebuilds from the lake minus tombstones
-  * under the crash-safe staged swap. [[describeTextIndex]] is the
+  * [[rebalance]] rebuilds from the lake minus tombstones
+  * under the crash-safe staged swap. [[describe]] is the
   * footer-walk DESCRIBE verb.
   */
-object TextIndex {
+object TextIndex extends IndexRung {
 
   /** The index's swappable sides (the [[IndexSwap]] protocol). */
-  private val tSides = Seq("postings", "doclen", "stats")
+  val sides: Seq[String] = Seq("postings", "doclen", "stats")
+
+  /** Live rows: the doclen side's footer count (one row per indexed
+    * document that has tokens). */
+  protected def liveRows(s: SparkSession, root: String): Long =
+    Similarity.parquetRowCount(s, IndexSwap.sideAt(root, "doclen"))
+
+  /** Tombstones key by doc_id: [[delete]] takes a (doc_id, ...) frame. */
+  override protected def idCol: String = "doc_id"
 
   /** Tokenized (doc_id, term) pairs of a (doc_id, text) corpus. */
   private def tokensOf(corpus: DataFrame): DataFrame =
@@ -105,9 +113,9 @@ object TextIndex {
   /** Build from an arbitrary (doc_id, text) corpus frame. */
   def buildTextIndexFrom(s: SparkSession, corpus: DataFrame,
       path: String): Unit = {
-    recoverTextRebalance(s, path)
+    recover(s, path)
     stageSides(s, path, corpus)
-    IndexSwap.commit(s, path, tSides)
+    IndexSwap.commit(s, path, sides)
   }
 
   /** Append NEW documents: O(new) — postings/doclen rows for the new
@@ -117,7 +125,7 @@ object TextIndex {
     * error that would double-count df. */
   def appendToTextIndex(s: SparkSession, newDocs: DataFrame,
       path: String, autoCompact: Option[Int] = None): Unit = {
-    recoverTextRebalance(s, path)
+    recover(s, path)
     val root = IndexSwap.liveRoot(s, path)
     val tk = tokensOf(newDocs).localCheckpoint(true)
     tk.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -132,46 +140,21 @@ object TextIndex {
     // Measured fragmentation trigger (the BinarySig/Matryoshka
     // pattern): appends fragment the term-sorted point-read layout —
     // past the file-count threshold the deferred marker drops and the
-    // append returns at append cost; [[maintainTextIndex]] pays.
+    // append returns at append cost; [[maintain]] pays.
     autoCompact.foreach { maxFiles =>
       val files = graft.sources.LakeListing.dataFiles(
         s.sessionState.newHadoopConf(),
         new org.apache.hadoop.fs.Path(IndexSwap.sideAt(root, "postings"))).size
-      if (files > maxFiles) {
-        val fs = IndexSwap.fsOf(s, path)
-        fs.create(rebalanceDue(path), true).close()
-      }
+      if (files > maxFiles) markRebalanceDue(s, path)
     }
   }
 
-  private def rebalanceDue(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$path/_rebalance_due")
-
-  /** The maintenance entry point (the family contract): heal any
-    * interrupted swap, then run the rebuild a deferred trigger
-    * requested. The marker deletes only AFTER the commit — a crash
-    * between them re-runs a deterministic fixpoint. Returns whether a
-    * rebuild ran. */
-  def maintainTextIndex(s: SparkSession, path: String): Boolean = {
-    recoverTextRebalance(s, path)
-    val fs = IndexSwap.fsOf(s, path)
-    if (!fs.exists(rebalanceDue(path))) false
-    else {
-      rebalanceTextIndex(s, path)
-      fs.delete(rebalanceDue(path), false): Unit
-      true
-    }
-  }
-
-  /** DELETE via tombstones (the family verb): O(deleted), immediate
-    * candidate exclusion; df and the corpus stats stay the stored
-    * index's until [[rebalanceTextIndex]] physically reclaims. */
+  /** [[delete]] under the name existing callers use: doc_id tombstones,
+    * immediate candidate exclusion; df and the corpus stats stay the
+    * stored index's until [[rebalance]] physically reclaims. */
   def deleteFromTextIndex(s: SparkSession, ids: DataFrame,
-      path: String): Unit = {
-    recoverTextRebalance(s, path)
-    IndexSwap.appendTombstones(IndexSwap.liveRoot(s, path),
-      ids.select(col("doc_id").as("vec_id")))
-  }
+      path: String): Unit =
+    delete(s, ids, path)
 
   /** Rebuild from the STORED sides minus tombstones — the physical
     * reclaim + compaction (appends fragment the term-sorted layout).
@@ -185,8 +168,8 @@ object TextIndex {
     * PROVIDED tombstoned ids were indexed docs (the family's
     * permanent-identity contract — deleting a never-indexed id is a
     * caller error here exactly as re-appending one is). */
-  def rebalanceTextIndex(s: SparkSession, path: String): Unit = {
-    recoverTextRebalance(s, path)
+  def rebalance(s: SparkSession, path: String): Unit = {
+    recover(s, path)
     val root = IndexSwap.liveRoot(s, path)
     def minusTombs(side: String): DataFrame =
       IndexSwap.exceptTombstones(s, root,
@@ -211,16 +194,8 @@ object TextIndex {
     }
     statsDelta(s, stored.getLong(0) - dead._1, stored.getLong(1) - dead._2)
       .write.mode("overwrite").parquet(IndexSwap.tmp(path, "stats").toString)
-    IndexSwap.commit(s, path, tSides)
+    IndexSwap.commit(s, path, sides)
   }
-
-  /** Heal an interrupted swap (both polarities). */
-  def recoverTextRebalance(s: SparkSession, path: String): Unit =
-    IndexSwap.recover(s, path, tSides)
-
-  /** DESCRIBE the live index — the [[IndexSwap.describeIndex]] verb. */
-  def describeTextIndex(s: SparkSession, path: String): DataFrame =
-    IndexSwap.describeIndex(s, path, tSides)
 
   /** Probe with the declared fixture query set (doc_id < 5) — the
     * qn69 driver gate's entry. */
@@ -356,7 +331,7 @@ object TextIndex {
     * stats deltas once. */
   def openTextIndex(s: SparkSession, path: String): TextIndexHandle = {
     val version = IndexSwap.liveVersion(s, path)
-    val root = if (version == 0L) path else s"$path/v$version"
+    val root = IndexSwap.rootAt(path, version)
     val stats = s.read.parquet(IndexSwap.sideAt(root, "stats"))
       .agg(sum(col("n_docs")).as("n"), sum(col("n_tokens")).as("t")).head()
     TextIndexHandle(path, version, root, stats.getLong(0), stats.getLong(1))

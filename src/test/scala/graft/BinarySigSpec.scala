@@ -31,7 +31,7 @@ class BinarySigSpec extends AnyFunSuite {
     assert(handle.probeWith(spark, probeFrame, 5).collect().map(_.toString).toSeq ==
       BinarySig.probeBinIndex(spark, sf, path, 5).collect().map(_.toString).toSeq,
       "handle probe diverged from the per-call entry")
-    BinarySig.rebalanceBinIndex(spark, path)
+    BinarySig.rebalance(spark, path)
     assert(handle.probeWith(spark, probeFrame, 5).collect().map(_.toString).toSeq ==
       BinarySig.probeBinIndex(spark, sf, path, 5).collect().map(_.toString).toSeq,
       "stale handle did not re-open on the new version")
@@ -86,10 +86,10 @@ class BinarySigSpec extends AnyFunSuite {
     val extra = Tables.embeddings(spark, sf).filter(col("vec_id") < 20)
       .select((col("vec_id") + 90000L).as("vec_id"), col("embedding"))
     BinarySig.appendToBinIndex(spark, extra, path)
-    BinarySig.rebalanceBinIndex(spark, path)
+    BinarySig.rebalance(spark, path)
     val codes1 = spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "codes"))
       .collect().map(_.toString).sorted.toSeq
-    BinarySig.rebalanceBinIndex(spark, path)
+    BinarySig.rebalance(spark, path)
     val codes2 = spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "codes"))
       .collect().map(_.toString).sorted.toSeq
     assert(codes1 == codes2, "rebalance is not a fixpoint")
@@ -107,7 +107,7 @@ class BinarySigSpec extends AnyFunSuite {
     fs.create(new Path(s"$path/.stage/codes/part-junk.parquet"), true).close()
     val before = spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "codes"))
       .collect().map(_.toString).sorted.toSeq
-    BinarySig.recoverBinRebalance(spark, path)
+    BinarySig.recover(spark, path)
     assert(!fs.exists(new Path(s"$path/.stage")))
     assert(spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "codes"))
       .collect().map(_.toString).sorted.toSeq == before, "rollback touched the live index")
@@ -146,10 +146,10 @@ class BinarySigSpec extends AnyFunSuite {
     assert(top.length == 1 && top.head.getLong(2) == 77777L,
       s"planted wide near-copy not probe 3's top neighbor: ${top.mkString}")
     // Rebalance stays a deterministic fixpoint in the multi-word form.
-    BinarySig.rebalanceBinIndex(spark, path)
+    BinarySig.rebalance(spark, path)
     val codes1 = spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "codes"))
       .collect().map(_.toString).sorted.toSeq
-    BinarySig.rebalanceBinIndex(spark, path)
+    BinarySig.rebalance(spark, path)
     val codes2 = spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "codes"))
       .collect().map(_.toString).sorted.toSeq
     assert(codes1 == codes2, "multi-word rebalance is not a fixpoint")
@@ -193,11 +193,11 @@ class BinarySigSpec extends AnyFunSuite {
       "append ran the compaction inline instead of deferring")
     // Maintenance consumes the marker: compaction rewrites both tiers
     // (file count back to build-class), version bumps, marker gone.
-    assert(BinarySig.maintainBinIndex(spark, path), "maintain did not run the due compaction")
+    assert(BinarySig.maintain(spark, path), "maintain did not run the due compaction")
     assert(!fs.exists(new Path(s"$path/_rebalance_due")))
     assert(codeFiles <= builtFiles + 1, s"compaction did not defragment: $codeFiles files")
     assert(graft.operators.IndexSwap.liveVersion(spark, path) == verBefore + 1)
-    assert(!BinarySig.maintainBinIndex(spark, path), "maintain re-ran without a marker")
+    assert(!BinarySig.maintain(spark, path), "maintain re-ran without a marker")
     // The compacted index still serves the exact qn34 contract rows.
     assert(BinarySig.probeBinIndex(spark, sf, path, 5).count() == 50)
   }
@@ -223,7 +223,7 @@ class BinarySigSpec extends AnyFunSuite {
           // fired trigger only drops the marker); maintenance runs as
           // its own per-batch step.
           BinarySig.appendToBinIndex(b.sparkSession, b, path, autoCompact = Some(threshold))
-          BinarySig.maintainBinIndex(b.sparkSession, path): Unit
+          BinarySig.maintain(b.sparkSession, path): Unit
       }.start()
     val verBefore = graft.operators.IndexSwap.liveVersion(spark, path)
     try {
@@ -257,7 +257,7 @@ class BinarySigSpec extends AnyFunSuite {
     // The compaction re-signs from the cold lake: the orphan becomes a
     // first-class indexed row (88888 is a near-copy of probe 3 — it
     // must now surface as its top neighbor).
-    BinarySig.rebalanceBinIndex(spark, path)
+    BinarySig.rebalance(spark, path)
     val codes = spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "codes"))
     assert(codes.count() ==
       spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "vectors")).count(),
@@ -291,11 +291,11 @@ class BinarySigSpec extends AnyFunSuite {
     graft.operators.BinarySig.buildBinIndex(spark, sf, path)
     val top1 = graft.operators.BinarySig.probeBinIndex(spark, sf, path, 5)
       .filter(col("qid") === 3 && col("rnk") === 1).head().getAs[Long]("vec_id")
-    graft.operators.BinarySig.deleteFromBinIndex(spark, Seq(top1).toDF("vec_id"), path)
+    graft.operators.BinarySig.delete(spark, Seq(top1).toDF("vec_id"), path)
     val after = graft.operators.BinarySig.probeBinIndex(spark, sf, path, 5).collect()
     assert(!after.exists(_.getAs[Long]("vec_id") == top1), "a tombstoned row surfaced")
     assert(after.length == 50, "delete shrank the result set instead of the candidates")
-    graft.operators.BinarySig.rebalanceBinIndex(spark, path)
+    graft.operators.BinarySig.rebalance(spark, path)
     val root = graft.operators.IndexSwap.liveRoot(spark, path)
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/deletes")),

@@ -35,7 +35,7 @@ class IndexMemoSpec extends AnyFunSuite {
     val before = SQ8.probeSq8Index(spark, sf, pristine, 5).collect().map(_.toString).toSeq
     val copy = IndexMemo.mutableCopy(spark, sf, "spec_sq8_mut")(SQ8.buildSq8Index(spark, sf, _))
     assert(copy != pristine, "mutableCopy handed back the shared tree")
-    SQ8.deleteFromSq8Index(spark,
+    SQ8.delete(spark,
       Tables.embeddings(spark, sf).filter(col("vec_id") % 7 === 0).select("vec_id"), copy)
     // The copy sees the tombstones; the pristine tree must not.
     val copyRows = SQ8.probeSq8Index(spark, sf, copy, 5)

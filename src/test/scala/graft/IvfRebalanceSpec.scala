@@ -83,11 +83,11 @@ class IvfRebalanceSpec extends AnyFunSuite {
   test("rebalance is deterministic: a second run over the same lake is a fixpoint") {
     val path = Similarity.newIndexDir()
     Similarity.buildIvfIndex(spark, sf, 16, path)
-    Similarity.rebalanceIvfIndex(spark, path)
+    Similarity.rebalance(spark, path)
     val cents1 = spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "centroids"))
       .collect().map(_.getLong(0)).sorted.toSeq
     val stats1 = Similarity.ivfCellStats(spark, path)
-    Similarity.rebalanceIvfIndex(spark, path)
+    Similarity.rebalance(spark, path)
     val cents2 = spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "centroids"))
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(cents1 == cents2, "re-clustering the same lake picked different seeds")
@@ -143,7 +143,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
     fs1.create(new Path(s"$p1/.stage/vectors/part-junk.parquet"), true).close()
     val beforeStats = Similarity.ivfCellStats(spark, p1)
     val verBefore = graft.operators.IndexSwap.liveVersion(spark, p1)
-    Similarity.recoverRebalance(spark, p1)
+    Similarity.recover(spark, p1)
     assert(!fs1.exists(new Path(s"$p1/.stage")))
     assert(graft.operators.IndexSwap.liveVersion(spark, p1) == verBefore)
     assert(Similarity.ivfCellStats(spark, p1) == beforeStats, "rollback touched the live index")
@@ -169,15 +169,15 @@ class IvfRebalanceSpec extends AnyFunSuite {
     // Tombstones against the legacy root land at $path/deletes — the
     // optional side must follow the same v0 grace-then-retire cycle
     // (round-17 review: it used to survive forever as dead storage).
-    Similarity.deleteFromIvfIndex(spark,
+    Similarity.delete(spark,
       Tables.embeddings(spark, sf).filter(col("vec_id") % 7 === 0).select("vec_id"),
       path)
     assert(fs.exists(new Path(s"$path/deletes")), "legacy delete must tombstone at the root")
-    Similarity.rebalanceIvfIndex(spark, path) // -> v1; legacy kept as grace
+    Similarity.rebalance(spark, path) // -> v1; legacy kept as grace
     assert(graft.operators.IndexSwap.liveVersion(spark, path) == 1L)
     assert(fs.exists(new Path(s"$path/vectors")), "legacy sides are the v0 reader grace")
     assert(fs.exists(new Path(s"$path/deletes")), "legacy tombstones share the grace window")
-    Similarity.rebalanceIvfIndex(spark, path) // -> v2; legacy retired
+    Similarity.rebalance(spark, path) // -> v2; legacy retired
     assert(!fs.exists(new Path(s"$path/vectors")), "legacy sides should retire at v2")
     assert(!fs.exists(new Path(s"$path/deletes")), "legacy tombstones should retire with them")
     assert(Similarity.probeIvfIndex(spark, sf, path, 4, 5).count() == 50)
@@ -188,7 +188,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
     Similarity.buildIvfIndex(spark, sf, 16, path)
     val reader = spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "vectors"))
     val before = reader.count()
-    Similarity.rebalanceIvfIndex(spark, path) // commits v2 while `reader` holds v1 paths
+    Similarity.rebalance(spark, path) // commits v2 while `reader` holds v1 paths
     assert(reader.count() == before, "pre-swap reader lost its snapshot")
     assert(graft.operators.IndexSwap.liveVersion(spark, path) == 2L)
   }
@@ -204,7 +204,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("missing sides centroids"), e.getMessage)
     assert(graft.operators.IndexSwap.liveVersion(spark, path) == 1L, "partial stage was committed")
-    Similarity.recoverRebalance(spark, path)
+    Similarity.recover(spark, path)
     assert(Similarity.probeIvfIndex(spark, sf, path, 4, 5).count() == 50)
   }
 
@@ -217,19 +217,19 @@ class IvfRebalanceSpec extends AnyFunSuite {
       Similarity.buildIvfIndex(spark, sf, 16, path) // v1
       val reader = spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "vectors"))
       val before = reader.count()
-      Similarity.rebalanceIvfIndex(spark, path) // v2
-      Similarity.rebalanceIvfIndex(spark, path) // v3
+      Similarity.rebalance(spark, path) // v2
+      Similarity.rebalance(spark, path) // v3
       assert(fs.exists(new Path(s"$path/v1")), "v1 must survive two commits at K=3")
       assert(reader.count() == before, "reader two rebuild cycles old lost its snapshot at K=3")
-      Similarity.rebalanceIvfIndex(spark, path) // v4: v1 is the 3rd prior — still retained
+      Similarity.rebalance(spark, path) // v4: v1 is the 3rd prior — still retained
       assert(fs.exists(new Path(s"$path/v1")), "K=3 retains three prior versions")
-      Similarity.rebalanceIvfIndex(spark, path) // v5: v1 now outside the window
+      Similarity.rebalance(spark, path) // v5: v1 now outside the window
       assert(!fs.exists(new Path(s"$path/v1")), "v1 should retire once outside the retained window")
       assert(fs.exists(new Path(s"$path/v2")) && fs.exists(new Path(s"$path/v3")),
         "v2-v4 remain inside the K=3 window")
     } finally spark.conf.unset("spark.graft.index.retainVersions")
     // Default retention (1 prior version) still applies after unset.
-    Similarity.rebalanceIvfIndex(spark, path) // v6: default K=1 keeps only v5
+    Similarity.rebalance(spark, path) // v6: default K=1 keeps only v5
     assert(!fs.exists(new Path(s"$path/v3")) && !fs.exists(new Path(s"$path/v4")),
       "default retention must prune beyond one prior version")
     assert(fs.exists(new Path(s"$path/v5")))
@@ -247,7 +247,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
     val viaHandle = handle.probeWith(spark, probeFrame, 4, 5)
       .collect().map(_.toString).toSeq
     assert(viaHandle == perCall, "handle probe diverged from the per-call entry")
-    Similarity.rebalanceIvfIndex(spark, path)
+    Similarity.rebalance(spark, path)
     val afterRebuild = Similarity.probeIvfIndexWith(spark, probeFrame, path, 4, 5)
       .collect().map(_.toString).toSeq
     val viaStale = handle.probeWith(spark, probeFrame, 4, 5)
@@ -286,7 +286,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
           transform(col("embedding"), (x, i) =>
             when(i === 0, (x.cast("double") * 1.01).cast("float")).otherwise(x)).as("embedding"))
       Similarity.appendToIvfIndex(spark, planted, path)
-      Similarity.rebalanceIvfIndex(spark, path) // v2; v1 retained at K=2
+      Similarity.rebalance(spark, path) // v2; v1 retained at K=2
       assert(graft.operators.IndexSwap.liveVersion(spark, path) == 2L)
       // The in-flight probe completes CORRECTLY and ENTIRELY on v_N:
       // bit-identical to the pre-commit baseline — the planted row
@@ -311,11 +311,11 @@ class IvfRebalanceSpec extends AnyFunSuite {
     Similarity.buildIvfIndex(spark, sf, 16, path)
     val top1 = Similarity.probeIvfIndex(spark, sf, path, 4, 5)
       .filter(col("probe_id") === 3 && col("rnk") === 1).head().getAs[Long]("vec_id")
-    Similarity.deleteFromIvfIndex(spark, Seq(top1).toDF("vec_id"), path)
+    Similarity.delete(spark, Seq(top1).toDF("vec_id"), path)
     val after = Similarity.probeIvfIndex(spark, sf, path, 4, 5).collect()
     assert(!after.exists(_.getAs[Long]("vec_id") == top1), "a tombstoned row surfaced")
     assert(after.length == 50, "delete shrank the result set instead of the candidates")
-    Similarity.rebalanceIvfIndex(spark, path)
+    Similarity.rebalance(spark, path)
     val root = graft.operators.IndexSwap.liveRoot(spark, path)
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/deletes")),

@@ -115,7 +115,7 @@ class IvfSq8Spec extends AnyFunSuite {
       .select((col("vec_id") + 90000L).as("vec_id"), col("embedding"))
     IvfSq8.appendToIvfSq8Index(spark, balanced, path, autoRebalance = Some(1000))
     assert(!fs.exists(due), "balanced append dropped the due marker")
-    assert(!IvfSq8.maintainIvfSq8Index(spark, path),
+    assert(!IvfSq8.maintain(spark, path),
       "maintain ran a rebuild with no due marker")
     // 200 near-copies of vector 3 concentrate into ONE cell (~230 rows
     // vs a ~44-row mean): the k=2 occupancy audit must fire — but the
@@ -134,11 +134,11 @@ class IvfSq8Spec extends AnyFunSuite {
       "append ran the rebuild inline instead of deferring it")
     // Maintenance consumes the marker: a rebuild commits a new version,
     // the marker is gone, a second maintain is a no-op.
-    assert(IvfSq8.maintainIvfSq8Index(spark, path), "maintain did not run the due rebuild")
+    assert(IvfSq8.maintain(spark, path), "maintain did not run the due rebuild")
     val rootAfter = graft.operators.IndexSwap.liveRoot(spark, path)
     assert(rootAfter != rootBefore, "rebuild did not commit a new version")
     assert(!fs.exists(due), "maintain left the due marker behind")
-    assert(!IvfSq8.maintainIvfSq8Index(spark, path), "second maintain re-ran the rebuild")
+    assert(!IvfSq8.maintain(spark, path), "second maintain re-ran the rebuild")
     // The rebuild is a deterministic fixpoint: running it again yields
     // byte-identical codes (same hash seeds, same envelope, same
     // assignment over the same lake).
@@ -147,7 +147,7 @@ class IvfSq8Spec extends AnyFunSuite {
         .select(col("vec_id"), col("q8"), col("cent_id").cast("long"))
         .collect().map(_.toString).sorted.toSeq
     val c1 = codesSorted(rootAfter)
-    IvfSq8.rebalanceIvfSq8Index(spark, path)
+    IvfSq8.rebalance(spark, path)
     val c2 = codesSorted(graft.operators.IndexSwap.liveRoot(spark, path))
     assert(c1 == c2, "rebalance is not a fixpoint")
     // The grown index still serves: the skew copies rank as probe 3's
@@ -174,7 +174,7 @@ class IvfSq8Spec extends AnyFunSuite {
           // occupancy audit only drops the marker); maintenance runs as
           // its own per-batch step and pays the rebuild off the hot path.
           IvfSq8.appendToIvfSq8Index(b.sparkSession, b, path, autoRebalance = Some(2))
-          IvfSq8.maintainIvfSq8Index(b.sparkSession, path): Unit
+          IvfSq8.maintain(b.sparkSession, path): Unit
       }.start()
     try {
       // A drifting stream: every row is a near-copy of vector 3, so the
@@ -227,7 +227,7 @@ class IvfSq8Spec extends AnyFunSuite {
     // The rebuild re-derives all four sides from the cold lake: the
     // orphan becomes a first-class indexed row (a near-copy of probe 3
     // — it must now surface as its top neighbor).
-    IvfSq8.rebalanceIvfSq8Index(spark, path)
+    IvfSq8.rebalance(spark, path)
     val r2 = graft.operators.IndexSwap.liveRoot(spark, path)
     assert(spark.read.parquet(s"$r2/codes").count() ==
       spark.read.parquet(s"$r2/vectors").count(),
@@ -270,7 +270,7 @@ class IvfSq8Spec extends AnyFunSuite {
     // the freed shortlist slot keeps the result set full.
     val top1 = IvfSq8.probeIvfSq8Index(spark, sf, path, 4, 5)
       .filter(col("qid") === 3 && col("rnk") === 1).head().getLong(2)
-    IvfSq8.deleteFromIvfSq8Index(spark, Seq(top1).toDF("vec_id"), path)
+    IvfSq8.delete(spark, Seq(top1).toDF("vec_id"), path)
     val afterOne = IvfSq8.probeIvfSq8Index(spark, sf, path, 4, 5).collect()
     assert(!afterOne.exists(_.getLong(2) == top1), "a tombstoned row surfaced")
     assert(afterOne.length == 50, "delete shrank the result set instead of the candidates")
@@ -279,12 +279,12 @@ class IvfSq8Spec extends AnyFunSuite {
     // MEASURED reclaim: tombstone a seventh of the corpus past the 10%
     // ratio — the delete stays O(deleted) (marker only), maintain pays
     // the rebuild, and the fresh version has no deletes side at all.
-    IvfSq8.deleteFromIvfSq8Index(spark,
+    IvfSq8.delete(spark,
       Tables.embeddings(spark, sf).filter(col("vec_id") % 7 === 0).select("vec_id"),
       path, autoRebalance = Some(0.1))
     assert(graft.operators.IndexSwap.liveVersion(spark, path) == verBefore,
       "the delete itself rebuilt — reclaim must be deferred to maintenance")
-    assert(IvfSq8.maintainIvfSq8Index(spark, path), "tombstone-ratio trigger never fired")
+    assert(IvfSq8.maintain(spark, path), "tombstone-ratio trigger never fired")
     val root = graft.operators.IndexSwap.liveRoot(spark, path)
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/deletes")),
@@ -310,9 +310,9 @@ class IvfSq8Spec extends AnyFunSuite {
     IvfSq8.buildIvfSq8Index(spark, sf, 16, path)
     spark.conf.set("spark.graft.index.maxTombstones", "0")
     try {
-      IvfSq8.deleteFromIvfSq8Index(spark, Seq(3L).toDF("vec_id"), path,
+      IvfSq8.delete(spark, Seq(3L).toDF("vec_id"), path,
         autoRebalance = Some(0.99))
-      assert(IvfSq8.maintainIvfSq8Index(spark, path),
+      assert(IvfSq8.maintain(spark, path),
         "the absolute cap did not fire (ratio was 1/500, cap 0)")
     } finally spark.conf.unset("spark.graft.index.maxTombstones")
   }
@@ -356,7 +356,7 @@ class IvfSq8Spec extends AnyFunSuite {
     assert(viaHandle == perCall, "handle probe diverged from the per-call entry")
     // Staleness: a rebuild commits a new version; the SAME handle must
     // serve the rebuilt index (auto re-open), not its stale snapshot.
-    IvfSq8.rebalanceIvfSq8Index(spark, path)
+    IvfSq8.rebalance(spark, path)
     val afterRebuild = IvfSq8.probeIvfSq8Index(spark, sf, path, 4, 5)
       .collect().map(_.toString).toSeq
     val viaStaleHandle = handle.probeWith(spark, probeFrame, 4, 5)

@@ -32,7 +32,7 @@ class MatryoshkaSpec extends AnyFunSuite {
       Matryoshka.probeMatryoshkaIndex(spark, sf, path, 5)
         .collect().map(_.toString).toSeq,
       "handle probe diverged from the per-call entry")
-    Matryoshka.rebalanceMatryoshkaIndex(spark, path)
+    Matryoshka.rebalance(spark, path)
     assert(handle.probeWith(spark, probeFrame, 5).collect().map(_.toString).toSeq ==
       Matryoshka.probeMatryoshkaIndex(spark, sf, path, 5)
         .collect().map(_.toString).toSeq,
@@ -93,10 +93,10 @@ class MatryoshkaSpec extends AnyFunSuite {
     assert(fs.exists(due), "fragmenting appends never dropped the due marker")
     assert(graft.operators.IndexSwap.liveRoot(spark, path) == rootBefore,
       "append compacted inline instead of deferring")
-    assert(Matryoshka.maintainMatryoshkaIndex(spark, path),
+    assert(Matryoshka.maintain(spark, path),
       "maintain did not run the due compaction")
     assert(!fs.exists(due), "maintain left the due marker behind")
-    assert(!Matryoshka.maintainMatryoshkaIndex(spark, path),
+    assert(!Matryoshka.maintain(spark, path),
       "second maintain re-ran the compaction")
     val rootAfter = graft.operators.IndexSwap.liveRoot(spark, path)
     assert(rootAfter != rootBefore, "compaction did not commit a new version")
@@ -104,7 +104,7 @@ class MatryoshkaSpec extends AnyFunSuite {
     def prefixSorted(root: String): Seq[String] =
       spark.read.parquet(s"$root/prefix").collect().map(_.toString).sorted.toSeq
     val p1 = prefixSorted(rootAfter)
-    Matryoshka.rebalanceMatryoshkaIndex(spark, path)
+    Matryoshka.rebalance(spark, path)
     val p2 = prefixSorted(graft.operators.IndexSwap.liveRoot(spark, path))
     assert(p1 == p2, "rebalance is not a fixpoint")
   }
@@ -131,7 +131,7 @@ class MatryoshkaSpec extends AnyFunSuite {
           // own per-batch step.
           Matryoshka.appendToMatryoshkaIndex(b.sparkSession, b, path,
             autoCompact = Some(threshold))
-          Matryoshka.maintainMatryoshkaIndex(b.sparkSession, path): Unit
+          Matryoshka.maintain(b.sparkSession, path): Unit
       }.start()
     val verBefore = graft.operators.IndexSwap.liveVersion(spark, path)
     try {
@@ -154,11 +154,11 @@ class MatryoshkaSpec extends AnyFunSuite {
     Matryoshka.buildMatryoshkaIndex(spark, sf, 16, path)
     val top1 = Matryoshka.probeMatryoshkaIndex(spark, sf, path, 5)
       .filter(col("qid") === 3 && col("rnk") === 1).head().getAs[Long]("vec_id")
-    Matryoshka.deleteFromMatryoshkaIndex(spark, Seq(top1).toDF("vec_id"), path)
+    Matryoshka.delete(spark, Seq(top1).toDF("vec_id"), path)
     val after = Matryoshka.probeMatryoshkaIndex(spark, sf, path, 5).collect()
     assert(!after.exists(_.getAs[Long]("vec_id") == top1), "a tombstoned row surfaced")
     assert(after.length == 50, "delete shrank the result set instead of the candidates")
-    Matryoshka.rebalanceMatryoshkaIndex(spark, path)
+    Matryoshka.rebalance(spark, path)
     val root = graft.operators.IndexSwap.liveRoot(spark, path)
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/deletes")),

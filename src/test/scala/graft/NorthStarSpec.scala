@@ -83,6 +83,20 @@ class NorthStarSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.pairJoin.vocabDriverRankMaxTokens")
   }
 
+  test("driver vocab rank breaks df ties in Spark's string order, not UTF-16 order") {
+    // U+FF21 vs U+1F600: UTF-16 puts the emoji's high surrogate (D83D)
+    // first, code-point (= UTF-8 byte) order puts it second.
+    val full = "Ａ"
+    val emoji = new String(Character.toChars(0x1F600))
+    assert(emoji.compareTo(full) < 0, "the fixture no longer separates the two orders")
+    val vocab = Seq((full, 2L), (emoji, 2L), ("b", 1L), ("a", 2L))
+    import spark.implicits._
+    val sparkOrder = vocab.toDF("tok", "df").orderBy("df", "tok")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(operators.Dedup.driverRank(vocab) == sparkOrder)
+    assert(sparkOrder.map(_._1) == Seq("b", "a", full, emoji))
+  }
+
   test("qn08 angular blocking is lossless AND sub-quadratic on a clustered corpus") {
     import spark.implicits._
     // High-dup-rate fixture: 10 clusters of 20 near-identical vectors,

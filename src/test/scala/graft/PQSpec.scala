@@ -128,7 +128,7 @@ class PQSpec extends AnyFunSuite {
     // exactness, the pushdown is IO-only.
     val baseline = graft.operators.PQ.probePqIndex(spark, sf, path, 4, 5)
       .collect().map(_.toString).toSeq
-    spark.conf.set("spark.graft.pq.isinMaxIds", "1")
+    spark.conf.set("spark.graft.index.isinMaxIds", "1")
     try {
       val ranged = graft.operators.PQ.probePqIndex(spark, sf, path, 4, 5)
       val rows = ranged.collect().map(_.toString).toSeq
@@ -141,7 +141,7 @@ class PQSpec extends AnyFunSuite {
         pushed.contains("LessThanOrEqual(vec_id"),
         s"range form not pushed: $pushed")
       assert(!pushed.contains("In(vec_id"), s"unexpected isin under range form: $pushed")
-    } finally spark.conf.unset("spark.graft.pq.isinMaxIds")
+    } finally spark.conf.unset("spark.graft.index.isinMaxIds")
   }
 
   test("degenerate probe batches: empty frame serves empty; nProbe past the cell count probes all cells") {
@@ -500,7 +500,7 @@ class PQSpec extends AnyFunSuite {
     assert(viaHandle == perCall, "handle probe diverged from the per-call entry")
     // Staleness: a rebuild commits a new version; the SAME handle must
     // serve the rebuilt index (auto re-open), not its stale snapshot.
-    PQ.rebalancePqIndex(spark, path)
+    PQ.rebalance(spark, path)
     val afterRebuild = PQ.probePqIndex(spark, sf, path, 4, 5)
       .collect().map(_.toString).toSeq
     val viaStaleHandle = handle.probeWith(spark, probeFrame, 4, 5)
@@ -556,7 +556,7 @@ class PQSpec extends AnyFunSuite {
       s"appended near-copy not probe 3's top neighbor under rotation: ${top.mkString}")
     // Rebalance preserves the rotation side (model state, like the
     // meta flag) and the rebuilt index still serves the near-copy.
-    PQ.rebalancePqIndex(spark, path)
+    PQ.rebalance(spark, path)
     val root1 = graft.operators.IndexSwap.liveRoot(spark, path)
     assert(root1 != root0 &&
       new java.io.File(s"$root1/rotation".stripPrefix("file:")).exists,
@@ -573,11 +573,11 @@ class PQSpec extends AnyFunSuite {
     graft.operators.PQ.buildPqIndex(spark, sf, path)
     val top1 = graft.operators.PQ.probePqIndex(spark, sf, path, 4, 5)
       .filter(col("qid") === 3 && col("rnk") === 1).head().getAs[Long]("vec_id")
-    graft.operators.PQ.deleteFromPqIndex(spark, Seq(top1).toDF("vec_id"), path)
+    graft.operators.PQ.delete(spark, Seq(top1).toDF("vec_id"), path)
     val after = graft.operators.PQ.probePqIndex(spark, sf, path, 4, 5).collect()
     assert(!after.exists(_.getAs[Long]("vec_id") == top1), "a tombstoned row surfaced")
     assert(after.length == 50, "delete shrank the result set instead of the candidates")
-    graft.operators.PQ.rebalancePqIndex(spark, path)
+    graft.operators.PQ.rebalance(spark, path)
     val root = graft.operators.IndexSwap.liveRoot(spark, path)
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/deletes")),

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The persisted IVFADC (PQ) index's drift lifecycle — the
   * IvfRebalanceSpec discipline applied to the five-sided index:
   * the autoRebalance trigger on append (fire-and-DEFER via the
-  * `_rebalance_due` marker + the maintainPqIndex entry), the in-place
+  * `_rebalance_due` marker + the PQ.maintain entry), the in-place
   * re-cluster AND codebook retrain, encoding preservation (the meta
   * side), and the two-phase swap's crash polarities.
   */
@@ -65,9 +65,9 @@ class PqRebalanceSpec extends AnyFunSuite {
     assert(deferred.size == 16, s"append rebuilt inline: cells=${deferred.size}")
     // The maintenance entry consumes the marker and runs the swap;
     // a second call is a no-op.
-    assert(PQ.maintainPqIndex(spark, path), "maintenance missed the due marker")
+    assert(PQ.maintain(spark, path), "maintenance missed the due marker")
     assert(!new java.io.File(s"$path/_rebalance_due").exists, "due marker not consumed")
-    assert(!PQ.maintainPqIndex(spark, path), "maintenance re-ran without a due marker")
+    assert(!PQ.maintain(spark, path), "maintenance re-ran without a due marker")
     val after = graft.operators.Similarity.ivfCellStats(spark, path)
     val nCells = after.size
     val meanAfter = after.values.sum.toDouble / nCells
@@ -117,13 +117,13 @@ class PqRebalanceSpec extends AnyFunSuite {
   test("rebalance is deterministic: a second run over the same lake is a fixpoint") {
     val path = graft.operators.Similarity.newIndexDir()
     PQ.buildPqIndex(spark, sf, path)
-    PQ.rebalancePqIndex(spark, path)
+    PQ.rebalance(spark, path)
     val cents1 = spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "centroids"))
       .collect().map(_.getLong(0)).sorted.toSeq
     val cb1 = spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "codebooks"))
       .collect().map(_.toString).sorted.toSeq
     val stats1 = graft.operators.Similarity.ivfCellStats(spark, path)
-    PQ.rebalancePqIndex(spark, path)
+    PQ.rebalance(spark, path)
     val cents2 = spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "centroids"))
       .collect().map(_.getLong(0)).sorted.toSeq
     val cb2 = spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "codebooks"))
@@ -141,7 +141,7 @@ class PqRebalanceSpec extends AnyFunSuite {
         transform(col("embedding"), (x, i) =>
           when(i === 0, (x.cast("double") * 1.01).cast("float")).otherwise(x)).as("embedding"))
     PQ.appendToPqIndex(spark, planted, path)
-    PQ.rebalancePqIndex(spark, path)
+    PQ.rebalance(spark, path)
     assert(PQ.indexMeta(spark, path)._1,
       "rebalance dropped the residual meta flag")
     // The retrained residual chain (new centroids -> new residuals ->
@@ -179,7 +179,7 @@ class PqRebalanceSpec extends AnyFunSuite {
           // sense that the stream drives it; it no longer holds the
           // append itself hostage.
           PQ.appendToPqIndex(b.sparkSession, b, path, autoRebalance = Some(4))
-          PQ.maintainPqIndex(b.sparkSession, path): Unit
+          PQ.maintain(b.sparkSession, path): Unit
       }.start()
     try {
       val driftRows = drift(200).collect()
@@ -213,7 +213,7 @@ class PqRebalanceSpec extends AnyFunSuite {
     fs1.create(new Path(s"$p1/.stage/codes/part-junk.parquet"), true).close()
     val beforeStats = graft.operators.Similarity.ivfCellStats(spark, p1)
     val verBefore = graft.operators.IndexSwap.liveVersion(spark, p1)
-    PQ.recoverPqRebalance(spark, p1)
+    PQ.recover(spark, p1)
     assert(!fs1.exists(new Path(s"$p1/.stage")))
     assert(graft.operators.IndexSwap.liveVersion(spark, p1) == verBefore)
     assert(graft.operators.Similarity.ivfCellStats(spark, p1) == beforeStats,
@@ -227,10 +227,10 @@ class PqRebalanceSpec extends AnyFunSuite {
     PQ.buildPqIndex(spark, sf, path)        // v1
     val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
     assert(graft.operators.IndexSwap.liveVersion(spark, path) == 1L)
-    PQ.rebalancePqIndex(spark, path)        // v2: v1 retained (grace)
+    PQ.rebalance(spark, path)        // v2: v1 retained (grace)
     assert(graft.operators.IndexSwap.liveVersion(spark, path) == 2L)
     assert(fs.exists(new Path(s"$path/v1")), "previous version must survive one cycle")
-    PQ.rebalancePqIndex(spark, path)        // v3: v1 dropped, v2 retained
+    PQ.rebalance(spark, path)        // v3: v1 dropped, v2 retained
     assert(graft.operators.IndexSwap.liveVersion(spark, path) == 3L)
     assert(!fs.exists(new Path(s"$path/v1")), "v1 should be retired at v3")
     assert(fs.exists(new Path(s"$path/v2")))
@@ -247,7 +247,7 @@ class PqRebalanceSpec extends AnyFunSuite {
     PQ.buildPqIndex(spark, sf, path)
     val reader = spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "codes"))
     val before = reader.count()
-    PQ.rebalancePqIndex(spark, path) // commits v2 while `reader` holds v1 paths
+    PQ.rebalance(spark, path) // commits v2 while `reader` holds v1 paths
     assert(reader.count() == before, "pre-swap reader lost its snapshot")
     // A fresh resolve sees the new version.
     assert(graft.operators.IndexSwap.liveVersion(spark, path) == 2L)

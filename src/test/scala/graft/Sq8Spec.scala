@@ -62,7 +62,7 @@ class Sq8Spec extends AnyFunSuite {
         transform(col("embedding"), x => (x.cast("double") * 0 + 50.0).cast("float"))
           .as("embedding"))
     SQ8.appendToSq8Index(spark, big, path)
-    SQ8.rebalanceSq8Index(spark, path)
+    SQ8.rebalance(spark, path)
     // The recomputed envelope covers the appended value, so its codes
     // are no longer saturated — and every OLD vector re-encoded under
     // the new map (spot-check: old codes compress toward 0 because the
@@ -79,7 +79,7 @@ class Sq8Spec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     val stats1 = spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "stats"))
       .collect().map(_.toString).sorted.toSeq
-    SQ8.rebalanceSq8Index(spark, path)
+    SQ8.rebalance(spark, path)
     assert(spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "codes"))
       .collect().map(_.toString).sorted.toSeq == codes1)
     assert(spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "stats"))
@@ -105,7 +105,7 @@ class Sq8Spec extends AnyFunSuite {
           // as its own per-batch step, paying the re-stat off the hot
           // path.
           SQ8.appendToSq8Index(b.sparkSession, b, path, autoRebalance = Some(0.2))
-          SQ8.maintainSq8Index(b.sparkSession, path): Unit
+          SQ8.maintain(b.sparkSession, path): Unit
       }.start()
     val base = Tables.embeddings(spark, sf).filter(col("vec_id") === 3)
       .select(col("embedding")).head().getSeq[Float](0).toArray
@@ -146,7 +146,7 @@ class Sq8Spec extends AnyFunSuite {
     // rebuild froze its envelope before the last appends, so the
     // equality needs the re-stat first), and the re-statted envelope
     // surfaces a streamed near-copy as probe 3's top neighbor.
-    SQ8.rebalanceSq8Index(spark, path)
+    SQ8.rebalance(spark, path)
     val fresh = graft.operators.Similarity.newIndexDir()
     SQ8.buildSq8IndexFrom(spark,
       vecs.select(col("vec_id"), col("embedding")), fresh)
@@ -184,7 +184,7 @@ class Sq8Spec extends AnyFunSuite {
       .filter(col("vec_id") % 3 === 1).select("vec_id")
     // Tombstone the allowed ids that are 1 mod 21 — a strict subset of
     // the filter, so every surviving candidate must pass BOTH verbs.
-    SQ8.deleteFromSq8Index(spark,
+    SQ8.delete(spark,
       Tables.embeddings(spark, sf).filter(col("vec_id") % 21 === 1).select("vec_id"),
       path)
     val res = SQ8.probeSq8IndexWith(spark, probes, path, 5,
@@ -246,7 +246,7 @@ class Sq8Spec extends AnyFunSuite {
     val t2 = 2000000000000L // roomier radius so both verbs visibly bite
     val base = SQ8.rangeSq8Index(spark, sf, path, t2).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    SQ8.deleteFromSq8Index(spark,
+    SQ8.delete(spark,
       Tables.embeddings(spark, sf).filter(col("vec_id") % 7 === 0).select("vec_id"),
       path)
     val probes = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
@@ -278,7 +278,7 @@ class Sq8Spec extends AnyFunSuite {
       "handle range diverged from the per-call entry")
     // Staleness: the SAME handle serves the rebuilt index, and the
     // re-open is cached (the PQ handle contract verbatim).
-    SQ8.rebalanceSq8Index(spark, path)
+    SQ8.rebalance(spark, path)
     assert(handle.probeWith(spark, probeFrame, 5).collect().map(_.toString).toSeq ==
       SQ8.probeSq8Index(spark, sf, path, 5).collect().map(_.toString).toSeq,
       "stale handle did not re-open on the new version")
@@ -295,7 +295,7 @@ class Sq8Spec extends AnyFunSuite {
     fs.create(new Path(s"$path/.stage/codes/part-junk.parquet"), true).close()
     val before = spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "codes"))
       .collect().map(_.toString).sorted.toSeq
-    SQ8.recoverSq8Rebalance(spark, path)
+    SQ8.recover(spark, path)
     assert(!fs.exists(new Path(s"$path/.stage")))
     assert(spark.read.parquet(graft.operators.IndexSwap.side(spark, path, "codes"))
       .collect().map(_.toString).sorted.toSeq == before, "rollback touched the live index")

@@ -43,7 +43,7 @@ class TextIndexSpec extends AnyFunSuite {
     val path = graft.operators.Similarity.newIndexDir()
     TextIndex.buildTextIndex(spark, sf, path)
     val base = probeRows(path)
-    TextIndex.deleteFromTextIndex(spark,
+    TextIndex.delete(spark,
       Tables.documents(spark, sf).filter(col("doc_id") % 7 === 0).select("doc_id"),
       path)
     val afterDelete = TextIndex.probeTextIndex(spark, sf, path, 10).collect()
@@ -55,7 +55,7 @@ class TextIndexSpec extends AnyFunSuite {
     // semantics — before reclaim the index predates the delete, after
     // it the index IS the shrunken corpus's), so the fixpoint to pin
     // is equality with a FRESH build over the surviving docs.
-    TextIndex.rebalanceTextIndex(spark, path)
+    TextIndex.rebalance(spark, path)
     val root = graft.operators.IndexSwap.liveRoot(spark, path)
     assert(spark.read.parquet(s"$root/postings")
       .filter(col("doc_id") % 7 === 0).count() == 0, "reclaim left tombstoned postings")
@@ -91,7 +91,7 @@ class TextIndexSpec extends AnyFunSuite {
     val handle = TextIndex.openTextIndex(spark, path)
     assert(handle.probeWith(spark, queries, 10).collect().map(_.toString).toSeq ==
       probeRows(path), "handle probe diverged from the per-call entry")
-    TextIndex.rebalanceTextIndex(spark, path)
+    TextIndex.rebalance(spark, path)
     assert(handle.probeWith(spark, queries, 10).collect().map(_.toString).toSeq ==
       probeRows(path), "stale handle did not re-open on the new version")
     assert(handle.currentVersion == graft.operators.IndexSwap.liveVersion(spark, path),
@@ -115,7 +115,7 @@ class TextIndexSpec extends AnyFunSuite {
         (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           TextIndex.appendToTextIndex(b.sparkSession, b, path,
             autoCompact = Some(threshold))
-          TextIndex.maintainTextIndex(b.sparkSession, path): Unit
+          TextIndex.maintain(b.sparkSession, path): Unit
       }.start()
     val verBefore = graft.operators.IndexSwap.liveVersion(spark, path)
     try {
@@ -162,7 +162,7 @@ class TextIndexSpec extends AnyFunSuite {
     // the null-text doc has no postings (N subtracts tombstone debt,
     // never re-derives from postings).
     val before = res.map(_.toString).toSeq
-    TextIndex.rebalanceTextIndex(spark, path)
+    TextIndex.rebalance(spark, path)
     val root = graft.operators.IndexSwap.liveRoot(spark, path)
     val st = spark.read.parquet(s"$root/stats")
       .agg(sum(col("n_docs")), sum(col("n_tokens"))).head()
@@ -174,10 +174,10 @@ class TextIndexSpec extends AnyFunSuite {
   test("describe reports every side including tombstone debt") {
     val path = graft.operators.Similarity.newIndexDir()
     TextIndex.buildTextIndex(spark, sf, path)
-    TextIndex.deleteFromTextIndex(spark,
+    TextIndex.delete(spark,
       Tables.documents(spark, sf).filter(col("doc_id") % 7 === 0).select("doc_id"),
       path)
-    val d = TextIndex.describeTextIndex(spark, path).collect()
+    val d = TextIndex.describe(spark, path).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val nDocs = Tables.documents(spark, sf).count()
     assert(d("doclen") == nDocs, s"doclen rows ${d("doclen")} != $nDocs docs")
