@@ -31,7 +31,8 @@ object IngestBench {
     spark.sparkContext.setLogLevel("WARN")
     if (path == "backfill") {
       // EP2 driver over a staged tree: months run sequentially (the
-      // reference's loop), each dump's parse/write fully distributed.
+      // reference's loop), a month's dumps concurrently (each `.gz` dump
+      // is a single-task parse/write).
       val root = args(1)
       val lake = java.nio.file.Files.createTempDirectory("graft_backfill_bench").toString
       val t0 = System.nanoTime()

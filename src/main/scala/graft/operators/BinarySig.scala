@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Concurrently, Tables}
 import graft.functions.TextFns._
 import graft.functions.VectorExprs.l2normNative
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -122,7 +122,7 @@ object BinarySig extends IndexRung {
     * build and rebalance — one definition of the layout). */
   private def stageSides(path: String, v: DataFrame, dim: Int): Unit =
     // Independent staging writes overlapped (round 18, guide §2.6).
-    IndexSwap.stageConcurrently(Seq(
+    Concurrently.run(Seq(
       () => v.select(col("vec_id"), sigForDim(col("embedding"), dim).as("sig"))
         .repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
         .write.mode("overwrite").parquet(IndexSwap.tmp(path, "codes").toString),

@@ -130,43 +130,6 @@ private[graft] object IndexSwap {
   def tmp(path: String, side: String): Path =
     new Path(s"$path/.stage/$side")
 
-  /** Run independent STAGING writes concurrently (round 18, guide §2.6
-    * "overlap independent jobs"): a build gate's sides derive from
-    * already-materialized (checkpointed/collected) inputs and land in
-    * disjoint staging dirs, so their Spark jobs are independent — run
-    * sequentially each pays full per-job latency while most cores idle
-    * on a fixture-scale write; submitted from a small pool the next
-    * side's tasks back-fill the current side's tail. At lake scale the
-    * same overlap fills straggler gaps (FIFO scheduling gives the
-    * earlier job priority). The atomic-rename commit still happens
-    * strictly AFTER every staged side returns — callers invoke this
-    * BEFORE [[commit]], so the crash-window story is unchanged.
-    *
-    * Failure: every side is waited for BEFORE the first error (in side
-    * order; later ones ride along as suppressed) rethrows, so no
-    * staging write outlives the call — a surviving side still writing
-    * into `.stage` would race an immediate retry's
-    * [[IndexRung.recover]]. The debris a failed call leaves is what the
-    * next recover drops. */
-  def stageConcurrently(tasks: Seq[() => Unit]): Unit =
-    if (tasks.size <= 1) tasks.foreach(_())
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(tasks.size, 4))
-      try {
-        val futures = tasks.map(t => pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = t()
-        }))
-        val errors = futures.flatMap { f =>
-          try { f.get(); None }
-          catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
-        }
-        errors.headOption.foreach { first =>
-          errors.tail.foreach(first.addSuppressed)
-          throw first
-        }
-      } finally { pool.shutdown() }
-    }
-
   private[operators] def stageRoot(path: String): Path = new Path(s"$path/.stage")
 
   private val VerRe = "^v([0-9]+)$".r

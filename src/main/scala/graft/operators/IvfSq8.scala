@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Concurrently, Tables}
 import graft.functions.TextFns._
 import graft.functions.VectorExprs.{dotNative, intSqDistNative, l2normNative}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -89,9 +89,9 @@ object IvfSq8 extends IndexRung {
     val (mna, spa) = SQ8.collectStats(SQ8.statsOf(SQ8.ve6Of(asg)))
     // All four sides derive from the checkpointed assignment / local
     // arrays and land in disjoint staging dirs — overlapped
-    // (IndexSwap.stageConcurrently, round 18 guide §2.6); the atomic
+    // (Concurrently.run, round 18 guide §2.6); the atomic
     // commit below still waits for every side.
-    IndexSwap.stageConcurrently(Seq(
+    Concurrently.run(Seq(
       // Cold side: the IVF vectors layout (cell dirs, vec_id-sorted 1 MB
       // row groups — the probe refine composes cell scope + id pushdown).
       () => asg.repartition(col("cent_id"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Concurrently, Tables}
 import graft.functions.TextFns._
 import graft.functions.VectorExprs.{dotNative, l2normNative}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -73,7 +73,7 @@ object Matryoshka extends IndexRung {
       prefix: Int): Unit = {
     val pre = preGuarded(col("embedding"), fullDim, prefix)
     // Independent staging writes overlapped (round 18, guide §2.6).
-    IndexSwap.stageConcurrently(Seq(
+    Concurrently.run(Seq(
       () => v.select(col("vec_id"), pre.as("pre"), l2normNative(pre).as("pnrm"))
         .repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
         .write.mode("overwrite").parquet(IndexSwap.tmp(path, "prefix").toString),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Concurrently, Q, Tables}
 import graft.functions.TextFns._
 import graft.functions.VectorExprs.{dotNative, l2normNative}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1398,10 +1398,10 @@ object PQ extends IndexRung {
     // The staged sides are independent jobs over already-materialized
     // inputs (cb/codes are checkpointed, localCents is driver-local,
     // asg is a pure map over the scan) writing disjoint staging dirs —
-    // overlapped per IndexSwap.stageConcurrently (round 18, guide
-    // §2.6); the atomic version-rename commit below still runs only
-    // after every side has landed, so the crash window is unchanged.
-    IndexSwap.stageConcurrently(Seq(
+    // overlapped per Concurrently.run (round 18, guide §2.6); the
+    // atomic version-rename commit below still runs only after every
+    // side has landed, so the crash window is unchanged.
+    Concurrently.run(Seq(
       () => asg.join(codes, Seq("vec_id"))
         .select(col("vec_id"), col("codes"), col("cent_id"))
         .repartition(col("cent_id"))

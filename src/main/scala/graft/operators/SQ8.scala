@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Concurrently, Tables}
 import graft.functions.TextFns._
 import graft.functions.VectorExprs.l2normNative
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -118,7 +118,7 @@ object SQ8 extends IndexRung {
     val ve6F = ve6Of(v)
     val (mna, spa) = collectStats(stats)
     // Independent staging writes overlapped (round 18, guide §2.6).
-    IndexSwap.stageConcurrently(Seq(
+    Concurrently.run(Seq(
       () => ve6F.select(col("vec_id"), q8Col(mna, spa, clamp = false).as("q8"))
         .repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
         .write.mode("overwrite").parquet(IndexSwap.tmp(path, "codes").toString),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Concurrently, Q, Tables}
 import graft.functions.TextFns._
 import graft.functions.VectorExprs.{dotNative, l2normNative}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1944,7 +1944,7 @@ object Similarity extends IndexRung {
     // becomes v1 through the same atomic version-dir rename, so a
     // crashed build leaves NOTHING half-visible at the index root.
     // Sides overlapped (round 18, guide §2.6).
-    IndexSwap.stageConcurrently(Seq(
+    Concurrently.run(Seq(
       () => ivfAssignedDispatch(v, localCents, nCentroids.toLong).write.mode("overwrite")
         .partitionBy("cent_id").parquet(IndexSwap.tmp(path, "vectors").toString),
       () => localCents.coalesce(1).write.mode("overwrite")
@@ -2072,7 +2072,7 @@ object Similarity extends IndexRung {
     val localCents = s.createDataFrame(
       java.util.Arrays.asList(seeds.collect(): _*), seeds.schema)
     // Sides overlapped (round 18, guide §2.6).
-    IndexSwap.stageConcurrently(Seq(
+    Concurrently.run(Seq(
       () => ivfAssignedDispatch(v, localCents, k).write.mode("overwrite")
         .partitionBy("cent_id").parquet(IndexSwap.tmp(path, "vectors").toString),
       () => localCents.coalesce(1).write.mode("overwrite")

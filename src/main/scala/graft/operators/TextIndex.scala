@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Concurrently, Tables}
 import graft.functions.TextFns._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -67,7 +67,7 @@ object TextIndex extends IndexRung {
       corpus: DataFrame): Unit = {
     val tk = tokensOf(corpus).localCheckpoint(true) // feeds all three sides
     // Independent staging writes overlapped (round 18, guide §2.6).
-    IndexSwap.stageConcurrently(Seq(
+    Concurrently.run(Seq(
       () => tk.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
         .repartitionByRange(col("term")).sortWithinPartitions("term")
         .write.mode("overwrite").parquet(IndexSwap.tmp(path, "postings").toString),

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Concurrently
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** EP2 — the yearly backfill driver (reference run.py:6-57): discover dump
@@ -13,9 +14,14 @@ import org.apache.spark.sql.functions._
   * `fs.s3a.aws.credentials.provider=...AnonymousAWSCredentialsProvider`).
   *
   * The manifest is a genuinely relational computation ([[Manifest]]), so
-  * it runs as a Spark plan; the per-dump ingest loop is driver-side —
-  * months are sequential like the reference, but each dump's parse/write
-  * is a fully distributed job.
+  * it runs as a Spark plan; the per-dump ingest is driver-side. A `.gz`
+  * dump is ONE split, so each dump's parse/write is a single-task job:
+  * run one after another (the reference's loop) they leave all but one
+  * core idle. Within a month the dumps are independent — each appends
+  * into its own `<lake>/<type>` table and the manifest keeps at most one
+  * file per (month, type) — so a month's dumps run concurrently
+  * ([[Concurrently]]) and the month costs about its largest dump.
+  * Months stay sequential and chronological, like the reference.
   */
 object Backfill {
 
@@ -23,6 +29,12 @@ object Backfill {
     * (`path`, relative to base) — the FS-agnostic stand-in for the
     * reference's paginated list_objects_v2. */
   def listKeys(spark: SparkSession, base: String): DataFrame = {
+    import spark.implicits._
+    keysUnder(spark, base).toDF("path")
+  }
+
+  /** The recursive listing behind [[listKeys]], relative to `base`. */
+  private def keysUnder(spark: SparkSession, base: String): Seq[String] = {
     import org.apache.hadoop.fs.Path
     val p = new Path(base)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -31,20 +43,21 @@ object Backfill {
       .takeWhile(_.hasNext)
       .map(_.next().getPath.toUri.getPath)
       .toSeq
-    val baseUri = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(p).toUri.getPath
-    import spark.implicits._
-    keys.map(_.stripPrefix(baseUri).stripPrefix("/")).toDF("path")
+    val baseUri = fs.makeQualified(p).toUri.getPath
+    keys.map(_.stripPrefix(baseUri).stripPrefix("/"))
   }
 
   /** Read every CHECKSUM.txt under `base` into (src, line) rows for
     * [[Manifest.organize]], `src` relative to `base` (matching the file
     * listing's key space). */
-  def checksumLines(spark: SparkSession, base: String): DataFrame = {
+  def checksumLines(spark: SparkSession, base: String): DataFrame =
+    checksumLines(spark, base, keysUnder(spark, base))
+
+  /** [[checksumLines]] over an existing listing of `base`, so a caller
+    * that already listed the tree does not LIST it again. */
+  private def checksumLines(spark: SparkSession, base: String, keys: Seq[String]): DataFrame = {
     import spark.implicits._
-    val rels = listKeys(spark, base).as[String].collect()
-      .filter(_.endsWith("CHECKSUM.txt"))
-    val frames = rels.map { rel =>
+    val frames = keys.filter(_.endsWith("CHECKSUM.txt")).map { rel =>
       spark.read.textFile(s"${base.stripSuffix("/")}/$rel").toDF("line")
         .select(lit(rel).as("src"), col("line"))
     }
@@ -53,25 +66,36 @@ object Backfill {
   }
 
   /** Organize + ingest every (month, type) dump under `inDir` into
-    * `lakeDir`. Returns the manifest that was executed. Paths in the
-    * manifest are relative to `inDir`. */
+    * `lakeDir`. Returns the manifest that was executed, as
+    * (year_month, data_type) in manifest order. Paths in the manifest are
+    * relative to `inDir`.
+    *
+    * Per month, in chronological order: first every dump's checksum is
+    * verified, so a mismatch throws before any of that month's tables is
+    * written; then the month's dumps are read and written concurrently.
+    * A failed write rethrows only after its siblings have finished, so
+    * no job outlives the call (months already done stay written). */
   def run(spark: SparkSession, inDir: String, lakeDir: String,
       verifyChecksums: Boolean = true): Seq[(String, String)] = {
-    val files = listKeys(spark, inDir)
-    val cs = checksumLines(spark, inDir)
-    val manifest = Manifest.organize(files, cs, baseUrl = inDir.stripSuffix("/"))
-      .collect()
-    val done = manifest.map { row =>
-      val url = row.getAs[String]("url")
-      val dataType = row.getAs[String]("data_type")
-      val checksum = row.getAs[String]("checksum")
-      if (verifyChecksums && checksum.nonEmpty)
-        require(Ingest.verifyChecksum(url, checksum), s"checksum mismatch: $url")
-      val df = DiscogsXml.read(spark, url, dataType)
+    import spark.implicits._
+    val keys = keysUnder(spark, inDir)
+    val manifest = Manifest.organize(keys.toDF("path"), checksumLines(spark, inDir, keys),
+      baseUrl = inDir.stripSuffix("/")).collect().toSeq
+    def monthOf(row: Row) = row.getAs[String]("year_month")
+    def ingest(row: Row): Unit = {
+      val (url, dataType) = (row.getAs[String]("url"), row.getAs[String]("data_type"))
       val (year, month, _) = DiscogsLake.parseInputUrl(url)
-      DiscogsLake.writeDump(df, lakeDir, dataType, year.toInt, month)
-      (row.getAs[String]("year_month"), dataType)
+      DiscogsLake.writeDump(DiscogsXml.read(spark, url, dataType), lakeDir, dataType, year.toInt, month)
     }
-    done.toSeq
+    manifest.map(monthOf).distinct.foreach { ym =>
+      val dumps = manifest.filter(monthOf(_) == ym)
+      if (verifyChecksums) dumps.foreach { row =>
+        val (url, checksum) = (row.getAs[String]("url"), row.getAs[String]("checksum"))
+        if (checksum.nonEmpty)
+          require(Ingest.verifyChecksum(url, checksum), s"checksum mismatch: $url")
+      }
+      Concurrently.run(dumps.map(row => () => ingest(row)))
+    }
+    manifest.map(row => (monthOf(row), row.getAs[String]("data_type")))
   }
 }

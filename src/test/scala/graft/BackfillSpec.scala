@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{Backfill, DiscogsLake, Ingest}
+import graft.sources.{Backfill, DiscogsLake, DiscogsXml, Ingest}
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BackfillSpec extends AnyFunSuite {
   import TestSpark._
+
+  private val testFixtures = Paths.get(getClass.getResource("/fixtures").toURI)
 
   test("backfill organizes, verifies and ingests a staged month") {
     val in = Files.createTempDirectory("graft_backfill_in")
@@ -31,6 +33,9 @@ class BackfillSpec extends AnyFunSuite {
     // relOld is February: it is the latest (only) release dump of ITS month,
     // so two months of releases plus March artists get ingested.
     assert(done.toSet == Set(("2024-02", "release"), ("2024-03", "release"), ("2024-03", "artist")))
+    // Manifest order: months ascending, then type — concurrency within a
+    // month does not reorder what `run` returns.
+    assert(done == Seq(("2024-02", "release"), ("2024-03", "artist"), ("2024-03", "release")))
 
     val backRel = DiscogsLake.read(spark, lake, "release")
     val months = backRel.select("month").distinct()
@@ -51,6 +56,45 @@ class BackfillSpec extends AnyFunSuite {
       s"deadbeef *${art.getFileName}".getBytes)
     val e = intercept[IllegalArgumentException](Backfill.run(spark, in.toString, lake))
     assert(e.getMessage.contains("checksum mismatch"))
+  }
+
+  test("a month's checksums are all verified before any of its tables is written") {
+    val in = Files.createTempDirectory("graft_backfill_first")
+    val lake = Files.createTempDirectory("graft_backfill_first_lake")
+    val monthDir = in.resolve("data/2024"); Files.createDirectories(monthDir)
+    val art = monthDir.resolve("discogs_20240301_artists.xml.gz")
+    val rel = monthDir.resolve("discogs_20240301_releases.xml.gz")
+    Files.copy(testFixtures.resolve("artists_gz.xml.gz"), art)
+    Files.copy(testFixtures.resolve("releases_gz.xml.gz"), rel)
+    // artist sorts first in the manifest and its line is right; only the
+    // release line is wrong.
+    Files.write(monthDir.resolve("discogs_20240301_CHECKSUM.txt"),
+      (s"${Ingest.checksumFile(art.toString)} *${art.getFileName}\n" +
+        s"deadbeef *${rel.getFileName}").getBytes)
+    val e = intercept[IllegalArgumentException](Backfill.run(spark, in.toString, lake.toString))
+    assert(e.getMessage.contains("checksum mismatch"))
+    assert(!Files.exists(lake.resolve("artist")), "artist was written before the month's checksums passed")
+    assert(!Files.exists(lake.resolve("release")))
+  }
+
+  test("a failed dump write rethrows only after its siblings finish") {
+    val in = Files.createTempDirectory("graft_backfill_torn")
+    val lake = Files.createTempDirectory("graft_backfill_torn_lake").toString
+    val monthDir = in.resolve("data/2024"); Files.createDirectories(monthDir)
+    val art = monthDir.resolve("discogs_20240301_artists.xml.gz")
+    Files.copy(testFixtures.resolve("artists_gz.xml.gz"), art)
+    // A truncated transfer: the first half of the release dump's bytes,
+    // with no checksum line to catch it before the parse.
+    val relBytes = Files.readAllBytes(testFixtures.resolve("releases_gz.xml.gz"))
+    Files.write(monthDir.resolve("discogs_20240301_releases.xml.gz"),
+      java.util.Arrays.copyOf(relBytes, relBytes.length / 2))
+    Files.write(monthDir.resolve("discogs_20240301_CHECKSUM.txt"),
+      s"${Ingest.checksumFile(art.toString)} *${art.getFileName}".getBytes)
+    intercept[Exception](Backfill.run(spark, in.toString, lake))
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty, "a dump write outlived the failed run")
+    val fixtureRows = DiscogsXml.read(spark, testFixtures.resolve("artists_gz.xml.gz").toString, "artist").count()
+    assert(DiscogsLake.read(spark, lake, "artist").count() == fixtureRows,
+      "the sibling artist write was left incomplete")
   }
 
   test("ranged-download chunk plan covers the file exactly once") {

@@ -59,7 +59,7 @@ class IndexRungSpec extends AnyFunSuite {
     val path = Similarity.newIndexDir()
     val sc = spark.sparkContext
     val ex = intercept[IllegalStateException] {
-      IndexSwap.stageConcurrently(Seq(
+      Concurrently.run(Seq(
         // Eight 1.5 s tasks: still writing when the other side throws.
         () => spark.range(0, 8, 1, 8).toDF("vec_id")
           .withColumn("slow", expr("reflect('java.lang.Thread', 'sleep', 1500L)"))
