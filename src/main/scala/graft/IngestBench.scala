@@ -40,7 +40,7 @@ object IngestBench {
       val secs = (System.nanoTime() - t0) / 1e9
       val rows = done.map(_._2).distinct.map(t =>
         DiscogsLake.read(spark, lake, t).count()).sum
-      println(f"""{"metric":"backfill","months":${done.size},"rows":$rows,"sec":$secs%.2f,"rows_per_sec":${rows / secs}%.0f}""")
+      println(f"""{"metric":"backfill","months":${done.map(_._1).distinct.size},"dumps":${done.size},"rows":$rows,"sec":$secs%.2f,"rows_per_sec":${rows / secs}%.0f}""")
       spark.stop()
       return
     }

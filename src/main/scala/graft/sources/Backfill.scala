@@ -1,8 +1,10 @@
 package graft.sources
 
 import graft.Concurrently
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** EP2 — the yearly backfill driver (reference run.py:6-57): discover dump
   * files, organize them into a monthly manifest (latest file per type,
@@ -13,14 +15,16 @@ import org.apache.spark.sql.functions._
   * listing, s3.py:251-290, is the s3a case with
   * `fs.s3a.aws.credentials.provider=...AnonymousAWSCredentialsProvider`).
   *
-  * The manifest is a genuinely relational computation ([[Manifest]]), so
-  * it runs as a Spark plan; the per-dump ingest is driver-side. A `.gz`
-  * dump is ONE split, so each dump's parse/write is a single-task job:
-  * run one after another (the reference's loop) they leave all but one
-  * core idle. Within a month the dumps are independent — each appends
-  * into its own `<lake>/<type>` table and the manifest keeps at most one
-  * file per (month, type) — so a month's dumps run concurrently
-  * ([[Concurrently]]) and the month costs about its largest dump.
+  * The manifest ([[Manifest]]) is one driver-side pass over that listing
+  * and the CHECKSUM.txt lines, a few dozen rows per year of dumps, so
+  * organizing it submits no Spark job; checksums are digested through the
+  * same FileSystem. A `.gz` dump is ONE split, so each dump's parse/write
+  * is a single-task job: run one after another (the reference's loop)
+  * they leave all but one core idle. Within a month the dumps are
+  * independent — each appends into its own `<lake>/<type>` table and the
+  * manifest keeps at most one file per (month, type) — so a month's dumps
+  * run concurrently ([[Concurrently]]) and the month costs about its
+  * largest dump.
   * Months stay sequential and chronological, like the reference.
   */
 object Backfill {
@@ -35,7 +39,6 @@ object Backfill {
 
   /** The recursive listing behind [[listKeys]], relative to `base`. */
   private def keysUnder(spark: SparkSession, base: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(base)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val it = fs.listFiles(p, true)
@@ -50,20 +53,22 @@ object Backfill {
   /** Read every CHECKSUM.txt under `base` into (src, line) rows for
     * [[Manifest.organize]], `src` relative to `base` (matching the file
     * listing's key space). */
-  def checksumLines(spark: SparkSession, base: String): DataFrame =
-    checksumLines(spark, base, keysUnder(spark, base))
-
-  /** [[checksumLines]] over an existing listing of `base`, so a caller
-    * that already listed the tree does not LIST it again. */
-  private def checksumLines(spark: SparkSession, base: String, keys: Seq[String]): DataFrame = {
+  def checksumLines(spark: SparkSession, base: String): DataFrame = {
     import spark.implicits._
-    val frames = keys.filter(_.endsWith("CHECKSUM.txt")).map { rel =>
-      spark.read.textFile(s"${base.stripSuffix("/")}/$rel").toDF("line")
-        .select(lit(rel).as("src"), col("line"))
-    }
-    frames.reduceOption(_.unionByName(_))
-      .getOrElse(Seq.empty[(String, String)].toDF("src", "line"))
+    readChecksums(spark, base, keysUnder(spark, base)).toDF("src", "line")
   }
+
+  /** The (src, line) pairs of every CHECKSUM.txt in an existing listing of
+    * `base`, read on the driver. Lines split like Spark's text source:
+    * at `\n`, `\r` or `\r\n`, with a leading UTF-8 byte-order mark dropped. */
+  private def readChecksums(spark: SparkSession, base: String, keys: Seq[String]): Seq[(String, String)] =
+    keys.filter(_.endsWith("CHECKSUM.txt")).flatMap { rel =>
+      val p = new Path(s"${base.stripSuffix("/")}/$rel")
+      val in = new BufferedReader(new InputStreamReader(
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p), StandardCharsets.UTF_8))
+      val lines = try Iterator.continually(in.readLine()).takeWhile(_ != null).toList finally in.close()
+      (lines.take(1).map(_.stripPrefix("\uFEFF")) ++ lines.drop(1)).map(rel -> _)
+    }
 
   /** Organize + ingest every (month, type) dump under `inDir` into
     * `lakeDir`. Returns the manifest that was executed, as
@@ -77,25 +82,20 @@ object Backfill {
     * no job outlives the call (months already done stay written). */
   def run(spark: SparkSession, inDir: String, lakeDir: String,
       verifyChecksums: Boolean = true): Seq[(String, String)] = {
-    import spark.implicits._
     val keys = keysUnder(spark, inDir)
-    val manifest = Manifest.organize(keys.toDF("path"), checksumLines(spark, inDir, keys),
-      baseUrl = inDir.stripSuffix("/")).collect().toSeq
-    def monthOf(row: Row) = row.getAs[String]("year_month")
-    def ingest(row: Row): Unit = {
-      val (url, dataType) = (row.getAs[String]("url"), row.getAs[String]("data_type"))
-      val (year, month, _) = DiscogsLake.parseInputUrl(url)
-      DiscogsLake.writeDump(DiscogsXml.read(spark, url, dataType), lakeDir, dataType, year.toInt, month)
+    val manifest = Manifest.entries(keys, readChecksums(spark, inDir, keys), inDir.stripSuffix("/"))
+    def ingest(e: Manifest.Entry): Unit = {
+      val (year, month, _) = DiscogsLake.parseInputUrl(e.url)
+      DiscogsLake.writeDump(DiscogsXml.read(spark, e.url, e.data_type), lakeDir, e.data_type, year.toInt, month)
     }
-    manifest.map(monthOf).distinct.foreach { ym =>
-      val dumps = manifest.filter(monthOf(_) == ym)
-      if (verifyChecksums) dumps.foreach { row =>
-        val (url, checksum) = (row.getAs[String]("url"), row.getAs[String]("checksum"))
-        if (checksum.nonEmpty)
-          require(Ingest.verifyChecksum(url, checksum), s"checksum mismatch: $url")
+    manifest.map(_.year_month).distinct.foreach { ym =>
+      val dumps = manifest.filter(_.year_month == ym)
+      if (verifyChecksums) dumps.filter(_.checksum.nonEmpty).foreach { e =>
+        require(Ingest.verifyChecksum(e.url, e.checksum, conf = spark.sparkContext.hadoopConfiguration),
+          s"checksum mismatch: ${e.url}")
       }
-      Concurrently.run(dumps.map(row => () => ingest(row)))
+      Concurrently.run(dumps.map(e => () => ingest(e)))
     }
-    manifest.map(row => (monthOf(row), row.getAs[String]("data_type")))
+    manifest.map(e => (e.year_month, e.data_type))
   }
 }

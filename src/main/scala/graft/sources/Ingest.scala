@@ -1,7 +1,9 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, FileInputStream}
+import java.io.{BufferedInputStream, FileInputStream, InputStream}
 import java.security.MessageDigest
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 
 /** Ingest-side utilities mirroring the reference's download/verify layer
   * (SURVEY.md §2.A2/A3, §2.B7, §2.D4). Downloading itself is delegated to
@@ -23,9 +25,12 @@ object Ingest {
 
   /** Streaming file digest (process.py:117-127): constant memory, one
     * pass. `algo` in sha-256 / sha-1 / md5 / sha-512 (JCE names). */
-  def checksumFile(path: String, algo: String = "SHA-256"): String = {
+  def checksumFile(path: String, algo: String = "SHA-256"): String =
+    digest(new FileInputStream(path), algo)
+
+  private def digest(stream: InputStream, algo: String): String = {
     val md = MessageDigest.getInstance(algo)
-    val in = new BufferedInputStream(new FileInputStream(path), 64 * 1024)
+    val in = new BufferedInputStream(stream, 64 * 1024)
     try {
       val buf = new Array[Byte](8192)
       var n = in.read(buf)
@@ -34,9 +39,15 @@ object Ingest {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** Case-insensitive checksum compare (process.py:164-169, io.py:375). */
-  def verifyChecksum(path: String, expected: String, algo: String = "SHA-256"): Boolean =
-    expected.nonEmpty && checksumFile(path, algo).equalsIgnoreCase(expected.trim)
+  /** Case-insensitive checksum compare (process.py:164-169, io.py:375).
+    * The file is read through the Hadoop FileSystem of `url`'s scheme, so
+    * `file:/`, `hdfs:/` and `s3a:/` URLs verify like plain local paths. */
+  def verifyChecksum(url: String, expected: String, algo: String = "SHA-256",
+      conf: Configuration = new Configuration()): Boolean =
+    expected.nonEmpty && {
+      val p = new Path(url)
+      digest(p.getFileSystem(conf).open(p), algo).equalsIgnoreCase(expected.trim)
+    }
 
   /** Lenient gzip decompress (process.py:47-64 `lenient_gzip_decompress`):
     * salvage every byte that inflates cleanly, tolerating a corrupt CRC

@@ -45,6 +45,23 @@ class BackfillSpec extends AnyFunSuite {
     assert(DiscogsLake.read(spark, lake, "artist").count() > 0)
   }
 
+  test("a file: URI input verifies and ingests through the Hadoop FileSystem") {
+    val in = Files.createTempDirectory("graft_backfill_uri")
+    val lake = Files.createTempDirectory("graft_backfill_uri_lake").toString
+    val monthDir = in.resolve("data/2024"); Files.createDirectories(monthDir)
+    val art = monthDir.resolve("discogs_20240301_artists.xml.gz")
+    val rel = monthDir.resolve("discogs_20240301_releases.xml.gz")
+    Files.copy(testFixtures.resolve("artists_gz.xml.gz"), art)
+    Files.copy(testFixtures.resolve("releases_gz.xml.gz"), rel)
+    Files.write(monthDir.resolve("discogs_20240301_CHECKSUM.txt"), Seq(art, rel).map(p =>
+      s"${Ingest.checksumFile(p.toString)} *${p.getFileName}").mkString("\n").getBytes)
+    val uri = in.toUri.toString
+    assert(uri.startsWith("file:/"))
+    assert(Backfill.run(spark, uri, lake) == Seq(("2024-03", "artist"), ("2024-03", "release")))
+    assert(DiscogsLake.read(spark, lake, "artist").count() > 0)
+    assert(DiscogsLake.read(spark, lake, "release").count() > 0)
+  }
+
   test("checksum mismatch aborts the backfill") {
     val in = Files.createTempDirectory("graft_backfill_bad")
     val lake = Files.createTempDirectory("graft_backfill_bad_lake").toString
