@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.TextFns._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** At-scale evidence batteries: `runMain graft.Battery <name> [args]`.
@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * is Θ(true pairs) output-bound — pruning never gets to show).
   * Results are recorded per round in docs/BENCH_NOTES.md.
   *
-  * Batteries:
+  * Batteries (default argument in brackets):
   *   skew [rows=20000000]       salted vs unsalted hot-key join with
   *                              per-task reducer-spread measurement
   *   bloom [files=256]          three-tier scan over a lake whose zone
@@ -29,8 +29,39 @@ import org.apache.spark.sql.functions._
   *   paircurve [sizes=250000,500000,1000000,2000000]
   *                              qn03/qn04 wall time + CANDIDATE volume
   *                              on ~2%-near-dup corpora
+  *   ivfjoin [vectors=260000]   corpus-sized IVF probe past the 1e6-route
+  *                              collect bound (qn10d's join path)
+  *   ingest [sizes=100000,1000000,4000000]
+  *                              5k-doc cleanBatch cost vs lake size,
+  *                              bloom pruning on vs off
+  *   ingestgrow [batches=40]    sequential appends into one growing
+  *                              lake, with vs without compaction
   *   pq [vectors=500000]        IVFADC two-temperature index: disk +
   *                              rank-stage bytes ADC vs exact, recall
+  *   pqdispatch [vectors=125000] [cells=32,...,1024]
+  *                              assignment dispatch over a cell sweep
+  *   pqserve [vectors=4000000]  nProbe serving curve at the 4M point
+  *   pqiters [vectors=500000]   Lloyd depth at fixed compression
+  *   pqopq [vectors=500000] [corr]
+  *                              OPQ rotation's recall delta, both sizings
+  *   pqopqserve [vectors=500000] plain / perm / learned rotation serve:
+  *                              build premium, probe, recall, parity
+  *   pqlat [vectors=1000000]    per-stage latency of one PQ probe
+  *   ladder [vectors=1000000]   SQ8 and binary-signature rungs: build /
+  *                              append / rebalance / serve recall
+  *   ladderdim [vectors=500000] [dims=256]
+  *                              the flat rungs at production width
+  *   argmaxsweep [rows=50000] [cells=65536,262144,1024000]
+  *                              exact vs two-tier assignment at
+  *                              production cell counts
+  *   pqlife [vectors=4000000]   build -> drift append -> maintain ->
+  *                              serve, recall before/after rebalance
+  *   tombstone [vectors=1000000] probe cost of tombstones, filtered
+  *                              probe, reclaim rebuild
+  *   range [vectors=1000000]    qn64 range search: prescreen survival
+  *                              and wall vs a brute arm, per radius
+  *   text [docs=1000000]        persisted inverted index (qn69) vs the
+  *                              in-flight keyword tier per probe
   *
   * All generation is deterministic (xxhash64 of ids — no RNG state), so
   * any number here reproduces bit-identically.
@@ -38,13 +69,8 @@ import org.apache.spark.sql.functions._
 object Battery {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = GraftSession.builder()
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     args.headOption match {
@@ -103,20 +129,6 @@ object Battery {
       }
     }
     def reset(): Unit = byStage.clear()
-    /** Drain the async listener bus before reading or resetting: task-end
-      * events can trail collect() by a beat, and a reset racing a prior
-      * rep's stragglers would misattribute records across forms. Waits
-      * until the observed event count is stable for 3 consecutive
-      * 100 ms checks (10 s cap). */
-    def quiesce(): Unit = {
-      var last = -1L; var same = 0
-      val deadline = System.nanoTime() + 10000000000L
-      while (same < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val cur = byStage.values.map(_.size.toLong).sum
-        if (cur == last) same += 1 else { same = 0; last = cur }
-      }
-    }
     /** (max, mean-of-nonzero, n-nonzero-tasks) for the heaviest shuffle-read stage. */
     def spread(): (Long, Double, Int) = {
       val heaviest = byStage.values.filter(_.exists(_ > 0)).maxByOption(_.sum)
@@ -151,10 +163,14 @@ object Battery {
 
     val listener = new SpreadListener
     s.sparkContext.addSparkListener(listener)
+    // Drain the async listener bus before resetting and before reading:
+    // task-end events can trail collect() by a beat, and a reset racing a
+    // prior rep's stragglers would misattribute records across forms.
+    def drain(): Unit = GraftSqlBridge.drainListeners(s.sparkContext)
     def run(tag: String, df: => DataFrame): (Seq[String], Double) = {
-      listener.quiesce(); listener.reset()
+      drain(); listener.reset()
       val (rows, secs) = timed(df.collect().map(_.toString).toSeq)
-      listener.quiesce()
+      drain()
       val (mx, mean, k) = listener.spread()
       println(f"""{"battery":"skew","form":"$tag","rows":$n,"sec":$secs%.2f,"reduce_max_records":$mx,"reduce_mean_records":$mean%.0f,"reduce_tasks":$k,"spread":${mx / math.max(mean, 1.0)}%.1f}""")
       (rows, secs)
@@ -1473,7 +1489,7 @@ object Battery {
         bytesRead.set(0)
         val (stats, sec) = timed(IngestClean.cleanBatch(s, batch, lake, idx,
           verifyNearDups = verify))
-        Thread.sleep(500) // quiesce the async listener before reading bytes
+        GraftSqlBridge.drainListeners(s.sparkContext) // every task's bytes counted
         val (exT, exS) = IngestClean.lastExactFiles
         val (bdT, bdS) = IngestClean.lastBandFiles
         // the planted dups MUST be dropped — pruning never costs recall

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.{DiscogsLake, DiscogsXml}
-import org.apache.spark.sql.SparkSession
 
 /** Ingest-throughput measurement: XML dump -> typed parse -> partitioned
   * parquet lake, end to end. Prints one JSON line with rows/sec and
@@ -17,16 +16,11 @@ object IngestBench {
   def main(args: Array[String]): Unit = {
     val path = args(0)
     val entity = args.lift(1).getOrElse("artist")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = GraftSession.builder()
       // Split uncompressed dumps finely enough to feed every core — the
       // default 128 MB gives a 216 MB file only 2 tasks.
       .config("spark.sql.files.maxPartitionBytes", "8m")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (path == "backfill") {

@@ -1,13 +1,22 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Regenerates docs/PLANS.md: `explain(formatted)` for the plan-shape-
-  * critical queries, as reviewable evidence that pushdown / broadcast /
-  * partial aggregation / codegen landed where the scaladocs claim.
-  * Run: `sbt "runMain graft.Plans"` after touching any plan.
+/** `explain(formatted)` evidence, two modes:
+  *
+  *  - `runMain graft.Plans [sfDir]` regenerates docs/PLANS.md for the
+  *    plan-shape-critical queries, as reviewable evidence that pushdown /
+  *    broadcast / partial aggregation / codegen landed where the
+  *    scaladocs claim. Run it after touching any plan.
+  *  - `runMain graft.Plans <outDir> <suffix> <q1,q2,...|all> [sfDir]`
+  *    writes `<outDir>/<query>_<suffix>.txt` per named query (every
+  *    registered query for `all`) — the optimization-round evidence files
+  *    (`plans/rNN/<query>_{before,after}.txt`).
+  *
+  * Both modes use the same fixed `local[4]` session so dumps stay
+  * comparable across hosts and invocations.
   */
 object Plans {
   val headline: Seq[(String, String)] = Seq(
@@ -75,34 +84,57 @@ object Plans {
     "qn40_ann_ivfpq_residual_persisted" -> "persisted RESIDUAL IVFADC: the meta side's residual flag dispatches per-(probe, cell) residual tables through the same stored-artifact serve path",
     "qp06_corpus_fingerprint" -> "snapshot signature: map-side sha digest projection + one partially aggregated hash agg on lang — a 1-row-per-lang shuffle and nothing else")
 
-  def main(args: Array[String]): Unit = {
+  def main(argv: Array[String]): Unit = {
+    require(argv.length <= 1 || argv.length >= 3,
+      "usage: Plans [sfDir] | Plans <outDir> <suffix> <q1,q2,...|all> [sfDir]")
+    // The optional sfDir follows the per-query mode's three arguments.
+    val (dump, args) = argv.splitAt(if (argv.length >= 3) 3 else 0)
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
+    val spark = GraftSession.builder("4")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    if (dump.isEmpty) writeDoc(spark, sf) else dumpQueries(spark, dump, sf)
+    spark.stop()
+  }
+
+  /** Giant literals (the qn21 Bloom sketch renders as MBs of hex on one
+    * line) would bloat any dump unreadably; keep both ends, elide the
+    * middle. */
+  def elide(line: String): String =
+    if (line.length <= 500) line
+    else line.take(240) + s" …[${line.length - 480} chars elided]… " + line.takeRight(240)
+
+  /** `explain(formatted)` of `df`, every line elided, newline-terminated. */
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      .linesIterator.map(elide).mkString("", "\n", "\n")
+
+  private def writeDoc(spark: SparkSession, sf: String): Unit = {
     val out = new StringBuilder
     out ++= "# Physical plans (generated by `sbt \"runMain graft.Plans\"`)\n\n"
     out ++= s"Explain mode: formatted. Data: `$sf`. Regenerate after plan changes;\n"
     out ++= "PlanSpec asserts the load-bearing shapes in CI.\n"
     headline.foreach { case (name, why) =>
-      val df = SparkEntry.queries(name)(spark, sf)
-      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-        // Giant literals (the qn21 Bloom sketch renders as MBs of hex on
-        // one line) would bloat the doc unreadably; elide mid-line.
-        .linesIterator.map(l =>
-          if (l.length <= 500) l
-          else l.take(240) + s" …[${l.length - 480} chars elided]… " + l.takeRight(240))
-        .mkString("", "\n", "\n")
-      out ++= s"\n## $name — $why\n\n```\n$plan```\n"
+      out ++= s"\n## $name — $why\n\n```\n${formatted(SparkEntry.queries(name)(spark, sf))}```\n"
     }
     Files.createDirectories(Paths.get("docs"))
     Files.writeString(Paths.get("docs/PLANS.md"), out.toString)
     println(s"wrote docs/PLANS.md (${headline.size} plans)")
-    spark.stop()
+  }
+
+  private def dumpQueries(spark: SparkSession, dump: Array[String], sf: String): Unit = {
+    val Array(outDir, suffix, qlist) = dump
+    val names =
+      if (qlist == "all") SparkEntry.queries.keys.toSeq.sorted
+      else qlist.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
+        formatted(SparkEntry.queries(name)(spark, sf)))
+      println(s"wrote $outDir/${name}_$suffix.txt")
+    }
   }
 }

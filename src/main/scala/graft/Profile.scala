@@ -1,30 +1,43 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.execution.{InputAdapter, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.metric.SQLMetric
+import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Ad-hoc single-query profiler:
-  * `runMain graft.Profile <query> [sfDir] [reps] [clearTags]`.
-  * Same session shape as [[Bench]] (noop sink, warmup) but for one query,
-  * repeated, so plan changes can be measured without a full bench sweep.
-  * `clearTags` is a comma list of pair-memo tags to clear before each
-  * rep (Bench's cold-rep protocol); the special tag `IDX` clears the
-  * IndexMemo so persisted-index gates measure a cold build per rep.
+/** Single-query profiler:
+  * `runMain graft.Profile <query> [sfDir] [reps] [clearTags] [k=v ...]`.
+  *
+  * Bench's session and rep protocol for one query, repeated, so a plan
+  * change can be measured without a full bench sweep: a warmup query,
+  * then `reps` noop-sink runs, one timing line. `clearTags` is a comma
+  * list of pair-memo tags to clear before each rep (Bench's cold-rep
+  * protocol); the special tag `IDX` clears the IndexMemo so
+  * persisted-index gates measure a cold build per rep. Trailing `k=v`
+  * args are session confs pinned before the warmup (e.g.
+  * `spark.graft.pairJoin.allPairsMaxGroups=0` forces the prefix/band arm).
+  *
+  * Then the cost table: every execution the last rep triggered — the
+  * eager `localCheckpoint` pipelines that a registered plan's tail hides
+  * behind a LogicalRDD included — printed as its AQE-final plan, one row
+  * per operator with its SQL metrics (output rows, timing metrics, spill
+  * size). The table is read off the executed plan, so it follows any plan
+  * change with no per-query code.
   */
 object Profile {
-  def main(args: Array[String]): Unit = {
+  def main(argv: Array[String]): Unit = {
+    val (confs, args) = argv.partition(_.contains("="))
+    require(args.nonEmpty, "usage: Profile <query> [sfDir] [reps] [clearTags] [k=v ...]")
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
+    require(reps >= 1, "reps must be >= 1")
     val clearTags = args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq.empty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    confs.foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) }
     def run(): Double = {
       clearTags.foreach { t =>
         if (t == "IDX") operators.IndexMemo.clear(spark)
@@ -34,378 +47,90 @@ object Profile {
       SparkEntry.queries(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      // Bench's rep protocol: drop dead localCheckpoint blocks between
-      // reps, or later reps measure block-manager eviction, not the plan.
+      // Bench's rep protocol: destroy the broadcasts qn20b's batch twin
+      // accumulates and drop dead localCheckpoint blocks between reps, or
+      // later reps measure block-manager eviction, not the plan.
+      streaming.StreamSemantic.releaseBroadcasts(spark)
       System.gc()
       dt
     }
     SparkEntry.queries("q12_agg_pricing_summary")(spark, sfDir)
       .write.mode("overwrite").format("noop").save() // warmup
-    if (name == "qn03_phases") phasesQn03(spark, sfDir)
-    else if (name == "qn03b_phases") phasesQn03b(spark, sfDir)
-    else if (name == "qn04_phases") phasesQn04(spark, sfDir)
-    else if (name == "qn04_phases_band") phasesQn04Band(spark, sfDir)
-    else if (name == "qn03_phases_ap") phasesQn03AllPairs(spark, sfDir)
-    else {
-      val times = (1 to reps).map(_ => run())
-      println(f"$name: ${times.map(t => f"$t%.2f").mkString(", ")} s (min ${times.min}%.2f)")
+    val early = (1 until reps).map(_ => run())
+    val (plans, last) = capture(spark)(run())
+    val times = early :+ last
+    println(f"$name: ${times.map(t => f"$t%.2f").mkString(", ")} s (min ${times.min}%.2f)")
+    plans.zipWithIndex.foreach { case (e, i) =>
+      println(f"---- executed plan $i: ${e.funcName}, ${e.durationMs}%.0f ms ----")
+      print(costTable(e.plan))
     }
     spark.stop()
   }
 
-  /** One-off phase decomposition of the minhash-LSH pair query. */
-  private def phasesQn04(spark: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.functions.TextFns._
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"  $label: ${(System.nanoTime() - t0) / 1e9}%.2f s -> $r"); r
+  /** One finished query execution: the action that ran it, its wall time
+    * and its executed plan (metrics final once the action returned). */
+  final case class Execution(funcName: String, durationMs: Double, plan: SparkPlan)
+
+  /** Runs `body` and returns every query execution it triggered, in
+    * completion order. The listener bus is asynchronous; draining it once
+    * `body` returns makes the capture complete without guessing a wait. */
+  def capture[A](spark: SparkSession)(body: => A): (Seq[Execution], A) = {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Execution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.synchronized { seen += Execution(funcName, durationNs / 1e6, qe.executedPlan); () }
+      override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit = ()
     }
-    val sig = Tables.documents(spark, dir)
-      .select(col("doc_id"), tokenSet(col("text")).as("toks"))
-      .select(col("doc_id"), transform(col("toks"), tokenHash(_)).as("hs"))
-      .select(col("doc_id"), functions.VectorExprs.minhashSigNative(col("hs"), 64).as("sig"))
-      .localCheckpoint(true)
-    timed("sig rows")(sig.count())
-    val banded = sig.select(col("doc_id"), col("sig"),
-      explode(array((0 until 16).map { b =>
-        struct((lit(b).as("b") +: (0 until 4).map(r =>
-          col("sig").getItem(b * 4 + r).as(s"h$r"))): _*)
-      }: _*)).as("band"))
-    timed("banded rows")(banded.count())
-    val occ = banded.as("x").join(banded.as("y"), col("x.band") === col("y.band"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.band").getField("b").as("b"))
-    timed("occ rows")(occ.count())
-    def pay(side: String) = broadcast(sig.select(
-      col("doc_id").as(s"doc_$side"), col("sig").as(s"sig_$side")))
-    val withPay = occ.join(pay("a"), "doc_a").join(pay("b"), "doc_b")
-    timed("payload joined")(withPay.count())
-    val once = withPay.filter(col("b") === graft.functions.FirstAgreeingBand(col("sig_a"), col("sig_b"), 4))
-    timed("first-agree pairs")(once.count())
-    val out = once.select(col("doc_a"), col("doc_b"),
-      graft.functions.PairwiseEqCount(col("sig_a"), col("sig_b")).as("n_agree"))
-    timed("agree noop")(out.write.mode("overwrite").format("noop").save())
-    timed("ckpt+sort noop")(out.localCheckpoint(true).orderBy("doc_a", "doc_b")
-      .write.mode("overwrite").format("noop").save())
+    spark.listenerManager.register(listener)
+    try {
+      val result = body
+      GraftSqlBridge.drainListeners(spark.sparkContext)
+      (seen.synchronized(seen.toList), result)
+    } finally spark.listenerManager.unregister(listener)
   }
 
-  /** Phase decomposition of qn04's CURRENT band arm (the shipped
-    * dispatch keeps it at sf0.1: 2.1x gap < margin 4). Mirrors the
-    * registered pipeline stage by stage. */
-  private def phasesQn04Band(spark: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.functions.TextFns._
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"  $label: ${(System.nanoTime() - t0) / 1e9}%.2f s -> $r"); r
-    }
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    for (rep <- 1 to 2) {
-      val sig = timed(s"[$rep] sig ckpt")(Tables.documents(spark, dir)
-        .select(col("doc_id"), tokenSet(col("text")).as("toks"))
-        .select(col("doc_id"), transform(col("toks"), tokenHash(_)).as("hs"))
-        .select(col("doc_id"),
-          functions.VectorExprs.minhashSigNative(col("hs"), 64).as("sig"))
-        .localCheckpoint(true))
-      val grp = timed(s"[$rep] grp ckpt")(sig.groupBy("sig")
-        .agg(min(col("doc_id")).as("doc_id"),
-          array_sort(collect_list(col("doc_id"))).as("members"))
-        .localCheckpoint(true))
-      val grpStats = grp.agg(count(lit(1)),
-        coalesce(sum(size(col("members"))), lit(0L))).head
-      val nGrp = grpStats.getLong(0)
-      val banded = grp.select(col("doc_id"),
-        explode(array((0 until 16).map { b =>
-          struct((lit(b).as("b") +: (0 until 4).map(r =>
-            col("sig").getItem(b * 4 + r).as(s"h$r"))): _*)
-        }: _*)).as("band"))
-      timed(s"[$rep] band-occ probe agg")(banded.groupBy("band")
-        .agg(count(lit(1)).as("c"))
-        .agg(coalesce(sum(col("c") * (col("c") - lit(1))), lit(0L)))
-        .head.getLong(0) / 2)
-      val occ = banded.as("x")
-        .join(broadcast(banded.as("y")), col("x.band") === col("y.band"))
-        .filter(col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          col("x.band").getField("b").as("b"))
-      timed(s"[$rep] band join occ rows")(occ.count())
-      def pay(side: String) = broadcast(grp.select(
-        col("doc_id").as(s"doc_$side"), col("sig").as(s"sig_$side")))
-      val repPairs = occ
-        .join(pay("a"), "doc_a")
-        .join(pay("b"), "doc_b")
-        .filter(col("b") === graft.functions.FirstAgreeingBand(col("sig_a"), col("sig_b"), 4))
-        .select(col("doc_a"), col("doc_b"),
-          graft.functions.PairwiseEqCount(col("sig_a"), col("sig_b")).as("n_agree"))
-      timed(s"[$rep] repPairs noop (join+payload+firstagree+eqcount)")(noop(repPairs))
-      val members = grp.select(col("doc_id").as("rep"), col("members"), size(col("sig")).as("n_sig"))
-      val cross = repPairs
-        .join(broadcast(members.select(col("rep").as("doc_a"), col("members").as("ma"))), "doc_a")
-        .join(broadcast(members.select(col("rep").as("doc_b"), col("members").as("mb"))), "doc_b")
-        .select(explode(col("ma")).as("a"), col("mb"), col("n_agree"))
-        .select(col("a"), explode(col("mb")).as("b"), col("n_agree"))
-        .select(least(col("a"), col("b")).as("doc_a"),
-          greatest(col("a"), col("b")).as("doc_b"), col("n_agree"))
-      val within = members.filter(size(col("members")) > 1)
-        .select(col("n_sig"), explode(flatten(transform(col("members"), a =>
-          transform(filter(col("members"), b => b > a), b =>
-            struct(a.as("a"), b.as("b")))))).as("pr"))
-        .select(col("pr.a").as("doc_a"), col("pr.b").as("doc_b"),
-          col("n_sig").as("n_agree"))
-      val full = cross.unionByName(within)
-      timed(s"[$rep] + member expansion noop")(noop(full))
-      val ck = timed(s"[$rep] + ckpt")(full.localCheckpoint(true))
-      timed(s"[$rep] + orderBy noop")(noop(ck.orderBy("doc_a", "doc_b")))
-      // ---- variant C: all-pairs NARROW (bucketed join on ids only,
-      // payload re-joined like the band arm) ----
-      val L = 64
-      val ids = grp.select("doc_id")
-      val xs = ids.select(col("doc_id").as("doc_a"))
-        .withColumn("bx", pmod(xxhash64(col("doc_a")), lit(L.toLong)).cast("int"))
-        .withColumn("jb", explode(sequence(col("bx"), lit(L - 1))))
-      val ys = ids.select(col("doc_id").as("doc_b"))
-        .withColumn("jb", pmod(xxhash64(col("doc_b")), lit(L.toLong)).cast("int"))
-      val apNarrow = xs.join(broadcast(ys), "jb")
-        .filter(col("bx") < col("jb") || col("doc_a") < col("doc_b"))
-        .drop("jb", "bx")
-        .join(pay("a"), "doc_a")
-        .join(pay("b"), "doc_b")
-        .filter(graft.functions.FirstAgreeingBand(col("sig_a"), col("sig_b"), 4) >= 0)
-        .select(col("doc_a"), col("doc_b"),
-          graft.functions.PairwiseEqCount(col("sig_a"), col("sig_b")).as("n_agree"))
-      timed(s"[$rep] C: all-pairs-narrow repPairs noop")(noop(apNarrow))
-      // ---- variant D: fused member expansion over the band repPairs ----
-      val crossFused = repPairs
-        .join(broadcast(members.select(col("rep").as("doc_a"), col("members").as("ma"))), "doc_a")
-        .join(broadcast(members.select(col("rep").as("doc_b"), col("members").as("mb"))), "doc_b")
-        .select(explode(flatten(transform(col("ma"), a =>
-          transform(col("mb"), b => struct(least(a, b).as("a"), greatest(a, b).as("b")))))).as("pr"),
-          col("n_agree"))
-        .select(col("pr.a").as("doc_a"), col("pr.b").as("doc_b"), col("n_agree"))
-      timed(s"[$rep] D: + fused member expansion noop")(noop(crossFused.unionByName(within)))
-      println(s"  [$rep] nGrp=$nGrp")
-    }
+  /** The operators of `plan` in pre-order with their tree depth: AQE's
+    * final plan, query stages opened to the plans they ran, subqueries
+    * under the operator that uses them. */
+  def planOperators(plan: SparkPlan, depth: Int = 0): Seq[(Int, SparkPlan)] = plan match {
+    case a: AdaptiveSparkPlanExec => planOperators(a.executedPlan, depth)
+    case s: QueryStageExec => planOperators(s.plan, depth)
+    case i: InputAdapter => planOperators(i.child, depth)
+    case p => (depth, p) +: (p.children ++ p.subqueries).flatMap(planOperators(_, depth + 1))
   }
 
-  /** Phase decomposition of qn03's CURRENT all-pairs bitmap arm. */
-  private def phasesQn03AllPairs(spark: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.functions.TextFns._
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"  $label: ${(System.nanoTime() - t0) / 1e9}%.2f s -> $r"); r
-    }
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    for (rep <- 1 to 2) {
-      val t = Tables.documents(spark, dir)
-        .select(col("doc_id"), tokenSet(col("text")).as("toks"))
-      val tm = timed(s"[$rep] tm ckpt")(
-        t.select(col("doc_id"), col("toks")).localCheckpoint(true))
-      val dfreq = tm.select(col("doc_id"), explode(col("toks")).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("df"))
-      val (ranked, vocabN) = timed(s"[$rep] vocab ranks")(
-        graft.operators.Dedup.globalRanks(dfreq, col("df"), col("tok")))
-      val vocab = ranked.select(col("tok"), col("gpos").cast("int").as("tid"))
-      val enc = tm.select(col("doc_id"), explode(col("toks")).as("tok"))
-        .join(broadcast(vocab), "tok")
-        .groupBy("doc_id")
-        .agg(array_sort(collect_list(col("tid"))).as("ids"))
-        .withColumn("sz", size(col("ids")))
-      val grp = enc.groupBy("ids")
-        .agg(min(col("doc_id")).as("doc_id"),
-          array_sort(collect_list(col("doc_id"))).as("members"))
-        .withColumn("sz", size(col("ids")))
-      val p = 3; val q = 5
-      val prefixLen = col("sz") - ((lit(p) * col("sz") + lit(q - 1)) / lit(q)).cast("int") + lit(1)
-      val ep = timed(s"[$rep] ep ckpt (encode+group)")(
-        grp.withColumn("pids", slice(col("ids"), lit(1), prefixLen)).localCheckpoint(true))
-      val nGroups = ep.count()
-      val toBm = (ids: org.apache.spark.sql.Column) => aggregate(ids, lit(0L),
-        (acc, i) => acc.bitwiseOR(call_function("shiftleft", lit(1L), i - 1)))
-      val epb = ep.withColumn("bm", toBm(col("ids")))
-      // bucketedAllPairs mirror (L=64)
-      val L = 64
-      def side(sfx: String) = epb.select(col("doc_id").as(s"doc_$sfx"),
-        col("bm").as(s"bm_$sfx"), col("sz").as(s"sz_$sfx"))
-      val xs = side("a").withColumn("bx",
-        pmod(xxhash64(col("doc_a")), lit(L.toLong)).cast("int"))
-        .withColumn("jb", explode(sequence(col("bx"), lit(L - 1))))
-      val ys = side("b").withColumn("jb",
-        pmod(xxhash64(col("doc_b")), lit(L.toLong)).cast("int"))
-      val sizeGate = lit(q) * least(col("sz_a"), col("sz_b")) >=
-        lit(p) * greatest(col("sz_a"), col("sz_b"))
-      val verified = xs.join(broadcast(ys), "jb")
-        .filter(col("bx") < col("jb") || col("doc_a") < col("doc_b"))
-        .drop("jb", "bx")
-        .filter(sizeGate)
-        .withColumn("n_inter", bit_count(col("bm_a").bitwiseAND(col("bm_b"))))
-      val repPairs = verified
-        .withColumn("n_union", col("sz_a") + col("sz_b") - col("n_inter"))
-        .filter(lit(q) * col("n_inter") >= lit(p) * col("n_union"))
-        .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_union"))
-      timed(s"[$rep] all-pairs verified noop")(noop(repPairs))
-      val members = ep.select(col("doc_id").as("rep"), col("members"), col("sz"))
-      val cross = repPairs
-        .join(broadcast(members.select(col("rep").as("doc_a"), col("members").as("ma"))), "doc_a")
-        .join(broadcast(members.select(col("rep").as("doc_b"), col("members").as("mb"))), "doc_b")
-        .select(explode(col("ma")).as("a"), col("mb"), col("n_inter"), col("n_union"))
-        .select(col("a"), explode(col("mb")).as("b"), col("n_inter"), col("n_union"))
-        .select(least(col("a"), col("b")).as("doc_a"),
-          greatest(col("a"), col("b")).as("doc_b"), col("n_inter"), col("n_union"))
-      val within = members.filter(size(col("members")) > 1)
-        .select(col("sz"), explode(flatten(transform(col("members"), a =>
-          transform(filter(col("members"), b => b > a), b =>
-            struct(a.as("a"), b.as("b")))))).as("pr"))
-        .select(col("pr.a").as("doc_a"), col("pr.b").as("doc_b"),
-          col("sz").as("n_inter"), col("sz").as("n_union"))
-      val full = cross.unionByName(within)
-      timed(s"[$rep] + member expansion noop")(noop(full))
-      val ck = timed(s"[$rep] + ckpt")(full.localCheckpoint(true))
-      val out = ck.select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_union"),
-        e6(col("n_inter").cast("double") / col("n_union")).as("j_e6"))
-      timed(s"[$rep] + select+orderBy noop")(noop(out.orderBy("doc_a", "doc_b")))
-      println(s"  [$rep] nGroups=$nGroups vocabN=$vocabN")
-    }
-  }
+  /** An operator's rows out: `numOutputRows`, or the records a shuffle
+    * exchange wrote. The counter grows each time the operator's RDD is
+    * computed, so the subtree under a range-partitioned sort reports its
+    * rows twice (the partitioner's sample job computes it once more);
+    * the exchange above it writes each row once. */
+  def rowsOut(p: SparkPlan): Option[Long] =
+    p.metrics.get("numOutputRows").orElse(p.metrics.get("shuffleRecordsWritten"))
+      .map(value)
 
-  /** One-off phase decomposition of the shingle pair query. */
-  private def phasesQn03b(spark: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.functions.TextFns._
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"  $label: ${(System.nanoTime() - t0) / 1e9}%.2f s -> $r"); r
-    }
-    val toksRaw = tokens(col("text"))
-    val shingles = array_sort(array_distinct(transform(
-      sequence(lit(1), size(col("tk")) - 2),
-      i => concat_ws(" ", element_at(col("tk"), i),
-        element_at(col("tk"), i + 1), element_at(col("tk"), i + 2)))))
-    val t = Tables.documents(spark, dir)
-      .filter(size(toksRaw) >= 3)
-      .select(col("doc_id"), toksRaw.as("tk"))
-      .select(col("doc_id"), shingles.as("toks"))
-    timed("t rows")(t.count())
-    timed("t explode count")(t.select(explode(col("toks"))).count())
-    // distributed ranks (same as the registered query) — no
-    // unpartitioned window, even in diagnostics
-    val vocab = {
-      val (r, _) = graft.operators.Dedup.globalRanks(
-        t.select(explode(col("toks")).as("tok")).distinct(), col("tok"))
-      r.withColumn("tid", col("gpos").cast("int")).drop("gpos")
-    }
-    timed("vocab")(vocab.count())
-    val enc = t.select(col("doc_id"), explode(col("toks")).as("tok"))
-      .join(broadcast(vocab), "tok")
-      .groupBy("doc_id")
-      .agg(array_sort(collect_list(col("tid"))).as("ids"))
-      .withColumn("sz", size(col("ids")))
-    timed("enc")(enc.count())
-    val p = 1; val q = 2
-    val prefixLen = col("sz") - ((lit(p) * col("sz") + lit(q - 1)) / lit(q)).cast("int") + lit(1)
-    val ep = enc.withColumn("pids", slice(col("ids"), lit(1), prefixLen))
-    val pre = ep.select(col("doc_id"), explode(col("pids")).as("tok"))
-    timed("pre rows")(pre.count())
-    val occ = pre.as("x").join(pre.as("y"), col("x.tok") === col("y.tok"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"), col("x.tok").as("tok"))
-    timed("occ rows")(occ.count())
-    def pay(side: String) = broadcast(ep.select(
-      col("doc_id").as(s"doc_$side"), col("ids").as(s"ids_$side"),
-      col("pids").as(s"pids_$side"), col("sz").as(s"sz_$side")))
-    val joined = occ.join(pay("a"), "doc_a").join(pay("b"), "doc_b")
-      .filter(lit(q) * least(col("sz_a"), col("sz_b")) >= lit(p) * greatest(col("sz_a"), col("sz_b")))
-      .filter(col("tok") === graft.functions.SortedFirstCommon(col("pids_a"), col("pids_b")))
-      .withColumn("n_inter", graft.functions.SortedIntersectCount(col("ids_a"), col("ids_b")))
-      .withColumn("n_union", col("sz_a") + col("sz_b") - col("n_inter"))
-      .filter(lit(q) * col("n_inter") >= lit(p) * col("n_union"))
-    timed("verified")(joined.count())
-    timed("full noop")(joined.select("doc_a", "doc_b", "n_inter", "n_union")
-      .localCheckpoint(true).orderBy("doc_a", "doc_b")
-      .write.mode("overwrite").format("noop").save())
-  }
+  // Size and timing metrics start below zero until a task reports.
+  private def value(m: SQLMetric): Long = math.max(m.value, 0L)
 
-  /** One-off phase decomposition of the jaccard pair query. */
-  private def phasesQn03(spark: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.functions.TextFns._
-    val t = Tables.documents(spark, dir)
-      .select(col("doc_id"), tokenSet(col("text")).as("toks"))
-      .withColumn("sz", size(col("toks")))
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"  $label: ${(System.nanoTime() - t0) / 1e9}%.2f s -> $r"); r
+  /** One line per operator: name (indented by depth), [[rowsOut]],
+    * summed spill bytes, and every nonzero timing metric in ms. An empty
+    * cell means the operator does not report that metric. */
+  def costTable(plan: SparkPlan): String = {
+    val rows = planOperators(plan).map { case (depth, p) =>
+      val ms = p.metrics.toSeq.sortBy(_._1)
+      val spills = ms.collect { case (k, m) if k.toLowerCase.contains("spill") => value(m) }
+      val times = ms.collect {
+        case (k, m) if m.metricType == "timing" && value(m) > 0 => s"$k=${value(m)}ms"
+        case (k, m) if m.metricType == "nsTiming" && value(m) >= 1000000 =>
+          s"$k=${value(m) / 1000000}ms"
+      }
+      ("  " * depth + p.nodeName,
+        rowsOut(p).fold("")(_.toString),
+        if (spills.isEmpty) "" else spills.sum.toString,
+        times.mkString(" "))
     }
-    // distributed ranks (same as the registered query) — no
-    // unpartitioned window, even in diagnostics
-    val vocab = {
-      val (r, _) = graft.operators.Dedup.globalRanks(
-        t.select(explode(col("toks")).as("tok")).distinct(), col("tok"))
-      r.withColumn("tid", col("gpos").cast("int")).drop("gpos")
-    }
-    val enc = t.select(col("doc_id"), explode(col("toks")).as("tok"))
-      .join(broadcast(vocab), "tok")
-      .groupBy("doc_id")
-      .agg(array_sort(collect_list(col("tid"))).as("ids"))
-      .withColumn("sz", size(col("ids")))
-    timed("vocab size")(vocab.count())
-    timed("enc docs")(enc.count())
-    val prefixLen = col("sz") - ((lit(3) * col("sz") + lit(4)) / lit(5)).cast("int") + lit(1)
-    val ep = enc.withColumn("pids", slice(col("ids"), lit(1), prefixLen))
-    val pre = ep.select(col("doc_id"), explode(col("pids")).as("tok"))
-    timed("pre rows")(pre.count())
-    val occ = pre.as("x").join(pre.as("y"), col("x.tok") === col("y.tok"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"), col("x.tok").as("tok"))
-    timed("candidate occurrences")(occ.count())
-    def pay(side: String) = broadcast(ep.select(
-      col("doc_id").as(s"doc_$side"), col("ids").as(s"ids_$side"),
-      col("pids").as(s"pids_$side"), col("sz").as(s"sz_$side")))
-    val withPay = occ.join(pay("a"), "doc_a").join(pay("b"), "doc_b")
-    timed("after payload joins (count)")(withPay.count())
-    val sized = withPay.filter(lit(5) * least(col("sz_a"), col("sz_b")) >= lit(3) * greatest(col("sz_a"), col("sz_b")))
-    timed("after size filter")(sized.count())
-    val once = sized.filter(col("tok") === graft.functions.SortedFirstCommon(col("pids_a"), col("pids_b")))
-    timed("after first-common (unique pairs)")(once.count())
-    val inter = graft.functions.SortedIntersectCount(col("ids_a"), col("ids_b"))
-    val uni = col("sz_a") + col("sz_b") - inter
-    val full = once.filter(lit(5) * inter >= lit(3) * uni)
-      .select(col("doc_a"), col("doc_b"), inter.as("n_inter"), uni.as("n_union"),
-        e6(inter.cast("double") / uni).as("j_e6"))
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    // ---- bitmap variant (vocab <= 64): set = one long, popcount verify
-    val toBm = (ids: org.apache.spark.sql.Column) => aggregate(ids, lit(0L),
-      (acc, i) => acc.bitwiseOR(pow(lit(2.0), i - 1).cast("long")))
-    val epb = ep.withColumn("bm", toBm(col("ids"))).withColumn("pbm", toBm(col("pids")))
-    val preB = epb.select(col("doc_id"), explode(col("pids")).as("tok"))
-    def payB(side: String) = broadcast(epb.select(
-      col("doc_id").as(s"doc_$side"), col("bm").as(s"bm_$side"),
-      col("pbm").as(s"pbm_$side"), col("sz").as(s"sz_$side")))
-    val pab = col("pbm_a").bitwiseAND(col("pbm_b"))
-    val lowBit = bit_count(pab.bitwiseAND(-pab) - 1) + 1
-    val interB = bit_count(col("bm_a").bitwiseAND(col("bm_b")))
-    val fullB = preB.as("x").join(preB.as("y"), col("x.tok") === col("y.tok"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"), col("x.tok").as("tok"))
-      .join(payB("a"), "doc_a").join(payB("b"), "doc_b")
-      .filter(lit(5) * least(col("sz_a"), col("sz_b")) >= lit(3) * greatest(col("sz_a"), col("sz_b")))
-      .filter(col("tok") === lowBit)
-      .withColumn("n_inter", interB)
-      .withColumn("n_union", col("sz_a") + col("sz_b") - col("n_inter"))
-      .filter(lit(5) * col("n_inter") >= lit(3) * col("n_union"))
-      .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_union"),
-        e6(col("n_inter").cast("double") / col("n_union")).as("j_e6"))
-    for (rep <- 1 to 2) {
-      timed(s"[$rep] arrays no sort")(noop(full))
-      timed(s"[$rep] bitmap no sort")(noop(fullB))
-      timed(s"[$rep] bitmap rows")(fullB.count())
-      timed(s"[$rep] bitmap ckpt+orderBy")(noop(
-        fullB.localCheckpoint(true).orderBy("doc_a", "doc_b")))
-    }
+    val line = s"  %-${("operator" +: rows.map(_._1)).map(_.length).max}s  %12s  %11s  %s"
+    (("operator", "rows", "spill_bytes", "time") +: rows)
+      .map { case (op, n, spill, t) => line.format(op, n, spill, t).stripTrailing }
+      .mkString("", "\n", "\n")
   }
 }
