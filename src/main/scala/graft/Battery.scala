@@ -442,8 +442,12 @@ object Battery {
       val cents = s.read.parquet(operators.IndexSwap.side(s, path, "centroids"))
       val probesRaw = Tables.embeddings(s, root).filter(col("vec_id") < 10)
         .select(col("vec_id"), col("embedding"), l2normNative(col("embedding")).as("nrm"))
+      val probeRows = probesRaw.collect()
       val probesV = s.createDataFrame( // local, like probePqIndexWith's own probe side
-        java.util.Arrays.asList(probesRaw.collect(): _*), probesRaw.schema)
+        java.util.Arrays.asList(probeRows: _*), probesRaw.schema)
+      val ca = operators.Similarity.collectCents(cents)
+      def routedCells(np: Int): Seq[Long] =
+        operators.Similarity.driverRoutePairs(probeRows, ca, np).map(_._2).distinct.toSeq
       def exactArm(cellFilter: Option[Seq[Long]]): Array[(Long, Long)] = {
         val cold0 = s.read.parquet(operators.IndexSwap.side(s, path, "vectors"))
         val cold = cellFilter.fold(cold0)(cs => cold0.filter(col("cent_id").isin(cs: _*)))
@@ -460,7 +464,7 @@ object Battery {
           .collect().map(r => (r.getLong(0), r.getLong(1)))
       }
       val probeFrame = probesV.select("vec_id", "embedding")
-      val (_, cells) = PQ.routeCells(s, probesV, cents, 4)
+      val cells = routedCells(4)
       val (pqTop, pqSec) = timed(
         PQ.probePqIndexWith(s, probeFrame, path, 4, 5).select("qid", "vec_id")
           .collect().map(r => (r.getLong(0), r.getLong(1))))
@@ -493,7 +497,7 @@ object Battery {
       // corpus, one layout, the two temperature tiers head-to-head at
       // every nProbe.
       for (np <- Seq(1, 2, 4, 8)) {
-        val (_, npCells) = PQ.routeCells(s, probesV, cents, np)
+        val npCells = routedCells(np)
         val (pqT, pqS) = timed(
           PQ.probePqIndexWith(s, probeFrame, path, np, 5).select("qid", "vec_id")
             .collect().map(r => (r.getLong(0), r.getLong(1))))
@@ -756,9 +760,8 @@ object Battery {
       val probesRaw = Tables.embeddings(s, root).filter(col("vec_id") < 10)
         .select(col("vec_id"), col("embedding"),
           graft.functions.VectorExprs.l2normNative(col("embedding")).as("nrm"))
-      val probesV = s.createDataFrame(
-        java.util.Arrays.asList(probesRaw.collect(): _*), probesRaw.schema)
-      val (_, npCells) = PQ.routeCells(s, probesV, cents, np)
+      val npCells = operators.Similarity.driverRoutePairs(probesRaw.collect(),
+        operators.Similarity.collectCents(cents), np).map(_._2).distinct.toSeq
       val (top, sec) = timed(
         PQ.probePqIndexWith(s, probeFrame, path, np, 5).select("qid", "vec_id")
           .collect().map(r => (r.getLong(0), r.getLong(1))))
@@ -797,7 +800,7 @@ object Battery {
     * wall FLAT across nProbe (~5.5 s at 1M, ~9 s at 4M) — fixed
     * per-call costs dominate, not rank IO. This arm times each fixed
     * stage of [[operators.PQ.probePqIndexWith]] in isolation (meta
-    * read, probe collect, routing, then the full call twice — the
+    * read, probe collect, then the full call twice — the
     * second run isolates what page cache and codegen reuse give back),
     * so the latency budget is attributed before anyone optimizes it. */
   private def pqLat(s: SparkSession, n: Long): Unit = {
@@ -813,21 +816,17 @@ object Battery {
     val (_, metaSec) = timed(PQ.indexMeta(s, path))
     val probesRaw = probeFrame.select(col("vec_id"), col("embedding"),
       l2normNative(col("embedding")).as("nrm"))
-    val (probeRows, collectSec) = timed(probesRaw.collect())
-    val probesV = s.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesRaw.schema)
-    val cents = s.read.parquet(operators.IndexSwap.side(s, path, "centroids"))
-    val (_, routeSec) = timed(PQ.routeCells(s, probesV, cents, 4))
+    val (_, collectSec) = timed(probesRaw.collect())
     val (_, cold1) = timed(PQ.probePqIndexWith(s, probeFrame, path, 4, 5).collect())
     val (_, warm) = timed(PQ.probePqIndexWith(s, probeFrame, path, 4, 5).collect())
     // The serve-session handle: fixed stages (version resolve, meta
     // read, centroid/codebook collects) paid once at open; each later
     // call pays one liveVersion LIST check + the data-side work.
-    val (handle, openSec) = timed(PQ.openPqIndex(s, path))
-    val (_, h1) = timed(handle.probeWith(s, probeFrame, 4, 5).collect())
-    val (_, h2) = timed(handle.probeWith(s, probeFrame, 4, 5).collect())
-    val (_, h3) = timed(handle.probeWith(s, probeFrame, 4, 5).collect())
-    println(f"""{"battery":"pqlat","vectors":$n,"cells":$nCells,"meta_sec":$metaSec%.2f,"probe_collect_sec":$collectSec%.2f,"route_sec":$routeSec%.2f,"full_cold_sec":$cold1%.2f,"full_warm_sec":$warm%.2f,"handle_open_sec":$openSec%.2f,"handle_probe_secs":[$h1%.2f,$h2%.2f,$h3%.2f]}""")
+    val (handle, openSec) = timed(PQ.open(s, path))
+    val (_, h1) = timed(PQ.probeWith(s, handle, probeFrame, 4, 5).collect())
+    val (_, h2) = timed(PQ.probeWith(s, handle, probeFrame, 4, 5).collect())
+    val (_, h3) = timed(PQ.probeWith(s, handle, probeFrame, 4, 5).collect())
+    println(f"""{"battery":"pqlat","vectors":$n,"cells":$nCells,"meta_sec":$metaSec%.2f,"probe_collect_sec":$collectSec%.2f,"full_cold_sec":$cold1%.2f,"full_warm_sec":$warm%.2f,"handle_open_sec":$openSec%.2f,"handle_probe_secs":[$h1%.2f,$h2%.2f,$h3%.2f]}""")
     // Round-15 verdict task 7: the handle's store-traffic win priced
     // by MEASUREMENT, not arithmetic. (a) bytesRead attribution — the
     // Hadoop "file"-scheme counter around each arm isolates how many
@@ -842,7 +841,7 @@ object Battery {
       .flatMap(st => Option(st.getLong("bytesRead")).map(Long2long)).getOrElse(0L)
     def bytesOf[A](f: => A): Long = { val b0 = readBytes(); f; readBytes() - b0 }
     val perCallBytes = bytesOf(PQ.probePqIndexWith(s, probeFrame, path, 4, 5).collect())
-    val handleBytes = bytesOf(handle.probeWith(s, probeFrame, 4, 5).collect())
+    val handleBytes = bytesOf(PQ.probeWith(s, handle, probeFrame, 4, 5).collect())
     def dropCaches(): Boolean =
       try new ProcessBuilder("sh", "-c", "sync; echo 3 > /proc/sys/vm/drop_caches")
         .start().waitFor() == 0
@@ -852,12 +851,12 @@ object Battery {
     else {
       val (_, coldPerCall) = timed(PQ.probePqIndexWith(s, probeFrame, path, 4, 5).collect())
       dropCaches()
-      val (coldHandle, coldOpen) = timed(PQ.openPqIndex(s, path))
-      val (_, coldH1) = timed(coldHandle.probeWith(s, probeFrame, 4, 5).collect())
+      val (coldHandle, coldOpen) = timed(PQ.open(s, path))
+      val (_, coldH1) = timed(PQ.probeWith(s, coldHandle, probeFrame, 4, 5).collect())
       dropCaches()
       // Steady-state cold serving call: the handle is open and warm,
       // only the cell-scoped data sides are cold.
-      val (_, coldH2) = timed(coldHandle.probeWith(s, probeFrame, 4, 5).collect())
+      val (_, coldH2) = timed(PQ.probeWith(s, coldHandle, probeFrame, 4, 5).collect())
       println(f"""{"battery":"pqlat_cold","vectors":$n,"cells":$nCells,"percall_read_bytes":$perCallBytes,"handle_read_bytes":$handleBytes,"fixed_overhead_bytes":${perCallBytes - handleBytes},"cold_percall_sec":$coldPerCall%.2f,"cold_open_sec":$coldOpen%.2f,"cold_handle_first_sec":$coldH1%.2f,"cold_handle_steady_sec":$coldH2%.2f}""")
     }
   }
@@ -1160,9 +1159,9 @@ object Battery {
     val (_, bSec) = timed(TextIndex.buildTextIndex(s, root, path))
     val queries = Tables.documents(s, root).filter(col("doc_id") < 5)
       .select("doc_id", "text")
-    val handle = TextIndex.openTextIndex(s, path)
-    val (_, warm) = timed(handle.probeWith(s, queries, 10).collect())
-    val (idxRows, idxSec) = timed(handle.probeWith(s, queries, 10).collect())
+    val handle = TextIndex.open(s, path)
+    val (_, warm) = timed(TextIndex.probeWith(s, handle, queries, 10).collect())
+    val (idxRows, idxSec) = timed(TextIndex.probeWith(s, handle, queries, 10).collect())
     // The in-flight arm: qn65's keyword tier verbatim over the same
     // corpus (tokenize + tf/df/dl/N/T per call).
     def inflight() = {
@@ -1358,8 +1357,8 @@ object Battery {
         fastAssign = Some(false), params = p, learnedR = r))
       val (viaCall, pSec) = timed(PQ.probePqIndexWith(s, probeFrame, path, 4, 5)
         .collect().map(_.toString).toSeq)
-      val handle = PQ.openPqIndex(s, path)
-      val viaHandle = handle.probeWith(s, probeFrame, 4, 5)
+      val handle = PQ.open(s, path)
+      val viaHandle = PQ.probeWith(s, handle, probeFrame, 4, 5)
         .collect().map(_.toString).toSeq
       val rows = PQ.probePqIndexWith(s, probeFrame, path, 4, 5)
         .select("qid", "vec_id").collect().map(x => (x.getLong(0), x.getLong(1)))

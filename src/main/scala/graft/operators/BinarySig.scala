@@ -174,7 +174,7 @@ object BinarySig extends IndexRung {
     // append across versions — cold rows into the retiring version
     // (lost at retention), code rows referencing no cold row.
     val root = IndexSwap.liveRoot(s, path)
-    val dim = storedDim(s, root)
+    val (_, dim) = load(s, root)
     val v = newVecs.select(col("vec_id"), col("embedding"),
       l2normNative(col("embedding")).as("nrm"))
     v.repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
@@ -189,16 +189,8 @@ object BinarySig extends IndexRung {
     // sorted point-read layout unboundedly — every append adds files,
     // and the shortlist's vec_id pushdown degrades toward a
     // whole-side listing+open per probe. The metric is the CODES
-    // side's data-file count (a driver-side listing, O(files), no
-    // Spark job); past `maxFiles` the append drops the due marker and
-    // returns at append cost — [[maintain]] runs the
-    // compaction on the maintenance cadence.
-    autoCompact.foreach { maxFiles =>
-      val files = graft.sources.LakeListing.dataFiles(
-        s.sessionState.newHadoopConf(),
-        new org.apache.hadoop.fs.Path(IndexSwap.sideAt(root, "codes"))).size
-      if (files > maxFiles) markRebalanceDue(s, path)
-    }
+    // side's data-file count ([[auditFileCount]]).
+    autoCompact.foreach(auditFileCount(s, path, root, "codes", _))
   }
 
   /** Re-sign and re-sort both tiers from the grown cold lake — the
@@ -239,23 +231,22 @@ object BinarySig extends IndexRung {
     * (BinarySigSpec + the qn34b hash gate). Probe batches only — the
     * loud [[PQ.maxProbeBatch]] bound, same rationale as SQ8. */
   def probeBinIndexWith(s: SparkSession, probes: DataFrame, path: String,
-      k: Int, allowed: Option[DataFrame] = None): DataFrame = {
-    // ONE version resolution per probe call (the PQ.probeResolved
-    // contract — round-15 ADVICE): the sig scan and the cold refine
-    // read the SAME pinned version, so a rebalance committing
-    // mid-probe can never mix a shortlist from one version with
-    // refine rows from another.
-    val root = IndexSwap.liveRoot(s, path)
-    probeBinResolved(s, probes, root, k, allowed, form = None)
-  }
+      k: Int, allowed: Option[DataFrame] = None): DataFrame =
+    probe(s, open(s, path), probes, k, allowed)
 
-  /** The probe pipeline against a PINNED version root — shared by the
-    * per-call entry (resolves fresh; `form = None` re-reads the stored
-    * signature shape) and [[BinIndexHandle.probeWith]] (cached
-    * (multiWord, dim), zero metadata reads). */
-  private def probeBinResolved(s: SparkSession, probes: DataFrame,
-      root: String, k: Int, allowed: Option[DataFrame],
-      form: Option[(Boolean, Int)]): DataFrame = {
+  /** [[probeBinIndexWith]] through a serve handle. */
+  def probeWith(s: SparkSession, h: Handle, probes: DataFrame, k: Int,
+      allowed: Option[DataFrame] = None): DataFrame =
+    probe(s, h.refreshed(s), probes, k, allowed)
+
+  /** The probe pipeline against a handle: the sig scan and the cold
+    * refine read the SAME pinned version, so a rebalance committing
+    * mid-probe can never mix a shortlist from one version with refine
+    * rows from another. */
+  private def probe(s: SparkSession, h: Handle, probes: DataFrame, k: Int,
+      allowed: Option[DataFrame]): DataFrame = {
+    val root = h.root
+    val (multiWord, dim) = h.state
     val (_, probesV) = IndexSwap.localProbes(s, probes, "probeBinIndexWith")
     // The stored signature form decides the rank loop: LongType is the
     // 64-dim one-long format (xor + bit_count — two ALU ops); an
@@ -268,11 +259,6 @@ object BinarySig extends IndexRung {
     val codes = allowed.foldLeft(IndexSwap.exceptTombstones(s, root,
       s.read.parquet(IndexSwap.sideAt(root, "codes")))) { (c, a) =>
       c.join(a.select(col("vec_id")), Seq("vec_id"), "left_semi") }
-    val (multiWord, dim) = form.getOrElse {
-      val mw = codes.schema("sig").dataType !=
-        org.apache.spark.sql.types.LongType
-      (mw, if (mw) storedDim(s, root) else 64)
-    }
     val psig =
       if (!multiWord)
         probesV.select(col("vec_id").as("qid"), sigCol(col("embedding")).as("psig"))
@@ -304,38 +290,22 @@ object BinarySig extends IndexRung {
     }
   }
 
-  /** Serve-session handle for the binary rung — the
-    * [[SQ8.Sq8IndexHandle]] discipline: pins a version root and the
-    * stored signature FORM (one-long vs multi-word, stored dim), so a
-    * handle probe pays zero metadata reads (the per-call entry
-    * re-LISTs the version, re-infers the sig schema from a parquet
-    * footer, and — multi-word only — point-reads the stored dim on
-    * every call). Staleness: the PQ contract verbatim — liveVersion
-    * re-check per call, re-open cached once per committed version. */
-  final case class BinIndexHandle private[operators] (path: String,
-      version: Long, root: String, multiWord: Boolean, dim: Int) {
-    private val current =
-      new java.util.concurrent.atomic.AtomicReference[BinIndexHandle](this)
-    /** The version the handle currently serves from. */
-    def currentVersion: Long = current.get().version
-    /** knn through the cached form (bit-identical to the per-call
-      * entry — BinarySigSpec pins handle == per-call). */
-    def probeWith(s: SparkSession, probes: DataFrame, k: Int,
-        allowed: Option[DataFrame] = None): DataFrame = {
-      val h = IndexSwap.refreshHandle(s, path, current,
-        (_: BinIndexHandle).version, () => openBinIndex(s, path))
-      probeBinResolved(s, probes, h.root, k, allowed,
-        form = Some((h.multiWord, h.dim)))
-    }
-  }
+  /** The stored signature form: (multi-word, stored dim). */
+  type State = (Boolean, Int)
 
-  /** Open a serve-session handle: resolve the version once, read the
-    * stored signature form once. */
-  def openBinIndex(s: SparkSession, path: String): BinIndexHandle = {
-    val version = IndexSwap.liveVersion(s, path)
-    val root = IndexSwap.rootAt(path, version)
-    val mw = s.read.parquet(IndexSwap.sideAt(root, "codes"))
-      .schema("sig").dataType != org.apache.spark.sql.types.LongType
-    BinIndexHandle(path, version, root, mw, if (mw) storedDim(s, root) else 64)
+  /** The form from one codes-side parquet footer (a one-long `sig` is
+    * a primitive INT64 column, the multi-word form a list) — no Spark
+    * job — plus, multi-word only, the stored dim from one cold row. */
+  protected def load(s: SparkSession, root: String): State = {
+    val conf = s.sessionState.newHadoopConf()
+    val file = graft.sources.LakeListing.dataFiles(conf,
+      new org.apache.hadoop.fs.Path(IndexSwap.sideAt(root, "codes"))).head
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    val oneLong = try {
+      val schema = r.getFooter.getFileMetaData.getSchema
+      schema.getType(schema.getFieldIndex("sig")).isPrimitive
+    } finally r.close()
+    (!oneLong, if (oneLong) 64 else storedDim(s, root))
   }
 }

@@ -11,9 +11,12 @@ import org.apache.spark.sql.functions._
   * rebuild protocol shared by every persisted index rung: IVF
   * ([[Similarity]]), [[SQ8]], [[IvfSq8]], [[PQ]], [[BinarySig]],
   * [[Matryoshka]] and [[TextIndex]]. Each rung is an [[IndexRung]]:
-  * it declares its sides, its rebalance and its live row count, and
-  * the trait owns the lifecycle verbs (recover, describe, delete,
-  * maintain) written once against this protocol.
+  * it declares its sides, its rebalance, its live row count and the
+  * small serving state it loads from a pinned version, and the trait
+  * owns the lifecycle verbs (recover, describe, delete, maintain) and
+  * the serve handle ([[IndexRung.open]] → `IndexRung#Handle`: one
+  * version pin plus that state, the path every probe goes through),
+  * written once against this protocol.
   *
   * Round-14 verdict: the previous marker+rename protocol was crash-safe
   * but had a CONCURRENT-READER window — between `rename(live, old)` and
@@ -224,20 +227,6 @@ private[graft] object IndexSwap {
     }
   }
 
-  /** The serve-handle staleness step every rung's handle shares: ONE
-    * liveVersion re-check (a LIST) per call; when a rebuild has
-    * committed since, re-open through `reopen` and CACHE the fresh
-    * handle in `current` — once per committed version, never per call
-    * (the round-15 ADVICE contract). One definition so the six
-    * handles' refresh semantics cannot silently diverge. */
-  def refreshHandle[H](s: SparkSession, path: String,
-      current: java.util.concurrent.atomic.AtomicReference[H],
-      versionOf: H => Long, reopen: () => H): H = {
-    val cached = current.get()
-    if (liveVersion(s, path) == versionOf(cached)) cached
-    else { val fresh = reopen(); current.set(fresh); fresh }
-  }
-
   /** DESCRIBE the live version — the ops/introspection verb every rung
     * wraps (qn67): one row per present side, (side, n_rows), with the
     * optional `deletes` side included when tombstones exist (its
@@ -286,14 +275,16 @@ private[graft] object IndexSwap {
     (rows, s.createDataFrame(java.util.Arrays.asList(rows: _*), raw.schema))
   }
 
-  /** Max distinct ids inlined as a literal `vec_id IN (...)` on a cold
-    * point-read (exact row-group + page pruning via the parquet IN
-    * pushdown). Above it the pushdown degrades to `BETWEEN(min, max)` —
-    * a 1e6-literal IN is itself a driver-memory and plan-analysis
-    * hazard; exactness rides the join after the read either way. One
-    * bound for every rung (`spark.graft.index.isinMaxIds`, default
-    * 10000) — conf-overridable so specs and the battery can force the
-    * range branch at fixture size. */
+  /** Max distinct keys inlined as a literal `IN (...)` on a point-read
+    * (exact row-group + page pruning via the parquet IN pushdown): the
+    * vector rungs' `vec_id` refine reads and TextIndex's postings
+    * `term` scan. Above it the pushdown degrades (to `BETWEEN(min,
+    * max)` for ids, to the semi-join alone for terms) — a 1e6-literal
+    * IN is itself a driver-memory and plan-analysis hazard; exactness
+    * rides the join after the read either way. One bound for every
+    * rung (`spark.graft.index.isinMaxIds`, default 10000) —
+    * conf-overridable so specs and the battery can force the range
+    * branch at fixture size. */
   def isinMaxIds(s: SparkSession): Int =
     s.conf.getOption("spark.graft.index.isinMaxIds").map(_.toInt).getOrElse(10000)
 
@@ -337,23 +328,91 @@ private[graft] object IndexSwap {
 /** One persisted index rung's lifecycle, written once. A rung supplies
   * its committed [[sides]], its [[rebalance]] (rebuild every side from
   * the live version's own cold lake minus tombstones, staged and
-  * committed through [[IndexSwap.commit]]) and its [[liveRows]] footer
-  * count; the trait owns the verbs every rung shares:
+  * committed through [[IndexSwap.commit]]), its [[liveRows]] footer
+  * count and its [[load]] (the small sides a probe or an append
+  * encodes against); the trait owns the verbs every rung shares:
   *
+  *  - [[open]] pins the live version and loads the rung's [[State]]
+  *    once into a [[Handle]], the one serve path: a rung's per-call
+  *    probe is its handle probe on a fresh `open`, and a serve session
+  *    keeps the handle across probes;
   *  - [[recover]] heals an interrupted rebuild;
   *  - [[describe]] is the zero-job DESCRIBE ([[IndexSwap.describeIndex]]);
   *  - [[delete]] tombstones ids, with an optional reclaim audit;
   *  - [[maintain]] runs the rebalance a deferred trigger requested.
   *
-  * Deferred triggers (an append's drift/fragmentation audit, a delete's
-  * tombstone audit) drop the `_rebalance_due` marker at the index root
-  * through [[markRebalanceDue]] and return at their own cost;
-  * [[maintain]] consumes it on the maintenance cadence. */
+  * Triggers (an append's drift/fragmentation audit, a delete's
+  * tombstone audit) call [[onRebalanceDue]]: by default it drops the
+  * `_rebalance_due` marker at the index root and the trigger returns
+  * at its own cost; [[maintain]] consumes it on the maintenance
+  * cadence. */
 trait IndexRung {
 
   /** The sides every committed version carries (the [[IndexSwap.commit]]
     * list). */
   def sides: Seq[String]
+
+  /** The rung's small serving state: what a probe plans against and an
+    * append encodes against, read once per pinned version. */
+  type State
+
+  /** Read the [[State]] from a PINNED version root (version dirs are
+    * immutable, so it stays valid for that version's lifetime; the
+    * growing `deletes` side is never part of it). */
+  protected def load(s: SparkSession, root: String): State
+
+  /** A serve handle: a pinned version root plus its loaded [[State]].
+    * Probes through a handle re-check [[IndexSwap.liveVersion]] (one
+    * LIST) and, when a rebuild has committed since, re-open once and
+    * CACHE the fresh handle — once per committed version, never per
+    * probe. A stale handle inside the reader-grace window is still
+    * correct (its version dir is immutable and retained), so the check
+    * is about freshness, not safety. */
+  final class Handle private[operators] (val path: String, val version: Long,
+      val root: String, val state: State) {
+    private val current = new java.util.concurrent.atomic.AtomicReference[Handle](this)
+
+    /** The version the handle currently serves from. */
+    def currentVersion: Long = current.get().version
+
+    /** This handle, re-opened if a rebuild committed since. */
+    private[operators] def refreshed(s: SparkSession): Handle = {
+      val cached = current.get()
+      if (IndexSwap.liveVersion(s, path) == cached.version) cached
+      else { val fresh = open(s, path); current.set(fresh); fresh }
+    }
+  }
+
+  /** Open a serve handle: one version resolution (a LIST) and one
+    * [[load]] against that root. */
+  def open(s: SparkSession, path: String): Handle = {
+    val version = IndexSwap.liveVersion(s, path)
+    val root = IndexSwap.rootAt(path, version)
+    new Handle(path, version, root, load(s, root))
+  }
+
+  /** The fragmentation audit of the rungs that only compact (BinarySig,
+    * Matryoshka, TextIndex): appends fragment the sorted point-read
+    * layout, so past `maxFiles` data files on `side` (a driver-side
+    * listing, no Spark job) the rebalance is due. */
+  protected def auditFileCount(s: SparkSession, path: String, root: String,
+      side: String, maxFiles: Int): Unit =
+    if (graft.sources.LakeListing.dataFiles(s.sessionState.newHadoopConf(),
+        new Path(IndexSwap.sideAt(root, side))).size > maxFiles) onRebalanceDue(s, path)
+
+  /** The drift audit of the cell-partitioned rungs (IVF, PQ, IvfSq8):
+    * per-cell row counts from the vector lake's footers (no Spark
+    * job); past `k` x the mean over the declared `nCells` in the
+    * hottest cell the rebalance is due — a drifting stream otherwise
+    * concentrates appends into a few stale cells, and every probe
+    * routed there degrades toward a linear scan of the drift. */
+  protected def auditCellSkew(s: SparkSession, path: String, root: String,
+      nCells: Long, k: Int): Unit = {
+    val stats = Similarity.ivfCellStatsAt(s, root)
+    if (stats.nonEmpty &&
+        stats.values.max > k * math.max(1.0, stats.values.sum.toDouble / math.max(1L, nCells)))
+      onRebalanceDue(s, path)
+  }
 
   /** Rebuild every side from the live version's cold lake minus its
     * tombstones — the drift/compaction/reclaim answer, crash-safe under
@@ -394,7 +453,7 @@ trait IndexRung {
     * `autoRebalance = Some(rate)` makes the reclaim cadence MEASURED
     * ([[IndexSwap.tombstoneReclaimDue]]): past tombstones/live > rate
     * or the absolute `spark.graft.index.maxTombstones` cap,
-    * [[onReclaimDue]] runs — by default it drops the deferred marker
+    * [[onRebalanceDue]] runs — by default it drops the deferred marker
     * [[maintain]] consumes. Ids are permanent identities: re-appending
     * a tombstoned id is a caller error (the tombstone keeps winning
     * until a rebuild, after which the id is gone — never resurrected);
@@ -408,12 +467,13 @@ trait IndexRung {
     autoRebalance.foreach { maxRate =>
       val dead = IndexSwap.tombstonesAt(s, root).map(_.count()).getOrElse(0L)
       if (IndexSwap.tombstoneReclaimDue(s, liveRows(s, root), dead, maxRate))
-        onReclaimDue(s, path)
+        onRebalanceDue(s, path)
     }
   }
 
-  /** What a due tombstone reclaim does: defer it to [[maintain]]. */
-  protected def onReclaimDue(s: SparkSession, path: String): Unit =
+  /** What a due rebalance (a fired append audit or tombstone reclaim)
+    * does: defer it to [[maintain]]. */
+  protected def onRebalanceDue(s: SparkSession, path: String): Unit =
     markRebalanceDue(s, path)
 
   private def rebalanceDue(path: String): Path = new Path(s"$path/_rebalance_due")

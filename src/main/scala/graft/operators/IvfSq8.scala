@@ -1,8 +1,7 @@
 package graft.operators
 
 import graft.{Concurrently, Tables}
-import graft.functions.TextFns._
-import graft.functions.VectorExprs.{dotNative, intSqDistNative, l2normNative}
+import graft.functions.VectorExprs.{intSqDistNative, l2normNative}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -132,26 +131,17 @@ object IvfSq8 extends IndexRung {
     * ADVICE).
     *
     * `autoRebalance = Some(k)` makes the drift cadence MEASURED
-    * instead of caller discipline (the sibling rungs' audit-at-append
-    * pattern): after the append, per-cell row counts come off the
-    * vector lake's parquet FOOTERS (driver metadata — O(files), no
-    * Spark job), and if the hottest cell holds more than k x the mean
-    * over the declared cell count, the `_rebalance_due` marker drops —
-    * the append itself stays O(new), and [[maintain]] runs
-    * the rebuild on the maintenance cadence. A drifting stream
-    * otherwise concentrates appends into a few stale cells, and every
-    * probe routed there degrades toward a linear scan of the drift. */
+    * ([[auditCellSkew]]): past it the `_rebalance_due` marker drops —
+    * the append itself stays O(new), and [[maintain]] runs the rebuild
+    * on the maintenance cadence. */
   def appendToIvfSq8Index(s: SparkSession, newVecs: DataFrame, path: String,
       autoRebalance: Option[Int] = None): Unit = {
     recover(s, path)
     val root = IndexSwap.liveRoot(s, path)
-    val cents = s.read.parquet(IndexSwap.sideAt(root, "centroids"))
-    val (mna, spa) = SQ8.collectStats(
-      s.read.parquet(IndexSwap.sideAt(root, "stats")))
-    val nCells = cents.count()
+    val (ca, mna, spa) = load(s, root)
     val v = newVecs.select(col("vec_id"), col("embedding"),
       l2normNative(col("embedding")).as("nrm"))
-    val asg = Similarity.ivfAssignedDispatch(v, cents, nCells)
+    val asg = Similarity.ivfAssignedAt(s, v, ca, root)
       .localCheckpoint(true) // feeds both sides — one assignment pass
     asg.repartition(col("cent_id"))
       .sortWithinPartitions(col("cent_id"), col("vec_id"))
@@ -163,13 +153,7 @@ object IvfSq8 extends IndexRung {
       .sortWithinPartitions(col("cent_id"), col("vec_id"))
       .write.mode("append")
       .partitionBy("cent_id").parquet(IndexSwap.sideAt(root, "codes"))
-    autoRebalance.foreach { k =>
-      val stats = Similarity.ivfCellStatsAt(s, root)
-      if (stats.nonEmpty) {
-        val mean = math.max(1.0, stats.values.sum.toDouble / math.max(1L, nCells))
-        if (stats.values.max > k * mean) markRebalanceDue(s, path)
-      }
-    }
+    autoRebalance.foreach(auditCellSkew(s, path, root, ca.cids.length, _))
   }
 
   /** [[delete]] under the name existing callers use. */
@@ -224,54 +208,27 @@ object IvfSq8 extends IndexRung {
     * table → cell-scoped byte rank (only the probed cells' code files
     * are listed and read) → per-probe top-[[shortlistWidth]] →
     * cell-scoped + vec_id-pushed exact refine → top-k. ONE version
-    * resolution per call (the probeResolved contract). Probe batches
-    * only — the [[PQ.maxProbeBatch]] bound. */
+    * resolution per call. Probe batches only — the [[PQ.maxProbeBatch]]
+    * bound. */
   def probeIvfSq8IndexWith(s: SparkSession, probes: DataFrame, path: String,
-      nProbe: Int, k: Int, allowed: Option[DataFrame] = None): DataFrame = {
-    val root = IndexSwap.liveRoot(s, path)
-    val cents = s.read.parquet(IndexSwap.sideAt(root, "centroids"))
-    val (mna, spa) = SQ8.collectStats(
-      s.read.parquet(IndexSwap.sideAt(root, "stats")))
-    probeResolved(s, probes, root, mna, spa, nProbe, k, Left(cents), allowed)
-  }
+      nProbe: Int, k: Int, allowed: Option[DataFrame] = None): DataFrame =
+    probe(s, open(s, path), probes, nProbe, k, allowed)
 
-  /** The probe body against an ALREADY-RESOLVED version root and
-    * envelope — shared by the per-call entry and [[IvfSq8IndexHandle]]
-    * (the [[PQ.probeResolved]] discipline: every side reads from one
-    * pinned root; the handle additionally routes in-process over its
-    * cached centroid arrays instead of the per-call Spark job). */
-  private def probeResolved(s: SparkSession, probes: DataFrame, root: String,
-      mna: Array[Long], spa: Array[Long], nProbe: Int, k: Int,
-      route: Either[DataFrame, Similarity.CentArrays],
-      allowed: Option[DataFrame] = None): DataFrame = {
+  /** [[probeIvfSq8IndexWith]] through a serve handle. */
+  def probeWith(s: SparkSession, h: Handle, probes: DataFrame, nProbe: Int, k: Int,
+      allowed: Option[DataFrame] = None): DataFrame =
+    probe(s, h.refreshed(s), probes, nProbe, k, allowed)
+
+  /** The probe body against a handle: every side reads from its one
+    * pinned root, and the route is an in-process loop over its
+    * centroid arrays ([[Similarity.driverRouteFrame]] — qn10's e6/tie
+    * rules, zero Spark jobs). */
+  private def probe(s: SparkSession, h: Handle, probes: DataFrame,
+      nProbe: Int, k: Int, allowed: Option[DataFrame]): DataFrame = {
+    val root = h.root
+    val (ca, mna, spa) = h.state
     val (probeRows, probesV) = IndexSwap.localProbes(s, probes, "probeIvfSq8IndexWith")
-    // Route: in-process over the handle's cached arrays when a serve
-    // session supplied them ([[Similarity.driverRoutePairs]] — same
-    // e6/tie rules, zero Spark jobs), the flat argsort routing job
-    // otherwise (centroids broadcast-class by construction; e6/tie
-    // rules = qn10's either way).
-    val pcSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("qid",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("cent_id",
-        org.apache.spark.sql.types.LongType, false)))
-    val pcRows = route match {
-      case Right(ca) =>
-        Similarity.driverRoutePairs(probeRows, ca, nProbe)
-          .map { case (r, cid) => org.apache.spark.sql.Row(r.getLong(0), cid) }
-      case Left(cents) =>
-        val cScore = e6(cosine(dotNative(col("ce"), col("pe")), col("cn"), col("pn")))
-        val wRoute = Window.partitionBy(col("qid")).orderBy(col("cscore").desc, col("cent_id").asc)
-        probesV
-          .select(col("vec_id").as("qid"), col("embedding").as("pe"), col("nrm").as("pn"))
-          .join(broadcast(cents), expr("true"))
-          .select(col("qid"), col("cent_id"), cScore.as("cscore"))
-          .withColumn("rn", row_number().over(wRoute)).filter(col("rn") <= nProbe)
-          .select(col("qid"), col("cent_id"))
-          .collect()
-    }
-    val localPc = s.createDataFrame(java.util.Arrays.asList(pcRows: _*), pcSchema)
-    val cells = pcRows.map(_.getLong(1)).distinct.toSeq
+    val (localPc, cells) = Similarity.driverRouteFrame(s, probeRows, ca, nProbe, "qid")
     // Probe bytes: quantize against the stored envelope, clamped
     // (identity for in-corpus probes — the qn45 oracle parity).
     val pq8 = SQ8.ve6Of(probesV)
@@ -314,45 +271,12 @@ object IvfSq8 extends IndexRung {
     }
   }
 
-  /** A SERVE-SESSION handle for the composed index (the
-    * [[PQ.PqIndexHandle]] contract at this rung): the fixed per-call
-    * serving state — resolved version root, the frozen envelope
-    * arrays, and the centroid table as flat driver arrays — opened
-    * once and reused across probe calls. A handle probe pays zero
-    * store reads outside the two cell-scoped data sides and runs the
-    * routing as an in-process loop ([[Similarity.driverRoutePairs]]).
-    * Staleness follows the sibling handles exactly: [[probeWith]]
-    * re-checks [[IndexSwap.liveVersion]] (one LIST) and the re-open is
-    * cached in an [[java.util.concurrent.atomic.AtomicReference]] —
-    * once per committed version, never per probe; within the reader-
-    * grace window a stale handle is still CORRECT (its version dir is
-    * immutable and retained per `spark.graft.index.retainVersions`). */
-  final case class IvfSq8IndexHandle private[operators] (path: String,
-      version: Long, root: String, centArrays: Similarity.CentArrays,
-      mna: Array[Long], spa: Array[Long]) {
-    private val current =
-      new java.util.concurrent.atomic.AtomicReference[IvfSq8IndexHandle](this)
-    /** The version the handle currently serves from (advances once per
-      * committed rebuild — the refresh-cached contract the spec pins). */
-    def currentVersion: Long = current.get().version
-    /** Probe through the cached state, re-opening (once per committed
-      * version) if a rebuild landed since the last probe. */
-    def probeWith(s: SparkSession, probes: DataFrame, nProbe: Int, k: Int,
-        allowed: Option[DataFrame] = None): DataFrame = {
-      val h = IndexSwap.refreshHandle(s, path, current,
-        (_: IvfSq8IndexHandle).version, () => openIvfSq8Index(s, path))
-      probeResolved(s, probes, h.root, h.mna, h.spa, nProbe, k,
-        Right(h.centArrays), allowed)
-    }
-  }
+  /** The centroid table as flat arrays and the frozen envelope. */
+  type State = (Similarity.CentArrays, Array[Long], Array[Long])
 
-  /** Open a serve-session handle: resolve the version once, collect
-    * the centroid table (√N rows) and the D-row envelope once. */
-  def openIvfSq8Index(s: SparkSession, path: String): IvfSq8IndexHandle = {
-    val version = IndexSwap.liveVersion(s, path)
-    val root = IndexSwap.rootAt(path, version)
-    val ca = Similarity.collectCents(s.read.parquet(s"$root/centroids"))
-    val (mna, spa) = SQ8.collectStats(s.read.parquet(s"$root/stats"))
-    IvfSq8IndexHandle(path, version, root, ca, mna, spa)
+  /** The √N-row centroid side and the D-row stats side, collected. */
+  protected def load(s: SparkSession, root: String): State = {
+    val (mna, spa) = SQ8.collectStats(s.read.parquet(IndexSwap.sideAt(root, "stats")))
+    (Similarity.collectCents(s.read.parquet(IndexSwap.sideAt(root, "centroids"))), mna, spa)
   }
 }

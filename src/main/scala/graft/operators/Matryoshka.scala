@@ -130,8 +130,7 @@ object Matryoshka extends IndexRung {
       autoCompact: Option[Int] = None): Unit = {
     recover(s, path)
     val root = IndexSwap.liveRoot(s, path)
-    val fullDim = storedDim(s, root)
-    val prefix = storedPrefix(s, root)
+    val (fullDim, prefix) = load(s, root)
     val v = newVecs.select(col("vec_id"), col("embedding"),
       l2normNative(col("embedding")).as("nrm"))
     v.repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
@@ -141,12 +140,7 @@ object Matryoshka extends IndexRung {
     v.select(col("vec_id"), pre.as("pre"), l2normNative(pre).as("pnrm"))
       .repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
       .write.mode("append").parquet(IndexSwap.sideAt(root, "prefix"))
-    autoCompact.foreach { maxFiles =>
-      val files = graft.sources.LakeListing.dataFiles(
-        s.sessionState.newHadoopConf(),
-        new org.apache.hadoop.fs.Path(IndexSwap.sideAt(root, "prefix"))).size
-      if (files > maxFiles) markRebalanceDue(s, path)
-    }
+    autoCompact.foreach(auditFileCount(s, path, root, "prefix", _))
   }
 
   /** Re-slice and re-sort both tiers from the grown cold lake at the
@@ -156,8 +150,7 @@ object Matryoshka extends IndexRung {
   def rebalance(s: SparkSession, path: String): Unit = {
     recover(s, path)
     val root = IndexSwap.liveRoot(s, path)
-    val fullDim = storedDim(s, root)
-    val prefix = storedPrefix(s, root)
+    val (fullDim, prefix) = load(s, root)
     // Tombstones reclaim physically here (the fresh version dir
     // carries no deletes side).
     val v = IndexSwap.exceptTombstones(s, root,
@@ -190,22 +183,22 @@ object Matryoshka extends IndexRung {
     * — the loud [[PQ.maxProbeBatch]] bound, same rationale as the
     * sibling rungs. */
   def probeMatryoshkaIndexWith(s: SparkSession, probes: DataFrame, path: String,
-      k: Int, allowed: Option[DataFrame] = None): DataFrame = {
-    // Probes are READ-ONLY (the sibling rungs' contract): no recover
-    // here — a probe racing an in-flight rebuild's staging must never
-    // delete the stage dir out from under the writer.
-    val root = IndexSwap.liveRoot(s, path)
-    probeMatryoshkaResolved(s, probes, root, storedDim(s, root),
-      storedPrefix(s, root), k, allowed)
-  }
+      k: Int, allowed: Option[DataFrame] = None): DataFrame =
+    probe(s, open(s, path), probes, k, allowed)
 
-  /** The probe pipeline against a PINNED version root and
-    * already-read stored widths — shared by the per-call entry (reads
-    * them fresh: two point reads) and
-    * [[MatryoshkaIndexHandle.probeWith]] (cached). */
-  private def probeMatryoshkaResolved(s: SparkSession, probes: DataFrame,
-      root: String, fullDim: Int, prefix: Int,
-      k: Int, allowed: Option[DataFrame]): DataFrame = {
+  /** [[probeMatryoshkaIndexWith]] through a serve handle. Probes are
+    * READ-ONLY (the sibling rungs' contract): no recover here — a probe
+    * racing an in-flight rebuild's staging must never delete the stage
+    * dir out from under the writer. */
+  def probeWith(s: SparkSession, h: Handle, probes: DataFrame, k: Int,
+      allowed: Option[DataFrame] = None): DataFrame =
+    probe(s, h.refreshed(s), probes, k, allowed)
+
+  /** The probe pipeline against a handle's pinned root and widths. */
+  private def probe(s: SparkSession, h: Handle, probes: DataFrame, k: Int,
+      allowed: Option[DataFrame]): DataFrame = {
+    val root = h.root
+    val (fullDim, prefix) = h.state
     val (_, probesV) = IndexSwap.localProbes(s, probes, "probeMatryoshkaIndexWith")
     val ppre = preGuarded(col("embedding"), fullDim, prefix)
     val psig = probesV.select(col("vec_id").as("qid"),
@@ -227,35 +220,10 @@ object Matryoshka extends IndexRung {
     }
   }
 
-  /** Serve-session handle for the matryoshka rung — the
-    * [[SQ8.Sq8IndexHandle]] discipline: pins a version root and the
-    * two stored widths (full dim, prefix), so a handle probe pays zero
-    * metadata reads (the per-call entry re-LISTs the version and
-    * point-reads both widths every call). Staleness: the PQ contract
-    * verbatim — liveVersion re-check per call, re-open cached once per
-    * committed version. */
-  final case class MatryoshkaIndexHandle private[operators] (path: String,
-      version: Long, root: String, fullDim: Int, prefix: Int) {
-    private val current =
-      new java.util.concurrent.atomic.AtomicReference[MatryoshkaIndexHandle](this)
-    /** The version the handle currently serves from. */
-    def currentVersion: Long = current.get().version
-    /** knn through the cached widths (bit-identical to the per-call
-      * entry — MatryoshkaSpec pins handle == per-call). */
-    def probeWith(s: SparkSession, probes: DataFrame, k: Int,
-        allowed: Option[DataFrame] = None): DataFrame = {
-      val h = IndexSwap.refreshHandle(s, path, current,
-        (_: MatryoshkaIndexHandle).version, () => openMatryoshkaIndex(s, path))
-      probeMatryoshkaResolved(s, probes, h.root, h.fullDim, h.prefix, k, allowed)
-    }
-  }
+  /** The two stored widths: (full dim, prefix). */
+  type State = (Int, Int)
 
-  /** Open a serve-session handle: resolve the version once, read both
-    * stored widths once. */
-  def openMatryoshkaIndex(s: SparkSession, path: String): MatryoshkaIndexHandle = {
-    val version = IndexSwap.liveVersion(s, path)
-    val root = IndexSwap.rootAt(path, version)
-    MatryoshkaIndexHandle(path, version, root,
-      storedDim(s, root), storedPrefix(s, root))
-  }
+  /** One cold-side row and one hot-side row. */
+  protected def load(s: SparkSession, root: String): State =
+    (storedDim(s, root), storedPrefix(s, root))
 }

@@ -83,8 +83,8 @@ object PQ extends IndexRung {
 
   /** Hard probe-batch ceiling for [[probePqIndexWith]]: sized so the
     * shortlist collect (probes x [[adcTopR]] rows) stays under the same
-    * 1e6-row driver-collect contract [[routeCells]] enforces for the
-    * routing. 62,500 probes at the fixture topR — a serving batch, by
+    * 1e6-row driver-collect contract [[Similarity.driverRouteFrame]]
+    * enforces for the routing. 62,500 probes at the fixture topR — a serving batch, by
     * construction; corpus-sized probe sets belong on the cent_id
     * assignment-join path (the qn20 shape). */
   private[graft] val maxProbeBatch: Int = 1000000 / adcTopR
@@ -408,7 +408,7 @@ object PQ extends IndexRung {
     * data commit ATOMICALLY through [[IndexSwap]] — the round-13
     * ADVICE crash window (data written, marker missing, probes
     * silently mis-rank a residual index as plain) cannot exist.
-    * Reading it is one tiny parquet read per serving call — replacing
+    * Reading it is one tiny parquet read per [[open]] — replacing
     * BOTH the old `_residual` fs-exists check and the per-call
     * codebook aggregate job. */
   private def writeMeta(s: SparkSession, path: String, residual: Boolean,
@@ -834,7 +834,7 @@ object PQ extends IndexRung {
 
   /** The stored learned rotation at a PINNED version root, if any —
     * (row-major matrix, dim). One existence check + one tiny read per
-    * serving call; the serve handle caches it. */
+    * [[open]]. */
   private[graft] def rotationAt(s: SparkSession, root: String): Option[(Array[Double], Int)] = {
     val p = new org.apache.hadoop.fs.Path(IndexSwap.sideAt(root, "rotation"))
     val fs = p.getFileSystem(s.sessionState.newHadoopConf())
@@ -1540,30 +1540,27 @@ object PQ extends IndexRung {
     // (round-15 ADVICE): an append racing a rebalance commit must
     // never mix metadata from one version with writes into another.
     val root = IndexSwap.liveRoot(s, path)
-    val centsDir = IndexSwap.sideAt(root, "centroids")
-    val cents = s.read.parquet(centsDir)
-    val cb = s.read.parquet(IndexSwap.sideAt(root, "codebooks"))
+    val st = load(s, root)
     val v = newVecs.select(col("vec_id"), col("embedding"),
       l2normNative(col("embedding")).as("nrm"))
     // Same payload dispatch as the build: blocked native exact argmax
     // while the stored centroid table stays plan-bakeable, two-tier
     // beyond the total guard.
     val asg =
-      if (useTwoTier(Similarity.parquetRowCount(s, centsDir), dimOf(cents)))
-        fastCoarseAssign(v, cents)
-      else nativeCoarseAssign(v, cents)
+      if (useTwoTier(st.cents.cids.length, st.cents.dim)) fastCoarseAssign(v, st.localCents)
+      else nativeCoarseAssign(v, st.localCents)
     // New rows encode in the INDEX'S space: the stored learned rotation
     // when present (a rotated index is whole-space by construction),
     // the residual view when the meta says so, raw e6 otherwise.
-    val encIn = rotationAt(s, root) match {
+    val encIn = st.rotation match {
       case Some((r, d)) => learnedVe6Of(v, r, d)
       case None =>
         val ve6 = v.select(col("vec_id"),
           transform(col("embedding"),
             x => floor(x.cast("double") * 1000000).cast("long")).as("emb6"))
-        if (indexMetaAt(s, root)._1) residualVe(ve6, asg, cents) else ve6
+        if (st.residual) residualVe(ve6, asg, st.localCents) else ve6
     }
-    val codes = codesWith(encIn, cb) // realized sizing derives from the stored codebook
+    val codes = codesWith(encIn, st.localCb) // realized sizing derives from the stored codebook
     // COLD side first (see the crash-window note above). Mirror the
     // build's point-read layout (one file per touched cell, rows
     // sorted by vec_id, small row groups): an unsorted append fans out
@@ -1577,14 +1574,7 @@ object PQ extends IndexRung {
       .select(col("vec_id"), col("codes"), col("cent_id"))
       .repartition(col("cent_id"))
       .write.mode("append").partitionBy("cent_id").parquet(IndexSwap.sideAt(root, "codes"))
-    autoRebalance.foreach { k =>
-      val stats = Similarity.ivfCellStatsAt(s, root) // same layout: vectors/cent_id=
-      if (stats.nonEmpty) {
-        val nCells = math.max(1L, Similarity.parquetRowCount(s, centsDir))
-        val mean = math.max(1.0, stats.values.sum.toDouble / nCells)
-        if (stats.values.max > k * mean) markRebalanceDue(s, path)
-      }
-    }
+    autoRebalance.foreach(auditCellSkew(s, path, root, st.cents.cids.length, _))
   }
 
   /** [[delete]] under the name existing callers use. */
@@ -1702,143 +1692,69 @@ object PQ extends IndexRung {
 
   /** [[probePqIndex]] for an ARBITRARY probe frame of (vec_id,
     * embedding) — the serving entry (the probeIvfIndexWith pattern).
-    * Probe batches only: the probes, the routing, and the ADC
-    * shortlist each collect driver-side. The probe collect is bounded
-    * FIRST at [[maxProbeBatch]] rows (1e6 / [[adcTopR]]), which also
-    * bounds the shortlist collect at probes x topR <= 1e6 rows;
-    * routing is additionally bounded at probes x nProbe <= 1e6 by
-    * [[routeCells]]. Both bounds fail LOUDLY with instructions — a
-    * corpus-sized probe frame must never OOM the driver silently. */
+    * Probe batches only: the probes and the ADC shortlist each collect
+    * driver-side. The probe collect is bounded FIRST at
+    * [[maxProbeBatch]] rows (1e6 / [[adcTopR]]), which also bounds the
+    * shortlist collect at probes x topR <= 1e6 rows; routing is
+    * additionally bounded at probes x nProbe <= 1e6 by
+    * [[Similarity.driverRouteFrame]]. Both bounds fail LOUDLY with
+    * instructions — a corpus-sized probe frame must never OOM the
+    * driver silently. */
   def probePqIndexWith(s: SparkSession, probes: DataFrame, path: String,
-      nProbe: Int, k: Int, allowed: Option[DataFrame] = None): DataFrame = {
-    // ONE version resolution per probe call (the versioned IndexSwap
-    // contract): every side below reads from the same pinned root, so
-    // a rebalance committing mid-probe can never mix versions.
-    val root = IndexSwap.liveRoot(s, path)
-    val cents = s.read.parquet(s"$root/centroids")
-    val cb = s.read.parquet(s"$root/codebooks")
-    val (residualIdx, p) = indexMetaAt(s, root)
-    probeResolved(s, probes, root, cents, cb, residualIdx, p, nProbe, k, None,
-      rotationAt(s, root), allowed)
-  }
+      nProbe: Int, k: Int, allowed: Option[DataFrame] = None): DataFrame =
+    probe(s, open(s, path), probes, nProbe, k, allowed)
 
-  /** A SERVE-SESSION handle (round-14 verdict task 7): the fixed
-    * per-call serving state — resolved version root, meta flag +
-    * realized sizing, the two manifest-class metadata tables as LOCAL
-    * relations, AND the centroid table as flat driver arrays — opened
-    * once and reused across probe calls. A handle probe pays zero
-    * store reads outside the two cell-scoped data sides and runs the
-    * ROUTING as an in-process loop over the cached arrays
-    * ([[driverRoute]] — probes x cells multiply-adds, microseconds for
-    * serving batches) instead of the per-call Spark routing job; the
-    * per-call fixed stages the pqlat battery measured (meta read
-    * 0.12 s + centroid/codebook reads + routing job 0.25 s) are paid
-    * once per REBUILD, not once per probe batch.
-    *
-    * Staleness: the handle pins the version it opened. [[probeWith]]
-    * re-checks [[IndexSwap.liveVersion]] (one LIST request) and
-    * re-opens automatically when a rebuild has committed — within the
-    * reader-grace window a stale handle is still CORRECT (its version
-    * dir is immutable and retained one cycle), so the check is about
-    * freshness, not safety. The re-open is CACHED in an
-    * [[java.util.concurrent.atomic.AtomicReference]] (round-15
-    * ADVICE: the immutable case-class form discarded the refreshed
-    * handle, so after the first rebuild EVERY probe re-ran the full
-    * open — meta read + centroid/codebook collects — reverting the
-    * handle to per-call cost); re-open now happens once per committed
-    * version, as the "paid once per REBUILD" contract states. */
-  final case class PqIndexHandle private[operators] (path: String, version: Long,
-      root: String, residual: Boolean, params: PqParams,
-      localCents: DataFrame, localCb: DataFrame,
-      centArrays: Similarity.CentArrays,
-      rotation: Option[(Array[Double], Int)]) {
-    private val current =
-      new java.util.concurrent.atomic.AtomicReference[PqIndexHandle](this)
-    /** The version the handle currently serves from (advances once per
-      * committed rebuild — the refresh-cached contract PQSpec pins). */
-    def currentVersion: Long = current.get().version
-    /** Probe through the cached state, re-opening (once per committed
-      * version) if a rebuild landed since the last probe. */
-    def probeWith(s: SparkSession, probes: DataFrame, nProbe: Int, k: Int,
-        allowed: Option[DataFrame] = None): DataFrame = {
-      val h = IndexSwap.refreshHandle(s, path, current,
-        (_: PqIndexHandle).version, () => openPqIndex(s, path))
-      probeResolved(s, probes, h.root, h.localCents, h.localCb,
-        h.residual, h.params, nProbe, k, Some(h.centArrays), h.rotation, allowed)
-    }
-  }
+  /** [[probePqIndexWith]] through a serve handle: the fixed per-call
+    * state (meta, centroid and codebook tables, rotation) was read at
+    * [[open]], so a handle probe pays zero store reads outside the two
+    * cell-scoped data sides — the fixed stages the pqlat battery
+    * measured (meta read 0.12 s + centroid/codebook reads) are paid
+    * once per REBUILD, not once per probe batch. */
+  def probeWith(s: SparkSession, h: Handle, probes: DataFrame, nProbe: Int, k: Int,
+      allowed: Option[DataFrame] = None): DataFrame =
+    probe(s, h.refreshed(s), probes, nProbe, k, allowed)
 
   /** DESCRIBE the live index; the optional `rotation` side reports
     * when present. */
   override def describe(s: SparkSession, path: String): DataFrame =
     IndexSwap.describeIndex(s, path, sides :+ "rotation")
 
-  /** Open a serve-session handle: resolve the version once, read meta
-    * once, and collect the centroid + codebook tables (sqrt(N) and
-    * M x K rows — manifest-class) into local relations every later
-    * probe plans against without touching the store. */
-  def openPqIndex(s: SparkSession, path: String): PqIndexHandle = {
-    val version = IndexSwap.liveVersion(s, path)
-    val root = IndexSwap.rootAt(path, version)
+  /** A PQ index's serving state: the meta row (encoding flag +
+    * realized sizing), the centroid and codebook tables (sqrt(N) and
+    * M x K rows — manifest-class) as LOCAL relations, the centroids as
+    * flat driver arrays for the in-process route, and the optional
+    * learned rotation. */
+  final case class PqState(residual: Boolean, params: PqParams,
+      localCents: DataFrame, localCb: DataFrame, cents: Similarity.CentArrays,
+      rotation: Option[(Array[Double], Int)])
+
+  type State = PqState
+
+  /** The meta row, both metadata tables collected, and the rotation. */
+  protected def load(s: SparkSession, root: String): State = {
     val (residual, p) = indexMetaAt(s, root)
-    val cents = s.read.parquet(s"$root/centroids")
-    val localCents = s.createDataFrame(
-      java.util.Arrays.asList(cents.collect(): _*), cents.schema)
-    val cb = s.read.parquet(s"$root/codebooks")
-    val localCb = s.createDataFrame(
-      java.util.Arrays.asList(cb.collect(): _*), cb.schema)
-    PqIndexHandle(path, version, root, residual, p, localCents, localCb,
+    def local(side: String): DataFrame = {
+      val df = s.read.parquet(IndexSwap.sideAt(root, side))
+      s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    }
+    val localCents = local("centroids")
+    PqState(residual, p, localCents, local("codebooks"),
       Similarity.collectCents(localCents), rotationAt(s, root))
   }
 
-  /** IN-PROCESS probe routing over the handle's cached centroid
-    * arrays: per probe, score every cell with the EXACT [[routeCells]]
-    * arithmetic — [[graft.functions.DotProductFF]]'s left-to-right
-    * double fold, `floor(dot / (cn * nrm) * 1e6)` with Java
-    * double->long cast, ties by (score desc, cent_id asc) — and keep
-    * the top nProbe. Bit-parity with the Spark routing job is pinned
-    * transitively by PQSpec's handle-vs-per-call equality (a routing
-    * divergence would change the served rows). Work is probes x cells
-    * multiply-adds on the driver — for the bounded serving batch shape
-    * (≤1e6 routed pairs, cells ~ sqrt(N)) that is microseconds-to-
-    * milliseconds, replacing a ~0.25 s Spark job per call. */
-  private def driverRoute(s: SparkSession,
-      probeRows: Array[org.apache.spark.sql.Row], ca: Similarity.CentArrays,
-      nProbe: Int): (DataFrame, Seq[Long]) = {
-    require(probeRows.length.toLong * nProbe <= 1000000L,
-      "driverRoute: probe batch routes to >1e6 (probe, cell) rows — " +
-        "PQ probing is for probe BATCHES; a corpus-sized probe set should " +
-        "assign both sides to cells and equi-join on cent_id (the qn20 shape)")
-    val rows = Similarity.driverRoutePairs(probeRows, ca, nProbe)
-      .map { case (r, cid) => org.apache.spark.sql.Row(r.getLong(0), cid) }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("probe_id", org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("cent_id", org.apache.spark.sql.types.LongType, false)))
-    (s.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
-      rows.map(_.getLong(1)).distinct.toSeq)
-  }
-
-  /** The probe pipeline against a PINNED version root and
-    * already-available metadata frames — shared by the per-call entry
-    * ([[probePqIndexWith]]: reads them fresh) and the serve handle
-    * ([[PqIndexHandle.probeWith]]: local relations, zero store reads
-    * outside the two cell-scoped data sides). */
-  private def probeResolved(s: SparkSession, probes: DataFrame, root: String,
-      cents: DataFrame, cb: DataFrame, residualIdx: Boolean, p: PqParams,
-      nProbe: Int, k: Int, cachedCents: Option[Similarity.CentArrays],
-      rot: Option[(Array[Double], Int)] = None,
-      allowed: Option[DataFrame] = None): DataFrame = {
-    // The routing, the ADC-table build, the shortlist and the refine
-    // each run their own action over ONE local probe relation.
+  /** The probe pipeline against a handle: every side reads from its
+    * one pinned root, the routing is an in-process loop over its
+    * centroid arrays ([[Similarity.driverRouteFrame]] — probes x cells
+    * multiply-adds on the driver, zero Spark jobs), and the metadata
+    * tables are local relations. */
+  private def probe(s: SparkSession, h: Handle, probes: DataFrame,
+      nProbe: Int, k: Int, allowed: Option[DataFrame]): DataFrame = {
+    val root = h.root
+    val PqState(residualIdx, p, cents, cb, ca, rot) = h.state
+    // The ADC-table build, the shortlist and the refine each run their
+    // own action over ONE local probe relation.
     val (probeRows, probesV) = IndexSwap.localProbes(s, probes, "probePqIndexWith")
-    // Routing: in-process over the handle's cached arrays when a
-    // serve-session supplied them ([[driverRoute]]), the Spark routing
-    // job otherwise — identical pairs either way (PQSpec pins the
-    // handle-vs-per-call equality).
-    val (localPc, cells) = cachedCents match {
-      case Some(ca) => driverRoute(s, probeRows, ca, nProbe)
-      case None => routeCells(s, probesV, cents, nProbe)
-    }
+    val (localPc, cells) = Similarity.driverRouteFrame(s, probeRows, ca, nProbe, "probe_id")
     // Probes encode in the INDEX'S space: through the stored learned
     // rotation when the index carries one (routing and the exact
     // refine stay in the raw space — the centroids and cold floats are
@@ -1875,8 +1791,7 @@ object PQ extends IndexRung {
     // differs per cell, so the table is keyed by both and the join key
     // widens. ONE manifest-class read serves both the flag and the
     // realized sizing (the old form paid an fs-exists plus a codebook
-    // aggregate job per serving call) — and the serve handle caches
-    // even that.
+    // aggregate job per serving call) — read once per [[open]].
     val scored =
       if (!residualIdx) {
         val tabs = adcTables(vsub(pe6.withColumnRenamed("probe_id", "vec_id"), p), cb, p)
@@ -1925,33 +1840,6 @@ object PQ extends IndexRung {
       Similarity.cellScopedReadAt(s, root, "vectors", cells)
         .filter(col("cent_id").isin(cells: _*) && push)
     }
-  }
-
-  /** Route a probe frame to its nProbe coarse cells and collect the
-    * (probe_id, cent_id) pairs — manifest-class, bounded by
-    * nProbe x #probes rows (the probeIvfIndex contract). Returns the
-    * local routed frame plus the distinct probed cells. */
-  private[graft] def routeCells(s: SparkSession, probesV: DataFrame,
-      cents: DataFrame, nProbe: Int): (DataFrame, Seq[Long]) = {
-    val cScore = e6(cosine(dotNative(col("ce"), col("embedding")), col("cn"), col("nrm")))
-    val wRoute = Window.partitionBy(col("probe_id")).orderBy(col("cscore").desc, col("cent_id").asc)
-    val pc = probesV.select(col("vec_id").as("probe_id"), col("embedding"), col("nrm"))
-      .join(broadcast(cents), expr("true"))
-      .select(col("probe_id"), col("cent_id"), cScore.as("cscore"))
-      .withColumn("rn", row_number().over(wRoute)).filter(col("rn") <= nProbe)
-      .select(col("probe_id"), col("cent_id"))
-    // The probeIvfIndexWith contract, enforced the same LOUD way: the
-    // route collects driver-side, so a probe batch that fans out to
-    // too many (probe, cell) rows must fail with instructions, never
-    // OOM the driver silently. (The probe frame itself and the topR
-    // shortlist carry their own 1e6 bound via [[maxProbeBatch]].)
-    val pcRows = pc.limit(1000001).collect()
-    require(pcRows.length <= 1000000,
-      "routeCells: probe batch routes to >1e6 (probe, cell) rows — " +
-        "PQ probing is for probe BATCHES; a corpus-sized probe set should " +
-        "assign both sides to cells and equi-join on cent_id (the qn20 shape)")
-    (s.createDataFrame(java.util.Arrays.asList(pcRows: _*), pc.schema),
-      pcRows.map(_.getLong(1)).distinct.toSeq)
   }
 
   /** The coarse IVF tier shared by qn33 and the persisted build: the

@@ -176,7 +176,7 @@ object SQ8 extends IndexRung {
     // against one envelope landing beside another, or cold rows in a
     // retiring version the code rows dangle against.
     val root = IndexSwap.liveRoot(s, path)
-    val (mna, spa) = collectStats(s.read.parquet(IndexSwap.sideAt(root, "stats")))
+    val (mna, spa) = load(s, root)
     val v = newVecs.select(col("vec_id"), col("embedding"),
       l2normNative(col("embedding")).as("nrm"))
     v.repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
@@ -209,7 +209,7 @@ object SQ8 extends IndexRung {
         count(lit(1)).as("n")).head()
       val oob = if (audit.isNullAt(0)) 0L else audit.getLong(0)
       if (oob.toDouble / math.max(1L, audit.getLong(1) * mna.length) > maxOobRate)
-        markRebalanceDue(s, path)
+        onRebalanceDue(s, path)
     }
   }
 
@@ -253,23 +253,24 @@ object SQ8 extends IndexRung {
     * [[PQ.maxProbeBatch]] bound as the PQ serving entry (the shortlist
     * collect is probes x 16 <= 1e6 rows). */
   def probeSq8IndexWith(s: SparkSession, probes: DataFrame, path: String,
-      k: Int, allowed: Option[DataFrame] = None): DataFrame = {
-    // ONE version resolution per probe call (the PQ.probeResolved
-    // contract — round-15 ADVICE): stats, codes and the cold refine
-    // all read the SAME pinned version; a rebalance committing
-    // mid-probe can never pair an old envelope with re-encoded codes
-    // (a silently wrong shortlist, not an error).
-    val root = IndexSwap.liveRoot(s, path)
-    val (mna, spa) = collectStats(s.read.parquet(IndexSwap.sideAt(root, "stats")))
-    probeSq8Resolved(s, probes, root, mna, spa, k, allowed)
-  }
+      k: Int, allowed: Option[DataFrame] = None): DataFrame =
+    probe(s, open(s, path), probes, k, allowed)
 
-  /** The probe pipeline against a PINNED version root and an already-
-    * collected envelope — shared by the per-call entry (reads them
-    * fresh) and [[Sq8IndexHandle.probeWith]] (cached). */
-  private def probeSq8Resolved(s: SparkSession, probes: DataFrame,
-      root: String, mna: Array[Long], spa: Array[Long],
+  /** [[probeSq8IndexWith]] through a serve handle: the envelope was
+    * read once at [[open]]. */
+  def probeWith(s: SparkSession, h: Handle, probes: DataFrame, k: Int,
+      allowed: Option[DataFrame] = None): DataFrame =
+    probe(s, h.refreshed(s), probes, k, allowed)
+
+  /** The probe pipeline against a handle's PINNED version root and
+    * envelope: stats, codes and the cold refine all read the SAME
+    * version, so a rebalance committing mid-probe can never pair an
+    * old envelope with re-encoded codes (a silently wrong shortlist,
+    * not an error). */
+  private def probe(s: SparkSession, h: Handle, probes: DataFrame,
       k: Int, allowed: Option[DataFrame]): DataFrame = {
+    val root = h.root
+    val (mna, spa) = h.state
     val (_, probesV) = IndexSwap.localProbes(s, probes, "probeSq8IndexWith")
     // Probe bytes quantize against the STORED envelope, clamped (an
     // out-of-corpus probe may fall outside it; identity for in-range
@@ -347,17 +348,19 @@ object SQ8 extends IndexRung {
     * the lifecycle verbs: tombstones are anti-joined and an `allowed`
     * frame semi-joins the prescreen, both BEFORE any distance work. */
   def rangeSq8IndexWith(s: SparkSession, probes: DataFrame, path: String,
-      t2e12: Long, allowed: Option[DataFrame] = None): DataFrame = {
-    val root = IndexSwap.liveRoot(s, path)
-    val (mna, spa) = collectStats(s.read.parquet(IndexSwap.sideAt(root, "stats")))
-    rangeSq8Resolved(s, probes, root, mna, spa, t2e12, allowed)
-  }
+      t2e12: Long, allowed: Option[DataFrame] = None): DataFrame =
+    range(s, open(s, path), probes, t2e12, allowed)
 
-  /** The range pipeline against a PINNED root and collected envelope
-    * (the [[probeSq8Resolved]] split, range edition). */
-  private def rangeSq8Resolved(s: SparkSession, probes: DataFrame,
-      root: String, mna: Array[Long], spa: Array[Long],
+  /** [[rangeSq8IndexWith]] through a serve handle. */
+  def rangeWith(s: SparkSession, h: Handle, probes: DataFrame, t2e12: Long,
+      allowed: Option[DataFrame] = None): DataFrame =
+    range(s, h.refreshed(s), probes, t2e12, allowed)
+
+  /** The range pipeline against a handle's pinned root and envelope. */
+  private def range(s: SparkSession, h: Handle, probes: DataFrame,
       t2e12: Long, allowed: Option[DataFrame]): DataFrame = {
+    val root = h.root
+    val (mna, spa) = h.state
     require(t2e12 >= 0, s"rangeSq8IndexWith: negative squared radius $t2e12")
     val probesRaw = probes.select(col("vec_id"), col("embedding"))
     val probeRows = probesRaw.limit(PQ.maxProbeBatch + 1).collect()
@@ -413,50 +416,10 @@ object SQ8 extends IndexRung {
     s.conf.getOption("spark.graft.sq8.rangeCollectMax").map(_.toInt)
       .getOrElse(1000000)
 
-  /** Serve-session handle for the flat SQ8 rung — the
-    * [[PQ.PqIndexHandle]] discipline without the routing tier: pins a
-    * version root and the COLLECTED envelope arrays, so a handle
-    * probe/range pays zero store reads outside the codes scan and the
-    * cold refine (the per-call entries re-resolve the version — one
-    * LIST — and re-read the D-row stats parquet on every call; a
-    * serving fleet pays that once per REBUILD instead).
-    *
-    * Staleness follows the PQ contract verbatim: calls re-check
-    * [[IndexSwap.liveVersion]] (one LIST) and the re-open is cached in
-    * an [[java.util.concurrent.atomic.AtomicReference]] — once per
-    * committed version, never per call; a stale handle inside the
-    * reader-grace window is still CORRECT (its version dir is
-    * immutable and retained one cycle). */
-  final case class Sq8IndexHandle private[operators] (path: String,
-      version: Long, root: String, mna: Array[Long], spa: Array[Long]) {
-    private val current =
-      new java.util.concurrent.atomic.AtomicReference[Sq8IndexHandle](this)
-    /** The version the handle currently serves from. */
-    def currentVersion: Long = current.get().version
-    private def refreshed(s: SparkSession): Sq8IndexHandle =
-      IndexSwap.refreshHandle(s, path, current, (_: Sq8IndexHandle).version,
-        () => openSq8Index(s, path))
-    /** knn through the cached envelope (the probeSq8IndexWith rows,
-      * bit-identical — Sq8Spec pins handle == per-call). */
-    def probeWith(s: SparkSession, probes: DataFrame, k: Int,
-        allowed: Option[DataFrame] = None): DataFrame = {
-      val h = refreshed(s)
-      probeSq8Resolved(s, probes, h.root, h.mna, h.spa, k, allowed)
-    }
-    /** Range through the cached envelope (the rangeSq8IndexWith rows). */
-    def rangeWith(s: SparkSession, probes: DataFrame, t2e12: Long,
-        allowed: Option[DataFrame] = None): DataFrame = {
-      val h = refreshed(s)
-      rangeSq8Resolved(s, probes, h.root, h.mna, h.spa, t2e12, allowed)
-    }
-  }
+  /** The frozen envelope as (mn, sp) pos-major arrays. */
+  type State = (Array[Long], Array[Long])
 
-  /** Open a serve-session handle: resolve the version once, collect
-    * the D-row envelope once. */
-  def openSq8Index(s: SparkSession, path: String): Sq8IndexHandle = {
-    val version = IndexSwap.liveVersion(s, path)
-    val root = IndexSwap.rootAt(path, version)
-    val (mna, spa) = collectStats(s.read.parquet(IndexSwap.sideAt(root, "stats")))
-    Sq8IndexHandle(path, version, root, mna, spa)
-  }
+  /** The D-row stats side, collected. */
+  protected def load(s: SparkSession, root: String): State =
+    collectStats(s.read.parquet(IndexSwap.sideAt(root, "stats")))
 }

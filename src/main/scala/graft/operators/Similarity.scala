@@ -1651,34 +1651,85 @@ object Similarity extends IndexRung {
   /** In-process flat route over CACHED centroid arrays: score every
     * (probe, centroid) pair with [[ivfAssigned]]'s exact rules (e6
     * floor, lowest-cent_id ties) and return each probe's top-nProbe
-    * as (probe row, cent_id) pairs — the serve-handle routing loop,
-    * ONE definition shared by the PQ / IVF / IvfSq8 handles (probes x
-    * cells multiply-adds on the driver: microseconds for serving
-    * batches, zero Spark jobs). Callers format the pairs into whatever
-    * local relation their tail joins against. */
+    * as (probe row, cent_id) pairs — the one routing loop of every
+    * PQ / IVF / IvfSq8 probe (probes x cells x dim multiply-adds on
+    * the driver, zero Spark jobs). [[driverRouteFrame]] turns the pairs
+    * into the local relation the probe tails join against. */
   private[graft] def driverRoutePairs(probeRows: Array[org.apache.spark.sql.Row],
-      ca: CentArrays, nProbe: Int): Array[(org.apache.spark.sql.Row, Long)] =
-    probeRows.iterator.flatMap { r =>
-      val emb = r.getSeq[Float](1)
-      require(emb.length == ca.dim,
-        s"driverRoutePairs: probe width ${emb.length} != centroid dim ${ca.dim}")
+      ca: CentArrays, nProbe: Int): Array[(org.apache.spark.sql.Row, Long)] = {
+    val nCells = ca.cids.length
+    val top = math.max(0, math.min(nProbe, nCells))
+    val out = Array.newBuilder[(org.apache.spark.sql.Row, Long)]
+    out.sizeHint(probeRows.length * top)
+    // Per probe: its embedding widened once, then a bounded insertion
+    // into the `top` best (score desc, cent_id asc) — no per-cell
+    // allocation and no sort of every cell.
+    val emb = new Array[Double](ca.dim)
+    val bestSc = new Array[Long](top)
+    val bestJ = new Array[Int](top)
+    def ahead(sc: Long, j: Int, i: Int): Boolean =
+      sc > bestSc(i) || (sc == bestSc(i) && ca.cids(j) < ca.cids(bestJ(i)))
+    probeRows.foreach { r =>
+      val e = r.getSeq[Float](1)
+      require(e.length == ca.dim,
+        s"driverRoutePairs: probe width ${e.length} != centroid dim ${ca.dim}")
+      var w = 0
+      e.foreach { x => emb(w) = x.toDouble; w += 1 }
       val nrm = r.getDouble(2)
-      val scored = new Array[(Long, Long)](ca.cids.length)
+      var filled = 0
       var j = 0
-      while (j < ca.cids.length) {
+      while (j < nCells && top > 0) {
         var dot = 0.0
         var d = 0
         val base = j * ca.dim
         while (d < ca.dim) {
-          dot += ca.flat(base + d).toDouble * emb(d).toDouble
+          dot += ca.flat(base + d).toDouble * emb(d)
           d += 1
         }
-        scored(j) = (math.floor(dot / (ca.cns(j) * nrm) * 1000000L).toLong, ca.cids(j))
+        val sc = math.floor(dot / (ca.cns(j) * nrm) * 1000000L).toLong
+        if (filled < top || ahead(sc, j, top - 1)) {
+          var i = if (filled < top) { filled += 1; filled - 1 } else top - 1
+          while (i > 0 && ahead(sc, j, i - 1)) {
+            bestSc(i) = bestSc(i - 1); bestJ(i) = bestJ(i - 1); i -= 1
+          }
+          bestSc(i) = sc; bestJ(i) = j
+        }
         j += 1
       }
-      scored.sortBy { case (sc, cid) => (-sc, cid) }.take(nProbe).iterator
-        .map { case (_, cid) => (r, cid) }
-    }.toArray
+      var i = 0
+      while (i < filled) { out += ((r, ca.cids(bestJ(i)))); i += 1 }
+    }
+    out.result()
+  }
+
+  /** Most (probe, cell) pairs a driver route may produce: the pairs are
+    * a driver collect, so past this a probe batch fails loudly. */
+  private[operators] val maxRoutedPairs = 1000000L
+
+  /** [[driverRoutePairs]] as a local (`probeCol`, cent_id) relation
+    * plus the distinct routed cells — the route every driver-routed
+    * probe body joins against. `withVectors` adds the probe's
+    * embedding and norm as `pe` / `pn` (the IVF score tail's inputs).
+    * A batch routing to more than [[maxRoutedPairs]] rows fails
+    * loudly. */
+  private[operators] def driverRouteFrame(s: SparkSession,
+      probeRows: Array[org.apache.spark.sql.Row], ca: CentArrays, nProbe: Int,
+      probeCol: String, withVectors: Boolean = false): (DataFrame, Seq[Long]) = {
+    require(probeRows.length.toLong * nProbe <= maxRoutedPairs,
+      "driverRouteFrame: probe batch routes to >1e6 (probe, cell) rows — index " +
+        "probing is for probe BATCHES; a corpus-sized probe set should assign both " +
+        "sides to cells and equi-join on cent_id (the qn20 shape)")
+    import org.apache.spark.sql.types._
+    val rows = driverRoutePairs(probeRows, ca, nProbe).map { case (r, cid) =>
+      if (withVectors) org.apache.spark.sql.Row(r.getLong(0), cid, r.get(1), r.getDouble(2))
+      else org.apache.spark.sql.Row(r.getLong(0), cid) }
+    val schema = StructType(Seq(StructField(probeCol, LongType, false),
+        StructField("cent_id", LongType, false)) ++
+      (if (withVectors) Seq(StructField("pe", ArrayType(FloatType, containsNull = true), true),
+        StructField("pn", DoubleType, false)) else Nil))
+    (s.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
+      rows.map(_.getLong(1)).distinct.toSeq)
+  }
 
   private[graft] def ivfArgmaxCol(cents: DataFrame): Column = {
     val ca = collectCents(cents)
@@ -1717,8 +1768,12 @@ object Similarity extends IndexRung {
     * is spec-pinnable (BlockedArgmaxSpec forces the broadcast route on
     * fixture-sized tables by shrinking it). */
   private[graft] def nativeAssignBlocked(v: DataFrame, cents: DataFrame,
-      keep: Seq[String], blockCells: Int = PQ.nativeAssignMaxCells): DataFrame = {
-    val ca = collectCents(cents)
+      keep: Seq[String], blockCells: Int = PQ.nativeAssignMaxCells): DataFrame =
+    nativeAssignWith(v, collectCents(cents), keep, blockCells)
+
+  /** [[nativeAssignBlocked]] over centroid arrays already collected. */
+  private def nativeAssignWith(v: DataFrame, ca: CentArrays, keep: Seq[String],
+      blockCells: Int): DataFrame = {
     val byteCap = math.max(1L, PQ.nativeAssignMaxBytes / (ca.dim * 4L))
     val bc = math.max(1, math.min(blockCells.toLong, byteCap).toInt)
     if (ca.cids.length <= bc)
@@ -1782,6 +1837,16 @@ object Similarity extends IndexRung {
       nCells: Long): DataFrame =
     if (!PQ.nativeAssignTotalOk(nCells, centDim(cents))) ivfAssigned(v, cents)
     else nativeAssignBlocked(v, cents, Seq("vec_id", "embedding", "nrm"))
+
+  /** [[ivfAssignedDispatch]] for the append paths, over the centroid
+    * arrays their `load` already read from `root`: the native argmax
+    * takes the arrays as they are, and only past the total-payload
+    * guard does the window form read the centroid side again. */
+  private[operators] def ivfAssignedAt(s: SparkSession, v: DataFrame, ca: CentArrays,
+      root: String): DataFrame =
+    if (!PQ.nativeAssignTotalOk(ca.cids.length, ca.dim))
+      ivfAssigned(v, s.read.parquet(IndexSwap.sideAt(root, "centroids")))
+    else nativeAssignWith(v, ca, Seq("vec_id", "embedding", "nrm"), PQ.nativeAssignMaxCells)
 
   /** Centroid width from a one-row peek (the dispatch guard's dim —
     * a tiny single-file read or LocalTableScan). */
@@ -1961,14 +2026,8 @@ object Similarity extends IndexRung {
     * already-written cell's assignment.
     *
     * `autoRebalance = Some(k)` makes the rebuild cadence MEASURED
-    * instead of caller discipline (the cleanBatch autoCompact pattern):
-    * after the append, per-cell row counts come off the lake's parquet
-    * FOOTERS (driver metadata — O(files), the zone/bloom walk class),
-    * and if the hottest cell holds more than k x the mean over the
-    * DECLARED cell count, [[rebalance]] runs. A drifting stream
-    * otherwise concentrates appends into a few stale cells, and every
-    * probe routed there degrades toward a linear scan of the drift —
-    * unbounded for any fixed k threshold without the trigger. */
+    * instead of caller discipline ([[auditCellSkew]]): past it
+    * [[rebalance]] runs inline. */
   def appendToIvfIndex(s: SparkSession, newVecs: DataFrame, path: String,
       autoRebalance: Option[Int] = None): Unit = {
     recover(s, path) // heal any interrupted prior swap first
@@ -1976,21 +2035,13 @@ object Similarity extends IndexRung {
     // and the trigger audit (round-15 ADVICE): never split an append
     // across a mid-call rebalance commit.
     val root = IndexSwap.liveRoot(s, path)
-    val centsDir = IndexSwap.sideAt(root, "centroids")
-    val cents = s.read.parquet(centsDir)
+    val ca = load(s, root)
     val v = newVecs.select(col("vec_id"), col("embedding"),
       l2normNative(col("embedding")).as("nrm"))
-    ivfAssignedDispatch(v, cents, parquetRowCount(s, centsDir))
+    ivfAssignedAt(s, v, ca, root)
       .write.mode("append")
       .partitionBy("cent_id").parquet(IndexSwap.sideAt(root, "vectors"))
-    autoRebalance.foreach { k =>
-      val stats = ivfCellStatsAt(s, root)
-      if (stats.nonEmpty) {
-        val nCells = math.max(1L, parquetRowCount(s, centsDir))
-        val mean = math.max(1.0, stats.values.sum.toDouble / nCells)
-        if (stats.values.max > k * mean) rebalance(s, path)
-      }
-    }
+    autoRebalance.foreach(auditCellSkew(s, path, root, ca.cids.length, _))
   }
 
   /** [[delete]] under the name existing callers use. */
@@ -1998,11 +2049,10 @@ object Similarity extends IndexRung {
       autoRebalance: Option[Double] = None): Unit =
     delete(s, ids, path, autoRebalance)
 
-  /** A due tombstone reclaim rebalances INLINE, no deferred marker:
-    * this index's append trigger is inline too (it predates the
-    * siblings' deferred-marker pattern), and the delete verb follows
-    * its host's cadence convention. */
-  override protected def onReclaimDue(s: SparkSession, path: String): Unit =
+  /** A due rebalance (the append's cell-skew audit or a delete's
+    * tombstone reclaim) runs INLINE, no deferred marker: this index's
+    * append trigger predates the siblings' deferred-marker pattern. */
+  override protected def onRebalanceDue(s: SparkSession, path: String): Unit =
     rebalance(s, path)
 
   /** Live rows: the vector lake's per-cell footer counts. */
@@ -2086,10 +2136,10 @@ object Similarity extends IndexRung {
   /** Probe a persisted IVF index: route probes via the stored centroid
     * table, then scan ONLY the probed cells — `cent_id IN (...)` lands
     * as a PartitionFilter, so Hive pruning skips every other cell's
-    * files (pinned in NorthStarSpec). Routing runs as ONE job: the
-    * probe-cell frame is collected (bounded by nProbe x #probes rows —
+    * files (pinned in NorthStarSpec). Routing runs on the driver over
+    * the collected centroid arrays (bounded by nProbe x #probes rows —
     * manifest-class, like ZoneMap planning) and re-enters the plan as a
-    * local relation, so the returned plan doesn't re-run the routing
+    * local relation, so the returned plan never re-runs a routing
     * pipeline for the rescoring broadcast. Probe vectors come from the
     * base table; results are identical to qn10's in-flight form because
     * the index stores the same embedding floats, double norms, and
@@ -2111,41 +2161,42 @@ object Similarity extends IndexRung {
     * of a probe stream via foreachBatch — streaming == batch parity
     * pinned in StreamSemanticSpec) against a standing index.
     *
-    * Contract: the routed cells are collected to the driver
-    * (nProbe x #probes rows), so this is for probe BATCHES — up to the
-    * order of 1e5 probes per call. A corpus-sized probe set should be
+    * Contract: the probes are collected to the driver and routed there
+    * (nProbe x #probes routed rows), so this is for probe BATCHES — up
+    * to the order of 1e5 probes per call. A corpus-sized probe set should be
     * an assignment join instead (route both sides to cells and
-    * equi-join on cent_id — the qn20 shape); the bound below fails
-    * loudly rather than letting the collect OOM the driver. */
+    * equi-join on cent_id — the qn20 shape); [[driverRouteFrame]]'s
+    * 1e6-pair bound fails loudly rather than letting the collect OOM
+    * the driver. */
   def probeIvfIndexWith(s: SparkSession, probes: DataFrame, path: String,
-      nProbe: Int, k: Int, allowed: Option[DataFrame] = None): DataFrame = {
-    val root = IndexSwap.liveRoot(s, path) // one resolution per call — no version mixing
-    val cents = s.read.parquet(s"$root/centroids")
-    val pv = probes.select(col("vec_id"), col("embedding"),
-      l2normNative(col("embedding")).as("nrm"))
-    val pc = ivfRoute(pv, cents, nProbe)
-    val pcRows = pc.limit(1000001).collect()
-    require(pcRows.length <= 1000000,
-      "probeIvfIndexWith: probe batch routes to >1e6 (probe, cell) rows — " +
-        "use a cent_id assignment JOIN for corpus-sized probe sets")
-    val localPc = s.createDataFrame(java.util.Arrays.asList(pcRows: _*), pc.schema)
-    val centIdx = pc.schema.fieldIndex("cent_id")
-    val cells = pcRows.map(_.getLong(centIdx)).distinct.toSeq
-    probeCellsTail(s, root, localPc, cells, k, allowed)
-  }
+      nProbe: Int, k: Int, allowed: Option[DataFrame] = None): DataFrame =
+    probe(s, open(s, path), probes, nProbe, k, allowed)
 
-  /** The probe tail shared by the per-call entry and the serve handle:
-    * cell-scoped candidate read against a PINNED version root + exact
-    * rescoring. */
-  private def probeCellsTail(s: SparkSession, root: String, localPc: DataFrame,
-      cells: Seq[Long], k: Int, allowed: Option[DataFrame] = None): DataFrame = {
+  /** [[probeIvfIndexWith]] through a serve handle. */
+  def probeWith(s: SparkSession, h: Handle, probes: DataFrame, nProbe: Int, k: Int,
+      allowed: Option[DataFrame] = None): DataFrame =
+    probe(s, h.refreshed(s), probes, nProbe, k, allowed)
+
+  /** The probe body against a handle: routes IN-PROCESS over its
+    * centroid arrays ([[driverRoutePairs]] — [[ivfRoute]]'s exact
+    * arithmetic: [[graft.functions.DotProductFF]]'s left-to-right
+    * double fold, e6 floor-cast, score-desc/cent_id-asc ties), then
+    * reads only the routed cells of its pinned root. */
+  private def probe(s: SparkSession, h: Handle, probes: DataFrame, nProbe: Int,
+      k: Int, allowed: Option[DataFrame]): DataFrame = {
+    val probesRaw = probes.select(col("vec_id"), col("embedding"),
+      l2normNative(col("embedding")).as("nrm"))
+    // One row past the route bound is enough for driverRouteFrame to fail loudly.
+    val probeRows = probesRaw.limit((maxRoutedPairs / math.max(1, nProbe)).toInt + 1).collect()
+    val (localPc, cells) = driverRouteFrame(s, probeRows, h.state, nProbe, "probe_id",
+      withVectors = true)
     // Tombstones (if any delete landed on this version) are anti-joined
     // out before the rescoring top-k — a deleted row can neither
     // surface nor crowd a live row out of the k slots. The deletes
     // side grows within a version, so it reads fresh per call (the
     // handle must not cache it).
-    val candidates = allowed.foldLeft(IndexSwap.exceptTombstones(s, root,
-        cellScopedReadAt(s, root, "vectors", cells))) { (c, a) =>
+    val candidates = allowed.foldLeft(IndexSwap.exceptTombstones(s, h.root,
+        cellScopedReadAt(s, h.root, "vectors", cells))) { (c, a) =>
         c.join(a.select(col("vec_id")), Seq("vec_id"), "left_semi") }
       .filter(col("cent_id").isin(cells: _*))
       .select(col("vec_id"), col("embedding"), col("nrm"),
@@ -2153,64 +2204,12 @@ object Similarity extends IndexRung {
     ivfScoreTail(candidates, localPc, k)
   }
 
-  /** A SERVE-SESSION handle for the plain IVF index — the
-    * [[PQ.openPqIndex]] pattern at this tier: pinned version root +
-    * the centroid table as flat driver arrays, opened once; each probe
-    * call pays one [[IndexSwap.liveVersion]] staleness check and
-    * routes IN-PROCESS over the cached arrays (the [[PQ.driverRoute]]
-    * arithmetic — [[graft.functions.DotProductFF]]'s left-to-right
-    * double fold, e6 floor-cast, score-desc/cent_id-asc ties — so the
-    * served rows are bit-identical to [[probeIvfIndexWith]], pinned in
-    * IvfRebalanceSpec).
-    *
-    * Refresh caching (round-15 ADVICE): a stale handle's re-open is
-    * HELD in an [[java.util.concurrent.atomic.AtomicReference]] — the
-    * first probe after a rebuild pays the open once and every later
-    * probe through this handle object reuses it, keeping the scaladoc
-    * claim "fixed stages are paid once per REBUILD" true for
-    * long-lived handles (the immutable case-class form re-opened on
-    * EVERY probe after the first rebuild, silently reverting to
-    * per-call cost). */
-  final case class IvfIndexHandle private[operators] (path: String, version: Long,
-      root: String, centArrays: CentArrays) {
-    private val current =
-      new java.util.concurrent.atomic.AtomicReference[IvfIndexHandle](this)
-    /** The version the handle currently serves from (advances once per
-      * committed rebuild — the refresh-cached contract the spec pins). */
-    def currentVersion: Long = current.get().version
-    def probeWith(s: SparkSession, probes: DataFrame, nProbe: Int, k: Int,
-        allowed: Option[DataFrame] = None): DataFrame = {
-      val h = IndexSwap.refreshHandle(s, path, current,
-        (_: IvfIndexHandle).version, () => openIvfIndex(s, path))
-      val ca = h.centArrays
-      val probesRaw = probes.select(col("vec_id"), col("embedding"),
-        l2normNative(col("embedding")).as("nrm"))
-      val maxProbes = 1000000 / math.max(1, nProbe)
-      val probeRows = probesRaw.limit(maxProbes + 1).collect()
-      require(probeRows.length <= maxProbes,
-        "IvfIndexHandle.probeWith: probe batch routes to >1e6 (probe, cell) rows — " +
-          "use a cent_id assignment JOIN for corpus-sized probe sets")
-      val routed = driverRoutePairs(probeRows, ca, nProbe).map { case (r, cid) =>
-        org.apache.spark.sql.Row(r.getLong(0), r.get(1), r.getDouble(2), cid) }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("probe_id", org.apache.spark.sql.types.LongType, false),
-        org.apache.spark.sql.types.StructField("pe",
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType, containsNull = true), true),
-        org.apache.spark.sql.types.StructField("pn", org.apache.spark.sql.types.DoubleType, false),
-        org.apache.spark.sql.types.StructField("cent_id", org.apache.spark.sql.types.LongType, false)))
-      val localPc = s.createDataFrame(java.util.Arrays.asList(routed: _*), schema)
-      probeCellsTail(s, h.root, localPc, routed.map(_.getLong(3)).distinct.toSeq, k, allowed)
-    }
-  }
+  /** The centroid table as flat driver arrays. */
+  type State = CentArrays
 
-  /** Open an IVF serve-session handle: one version resolve + one
-    * centroid collect. */
-  def openIvfIndex(s: SparkSession, path: String): IvfIndexHandle = {
-    val version = IndexSwap.liveVersion(s, path)
-    val root = IndexSwap.rootAt(path, version)
-    IvfIndexHandle(path, version, root,
-      collectCents(s.read.parquet(s"$root/centroids")))
-  }
+  /** The √N-row centroid side, collected. */
+  protected def load(s: SparkSession, root: String): State =
+    collectCents(s.read.parquet(IndexSwap.sideAt(root, "centroids")))
 
   /** Cell-count bound past which [[cellScopedRead]] falls back to the
     * whole-lake listing: the scoped form's win is O(nProbe) listing vs
@@ -2283,7 +2282,7 @@ object Similarity extends IndexRung {
     * sqrt(N) keys at scale — enough reducers). */
   def probeIvfIndexJoined(s: SparkSession, probes: DataFrame, path: String,
       nProbe: Int, k: Int, forceRoute: Option[Boolean] = None): DataFrame = {
-    // ONE version resolution per call (the probeResolved discipline),
+    // ONE version resolution per call (the pinned-root discipline),
     // and the same tombstone exclusion as every other probe entry — a
     // deleted row's visibility must not depend on which entry serves.
     val root = IndexSwap.liveRoot(s, path)

@@ -141,12 +141,7 @@ object TextIndex extends IndexRung {
     // pattern): appends fragment the term-sorted point-read layout —
     // past the file-count threshold the deferred marker drops and the
     // append returns at append cost; [[maintain]] pays.
-    autoCompact.foreach { maxFiles =>
-      val files = graft.sources.LakeListing.dataFiles(
-        s.sessionState.newHadoopConf(),
-        new org.apache.hadoop.fs.Path(IndexSwap.sideAt(root, "postings"))).size
-      if (files > maxFiles) markRebalanceDue(s, path)
-    }
+    autoCompact.foreach(auditFileCount(s, path, root, "postings", _))
   }
 
   /** [[delete]] under the name existing callers use: doc_id tombstones,
@@ -217,20 +212,25 @@ object TextIndex extends IndexRung {
     * before the window; df/N/T stay the stored corpus's (the
     * index-predates-the-verb semantics). */
   def probeTextIndexWith(s: SparkSession, queries: DataFrame, path: String,
-      k: Int, allowed: Option[DataFrame] = None): DataFrame = {
-    val root = IndexSwap.liveRoot(s, path) // ONE resolution per call
-    val stats = s.read.parquet(IndexSwap.sideAt(root, "stats"))
-      .agg(sum(col("n_docs")).as("n"), sum(col("n_tokens")).as("t")).head()
-    probeTextResolved(s, queries, root, stats.getLong(0), stats.getLong(1),
-      k, allowed)
-  }
+      k: Int, allowed: Option[DataFrame] = None): DataFrame =
+    probe(s, open(s, path), queries, k, allowed)
 
-  /** The probe pipeline against a PINNED root and already-summed
-    * corpus totals — shared by the per-call entry (reads them fresh)
-    * and [[TextIndexHandle.probeWith]] (cached). */
-  private def probeTextResolved(s: SparkSession, queries: DataFrame,
-      root: String, n: Long, t: Long, k: Int,
+  /** [[probeTextIndexWith]] through a serve handle. CAVEAT the vector
+    * rungs don't have: N/T change on APPEND too (not just rebuild), and
+    * an append does not bump the version — a long-lived handle serving
+    * across appends scores against slightly stale totals until the
+    * next rebuild commits (bounded staleness, same class as the
+    * documented stale-df-free design; re-open to refresh sooner). */
+  def probeWith(s: SparkSession, h: Handle, queries: DataFrame, k: Int,
+      allowed: Option[DataFrame] = None): DataFrame =
+    probe(s, h.refreshed(s), queries, k, allowed)
+
+  /** The probe pipeline against a handle's pinned root and summed
+    * corpus totals. */
+  private def probe(s: SparkSession, h: Handle, queries: DataFrame, k: Int,
       allowed: Option[DataFrame]): DataFrame = {
+    val root = h.root
+    val (n, t) = h.state
     val qRows = queries.select(col("doc_id"), col("text"))
       .limit(PQ.maxProbeBatch + 1).collect()
     require(qRows.length <= PQ.maxProbeBatch,
@@ -268,7 +268,7 @@ object TextIndex extends IndexRung {
     val terms = qt.map(_.getString(1)).distinct.toSeq
     val termPush =
       if (terms.isEmpty) lit(false)
-      else if (terms.length <= isinMaxTerms(s)) col("term").isin(terms: _*)
+      else if (terms.length <= IndexSwap.isinMaxIds(s)) col("term").isin(terms: _*)
       else lit(true) // over the bound: the semi-join below still prunes rows
     val matched = s.read.parquet(IndexSwap.sideAt(root, "postings"))
       .filter(termPush)
@@ -296,44 +296,13 @@ object TextIndex extends IndexRung {
       .orderBy("qid", "rnk")
   }
 
-  /** Postings-scan term-pushdown dispatch bound (the isinMaxIds
-    * discipline, term edition). */
-  private def isinMaxTerms(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.text.isinMaxTerms").map(_.toInt).getOrElse(10000)
+  /** The summed corpus totals (N, T). */
+  type State = (Long, Long)
 
-  /** Serve-session handle — the family discipline
-    * ([[SQ8.Sq8IndexHandle]]): pins a version root and the summed
-    * corpus totals (N, T), so a handle probe pays zero reads outside
-    * the pruned postings scan and the doclen join. CAVEAT the vector
-    * rungs don't have: N/T change on APPEND too (not just rebuild),
-    * and an append does not bump the version — a long-lived handle
-    * serving across appends scores against slightly stale totals
-    * until the next rebuild commits (bounded staleness, same class as
-    * the documented stale-df-free design; re-open to refresh sooner).
-    * Refresh contract: [[IndexSwap.refreshHandle]]. */
-  final case class TextIndexHandle private[operators] (path: String,
-      version: Long, root: String, n: Long, t: Long) {
-    private val current =
-      new java.util.concurrent.atomic.AtomicReference[TextIndexHandle](this)
-    /** The version the handle currently serves from. */
-    def currentVersion: Long = current.get().version
-    /** BM25 top-k through the cached totals (bit-identical to the
-      * per-call entry at equal totals — TextIndexSpec pins it). */
-    def probeWith(s: SparkSession, queries: DataFrame, k: Int,
-        allowed: Option[DataFrame] = None): DataFrame = {
-      val h = IndexSwap.refreshHandle(s, path, current,
-        (_: TextIndexHandle).version, () => openTextIndex(s, path))
-      probeTextResolved(s, queries, h.root, h.n, h.t, k, allowed)
-    }
-  }
-
-  /** Open a serve-session handle: resolve the version once, sum the
-    * stats deltas once. */
-  def openTextIndex(s: SparkSession, path: String): TextIndexHandle = {
-    val version = IndexSwap.liveVersion(s, path)
-    val root = IndexSwap.rootAt(path, version)
+  /** Sum the additive stats deltas. */
+  protected def load(s: SparkSession, root: String): State = {
     val stats = s.read.parquet(IndexSwap.sideAt(root, "stats"))
       .agg(sum(col("n_docs")).as("n"), sum(col("n_tokens")).as("t")).head()
-    TextIndexHandle(path, version, root, stats.getLong(0), stats.getLong(1))
+    (stats.getLong(0), stats.getLong(1))
   }
 }

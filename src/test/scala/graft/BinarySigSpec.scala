@@ -27,12 +27,12 @@ class BinarySigSpec extends AnyFunSuite {
     BinarySig.buildBinIndex(spark, sf, path)
     val probeFrame = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
       .select("vec_id", "embedding")
-    val handle = BinarySig.openBinIndex(spark, path)
-    assert(handle.probeWith(spark, probeFrame, 5).collect().map(_.toString).toSeq ==
+    val handle = BinarySig.open(spark, path)
+    assert(BinarySig.probeWith(spark, handle, probeFrame, 5).collect().map(_.toString).toSeq ==
       BinarySig.probeBinIndex(spark, sf, path, 5).collect().map(_.toString).toSeq,
       "handle probe diverged from the per-call entry")
     BinarySig.rebalance(spark, path)
-    assert(handle.probeWith(spark, probeFrame, 5).collect().map(_.toString).toSeq ==
+    assert(BinarySig.probeWith(spark, handle, probeFrame, 5).collect().map(_.toString).toSeq ==
       BinarySig.probeBinIndex(spark, sf, path, 5).collect().map(_.toString).toSeq,
       "stale handle did not re-open on the new version")
     assert(handle.currentVersion == graft.operators.IndexSwap.liveVersion(spark, path),
@@ -45,8 +45,8 @@ class BinarySigSpec extends AnyFunSuite {
     val path2 = graft.operators.Similarity.newIndexDir()
     BinarySig.buildBinIndexFrom(spark, wide, path2, 256)
     val wideProbes = wide.filter(col("vec_id") < 10)
-    assert(BinarySig.openBinIndex(spark, path2)
-        .probeWith(spark, wideProbes, 5).collect().map(_.toString).toSeq ==
+    assert(BinarySig.probeWith(spark, BinarySig.open(spark, path2), wideProbes, 5)
+        .collect().map(_.toString).toSeq ==
       BinarySig.probeBinIndexWith(spark, wideProbes, path2, 5)
         .collect().map(_.toString).toSeq,
       "multi-word handle probe diverged from the per-call entry")

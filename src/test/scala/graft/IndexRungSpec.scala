@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,11 +15,17 @@ class IndexRungSpec extends AnyFunSuite {
   import graft.operators._
 
   /** One rung under test: `corpus` is the (id, payload) fixture frame,
-    * `id` its id column, `probe` serves k=10 neighbours per probe row.
-    * `deferred` is false for IVF, whose due reclaim runs inline. */
+    * `id` its id column, `probe` serves k=10 neighbours per probe row
+    * through the per-call entry and `serve` opens a handle on a path
+    * and serves the same probe through it. `jobsBefore` is the Spark
+    * job count of one per-call probe (collected) when each rung still
+    * had its own handle class and the IVF-tier rungs routed per call
+    * with a Spark job. `deferred` is false for IVF, whose due reclaim
+    * runs inline. */
   final case class Rung(name: String, rung: IndexRung, id: String,
       corpus: () => DataFrame, build: String => Unit,
-      probe: (DataFrame, String) => DataFrame, deferred: Boolean = true)
+      probe: (DataFrame, String) => DataFrame, serve: String => DataFrame => DataFrame,
+      jobsBefore: Int, deferred: Boolean = true)
 
   private def vecs = Tables.embeddings(spark, sf).select("vec_id", "embedding")
   private def docs = Tables.documents(spark, sf).select("doc_id", "text")
@@ -26,31 +33,59 @@ class IndexRungSpec extends AnyFunSuite {
   private val rungs = Seq(
     Rung("IVF", Similarity, "vec_id", () => vecs,
       Similarity.buildIvfIndex(spark, sf, 16, _),
-      (q, p) => Similarity.probeIvfIndexWith(spark, q, p, 4, 10), deferred = false),
+      (q, p) => Similarity.probeIvfIndexWith(spark, q, p, 4, 10),
+      p => { val h = Similarity.open(spark, p); Similarity.probeWith(spark, h, _, 4, 10) },
+      jobsBefore = 10, deferred = false),
     Rung("SQ8", SQ8, "vec_id", () => vecs,
       SQ8.buildSq8Index(spark, sf, _),
-      (q, p) => SQ8.probeSq8IndexWith(spark, q, p, 10)),
+      (q, p) => SQ8.probeSq8IndexWith(spark, q, p, 10),
+      p => { val h = SQ8.open(spark, p); SQ8.probeWith(spark, h, _, 10) },
+      jobsBefore = 16),
     Rung("IvfSq8", IvfSq8, "vec_id", () => vecs,
       IvfSq8.buildIvfSq8Index(spark, sf, 16, _),
-      (q, p) => IvfSq8.probeIvfSq8IndexWith(spark, q, p, 4, 10)),
+      (q, p) => IvfSq8.probeIvfSq8IndexWith(spark, q, p, 4, 10),
+      p => { val h = IvfSq8.open(spark, p); IvfSq8.probeWith(spark, h, _, 4, 10) },
+      jobsBefore = 21),
     Rung("PQ", PQ, "vec_id", () => vecs,
       PQ.buildPqIndex(spark, sf, _),
-      (q, p) => PQ.probePqIndexWith(spark, q, p, 4, 10)),
+      (q, p) => PQ.probePqIndexWith(spark, q, p, 4, 10),
+      p => { val h = PQ.open(spark, p); PQ.probeWith(spark, h, _, 4, 10) },
+      jobsBefore = 22),
     Rung("BinarySig", BinarySig, "vec_id", () => vecs,
       BinarySig.buildBinIndex(spark, sf, _),
-      (q, p) => BinarySig.probeBinIndexWith(spark, q, p, 10)),
+      (q, p) => BinarySig.probeBinIndexWith(spark, q, p, 10),
+      p => { val h = BinarySig.open(spark, p); BinarySig.probeWith(spark, h, _, 10) },
+      jobsBefore = 12),
     Rung("Matryoshka", Matryoshka, "vec_id", () => vecs,
       Matryoshka.buildMatryoshkaIndex(spark, sf, 16, _),
-      (q, p) => Matryoshka.probeMatryoshkaIndexWith(spark, q, p, 10)),
+      (q, p) => Matryoshka.probeMatryoshkaIndexWith(spark, q, p, 10),
+      p => { val h = Matryoshka.open(spark, p); Matryoshka.probeWith(spark, h, _, 10) },
+      jobsBefore = 16),
     Rung("TextIndex", TextIndex, "doc_id", () => docs,
       TextIndex.buildTextIndex(spark, sf, _),
-      (q, p) => TextIndex.probeTextIndexWith(spark, q, p, 10)))
+      (q, p) => TextIndex.probeTextIndexWith(spark, q, p, 10),
+      p => { val h = TextIndex.open(spark, p); TextIndex.probeWith(spark, h, _, 10) },
+      jobsBefore = 18))
 
   /** A private copy of the rung's once-per-session build. */
   private def fresh(r: Rung): String =
     IndexMemo.mutableCopy(spark, sf, s"rungspec_${r.name}")(r.build)
 
   private def probes(r: Rung): DataFrame = r.corpus().filter(col(r.id) < 10)
+
+  /** Spark jobs started while `body` runs, every posted event drained
+    * before and after (the ProfileSpec discipline). */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet(): Unit
+    }
+    GraftSqlBridge.drainListeners(sc)
+    sc.addSparkListener(counter)
+    try { body; GraftSqlBridge.drainListeners(sc) } finally sc.removeSparkListener(counter)
+    started.get
+  }
 
   private def stageDir(path: String): java.io.File = new java.io.File(s"$path/.stage")
   private def marker(path: String): java.io.File = new java.io.File(s"$path/_rebalance_due")
@@ -75,6 +110,22 @@ class IndexRungSpec extends AnyFunSuite {
   }
 
   rungs.foreach { r =>
+    test(s"${r.name}: a per-call probe runs at most ${r.jobsBefore} Spark jobs, an open handle's no more") {
+      val path = IndexMemo.pristine(spark, sf, s"rungspec_${r.name}")(r.build)
+      val q = probes(r)
+      val perCall = jobsOf(r.probe(q, path).collect(): Unit)
+      assert(perCall <= r.jobsBefore, s"per-call probe ran $perCall jobs")
+      val serve = r.serve(path)
+      val viaHandle = jobsOf(serve(q).collect(): Unit)
+      // A per-call probe is one open plus the handle probe: an open
+      // handle that re-loaded its state would pay the open's jobs again.
+      val openJobs = jobsOf(r.rung.open(spark, path): Unit)
+      assert(viaHandle + openJobs <= perCall,
+        s"handle probe ran $viaHandle jobs, open $openJobs, per-call $perCall")
+      assert(serve(q).collect().map(_.toString).toSeq ==
+        r.probe(q, path).collect().map(_.toString).toSeq, "handle and per-call rows differ")
+    }
+
     test(s"${r.name}: a planted .stage/<side> is dropped by the next delete and the next maintain") {
       val path = fresh(r)
       def plant(): Unit = {

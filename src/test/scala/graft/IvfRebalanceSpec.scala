@@ -243,14 +243,14 @@ class IvfRebalanceSpec extends AnyFunSuite {
       .select("vec_id", "embedding")
     val perCall = Similarity.probeIvfIndexWith(spark, probeFrame, path, 4, 5)
       .collect().map(_.toString).toSeq
-    val handle = Similarity.openIvfIndex(spark, path)
-    val viaHandle = handle.probeWith(spark, probeFrame, 4, 5)
+    val handle = Similarity.open(spark, path)
+    val viaHandle = Similarity.probeWith(spark, handle, probeFrame, 4, 5)
       .collect().map(_.toString).toSeq
     assert(viaHandle == perCall, "handle probe diverged from the per-call entry")
     Similarity.rebalance(spark, path)
     val afterRebuild = Similarity.probeIvfIndexWith(spark, probeFrame, path, 4, 5)
       .collect().map(_.toString).toSeq
-    val viaStale = handle.probeWith(spark, probeFrame, 4, 5)
+    val viaStale = Similarity.probeWith(spark, handle, probeFrame, 4, 5)
       .collect().map(_.toString).toSeq
     assert(viaStale == afterRebuild, "stale handle did not re-open on the new version")
     // Refresh caching (round-15 ADVICE): the stale probe's re-open is
@@ -272,12 +272,12 @@ class IvfRebalanceSpec extends AnyFunSuite {
       Similarity.buildIvfIndex(spark, sf, 16, path) // v1
       val probeFrame = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
         .select("vec_id", "embedding")
-      val handle = Similarity.openIvfIndex(spark, path)
-      val baseline = handle.probeWith(spark, probeFrame, 4, 5)
+      val handle = Similarity.open(spark, path)
+      val baseline = Similarity.probeWith(spark, handle, probeFrame, 4, 5)
         .collect().map(_.toString).toSeq
       // In flight: routing + version pin + file listing happen at call
       // time; the collect comes AFTER the commit lands.
-      val inFlight = handle.probeWith(spark, probeFrame, 4, 5)
+      val inFlight = Similarity.probeWith(spark, handle, probeFrame, 4, 5)
       assert(handle.currentVersion == 1L)
       // Mid-batch: a near-copy of probe 3 lands and a rebalance commits
       // v2 while the v1 plan is still open.
@@ -297,7 +297,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
         "in-flight v_N probe saw mixed-version or post-listing rows")
       // The handle flips on its next call: v2 serves, the near-copy is
       // probe 3's top neighbor, and the flip is cached.
-      val after = handle.probeWith(spark, probeFrame, 4, 5)
+      val after = Similarity.probeWith(spark, handle, probeFrame, 4, 5)
       val top = after.filter(col("probe_id") === 3 && col("rnk") === 1).collect()
       assert(top.length == 1 && top.head.getLong(2) == 77777L,
         s"post-flip probe missed the committed near-copy: ${top.mkString}")

@@ -337,8 +337,8 @@ class IvfSq8Spec extends AnyFunSuite {
     val unfiltered = IvfSq8.probeIvfSq8Index(spark, sf, path, 4, 5).collect()
     assert(!unfiltered.forall(_.getLong(2) % 3 == 1),
       "fixture degenerate: the unfiltered top-k already satisfies the filter")
-    val viaHandle = IvfSq8.openIvfSq8Index(spark, path)
-      .probeWith(spark, probes, 4, 5, allowed = Some(allowed)).collect()
+    val viaHandle = IvfSq8.probeWith(spark, IvfSq8.open(spark, path),
+      probes, 4, 5, allowed = Some(allowed)).collect()
     assert(viaHandle.map(_.toString).toSeq == res.map(_.toString).toSeq,
       "handle filtered probe diverged from the per-call entry")
   }
@@ -348,10 +348,10 @@ class IvfSq8Spec extends AnyFunSuite {
     IvfSq8.buildIvfSq8Index(spark, sf, 16, path)
     val perCall = IvfSq8.probeIvfSq8Index(spark, sf, path, 4, 5)
       .collect().map(_.toString).toSeq
-    val handle = IvfSq8.openIvfSq8Index(spark, path)
+    val handle = IvfSq8.open(spark, path)
     val probeFrame = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
       .select("vec_id", "embedding")
-    val viaHandle = handle.probeWith(spark, probeFrame, 4, 5)
+    val viaHandle = IvfSq8.probeWith(spark, handle, probeFrame, 4, 5)
       .collect().map(_.toString).toSeq
     assert(viaHandle == perCall, "handle probe diverged from the per-call entry")
     // Staleness: a rebuild commits a new version; the SAME handle must
@@ -359,7 +359,7 @@ class IvfSq8Spec extends AnyFunSuite {
     IvfSq8.rebalance(spark, path)
     val afterRebuild = IvfSq8.probeIvfSq8Index(spark, sf, path, 4, 5)
       .collect().map(_.toString).toSeq
-    val viaStaleHandle = handle.probeWith(spark, probeFrame, 4, 5)
+    val viaStaleHandle = IvfSq8.probeWith(spark, handle, probeFrame, 4, 5)
       .collect().map(_.toString).toSeq
     assert(viaStaleHandle == afterRebuild, "stale handle did not re-open on the new version")
     // Refresh caching: the re-open is HELD in the handle — one open per

@@ -27,13 +27,13 @@ class MatryoshkaSpec extends AnyFunSuite {
     Matryoshka.buildMatryoshkaIndex(spark, sf, 16, path)
     val probeFrame = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
       .select("vec_id", "embedding")
-    val handle = Matryoshka.openMatryoshkaIndex(spark, path)
-    assert(handle.probeWith(spark, probeFrame, 5).collect().map(_.toString).toSeq ==
+    val handle = Matryoshka.open(spark, path)
+    assert(Matryoshka.probeWith(spark, handle, probeFrame, 5).collect().map(_.toString).toSeq ==
       Matryoshka.probeMatryoshkaIndex(spark, sf, path, 5)
         .collect().map(_.toString).toSeq,
       "handle probe diverged from the per-call entry")
     Matryoshka.rebalance(spark, path)
-    assert(handle.probeWith(spark, probeFrame, 5).collect().map(_.toString).toSeq ==
+    assert(Matryoshka.probeWith(spark, handle, probeFrame, 5).collect().map(_.toString).toSeq ==
       Matryoshka.probeMatryoshkaIndex(spark, sf, path, 5)
         .collect().map(_.toString).toSeq,
       "stale handle did not re-open on the new version")

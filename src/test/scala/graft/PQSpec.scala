@@ -110,17 +110,25 @@ class PQSpec extends AnyFunSuite {
     val path = graft.operators.Similarity.newIndexDir()
     graft.operators.PQ.buildPqIndex(spark, sf, path)
     // (a) a probe frame past maxProbeBatch must fail with instructions
-    // BEFORE anything corpus-sized collects (the routeCells contract,
-    // one stage earlier): probes x adcTopR is the shortlist collect.
-    val over = spark.range(graft.operators.PQ.maxProbeBatch + 1L)
+    // BEFORE anything corpus-sized collects (the driverRouteFrame
+    // contract, one stage earlier): probes x adcTopR is the shortlist collect.
+    def probesOf(n: Long) = spark.range(n)
       .select(col("id").as("vec_id"),
         transform(sequence(lit(0), lit(63)),
           i => (i.cast("double") / 64.0).cast("float")).as("embedding"))
     val ex = intercept[IllegalArgumentException] {
-      graft.operators.PQ.probePqIndexWith(spark, over, path, 4, 5).collect()
+      graft.operators.PQ.probePqIndexWith(spark, probesOf(graft.operators.PQ.maxProbeBatch + 1L),
+        path, 4, 5).collect()
     }
     assert(ex.getMessage.contains("probe batch exceeds") &&
       ex.getMessage.contains("qn20"), ex.getMessage)
+    // A batch under maxProbeBatch whose probes x nProbe passes 1e6
+    // fails at the route bound instead.
+    val exRoute = intercept[IllegalArgumentException] {
+      graft.operators.PQ.probePqIndexWith(spark, probesOf(1000L), path, 1001, 5).collect()
+    }
+    assert(exRoute.getMessage.contains("driverRouteFrame: probe batch routes to >1e6") &&
+      exRoute.getMessage.contains("qn20"), exRoute.getMessage)
     // (b) above the isin threshold the cold-read pushdown degrades to
     // BETWEEN(min, max) — still pushable (range row-group pruning
     // against the sorted-by-vec_id layout) — and the result is
@@ -480,8 +488,8 @@ class PQSpec extends AnyFunSuite {
     val unfiltered = PQ.probePqIndex(spark, sf, path, 4, 5).collect()
     assert(!unfiltered.forall(_.getLong(2) % 3 == 1),
       "fixture degenerate: the unfiltered top-k already satisfies the filter")
-    val viaHandle = PQ.openPqIndex(spark, path)
-      .probeWith(spark, probes, 4, 5, allowed = Some(allowed)).collect()
+    val viaHandle = PQ.probeWith(spark, PQ.open(spark, path),
+      probes, 4, 5, allowed = Some(allowed)).collect()
     assert(viaHandle.map(_.toString).toSeq == res.map(_.toString).toSeq,
       "handle filtered probe diverged from the per-call entry")
   }
@@ -492,10 +500,10 @@ class PQSpec extends AnyFunSuite {
     PQ.buildPqIndex(spark, sf, path)
     val perCall = PQ.probePqIndex(spark, sf, path, 4, 5)
       .collect().map(_.toString).toSeq
-    val handle = PQ.openPqIndex(spark, path)
+    val handle = PQ.open(spark, path)
     val probeFrame = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
       .select("vec_id", "embedding")
-    val viaHandle = handle.probeWith(spark, probeFrame, 4, 5)
+    val viaHandle = PQ.probeWith(spark, handle, probeFrame, 4, 5)
       .collect().map(_.toString).toSeq
     assert(viaHandle == perCall, "handle probe diverged from the per-call entry")
     // Staleness: a rebuild commits a new version; the SAME handle must
@@ -503,7 +511,7 @@ class PQSpec extends AnyFunSuite {
     PQ.rebalance(spark, path)
     val afterRebuild = PQ.probePqIndex(spark, sf, path, 4, 5)
       .collect().map(_.toString).toSeq
-    val viaStaleHandle = handle.probeWith(spark, probeFrame, 4, 5)
+    val viaStaleHandle = PQ.probeWith(spark, handle, probeFrame, 4, 5)
       .collect().map(_.toString).toSeq
     assert(viaStaleHandle == afterRebuild, "stale handle did not re-open on the new version")
     // Refresh caching (round-15 ADVICE): the re-open is HELD in the
@@ -538,8 +546,8 @@ class PQSpec extends AnyFunSuite {
       .select("vec_id", "embedding")
     val perCall = PQ.probePqIndexWith(spark, probeFrame, path, 4, 5)
       .collect().map(_.toString).toSeq
-    val handle = PQ.openPqIndex(spark, path)
-    assert(handle.probeWith(spark, probeFrame, 4, 5)
+    val handle = PQ.open(spark, path)
+    assert(PQ.probeWith(spark, handle, probeFrame, 4, 5)
       .collect().map(_.toString).toSeq == perCall,
       "rotated handle probe diverged from the per-call entry")
     // Append encodes the new row through the STORED rotation: a planted

@@ -240,6 +240,22 @@ class Sq8Spec extends AnyFunSuite {
       "fixture degenerate: the clamped appendee never entered the radius")
   }
 
+  test("range search past the survivor collect cap: the equi-join refine returns the point-read rows") {
+    val path = graft.operators.Similarity.newIndexDir()
+    SQ8.buildSq8Index(spark, sf, path)
+    val probes = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
+      .select("vec_id", "embedding")
+    val t2 = 1450000000000L
+    val pointRead = SQ8.rangeSq8IndexWith(spark, probes, path, t2)
+      .collect().map(_.toString).toSeq
+    spark.conf.set("spark.graft.sq8.rangeCollectMax", "0")
+    val equiJoin = try SQ8.rangeSq8IndexWith(spark, probes, path, t2)
+      .collect().map(_.toString).toSeq
+    finally spark.conf.unset("spark.graft.sq8.rangeCollectMax")
+    assert(pointRead.nonEmpty, "fixture degenerate: no row inside the radius")
+    assert(equiJoin == pointRead, "the over-cap refine diverged from the point-read refine")
+  }
+
   test("range search composes with DELETE and the allowed filter") {
     val path = graft.operators.Similarity.newIndexDir()
     SQ8.buildSq8Index(spark, sf, path)
@@ -268,18 +284,18 @@ class Sq8Spec extends AnyFunSuite {
     SQ8.buildSq8Index(spark, sf, path)
     val probeFrame = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
       .select("vec_id", "embedding")
-    val handle = SQ8.openSq8Index(spark, path)
-    assert(handle.probeWith(spark, probeFrame, 5).collect().map(_.toString).toSeq ==
+    val handle = SQ8.open(spark, path)
+    assert(SQ8.probeWith(spark, handle, probeFrame, 5).collect().map(_.toString).toSeq ==
       SQ8.probeSq8Index(spark, sf, path, 5).collect().map(_.toString).toSeq,
       "handle probe diverged from the per-call entry")
     val t2 = 1450000000000L
-    assert(handle.rangeWith(spark, probeFrame, t2).collect().map(_.toString).toSeq ==
+    assert(SQ8.rangeWith(spark, handle, probeFrame, t2).collect().map(_.toString).toSeq ==
       SQ8.rangeSq8Index(spark, sf, path, t2).collect().map(_.toString).toSeq,
       "handle range diverged from the per-call entry")
     // Staleness: the SAME handle serves the rebuilt index, and the
     // re-open is cached (the PQ handle contract verbatim).
     SQ8.rebalance(spark, path)
-    assert(handle.probeWith(spark, probeFrame, 5).collect().map(_.toString).toSeq ==
+    assert(SQ8.probeWith(spark, handle, probeFrame, 5).collect().map(_.toString).toSeq ==
       SQ8.probeSq8Index(spark, sf, path, 5).collect().map(_.toString).toSeq,
       "stale handle did not re-open on the new version")
     assert(handle.currentVersion == graft.operators.IndexSwap.liveVersion(spark, path),

@@ -88,11 +88,11 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.buildTextIndex(spark, sf, path)
     val queries = Tables.documents(spark, sf).filter(col("doc_id") < 5)
       .select("doc_id", "text")
-    val handle = TextIndex.openTextIndex(spark, path)
-    assert(handle.probeWith(spark, queries, 10).collect().map(_.toString).toSeq ==
+    val handle = TextIndex.open(spark, path)
+    assert(TextIndex.probeWith(spark, handle, queries, 10).collect().map(_.toString).toSeq ==
       probeRows(path), "handle probe diverged from the per-call entry")
     TextIndex.rebalance(spark, path)
-    assert(handle.probeWith(spark, queries, 10).collect().map(_.toString).toSeq ==
+    assert(TextIndex.probeWith(spark, handle, queries, 10).collect().map(_.toString).toSeq ==
       probeRows(path), "stale handle did not re-open on the new version")
     assert(handle.currentVersion == graft.operators.IndexSwap.liveVersion(spark, path),
       "re-open was discarded instead of cached")
