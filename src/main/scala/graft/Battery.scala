@@ -1103,7 +1103,7 @@ object Battery {
         s.read.parquet(IndexSwap.sideAt(r0, "stats")))
       val pq8 = SQ8.ve6Of(probesDf)
         .select(col("vec_id").as("qid"),
-          SQ8.q8Col(mna, spa, clamp = true).as("pq8"))
+          SQ8.q8Col(mna, spa).as("pq8"))
       val spansLit = array(spa.map(lit(_)): _*)
       val surv = s.read.parquet(IndexSwap.sideAt(r0, "codes"))
         .join(broadcast(pq8), expr("true"))

@@ -1,8 +1,7 @@
 package graft.operators
 
-import graft.{Concurrently, Tables}
+import graft.Tables
 import graft.functions.TextFns._
-import graft.functions.VectorExprs.l2normNative
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -118,18 +117,19 @@ object BinarySig extends IndexRung {
   private def sigForDim(emb: Column, dim: Int): Column =
     if (dim == 64) sigCol(emb) else sigWordsCol(emb, dim)
 
-  /** Stage both sides into the [[IndexSwap]] tmp siblings (shared by
-    * build and rebalance — one definition of the layout). */
-  private def stageSides(path: String, v: DataFrame, dim: Int): Unit =
-    // Independent staging writes overlapped (round 18, guide §2.6).
-    Concurrently.run(Seq(
-      () => v.select(col("vec_id"), sigForDim(col("embedding"), dim).as("sig"))
-        .repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
-        .write.mode("overwrite").parquet(IndexSwap.tmp(path, "codes").toString),
-      () => v.select(col("vec_id"), col("embedding"), col("nrm"))
-        .repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
-        .write.mode("overwrite").option("parquet.block.size", 1L << 20)
-        .parquet(IndexSwap.tmp(path, "vectors").toString)))
+  /** Both sides sorted by vec_id; the cold side in 1 MB row groups. */
+  protected val layouts: Map[String, IndexSwap.Layout] = Map(
+    "codes" -> IndexSwap.Layout.sorted("vec_id"),
+    "vectors" -> IndexSwap.Layout.sorted("vec_id", IndexSwap.coldBlock))
+
+  /** Sign (vec_id, embedding) rows at the stored dim: the cold rows and
+    * their signatures. */
+  protected def encode(s: SparkSession, rows: DataFrame,
+      st: => State): Seq[(String, DataFrame)] = {
+    val v = IndexSwap.normed(rows)
+    Seq("vectors" -> v,
+      "codes" -> v.select(col("vec_id"), sigForDim(col("embedding"), st._2).as("sig")))
+  }
 
   /** Build the persisted signature index from the corpus at `dir` —
     * staged writes, atomic commit. The driver fixture is 64-dim, so
@@ -145,53 +145,29 @@ object BinarySig extends IndexRung {
     * ceil(D/64)-word `array<long>` form — same layout discipline on
     * both sides, same atomic commit. */
   def buildBinIndexFrom(s: SparkSession, corpus: DataFrame, path: String,
-      dim: Int): Unit = {
-    recover(s, path)
-    val v = corpus.select(col("vec_id"), col("embedding"),
-      l2normNative(col("embedding")).as("nrm"))
-    stageSides(path, v, dim)
-    IndexSwap.commit(s, path, sides)
-  }
+      dim: Int): Unit =
+    stage(s, path, encode(s, corpus, (dim != 64, dim)))
 
   /** The stored corpus dimensionality, from one cold-side row (the
-    * rebalance and append paths re-encode against it; one point read
-    * against the 1 MB-row-group layout). */
+    * multi-word form's rebalance and append re-encode against it; one
+    * point read against the 1 MB-row-group layout). */
   private def storedDim(s: SparkSession, root: String): Int =
     s.read.parquet(IndexSwap.sideAt(root, "vectors"))
       .select(size(col("embedding"))).head().getInt(0)
 
   /** Sign NEW vectors and append to both tiers: O(new) work, encoding
     * bit-identical to the build (parameter-free — nothing to freeze,
-    * nothing to saturate). COLD side first (the [[PQ.appendToPqIndex]]
-    * crash-window polarity: an orphaned cold row is dead bytes no rank
-    * scan ever surfaces; an orphaned CODE row would be shortlisted and
-    * then silently dropped by the refine join). */
+    * nothing to saturate). The measured COMPACTION trigger (round-15
+    * verdict task 5 — the PQ/IVF deferred-marker pattern at this rung):
+    * the signatures never drift, but appends fragment the sorted
+    * point-read layout unboundedly — every append adds files, and the
+    * shortlist's vec_id pushdown degrades toward a whole-side
+    * listing+open per probe. The metric is the CODES side's data-file
+    * count ([[auditFileCount]]). */
   def appendToBinIndex(s: SparkSession, newVecs: DataFrame, path: String,
-      autoCompact: Option[Int] = None): Unit = {
-    recover(s, path)
-    // ONE version resolution for both side writes (round-15 ADVICE): a
-    // rebalance committing between them would otherwise split the
-    // append across versions — cold rows into the retiring version
-    // (lost at retention), code rows referencing no cold row.
-    val root = IndexSwap.liveRoot(s, path)
-    val (_, dim) = load(s, root)
-    val v = newVecs.select(col("vec_id"), col("embedding"),
-      l2normNative(col("embedding")).as("nrm"))
-    v.repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
-      .write.mode("append").option("parquet.block.size", 1L << 20)
-      .parquet(IndexSwap.sideAt(root, "vectors"))
-    v.select(col("vec_id"), sigForDim(col("embedding"), dim).as("sig"))
-      .repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
-      .write.mode("append").parquet(IndexSwap.sideAt(root, "codes"))
-    // The measured COMPACTION trigger (round-15 verdict task 5 — the
-    // PQ/IVF deferred-marker pattern at this rung): the signatures
-    // never drift (parameter-free encoder), but appends fragment the
-    // sorted point-read layout unboundedly — every append adds files,
-    // and the shortlist's vec_id pushdown degrades toward a
-    // whole-side listing+open per probe. The metric is the CODES
-    // side's data-file count ([[auditFileCount]]).
-    autoCompact.foreach(auditFileCount(s, path, root, "codes", _))
-  }
+      autoCompact: Option[Int] = None): Unit =
+    append(s, newVecs, path)((root, _) =>
+      autoCompact.foreach(auditFileCount(s, path, root, "codes", _)))
 
   /** Re-sign and re-sort both tiers from the grown cold lake — the
     * COMPACTION answer (appends fragment the sorted point-read layout;
@@ -199,16 +175,8 @@ object BinarySig extends IndexRung {
     * parameter-free, so this is a deterministic fixpoint). Crash-safe
     * under the [[IndexSwap]] two-phase swap. */
   def rebalance(s: SparkSession, path: String): Unit = {
-    recover(s, path)
     val root = IndexSwap.liveRoot(s, path)
-    val dim = storedDim(s, root)
-    // Tombstones reclaim physically here (the fresh version dir
-    // carries no deletes side).
-    val v = IndexSwap.exceptTombstones(s, root,
-      s.read.parquet(IndexSwap.sideAt(root, "vectors"))
-        .select(col("vec_id"), col("embedding"), col("nrm")))
-    stageSides(path, v, dim)
-    IndexSwap.commit(s, path, sides)
+    stage(s, path, encode(s, IndexSwap.liveVectors(s, root), load(s, root)))
   }
 
   /** [[delete]] under the name existing callers use. */

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Concurrently
 import graft.functions.TextFns.{cosine, e6}
 import graft.functions.VectorExprs.{dotNative, l2normNative}
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -11,12 +12,14 @@ import org.apache.spark.sql.functions._
   * rebuild protocol shared by every persisted index rung: IVF
   * ([[Similarity]]), [[SQ8]], [[IvfSq8]], [[PQ]], [[BinarySig]],
   * [[Matryoshka]] and [[TextIndex]]. Each rung is an [[IndexRung]]:
-  * it declares its sides, its rebalance, its live row count and the
-  * small serving state it loads from a pinned version, and the trait
-  * owns the lifecycle verbs (recover, describe, delete, maintain) and
-  * the serve handle ([[IndexRung.open]] → `IndexRung#Handle`: one
-  * version pin plus that state, the path every probe goes through),
-  * written once against this protocol.
+  * it declares its sides and each side's [[Layout]], its encoder, its
+  * rebalance, its live row count and the small serving state it loads
+  * from a pinned version, and the trait owns the writers
+  * ([[IndexRung]]'s `stage` for every build and rebalance, `append`
+  * for every append), the lifecycle verbs (recover, describe, delete,
+  * maintain) and the serve handle ([[IndexRung.open]] →
+  * `IndexRung#Handle`: one version pin plus that state, the path every
+  * probe goes through), written once against this protocol.
   *
   * Round-14 verdict: the previous marker+rename protocol was crash-safe
   * but had a CONCURRENT-READER window — between `rename(live, old)` and
@@ -128,6 +131,65 @@ private[graft] object IndexSwap {
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     tombstonesAt(s, root).foldLeft(df)((d, del) =>
       d.join(del, Seq("vec_id"), "left_anti"))
+
+  /** How one side lands on disk — its partitioning, sort order and
+    * row-group size. Each rung declares one per side
+    * ([[IndexRung.layouts]]) and both writers go through it, so a
+    * staged rebuild and an append write the same layout and appended
+    * files prune the way built files do. */
+  final case class Layout(arrange: DataFrame => DataFrame, blockSize: Option[Long] = None,
+      partitionBy: Option[String] = None) {
+    def write(df: DataFrame, mode: String, dir: String): Unit = {
+      val w = arrange(df).write.mode(mode)
+      blockSize.foreach(b => w.option("parquet.block.size", b))
+      partitionBy.foreach(c => w.partitionBy(c))
+      w.parquet(dir)
+    }
+  }
+
+  object Layout {
+    /** One file: the manifest-class sides (centroids, stats,
+      * codebooks, meta, rotation). */
+    val single: Layout = Layout(_.coalesce(1))
+
+    /** Range-partitioned and sorted by `key`: a `key IN (...)`
+      * pushdown prunes to the matching row groups. */
+    def sorted(key: String, blockSize: Option[Long] = None): Layout =
+      Layout(_.repartitionByRange(col(key)).sortWithinPartitions(key), blockSize)
+
+    /** One `cent_id=` directory per cell, rows as `arrange` leaves them. */
+    def cells(arrange: DataFrame => DataFrame = identity,
+        blockSize: Option[Long] = None): Layout =
+      Layout(arrange, blockSize, Some("cent_id"))
+
+    /** [[cells]] with one file per touched cell and rows sorted by
+      * vec_id, so the refine's vec_id pushdown skips row groups.
+      * cent_id must LEAD the sort: when the incoming ordering does not
+      * already satisfy partitionBy, the file writer injects its own
+      * NON-STABLE sort on cent_id alone and silently destroys the
+      * vec_id order (caught by PQSpec's appended-file sortedness
+      * assert). */
+    def cellsSorted(blockSize: Option[Long] = None): Layout =
+      cells(_.repartition(col("cent_id"))
+        .sortWithinPartitions(col("cent_id"), col("vec_id")), blockSize)
+  }
+
+  /** The cold (full-precision) side's row-group size: 1 MB groups, so
+    * a shortlist's vec_id pushdown point-reads its refine rows instead
+    * of a whole file. */
+  val coldBlock: Option[Long] = Some(1L << 20)
+
+  /** (vec_id, embedding) rows plus their L2 norm — the row shape every
+    * vector rung encodes and stores on its cold side. */
+  def normed(rows: DataFrame): DataFrame =
+    rows.select(col("vec_id"), col("embedding"), l2normNative(col("embedding")).as("nrm"))
+
+  /** The pinned root's cold side minus its tombstones: the input every
+    * vector rung's rebalance rebuilds from (the physical reclaim — the
+    * fresh version dir carries no deletes side). */
+  def liveVectors(s: SparkSession, root: String): DataFrame =
+    exceptTombstones(s, root, s.read.parquet(sideAt(root, "vectors"))
+      .select(col("vec_id"), col("embedding"), col("nrm")))
 
   /** The staging sibling a rebuild writes `side` into before commit. */
   def tmp(path: String, side: String): Path =
@@ -326,12 +388,18 @@ private[graft] object IndexSwap {
 }
 
 /** One persisted index rung's lifecycle, written once. A rung supplies
-  * its committed [[sides]], its [[rebalance]] (rebuild every side from
-  * the live version's own cold lake minus tombstones, staged and
-  * committed through [[IndexSwap.commit]]), its [[liveRows]] footer
-  * count and its [[load]] (the small sides a probe or an append
-  * encodes against); the trait owns the verbs every rung shares:
+  * its committed [[sides]] and each side's [[layouts]] entry, its
+  * [[encode]] (new rows plus the stored [[State]] to its data sides),
+  * its [[rebalance]] (rebuild every side from the live version's own
+  * cold lake minus tombstones), its [[liveRows]] footer count and its
+  * [[load]] (the small sides a probe or an append encodes against);
+  * the trait owns the writers and the verbs every rung shares:
   *
+  *  - [[stage]] writes a build's or a rebalance's sides into `.stage`
+  *    concurrently and commits them ([[IndexSwap.commit]]);
+  *  - [[append]] pins the live version once, encodes the new rows
+  *    against its state, appends each data side in order (cold side
+  *    first) and runs the rung's audit on the pinned root;
   *  - [[open]] pins the live version and loads the rung's [[State]]
   *    once into a [[Handle]], the one serve path: a rung's per-call
   *    probe is its handle probe on a fresh `open`, and a serve session
@@ -360,6 +428,50 @@ trait IndexRung {
     * immutable, so it stays valid for that version's lifetime; the
     * growing `deletes` side is never part of it). */
   protected def load(s: SparkSession, root: String): State
+
+  /** Each side's on-disk layout, the one place it is declared: [[stage]]
+    * and [[append]] both write through it. */
+  protected def layouts: Map[String, IndexSwap.Layout]
+
+  /** New rows plus the stored [[State]] to the rung's DATA sides, in
+    * append order with the cold side first: an orphaned cold row left
+    * by a crash between two appends is dead bytes no rank scan ever
+    * surfaces, where an orphaned code row would be shortlisted and then
+    * silently dropped by the refine join. `st` is by-name, so a rung
+    * whose encoder needs no stored state never loads it. */
+  protected def encode(s: SparkSession, rows: DataFrame, st: => State): Seq[(String, DataFrame)]
+
+  /** Write a build's or a rebalance's sides — the encoded data sides
+    * plus the state sides — into the stage dir, overlapped (independent
+    * jobs into disjoint dirs), then ONE atomic commit. Any stale stage
+    * is dropped first, so an interrupted rebuild's leftovers never ride
+    * into this version. */
+  protected def stage(s: SparkSession, path: String, staged: Seq[(String, DataFrame)]): Unit = {
+    recover(s, path)
+    Concurrently.run(staged.map { case (side, df) =>
+      () => layouts(side).write(df, "overwrite", IndexSwap.tmp(path, side).toString)
+    })
+    IndexSwap.commit(s, path, sides)
+  }
+
+  /** Append new rows: O(new) work against the frozen stored state. ONE
+    * version resolution for the state read, every side write and the
+    * audit (a rebalance committing mid-append would otherwise split it
+    * across versions); the data sides append in [[encode]]'s order,
+    * then `audit` runs on the pinned root and state — the rung's
+    * drift or fragmentation trigger, calling [[onRebalanceDue]] when
+    * it fires. The state is [[load]]ed at most once, and only if the
+    * encoder or the audit reads it. */
+  protected def append(s: SparkSession, rows: DataFrame, path: String)(
+      audit: (String, () => State) => Unit): Unit = {
+    recover(s, path)
+    val root = IndexSwap.liveRoot(s, path)
+    lazy val st = load(s, root)
+    encode(s, rows, st).foreach { case (side, df) =>
+      layouts(side).write(df, "append", IndexSwap.sideAt(root, side))
+    }
+    audit(root, () => st)
+  }
 
   /** A serve handle: a pinned version root plus its loaded [[State]].
     * Probes through a handle re-check [[IndexSwap.liveVersion]] (one

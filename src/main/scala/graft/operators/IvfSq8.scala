@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.{Concurrently, Tables}
-import graft.functions.VectorExprs.{intSqDistNative, l2normNative}
+import graft.Tables
+import graft.functions.VectorExprs.intSqDistNative
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -54,6 +54,33 @@ object IvfSq8 extends IndexRung {
     * (the qn38 contract carried over). */
   private val shortlistWidth = 16
 
+  /** Both tiers cell-partitioned, one vec_id-sorted file per touched
+    * cell (the cold side in 1 MB row groups, so the refine composes
+    * cell scope + id pushdown); centroids and the envelope one file
+    * each. */
+  protected val layouts: Map[String, IndexSwap.Layout] = Map(
+    "vectors" -> IndexSwap.Layout.cellsSorted(IndexSwap.coldBlock),
+    "codes" -> IndexSwap.Layout.cellsSorted(),
+    "centroids" -> IndexSwap.Layout.single,
+    "stats" -> IndexSwap.Layout.single)
+
+  /** The two data sides of an ASSIGNED frame (vec_id, embedding, nrm,
+    * cent_id): the cold rows and their byte codes, same cells. */
+  private def cellSides(asg: DataFrame, mna: Array[Long],
+      spa: Array[Long]): Seq[(String, DataFrame)] =
+    Seq("vectors" -> asg,
+      "codes" -> SQ8.ve6Of(asg).select(col("vec_id"), SQ8.q8Col(mna, spa).as("q8"))
+        .join(asg.select(col("vec_id"), col("cent_id")), Seq("vec_id")))
+
+  /** Assign (vec_id, embedding) rows against the stored centroids and
+    * encode them against the stored envelope. */
+  protected def encode(s: SparkSession, rows: DataFrame,
+      st: => State): Seq[(String, DataFrame)] = {
+    val (cents, mna, spa) = st
+    cellSides(Similarity.assign(IndexSwap.normed(rows), cents)
+      .localCheckpoint(true), mna, spa) // feeds both sides — one assignment pass
+  }
+
   /** Build from the corpus at `dir`: stride centroids, blocked-native
     * exact assignment, one global envelope, cell-partitioned byte
     * codes + cold floats — staged, then ONE atomic commit. */
@@ -66,95 +93,37 @@ object IvfSq8 extends IndexRung {
     * dim-parameterized discipline — nothing here is 64-pinned). */
   def buildIvfSq8IndexFrom(s: SparkSession, corpus: DataFrame, nCentroids: Int,
       path: String): Unit = {
-    recover(s, path)
-    val v = corpus.select(col("vec_id"), col("embedding"),
-      l2normNative(col("embedding")).as("nrm"))
-    val cents = Similarity.ivfCents(v, nCentroids)
-    val localCents = s.createDataFrame(
-      java.util.Arrays.asList(cents.collect(): _*), cents.schema)
-    stageAndCommit(s, path, v, localCents, nCentroids.toLong)
+    val v = IndexSwap.normed(corpus)
+    rebuild(s, path, v, Similarity.centsOf(s, Similarity.ivfCents(v, nCentroids)))
   }
 
-  /** Stage all four sides from a (vec_id, embedding, nrm) corpus frame
-    * and a LOCAL centroid frame, then ONE atomic commit — shared by
-    * the build and the drift rebalance. */
-  private def stageAndCommit(s: SparkSession, path: String, v: DataFrame,
-      localCents: DataFrame, nCells: Long): Unit = {
-    val asg = Similarity.ivfAssignedDispatch(v, localCents, nCells)
+  /** Assign `v` to `cents`, freeze the envelope over it and stage all
+    * four sides — shared by the build and the drift rebalance. */
+  private def rebuild(s: SparkSession, path: String, v: DataFrame,
+      cents: Similarity.Cents): Unit = {
+    val asg = Similarity.assign(v, cents)
       .localCheckpoint(true) // assignment feeds BOTH sides — one pass
     // Envelope from the CHECKPOINTED assignment, not the raw corpus
     // frame (round-16 ADVICE: asg was checkpointed precisely so the
     // build pays one corpus pass; statsOf over `v` re-scanned it).
     val (mna, spa) = SQ8.collectStats(SQ8.statsOf(SQ8.ve6Of(asg)))
-    // All four sides derive from the checkpointed assignment / local
-    // arrays and land in disjoint staging dirs — overlapped
-    // (Concurrently.run, round 18 guide §2.6); the atomic
-    // commit below still waits for every side.
-    Concurrently.run(Seq(
-      // Cold side: the IVF vectors layout (cell dirs, vec_id-sorted 1 MB
-      // row groups — the probe refine composes cell scope + id pushdown).
-      () => asg.repartition(col("cent_id"))
-        .sortWithinPartitions(col("cent_id"), col("vec_id"))
-        .write.mode("overwrite").option("parquet.block.size", 1L << 20)
-        .partitionBy("cent_id").parquet(IndexSwap.tmp(path, "vectors").toString),
-      // Hot side: byte codes, same cell layout.
-      () => SQ8.ve6Of(asg).select(col("vec_id"), SQ8.q8Col(mna, spa, clamp = false).as("q8"))
-        .join(asg.select(col("vec_id"), col("cent_id")), Seq("vec_id"))
-        .repartition(col("cent_id"))
-        .sortWithinPartitions(col("cent_id"), col("vec_id"))
-        .write.mode("overwrite")
-        .partitionBy("cent_id").parquet(IndexSwap.tmp(path, "codes").toString),
-      () => localCents.coalesce(1).write.mode("overwrite")
-        .parquet(IndexSwap.tmp(path, "centroids").toString),
-      () => {
-        val statRows: java.util.List[org.apache.spark.sql.Row] =
-          java.util.Arrays.asList(mna.indices.map(i =>
-            org.apache.spark.sql.Row(i, mna(i), spa(i))): _*)
-        val statSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("pos", org.apache.spark.sql.types.IntegerType, false),
-          org.apache.spark.sql.types.StructField("mn", org.apache.spark.sql.types.LongType, false),
-          org.apache.spark.sql.types.StructField("sp", org.apache.spark.sql.types.LongType, false)))
-        s.createDataFrame(statRows, statSchema).coalesce(1).write.mode("overwrite")
-          .parquet(IndexSwap.tmp(path, "stats").toString)
-      }))
-    IndexSwap.commit(s, path, sides)
+    stage(s, path, cellSides(asg, mna, spa) ++ Seq(
+      "centroids" -> cents.local, "stats" -> SQ8.statsFrame(s, mna, spa)))
   }
 
   /** Assign NEW vectors against the STORED centroids, encode against
     * the STORED envelope (clamped — the SQ8 append saturation rule),
     * and append to both cell-partitioned tiers: O(new) work, no
-    * rebuild, only the touched cells gain files. COLD side first (the
-    * one documented crash window's safe polarity: an orphaned cold row
-    * is dead bytes no rank scan surfaces; an orphaned CODE row would
-    * be shortlisted and silently dropped by the refine join). ONE
-    * version resolution for every side read and write (round-15
-    * ADVICE).
+    * rebuild, only the touched cells gain files.
     *
     * `autoRebalance = Some(k)` makes the drift cadence MEASURED
     * ([[auditCellSkew]]): past it the `_rebalance_due` marker drops —
     * the append itself stays O(new), and [[maintain]] runs the rebuild
     * on the maintenance cadence. */
   def appendToIvfSq8Index(s: SparkSession, newVecs: DataFrame, path: String,
-      autoRebalance: Option[Int] = None): Unit = {
-    recover(s, path)
-    val root = IndexSwap.liveRoot(s, path)
-    val (ca, mna, spa) = load(s, root)
-    val v = newVecs.select(col("vec_id"), col("embedding"),
-      l2normNative(col("embedding")).as("nrm"))
-    val asg = Similarity.ivfAssignedAt(s, v, ca, root)
-      .localCheckpoint(true) // feeds both sides — one assignment pass
-    asg.repartition(col("cent_id"))
-      .sortWithinPartitions(col("cent_id"), col("vec_id"))
-      .write.mode("append").option("parquet.block.size", 1L << 20)
-      .partitionBy("cent_id").parquet(IndexSwap.sideAt(root, "vectors"))
-    SQ8.ve6Of(asg).select(col("vec_id"), SQ8.q8Col(mna, spa, clamp = true).as("q8"))
-      .join(asg.select(col("vec_id"), col("cent_id")), Seq("vec_id"))
-      .repartition(col("cent_id"))
-      .sortWithinPartitions(col("cent_id"), col("vec_id"))
-      .write.mode("append")
-      .partitionBy("cent_id").parquet(IndexSwap.sideAt(root, "codes"))
-    autoRebalance.foreach(auditCellSkew(s, path, root, ca.cids.length, _))
-  }
+      autoRebalance: Option[Int] = None): Unit =
+    append(s, newVecs, path)((root, st) =>
+      autoRebalance.foreach(auditCellSkew(s, path, root, st()._1.arrays.cids.length, _)))
 
   /** [[delete]] under the name existing callers use. */
   def deleteFromIvfSq8Index(s: SparkSession, ids: DataFrame, path: String,
@@ -162,37 +131,18 @@ object IvfSq8 extends IndexRung {
     delete(s, ids, path, autoRebalance)
 
   /** Re-derive ALL FOUR sides from the grown cold lake — the drift
-    * answer. Centroids re-seed from the √(grown N) vectors with the
-    * lowest `xxhash64(vec_id)` (the [[Similarity.rebalance]]
-    * rule: deterministic, distribution-free over an appended lake's
-    * arbitrary id space, and the cell count ADAPTS to the grown corpus
-    * instead of freezing the build-time k); the envelope re-freezes
-    * over the grown corpus, so post-rebalance codes are unclamped
-    * exact again (appends between rebuilds saturate against the prior
-    * envelope — the declared SQ8 append semantics). Deterministic
-    * fixpoint; crash-safe under the versioned [[IndexSwap]] commit. */
+    * answer. Centroids re-seed from the √(grown N) surviving vectors
+    * ([[Similarity.reseed]]: deterministic, distribution-free over an
+    * appended lake's arbitrary id space, and the cell count ADAPTS to
+    * the grown corpus instead of freezing the build-time k); the
+    * envelope re-freezes over the grown corpus, so post-rebalance codes
+    * are unclamped exact again (appends between rebuilds saturate
+    * against the prior envelope — the declared SQ8 append semantics).
+    * Deterministic fixpoint; crash-safe under the versioned
+    * [[IndexSwap]] commit. */
   def rebalance(s: SparkSession, path: String): Unit = {
-    recover(s, path)
-    val root = IndexSwap.liveRoot(s, path)
-    // Tombstones reclaim PHYSICALLY here: the rebuild reads the cold
-    // lake minus the deleted ids, and the fresh version dir carries no
-    // deletes side at all.
-    val del = IndexSwap.tombstonesAt(s, root)
-    val v = del.foldLeft(
-      s.read.parquet(IndexSwap.sideAt(root, "vectors"))
-        .select(col("vec_id"), col("embedding"), col("nrm"))
-    ) { (c, d) => c.join(d, Seq("vec_id"), "left_anti") }
-    // √N sizing over the SURVIVING rows (footer stats minus tombstones
-    // — a no-op tombstone undercounts by one, which the ceil absorbs).
-    val total = math.max(1L, Similarity.ivfCellStatsAt(s, root).values.sum -
-      del.map(_.count()).getOrElse(0L))
-    val k = math.max(16L, math.ceil(math.sqrt(total.toDouble)).toLong)
-    val seeds = v.orderBy(xxhash64(col("vec_id"), lit(1002)).asc, col("vec_id").asc)
-      .limit(k.toInt)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("ce"), col("nrm").as("cn"))
-    val localCents = s.createDataFrame(
-      java.util.Arrays.asList(seeds.collect(): _*), seeds.schema)
-    stageAndCommit(s, path, v, localCents, k)
+    val (v, cents) = Similarity.reseed(s, IndexSwap.liveRoot(s, path))
+    rebuild(s, path, v, cents)
   }
 
   /** Probe with the declared fixture probe set (vec_id < 10) — the
@@ -226,13 +176,13 @@ object IvfSq8 extends IndexRung {
   private def probe(s: SparkSession, h: Handle, probes: DataFrame,
       nProbe: Int, k: Int, allowed: Option[DataFrame]): DataFrame = {
     val root = h.root
-    val (ca, mna, spa) = h.state
+    val (cents, mna, spa) = h.state
     val (probeRows, probesV) = IndexSwap.localProbes(s, probes, "probeIvfSq8IndexWith")
-    val (localPc, cells) = Similarity.driverRouteFrame(s, probeRows, ca, nProbe, "qid")
+    val (localPc, cells) = Similarity.driverRouteFrame(s, probeRows, cents.arrays, nProbe, "qid")
     // Probe bytes: quantize against the stored envelope, clamped
     // (identity for in-corpus probes — the qn45 oracle parity).
     val pq8 = SQ8.ve6Of(probesV)
-      .select(col("vec_id").as("qid"), SQ8.q8Col(mna, spa, clamp = true).as("pq8"))
+      .select(col("vec_id").as("qid"), SQ8.q8Col(mna, spa).as("pq8"))
     // Rank WITHIN the probed cells: the cell-scoped listing bounds the
     // files opened at O(probed cells); the native int loop bounds the
     // per-row cost. Tombstoned rows are anti-joined out HERE — before
@@ -271,12 +221,12 @@ object IvfSq8 extends IndexRung {
     }
   }
 
-  /** The centroid table as flat arrays and the frozen envelope. */
-  type State = (Similarity.CentArrays, Array[Long], Array[Long])
+  /** The centroid table and the frozen envelope. */
+  type State = (Similarity.Cents, Array[Long], Array[Long])
 
   /** The √N-row centroid side and the D-row stats side, collected. */
   protected def load(s: SparkSession, root: String): State = {
     val (mna, spa) = SQ8.collectStats(s.read.parquet(IndexSwap.sideAt(root, "stats")))
-    (Similarity.collectCents(s.read.parquet(IndexSwap.sideAt(root, "centroids"))), mna, spa)
+    (Similarity.centsOf(s, s.read.parquet(IndexSwap.sideAt(root, "centroids"))), mna, spa)
   }
 }

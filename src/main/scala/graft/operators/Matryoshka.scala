@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Concurrently, Tables}
+import graft.Tables
 import graft.functions.TextFns._
 import graft.functions.VectorExprs.{dotNative, l2normNative}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -67,20 +67,20 @@ object Matryoshka extends IndexRung {
         lit(s" != stored dim $fullDim, or NULL element — clean/resize the" +
           " corpus before slicing"))).cast("array<float>"))
 
-  /** Stage both sides into the [[IndexSwap]] tmp siblings (shared by
-    * build and rebalance — one definition of the layout). */
-  private def stageSides(path: String, v: DataFrame, fullDim: Int,
-      prefix: Int): Unit = {
+  /** Both sides sorted by vec_id; the cold side in 1 MB row groups. */
+  protected val layouts: Map[String, IndexSwap.Layout] = Map(
+    "prefix" -> IndexSwap.Layout.sorted("vec_id"),
+    "vectors" -> IndexSwap.Layout.sorted("vec_id", IndexSwap.coldBlock))
+
+  /** Slice (vec_id, embedding) rows at the stored widths: the cold rows
+    * and their prefixes with the prefix norms. */
+  protected def encode(s: SparkSession, rows: DataFrame,
+      st: => State): Seq[(String, DataFrame)] = {
+    val (fullDim, prefix) = st
+    val v = IndexSwap.normed(rows)
     val pre = preGuarded(col("embedding"), fullDim, prefix)
-    // Independent staging writes overlapped (round 18, guide §2.6).
-    Concurrently.run(Seq(
-      () => v.select(col("vec_id"), pre.as("pre"), l2normNative(pre).as("pnrm"))
-        .repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
-        .write.mode("overwrite").parquet(IndexSwap.tmp(path, "prefix").toString),
-      () => v.select(col("vec_id"), col("embedding"), col("nrm"))
-        .repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
-        .write.mode("overwrite").option("parquet.block.size", 1L << 20)
-        .parquet(IndexSwap.tmp(path, "vectors").toString)))
+    Seq("vectors" -> v,
+      "prefix" -> v.select(col("vec_id"), pre.as("pre"), l2normNative(pre).as("pnrm")))
   }
 
   /** Build from the corpus at `dir` with the qn35 fixture prefix. */
@@ -94,15 +94,11 @@ object Matryoshka extends IndexRung {
     * corpus row; `prefix` must be a strict, positive sub-width. */
   def buildMatryoshkaIndexFrom(s: SparkSession, corpus: DataFrame, prefix: Int,
       path: String): Unit = {
-    recover(s, path)
     val fullDim = corpus.select(size(col("embedding"))).head().getInt(0)
     require(prefix >= 1 && prefix < fullDim,
       s"Matryoshka: prefix $prefix must be in [1, $fullDim) — a prefix at the" +
         " full width is the exact scan, not an index")
-    val v = corpus.select(col("vec_id"), col("embedding"),
-      l2normNative(col("embedding")).as("nrm"))
-    stageSides(path, v, fullDim, prefix)
-    IndexSwap.commit(s, path, sides)
+    stage(s, path, encode(s, corpus, (fullDim, prefix)))
   }
 
   /** The stored full dimensionality, from one cold-side row. */
@@ -117,47 +113,23 @@ object Matryoshka extends IndexRung {
       .select(size(col("pre"))).head().getInt(0)
 
   /** Slice NEW vectors at the STORED prefix and append to both tiers:
-    * O(new) work, encoding bit-identical to the build. COLD side first
-    * (the crash-window polarity the sibling rungs share: an orphaned
-    * cold row is dead bytes no rank scan surfaces; an orphaned PREFIX
-    * row would be shortlisted and silently dropped by the refine
-    * join). ONE version resolution for both writes and the trigger
-    * audit. `autoCompact = Some(maxFiles)` is the measured
-    * fragmentation trigger ([[BinarySig.appendToBinIndex]]'s): past it
-    * the `_rebalance_due` marker drops and the append returns at
-    * append cost. */
+    * O(new) work, encoding bit-identical to the build.
+    * `autoCompact = Some(maxFiles)` is the measured fragmentation
+    * trigger ([[BinarySig.appendToBinIndex]]'s): past it the
+    * `_rebalance_due` marker drops and the append returns at append
+    * cost. */
   def appendToMatryoshkaIndex(s: SparkSession, newVecs: DataFrame, path: String,
-      autoCompact: Option[Int] = None): Unit = {
-    recover(s, path)
-    val root = IndexSwap.liveRoot(s, path)
-    val (fullDim, prefix) = load(s, root)
-    val v = newVecs.select(col("vec_id"), col("embedding"),
-      l2normNative(col("embedding")).as("nrm"))
-    v.repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
-      .write.mode("append").option("parquet.block.size", 1L << 20)
-      .parquet(IndexSwap.sideAt(root, "vectors"))
-    val pre = preGuarded(col("embedding"), fullDim, prefix)
-    v.select(col("vec_id"), pre.as("pre"), l2normNative(pre).as("pnrm"))
-      .repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
-      .write.mode("append").parquet(IndexSwap.sideAt(root, "prefix"))
-    autoCompact.foreach(auditFileCount(s, path, root, "prefix", _))
-  }
+      autoCompact: Option[Int] = None): Unit =
+    append(s, newVecs, path)((root, _) =>
+      autoCompact.foreach(auditFileCount(s, path, root, "prefix", _)))
 
   /** Re-slice and re-sort both tiers from the grown cold lake at the
     * STORED prefix — the COMPACTION answer (a deterministic fixpoint:
     * the encoder is a parameter-free slice). Crash-safe under the
     * [[IndexSwap]] two-phase swap. */
   def rebalance(s: SparkSession, path: String): Unit = {
-    recover(s, path)
     val root = IndexSwap.liveRoot(s, path)
-    val (fullDim, prefix) = load(s, root)
-    // Tombstones reclaim physically here (the fresh version dir
-    // carries no deletes side).
-    val v = IndexSwap.exceptTombstones(s, root,
-      s.read.parquet(IndexSwap.sideAt(root, "vectors"))
-        .select(col("vec_id"), col("embedding"), col("nrm")))
-    stageSides(path, v, fullDim, prefix)
-    IndexSwap.commit(s, path, sides)
+    stage(s, path, encode(s, IndexSwap.liveVectors(s, root), load(s, root)))
   }
 
   /** [[delete]] under the name existing callers use. */

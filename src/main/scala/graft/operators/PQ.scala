@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Concurrently, Q, Tables}
+import graft.{Q, Tables}
 import graft.functions.TextFns._
 import graft.functions.VectorExprs.{dotNative, l2normNative}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -237,7 +237,7 @@ object PQ extends IndexRung {
   }
 
   /** Codebook seeds for an ARBITRARY id space: the K vectors with the
-    * lowest `xxhash64(vec_id)` (the [[Similarity.rebalance]]
+    * lowest `xxhash64(vec_id)` (the [[Similarity.reseed]]
     * seed rule applied to the codebook) — deterministic,
     * distribution-free over the ids. TakeOrderedAndProject: no sort
     * materialization; K rows collect. Sorted by cid so the code ranks
@@ -411,20 +411,15 @@ object PQ extends IndexRung {
     * Reading it is one tiny parquet read per [[open]] — replacing
     * BOTH the old `_residual` fs-exists check and the per-call
     * codebook aggregate job. */
-  private def writeMeta(s: SparkSession, path: String, residual: Boolean,
-      p: PqParams): Unit = {
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(org.apache.spark.sql.Row(residual, p.m, p.subDim, p.k))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("residual", org.apache.spark.sql.types.BooleanType, false),
-      org.apache.spark.sql.types.StructField("m", org.apache.spark.sql.types.IntegerType, false),
-      org.apache.spark.sql.types.StructField("sub_dim", org.apache.spark.sql.types.IntegerType, false),
-      org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.IntegerType, false)))
-    s.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite")
-      .parquet(IndexSwap.tmp(path, "meta").toString)
+  private def metaFrame(s: SparkSession, residual: Boolean, p: PqParams): DataFrame = {
+    import org.apache.spark.sql.types._
+    s.createDataFrame(java.util.Arrays.asList(org.apache.spark.sql.Row(residual, p.m, p.subDim, p.k)),
+      StructType(Seq(StructField("residual", BooleanType, false),
+        StructField("m", IntegerType, false), StructField("sub_dim", IntegerType, false),
+        StructField("k", IntegerType, false))))
   }
 
-  /** The stored encoding flag + realized sizing (see [[writeMeta]]).
+  /** The stored encoding flag + realized sizing (see [[metaFrame]]).
     * NOT cached across calls: a same-session rebuild of the path may
     * change the encoding (PQSpec pins exactly that), and the read is
     * manifest-class. A missing meta side fails LOUDLY as a format
@@ -813,23 +808,18 @@ object PQ extends IndexRung {
       transform(graft.functions.VectorExprs.matVecNative(col("embedding"), r, dim),
         x => floor(x * 1000000).cast("long")).as("emb6"))
 
-  /** Stage the OPTIONAL learned-rotation side (round-16 verdict task
-    * 7): one row — dim + the row-major D x D matrix. It rides the same
-    * atomic [[IndexSwap]] commit as the five declared sides, so codes
-    * encoded in the rotated space and the rotation that defines it are
-    * never separable; absence is the legitimate unrotated state (the
+  /** The OPTIONAL learned-rotation side (round-16 verdict task 7): one
+    * row — dim + the row-major D x D matrix. It rides the same atomic
+    * [[IndexSwap]] commit as the five declared sides, so codes encoded
+    * in the rotated space and the rotation that defines it are never
+    * separable; absence is the legitimate unrotated state (the
     * [[rotationAt]] read dispatches on existence at the PINNED root,
     * which is consistent because version dirs are immutable). */
-  private def stageRotation(s: SparkSession, path: String, r: Array[Double],
-      dim: Int): Unit = {
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(org.apache.spark.sql.Row(dim, r.toSeq))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("dim", org.apache.spark.sql.types.IntegerType, false),
-      org.apache.spark.sql.types.StructField("mat",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType, false), false)))
-    s.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite")
-      .parquet(IndexSwap.tmp(path, "rotation").toString)
+  private def rotationFrame(s: SparkSession, r: Array[Double], dim: Int): DataFrame = {
+    import org.apache.spark.sql.types._
+    s.createDataFrame(java.util.Arrays.asList(org.apache.spark.sql.Row(dim, r.toSeq)),
+      StructType(Seq(StructField("dim", IntegerType, false),
+        StructField("mat", ArrayType(DoubleType, false), false))))
   }
 
   /** The stored learned rotation at a PINNED version root, if any —
@@ -1276,7 +1266,7 @@ object PQ extends IndexRung {
     * explosion.
     *
     * The assignment defaults to the NATIVE flat argmax (round 14,
-    * [[nativeCoarseAssign]]): exact, zero-shuffle, bit-parity with
+    * [[assignCells]]): exact, zero-shuffle, bit-parity with
     * qn33 up to the measured [[nativeAssignMaxCells]] bound.
     * `fastAssign = Some(true)` pins the two-tier coarse route instead
     * (the beyond-the-bound default branch;
@@ -1295,12 +1285,8 @@ object PQ extends IndexRung {
       "buildPqIndex: learned rotation composes with whole-space codes only — " +
         "residual encoding subtracts RAW-space centroids, which a rotated " +
         "codebook cannot score")
-    recover(s, path) // clear any interrupted prior swap/build staging
-    val v = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"), l2normNative(col("embedding")).as("nrm"))
-    val cents = coarseCents(v, nCells)
-    val localCents = s.createDataFrame(
-      java.util.Arrays.asList(cents.collect(): _*), cents.schema)
+    val v = IndexSwap.normed(Tables.embeddings(s, dir))
+    val cents = Similarity.centsOf(s, coarseCents(v, nCells))
     // Assignment DISPATCH, round-14 form: the default is the NATIVE
     // flat argmax ([[graft.functions.IvfArgmax]] — exact, bit-parity
     // with qn33, zero shuffle; it retired the join+window explosion
@@ -1310,10 +1296,8 @@ object PQ extends IndexRung {
     // ([[nativeAssignMaxBytes]]) — and `fastAssign = Some(true)` pins
     // it for the battery and the coarse-MISS parity specs;
     // `Some(false)` pins the exact branch.
-    val useFast = fastAssign.getOrElse(useTwoTier(nCells, dimOf(localCents)))
-    val asg =
-      if (useFast) fastCoarseAssign(v, localCents)
-      else nativeCoarseAssign(v, localCents)
+    val useFast = fastAssign.getOrElse(useTwoTier(cents))
+    val asg = assignCells(v, cents, useFast)
     // `residual = true` stores the qn36 encoding (codebooks trained on
     // v - coarse_centroid; the `meta` side makes the probe's scoring
     // dispatch self-describing). Memo keys carry nCells: the
@@ -1325,13 +1309,13 @@ object PQ extends IndexRung {
     // cached frame (same reasoning as the nCells key).
     val ptag = (if (params == fixturePq) ""
       else s":${params.m}x${params.subDim}x${params.k}") + itag(iters)
-    val rve = if (residual) residualVe(ve(s, dir), asg, localCents) else null
+    val rve = if (residual) residualVe(ve(s, dir), asg, cents.local) else null
     // Learned-rotation builds train and encode over the ROTATED e6 view
     // (no memo: the rotation is caller-supplied state no tag scheme
     // should try to fingerprint); the rotation itself stages as an
     // optional sixth side below, inside the same atomic commit.
     val lr6 = learnedR.map(r => learnedVe6Of(Tables.embeddings(s, dir), r,
-      dimOf(localCents)).localCheckpoint(true))
+      cents.arrays.dim).localCheckpoint(true))
     val cb =
       if (lr6.isDefined)
         cbPivot(trainCodebookLong(lr6.get, params, iters)).localCheckpoint(true)
@@ -1345,7 +1329,8 @@ object PQ extends IndexRung {
         codesWith(rve, cb).localCheckpoint(true)
       }
       else codesArrP(s, dir, params, iters)
-    stagePqSidesAndCommit(s, path, v, asg, cb, codes, localCents, residual, learnedR)
+    stage(s, path, cellSides(v, asg, codes) ++
+      stateSides(s, cb, cents.local, residual, learnedR.map((_, cents.arrays.dim))))
   }
 
   /** [[buildPqIndex]] over a CALLER-SUPPLIED corpus frame (vec_id,
@@ -1364,72 +1349,74 @@ object PQ extends IndexRung {
     * frame every stage re-reads is localCheckpoint'd instead. */
   private[graft] def buildPqIndexFrom(s: SparkSession, vecs: DataFrame,
       path: String, nCells: Int, params: PqParams, iters: Int = 1): Unit = {
-    recover(s, path)
-    val v = vecs.select(col("vec_id"), col("embedding"),
-      l2normNative(col("embedding")).as("nrm")).localCheckpoint(true)
-    val cents = coarseCents(v, nCells)
-    val localCents = s.createDataFrame(
-      java.util.Arrays.asList(cents.collect(): _*), cents.schema)
-    val asg =
-      if (useTwoTier(nCells, dimOf(localCents))) fastCoarseAssign(v, localCents)
-      else nativeCoarseAssign(v, localCents)
-    val ve6 = v.select(col("vec_id"), transform(col("embedding"),
-      x => floor(x.cast("double") * 1000000).cast("long")).as("emb6"))
+    val v = IndexSwap.normed(vecs).localCheckpoint(true)
+    val cents = Similarity.centsOf(s, coarseCents(v, nCells))
+    val asg = assignCells(v, cents, useTwoTier(cents))
+    val ve6 = SQ8.ve6Of(v)
     val cb = cbPivot(trainCodebookLong(ve6, params, iters)).localCheckpoint(true)
-    stagePqSidesAndCommit(s, path, v, asg, cb, codesWith(ve6, cb), localCents,
-      residual = false, learnedR = None)
+    stage(s, path, cellSides(v, asg, codesWith(ve6, cb)) ++
+      stateSides(s, cb, cents.local, residual = false, rotation = None))
   }
 
-  /** Stage + commit every side of a trained PQ index — the shared tail
-    * of [[buildPqIndex]] and [[buildPqIndexFrom]].
-    *
-    * Every side — both temperature tiers, both metadata tables, and
-    * the meta row carrying the encoding flag — STAGES into the
-    * [[IndexSwap]] stage dir and commits through ONE atomic
-    * version-dir rename: a crash anywhere before it leaves the prior
-    * version (or, on a fresh path, nothing) fully intact and visible.
-    * The round-13 ADVICE window — all data written, the encoding
-    * marker missing, probes silently serving residual codes as plain
-    * — cannot exist: the meta side lands in the same atomic commit as
-    * the codes it describes. */
-  private def stagePqSidesAndCommit(s: SparkSession, path: String, v: DataFrame,
-      asg: DataFrame, cb: DataFrame, codes: DataFrame, localCents: DataFrame,
-      residual: Boolean, learnedR: Option[Array[Double]]): Unit = {
-    // The staged sides are independent jobs over already-materialized
-    // inputs (cb/codes are checkpointed, localCents is driver-local,
-    // asg is a pure map over the scan) writing disjoint staging dirs —
-    // overlapped per Concurrently.run (round 18, guide §2.6); the
-    // atomic version-rename commit below still runs only after every
-    // side has landed, so the crash window is unchanged.
-    Concurrently.run(Seq(
-      () => asg.join(codes, Seq("vec_id"))
-        .select(col("vec_id"), col("codes"), col("cent_id"))
-        .repartition(col("cent_id"))
-        .write.mode("overwrite").partitionBy("cent_id")
-        .parquet(IndexSwap.tmp(path, "codes").toString),
-      // Cold-side layout is POINT-READ shaped: the refine only ever wants
-      // ~topR rows per probe by vec_id, so rows sort by vec_id within
-      // each cell and row groups stay small — the vec_id IN (shortlist)
-      // pushdown then skips every row group whose min/max misses the ids,
-      // instead of paying the whole cell's floats per probe. cent_id must
-      // LEAD the sort: partitionBy requires partition-column ordering,
-      // and when the incoming ordering doesn't already satisfy it the
-      // file writer injects its own NON-STABLE sort on cent_id alone —
-      // silently destroying the vec_id order this layout is for (caught
-      // by PQSpec's appended-file sortedness assert).
-      () => v.join(asg, Seq("vec_id"))
-        .repartition(col("cent_id")).sortWithinPartitions(col("cent_id"), col("vec_id"))
-        .write.mode("overwrite").option("parquet.block.size", 1L << 20)
-        .partitionBy("cent_id").parquet(IndexSwap.tmp(path, "vectors").toString),
-      () => cb.coalesce(1).write.mode("overwrite")
-        .parquet(IndexSwap.tmp(path, "codebooks").toString),
-      () => localCents.coalesce(1).write.mode("overwrite")
-        .parquet(IndexSwap.tmp(path, "centroids").toString),
-      () => {
-        learnedR.foreach(r => stageRotation(s, path, r, dimOf(localCents)))
-        writeMeta(s, path, residual, collectCb(cb)._2)
-      }))
-    IndexSwap.commit(s, path, sides)
+  /** Both temperature tiers one `cent_id=` directory per cell, one file
+    * per touched cell (at √N cells an un-repartitioned write is a
+    * small-file explosion). The cold side is POINT-READ shaped: the
+    * refine only ever wants ~topR rows per probe by vec_id, so rows sort
+    * by vec_id within each cell in small row groups, and the vec_id IN
+    * (shortlist) pushdown skips every row group whose min/max misses
+    * the ids instead of paying the whole cell's floats per probe. The
+    * metadata sides are one file each. */
+  protected val layouts: Map[String, IndexSwap.Layout] = Map(
+    "vectors" -> IndexSwap.Layout.cellsSorted(IndexSwap.coldBlock),
+    "codes" -> IndexSwap.Layout.cells(_.repartition(col("cent_id"))),
+    "codebooks" -> IndexSwap.Layout.single,
+    "centroids" -> IndexSwap.Layout.single,
+    "meta" -> IndexSwap.Layout.single,
+    "rotation" -> IndexSwap.Layout.single)
+
+  /** The two data sides of (vec_id, embedding, nrm) rows, their
+    * assignment (vec_id, cent_id) and their codes (vec_id, codes). */
+  private def cellSides(v: DataFrame, asg: DataFrame,
+      codes: DataFrame): Seq[(String, DataFrame)] =
+    Seq("vectors" -> v.join(asg, Seq("vec_id")),
+      "codes" -> asg.join(codes, Seq("vec_id"))
+        .select(col("vec_id"), col("codes"), col("cent_id")))
+
+  /** The state sides a build or rebalance stages next to the data: the
+    * codebook, the centroid table, the meta row (encoding flag plus the
+    * sizing REALIZED by the trained codebook) and the optional
+    * rotation. All of them commit in the same atomic version rename as
+    * the codes they describe, so the round-13 ADVICE window — data
+    * written, encoding marker missing, probes silently serving
+    * residual codes as plain — cannot exist. */
+  private def stateSides(s: SparkSession, cb: DataFrame, cents: DataFrame,
+      residual: Boolean, rotation: Option[(Array[Double], Int)]): Seq[(String, DataFrame)] =
+    Seq("codebooks" -> cb, "centroids" -> cents,
+      "meta" -> metaFrame(s, residual, collectCb(cb)._2)) ++
+      rotation.map { case (r, d) => "rotation" -> rotationFrame(s, r, d) }
+
+  /** Rows in the index's CODE space: through the stored learned
+    * rotation when present (a rotated index is whole-space by
+    * construction), as the residual against the assigned coarse
+    * centroid when the meta says so, raw e6 otherwise — raw-space codes
+    * in a residual index would be silently mis-ranked by every later
+    * probe (the probe's scoring dispatches on the same meta row). */
+  private def codeSpace(v: DataFrame, asg: DataFrame, cents: DataFrame, residual: Boolean,
+      rotation: Option[(Array[Double], Int)]): DataFrame = rotation match {
+    case Some((r, d)) => learnedVe6Of(v, r, d)
+    case None => if (residual) residualVe(SQ8.ve6Of(v), asg, cents) else SQ8.ve6Of(v)
+  }
+
+  /** Assign (vec_id, embedding) rows against the stored coarse
+    * centroids and encode them in the index's code space against the
+    * stored codebook (the realized sizing derives from it). */
+  protected def encode(s: SparkSession, rows: DataFrame,
+      st: => State): Seq[(String, DataFrame)] = {
+    val pq = st
+    val v = IndexSwap.normed(rows)
+    val asg = assignCells(v, pq.cents, useTwoTier(pq.cents))
+    cellSides(v, asg,
+      codesWith(codeSpace(v, asg, pq.cents.local, pq.residual, pq.rotation), pq.localCb))
   }
 
   /** Literal-route bound of the native exact assignment
@@ -1472,14 +1459,12 @@ object PQ extends IndexRung {
   /** The two-tier dispatch predicate: only beyond the TOTAL payload
     * guard (round 15 — the blocked argmax retired the cell-count
     * bound). */
-  private def useTwoTier(nCells: Long, dim: Int): Boolean =
-    !nativeAssignTotalOk(nCells, dim)
+  private def useTwoTier(cents: Similarity.Cents): Boolean =
+    !nativeAssignTotalOk(cents.arrays.cids.length, cents.arrays.dim)
 
-  /** Centroid width from a local centroid frame (one row peek). */
-  private def dimOf(localCents: DataFrame): Int =
-    localCents.select(col("ce")).head().getSeq[Float](0).length
-
-  /** EXACT coarse assignment through the BLOCKED native argmax
+  /** The coarse assignment (vec_id, cent_id) of every build, append and
+    * rebalance: `fast` takes the two-tier route ([[fastCoarseAssign]]),
+    * otherwise the EXACT BLOCKED native argmax
     * ([[Similarity.nativeAssignBlocked]]): the centroid table flattens
     * into ≤[[nativeAssignMaxCells]]-cell per-block expressions
     * (ascending cent_id — the tie rule), each corpus row pays one
@@ -1489,8 +1474,9 @@ object PQ extends IndexRung {
     * [[coarseAssign]] (same fold, same e6 floor, same tie-break;
     * pinned by qn39/qn40 parity, PqRebalanceSpec's driver replay, and
     * BlockedArgmaxSpec's forced-multi-block parity). */
-  private def nativeCoarseAssign(v: DataFrame, localCents: DataFrame): DataFrame =
-    Similarity.nativeAssignBlocked(v, localCents, Seq("vec_id"))
+  private def assignCells(v: DataFrame, cents: Similarity.Cents, fast: Boolean): DataFrame =
+    if (fast) fastCoarseAssign(v, cents.local)
+    else Similarity.nativeAssignWith(v, cents.arrays, Seq("vec_id"), nativeAssignMaxCells)
 
   /** RESIDUAL e6 view of an e6 corpus frame: emb6 - assigned coarse
     * centroid (e6-floored), per [[buildPqIndex]]'s `residual` encoding.
@@ -1534,48 +1520,9 @@ object PQ extends IndexRung {
     * and then silently dropped by the refine join — a wrong result,
     * not just dead bytes. `newVecs`: (vec_id, embedding). */
   def appendToPqIndex(s: SparkSession, newVecs: DataFrame, path: String,
-      autoRebalance: Option[Int] = None): Unit = {
-    recover(s, path) // heal any interrupted prior swap first
-    // ONE version resolution for every side read and write below
-    // (round-15 ADVICE): an append racing a rebalance commit must
-    // never mix metadata from one version with writes into another.
-    val root = IndexSwap.liveRoot(s, path)
-    val st = load(s, root)
-    val v = newVecs.select(col("vec_id"), col("embedding"),
-      l2normNative(col("embedding")).as("nrm"))
-    // Same payload dispatch as the build: blocked native exact argmax
-    // while the stored centroid table stays plan-bakeable, two-tier
-    // beyond the total guard.
-    val asg =
-      if (useTwoTier(st.cents.cids.length, st.cents.dim)) fastCoarseAssign(v, st.localCents)
-      else nativeCoarseAssign(v, st.localCents)
-    // New rows encode in the INDEX'S space: the stored learned rotation
-    // when present (a rotated index is whole-space by construction),
-    // the residual view when the meta says so, raw e6 otherwise.
-    val encIn = st.rotation match {
-      case Some((r, d)) => learnedVe6Of(v, r, d)
-      case None =>
-        val ve6 = v.select(col("vec_id"),
-          transform(col("embedding"),
-            x => floor(x.cast("double") * 1000000).cast("long")).as("emb6"))
-        if (st.residual) residualVe(ve6, asg, st.localCents) else ve6
-    }
-    val codes = codesWith(encIn, st.localCb) // realized sizing derives from the stored codebook
-    // COLD side first (see the crash-window note above). Mirror the
-    // build's point-read layout (one file per touched cell, rows
-    // sorted by vec_id, small row groups): an unsorted append fans out
-    // tasks x cells files and forfeits the vec_id row-group pruning
-    // the refine's shortlist read depends on.
-    v.join(asg, Seq("vec_id"))
-      .repartition(col("cent_id")).sortWithinPartitions(col("cent_id"), col("vec_id"))
-      .write.mode("append").option("parquet.block.size", 1L << 20)
-      .partitionBy("cent_id").parquet(IndexSwap.sideAt(root, "vectors"))
-    asg.join(codes, Seq("vec_id"))
-      .select(col("vec_id"), col("codes"), col("cent_id"))
-      .repartition(col("cent_id"))
-      .write.mode("append").partitionBy("cent_id").parquet(IndexSwap.sideAt(root, "codes"))
-    autoRebalance.foreach(auditCellSkew(s, path, root, st.cents.cids.length, _))
-  }
+      autoRebalance: Option[Int] = None): Unit =
+    append(s, newVecs, path)((root, st) =>
+      autoRebalance.foreach(auditCellSkew(s, path, root, st().cents.arrays.cids.length, _)))
 
   /** [[delete]] under the name existing callers use. */
   def deleteFromPqIndex(s: SparkSession, ids: DataFrame, path: String,
@@ -1598,7 +1545,7 @@ object PQ extends IndexRung {
     * Everything re-derives from the lake under the REBUILD seed rules
     * (an appended lake's id space is arbitrary, so stride seeding is
     * out): coarse seeds are the sqrt(N) lowest-`xxhash64(vec_id)`
-    * vectors (the [[Similarity.rebalance]] rule — deterministic,
+    * vectors (the [[Similarity.reseed]] rule — deterministic,
     * distribution-free, cell count adapted to the GROWN corpus), and
     * the codebook retrains one Lloyd step from the K
     * lowest-`xxhash64(vec_id, salt')` seed vectors ([[hashSeedVecs]]).
@@ -1615,63 +1562,21 @@ object PQ extends IndexRung {
     * rebalance entry); concurrent READERS keep their resolved version
     * for a full rebuild cycle (the reader-grace contract). */
   def rebalance(s: SparkSession, path: String): Unit = {
-    recover(s, path)
-    val (residual, p) = indexMeta(s, path)
-    val rebRoot = IndexSwap.liveRoot(s, path)
-    // Tombstones reclaim physically here (the fresh version dir
-    // carries no deletes side).
-    val rebDel = IndexSwap.tombstonesAt(s, rebRoot)
-    val v = rebDel.foldLeft(
-      s.read.parquet(IndexSwap.sideAt(rebRoot, "vectors"))
-        .select(col("vec_id"), col("embedding"), col("nrm"))
-    ) { (c, d) => c.join(d, Seq("vec_id"), "left_anti") }
-    // Surviving-row sizing (footer stats minus tombstones — a no-op
-    // tombstone undercounts by one, which the ceil absorbs).
-    val total = math.max(1L, Similarity.ivfCellStatsAt(s, rebRoot).values.sum -
-      rebDel.map(_.count()).getOrElse(0L))
-    val nCells = math.max(16L, math.ceil(math.sqrt(total.toDouble)).toLong).toInt
-    val seeds = v.orderBy(xxhash64(col("vec_id"), lit(1002)).asc, col("vec_id").asc)
-      .limit(nCells)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("ce"), col("nrm").as("cn"))
-    val localCents = s.createDataFrame(
-      java.util.Arrays.asList(seeds.collect(): _*), seeds.schema)
-    val asg =
-      if (useTwoTier(nCells, dimOf(localCents))) fastCoarseAssign(v, localCents)
-      else nativeCoarseAssign(v, localCents)
-    // The stored rotation is PRESERVED across rebuilds (it is model
-    // state, like the meta's encoding flag — re-learning is a
-    // buildPqIndex decision): the grown lake re-encodes through it and
-    // the side re-stages into the new version below.
-    val rotStored = rotationAt(s, rebRoot)
-    val rve6 = rotStored match {
-      case Some((r, d)) => learnedVe6Of(v, r, d)
-      case None =>
-        val ve6 = v.select(col("vec_id"),
-          transform(col("embedding"),
-            x => floor(x.cast("double") * 1000000).cast("long")).as("emb6"))
-        if (residual) residualVe(ve6, asg, localCents) else ve6
-    }
+    val root = IndexSwap.liveRoot(s, path)
+    val st = load(s, root)
+    val (v, cents) = Similarity.reseed(s, root)
+    val asg = assignCells(v, cents, useTwoTier(cents))
+    // The stored rotation and encoding are PRESERVED across rebuilds
+    // (model state — re-learning or flipping is a buildPqIndex
+    // decision): the grown lake re-encodes through them.
+    val rve6 = codeSpace(v, asg, cents.local, st.residual, st.rotation)
     // Sizing is preserved from the stored meta; the REALIZED K of the
     // retrained codebook can differ (hashSeedVecs over a shrunk lake),
     // so the rewritten meta derives from the retrained rows.
-    val cb = cbPivot(lloydStepNative(rve6, hashSeedVecs(rve6, p.k), p)).localCheckpoint(true)
-    val codes = codesWith(rve6, cb)
-    asg.join(codes, Seq("vec_id"))
-      .select(col("vec_id"), col("codes"), col("cent_id"))
-      .repartition(col("cent_id"))
-      .write.mode("overwrite").partitionBy("cent_id")
-      .parquet(IndexSwap.tmp(path, "codes").toString)
-    v.join(asg, Seq("vec_id"))
-      .repartition(col("cent_id")).sortWithinPartitions(col("cent_id"), col("vec_id"))
-      .write.mode("overwrite").option("parquet.block.size", 1L << 20)
-      .partitionBy("cent_id").parquet(IndexSwap.tmp(path, "vectors").toString)
-    cb.coalesce(1).write.mode("overwrite")
-      .parquet(IndexSwap.tmp(path, "codebooks").toString)
-    localCents.coalesce(1).write.mode("overwrite")
-      .parquet(IndexSwap.tmp(path, "centroids").toString)
-    rotStored.foreach { case (r, d) => stageRotation(s, path, r, d) }
-    writeMeta(s, path, residual, collectCb(cb)._2)
-    IndexSwap.commit(s, path, sides)
+    val cb = cbPivot(lloydStepNative(rve6, hashSeedVecs(rve6, st.params.k), st.params))
+      .localCheckpoint(true)
+    stage(s, path, cellSides(v, asg, codesWith(rve6, cb)) ++
+      stateSides(s, cb, cents.local, st.residual, st.rotation))
   }
 
   /** Probe a persisted IVFADC index: route each probe to its `nProbe`
@@ -1719,14 +1624,13 @@ object PQ extends IndexRung {
   override def describe(s: SparkSession, path: String): DataFrame =
     IndexSwap.describeIndex(s, path, sides :+ "rotation")
 
-  /** A PQ index's serving state: the meta row (encoding flag +
-    * realized sizing), the centroid and codebook tables (sqrt(N) and
-    * M x K rows — manifest-class) as LOCAL relations, the centroids as
-    * flat driver arrays for the in-process route, and the optional
-    * learned rotation. */
+  /** A PQ index's serving and encoding state: the meta row (encoding
+    * flag + realized sizing), the centroid and codebook tables (sqrt(N)
+    * and M x K rows — manifest-class) as LOCAL relations, the centroids
+    * also as flat driver arrays for the in-process route and the native
+    * assignment, and the optional learned rotation. */
   final case class PqState(residual: Boolean, params: PqParams,
-      localCents: DataFrame, localCb: DataFrame, cents: Similarity.CentArrays,
-      rotation: Option[(Array[Double], Int)])
+      cents: Similarity.Cents, localCb: DataFrame, rotation: Option[(Array[Double], Int)])
 
   type State = PqState
 
@@ -1737,9 +1641,9 @@ object PQ extends IndexRung {
       val df = s.read.parquet(IndexSwap.sideAt(root, side))
       s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
     }
-    val localCents = local("centroids")
-    PqState(residual, p, localCents, local("codebooks"),
-      Similarity.collectCents(localCents), rotationAt(s, root))
+    val cents = local("centroids")
+    PqState(residual, p, Similarity.Cents(cents, Similarity.collectCents(cents)),
+      local("codebooks"), rotationAt(s, root))
   }
 
   /** The probe pipeline against a handle: every side reads from its
@@ -1750,23 +1654,18 @@ object PQ extends IndexRung {
   private def probe(s: SparkSession, h: Handle, probes: DataFrame,
       nProbe: Int, k: Int, allowed: Option[DataFrame]): DataFrame = {
     val root = h.root
-    val PqState(residualIdx, p, cents, cb, ca, rot) = h.state
+    val PqState(residualIdx, p, cents, cb, rot) = h.state
     // The ADC-table build, the shortlist and the refine each run their
     // own action over ONE local probe relation.
     val (probeRows, probesV) = IndexSwap.localProbes(s, probes, "probePqIndexWith")
-    val (localPc, cells) = Similarity.driverRouteFrame(s, probeRows, ca, nProbe, "probe_id")
+    val (localPc, cells) = Similarity.driverRouteFrame(s, probeRows, cents.arrays, nProbe,
+      "probe_id")
     // Probes encode in the INDEX'S space: through the stored learned
     // rotation when the index carries one (routing and the exact
     // refine stay in the raw space — the centroids and cold floats are
     // raw; only the codebook/codes tier lives rotated).
-    val pe6 = rot match {
-      case Some((r, d)) => probesV.select(col("vec_id").as("probe_id"),
-        transform(graft.functions.VectorExprs.matVecNative(col("embedding"), r, d),
-          x => floor(x * 1000000).cast("long")).as("emb6"))
-      case None => probesV.select(col("vec_id").as("probe_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * 1000000).cast("long")).as("emb6"))
-    }
+    val pe6 = rot.fold(SQ8.ve6Of(probesV)) { case (r, d) => learnedVe6Of(probesV, r, d) }
+      .withColumnRenamed("vec_id", "probe_id")
     // Both data-side reads are CELL-SCOPED (Similarity.cellScopedRead):
     // whole-lake partition discovery was the measured dominant fixed
     // cost of a serve call (~2 s per read at 1000 cells, paid twice —
@@ -1800,7 +1699,7 @@ object PQ extends IndexRung {
           .select(col("qid"), col("vec_id"),
             adcScore(col("tab"), col("codes"), p).as("adist_e12"))
       } else {
-        val cent6 = cents.select(col("cent_id"),
+        val cent6 = cents.local.select(col("cent_id"),
           transform(col("ce"), x => floor(x.cast("double") * 1000000).cast("long")).as("c6full"))
         val pr = broadcast(localPc).join(broadcast(pe6), Seq("probe_id"))
           .join(broadcast(cent6), Seq("cent_id"))

@@ -1,8 +1,7 @@
 package graft.operators
 
-import graft.{Concurrently, Tables}
+import graft.Tables
 import graft.functions.TextFns._
-import graft.functions.VectorExprs.l2normNative
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -75,8 +74,8 @@ object SQ8 extends IndexRung {
     * literal arrays. Integer floor division as (a - a%b)/b: the
     * long/long `/` is a double, but an exactly-divisible numerator
     * below 2^53 divides exactly, so the floor matches DuckDB's `//`
-    * bit-for-bit. `clamp` saturates to [0, 255] — identity for values
-    * inside the stored envelope (every build-corpus row by
+    * bit-for-bit. Every byte saturates to [0, 255] — identity for
+    * values inside the stored envelope (every build-corpus row by
     * construction, so the qn38 oracle parity is unaffected), the
     * declared append/serve semantics outside it.
     *
@@ -88,7 +87,7 @@ object SQ8 extends IndexRung {
     * window, so malformed rows would silently dominate every probe's
     * shortlist (a valid-looking index with degraded recall). O(D)
     * per row, same cost class as the transform itself. */
-  private[graft] def q8Col(mna: Array[Long], spa: Array[Long], clamp: Boolean): Column = {
+  private[graft] def q8Col(mna: Array[Long], spa: Array[Long]): Column = {
     val d = mna.length
     val checked = when(size(col("emb6")) === d &&
         !exists(col("emb6"), x => x.isNull), col("emb6"))
@@ -99,8 +98,7 @@ object SQ8 extends IndexRung {
     transform(checked, (x, i) => {
       val a = (x - element_at(lit(mna), i + 1)) * 255L
       val sp = element_at(lit(spa), i + 1)
-      val q = ((a - (a % sp)) / sp).cast("long")
-      if (clamp) least(greatest(q, lit(0L)), lit(255L)) else q
+      least(greatest(((a - (a % sp)) / sp).cast("long"), lit(0L)), lit(255L))
     })
   }
 
@@ -111,32 +109,37 @@ object SQ8 extends IndexRung {
     (st.map(_.getLong(1)), st.map(_.getLong(2)))
   }
 
-  /** Stage all three sides into the [[IndexSwap]] tmp siblings (shared
-    * by build and rebalance — one definition of the layout). */
-  private def stageSides(s: SparkSession, path: String, v: DataFrame,
-      stats: DataFrame): Unit = {
-    val ve6F = ve6Of(v)
-    val (mna, spa) = collectStats(stats)
-    // Independent staging writes overlapped (round 18, guide §2.6).
-    Concurrently.run(Seq(
-      () => ve6F.select(col("vec_id"), q8Col(mna, spa, clamp = false).as("q8"))
-        .repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
-        .write.mode("overwrite").parquet(IndexSwap.tmp(path, "codes").toString),
-      () => v.select(col("vec_id"), col("embedding"), col("nrm"))
-        .repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
-        .write.mode("overwrite").option("parquet.block.size", 1L << 20)
-        .parquet(IndexSwap.tmp(path, "vectors").toString),
-      () => {
-        val rows: java.util.List[org.apache.spark.sql.Row] =
-          java.util.Arrays.asList(mna.indices.map(i =>
-            org.apache.spark.sql.Row(i, mna(i), spa(i))): _*)
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("pos", org.apache.spark.sql.types.IntegerType, false),
-          org.apache.spark.sql.types.StructField("mn", org.apache.spark.sql.types.LongType, false),
-          org.apache.spark.sql.types.StructField("sp", org.apache.spark.sql.types.LongType, false)))
-        s.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite")
-          .parquet(IndexSwap.tmp(path, "stats").toString)
-      }))
+  /** The envelope as its stored side: D rows (pos, mn, sp), one file. */
+  private[operators] def statsFrame(s: SparkSession, mna: Array[Long],
+      spa: Array[Long]): DataFrame = {
+    import org.apache.spark.sql.types._
+    s.createDataFrame(java.util.Arrays.asList(mna.indices.map(i =>
+        org.apache.spark.sql.Row(i, mna(i), spa(i))): _*),
+      StructType(Seq(StructField("pos", IntegerType, false),
+        StructField("mn", LongType, false), StructField("sp", LongType, false))))
+  }
+
+  /** Codes and the cold side sorted by vec_id (the cold side in 1 MB
+    * row groups); the envelope as one file. */
+  protected val layouts: Map[String, IndexSwap.Layout] = Map(
+    "codes" -> IndexSwap.Layout.sorted("vec_id"),
+    "vectors" -> IndexSwap.Layout.sorted("vec_id", IndexSwap.coldBlock),
+    "stats" -> IndexSwap.Layout.single)
+
+  /** Quantize (vec_id, embedding) rows against the envelope: the cold
+    * rows and their byte codes. */
+  protected def encode(s: SparkSession, rows: DataFrame,
+      st: => State): Seq[(String, DataFrame)] = {
+    val (mna, spa) = st
+    val v = IndexSwap.normed(rows)
+    Seq("vectors" -> v, "codes" -> ve6Of(v).select(col("vec_id"), q8Col(mna, spa).as("q8")))
+  }
+
+  /** Stat the envelope over `v` and stage all three sides — the shared
+    * body of build and rebalance. */
+  private def rebuild(s: SparkSession, path: String, v: DataFrame): Unit = {
+    val (mna, spa) = collectStats(statsOf(ve6Of(v)))
+    stage(s, path, encode(s, v, (mna, spa)) :+ ("stats" -> statsFrame(s, mna, spa)))
   }
 
   /** Build the persisted SQ8 index from the corpus at `dir` — staged
@@ -153,55 +156,33 @@ object SQ8 extends IndexRung {
     * stored stats declare), so a 256- or 768-dim corpus needs no other
     * change; the q8Col guard enforces corpus/envelope width equality
     * loudly. */
-  def buildSq8IndexFrom(s: SparkSession, corpus: DataFrame, path: String): Unit = {
-    recover(s, path)
-    val v = corpus.select(col("vec_id"), col("embedding"),
-      l2normNative(col("embedding")).as("nrm"))
-    stageSides(s, path, v, statsOf(ve6Of(v)))
-    IndexSwap.commit(s, path, sides)
-  }
+  def buildSq8IndexFrom(s: SparkSession, corpus: DataFrame, path: String): Unit =
+    rebuild(s, path, corpus)
 
   /** Encode NEW vectors against the FROZEN stored envelope and append
-    * to both tiers: O(new) work, no re-stat. COLD side first (the
-    * [[PQ.appendToPqIndex]] crash-window polarity: an orphaned cold
-    * row is dead bytes no rank scan ever surfaces; an orphaned CODE
-    * row would be shortlisted and then silently dropped by the refine
-    * join). Out-of-envelope dims clamp — see the object doc. */
+    * to both tiers: O(new) work, no re-stat. Out-of-envelope dims clamp
+    * — see the object doc.
+    *
+    * The measured DRIFT trigger (round 17 — the PQ/IVF/BinarySig
+    * deferred-marker pattern at this rung, with SQ8's OWN drift
+    * metric): the failure mode of a frozen affine envelope is
+    * SATURATION — appended values outside the build-time [mn, mn+sp]
+    * clamp to 0/255, collapsing their rank-stage distances — so the
+    * audit measures exactly that: the fraction of appended (row, dim)
+    * cells falling OUTSIDE the stored envelope, one O(new) aggregate
+    * over the appended batch. Past `maxOobRate` the append drops the
+    * due marker and returns at append cost; [[maintain]] re-stats the
+    * envelope over the grown lake on the maintenance cadence.
+    * In-distribution streams never fire it (build-corpus rows are
+    * in-envelope by construction). */
   def appendToSq8Index(s: SparkSession, newVecs: DataFrame, path: String,
-      autoRebalance: Option[Double] = None): Unit = {
-    recover(s, path)
-    // ONE version resolution for the stats read and both side writes
-    // (round-15 ADVICE): a rebalance committing mid-append would
-    // otherwise split the append across versions — codes encoded
-    // against one envelope landing beside another, or cold rows in a
-    // retiring version the code rows dangle against.
-    val root = IndexSwap.liveRoot(s, path)
-    val (mna, spa) = load(s, root)
-    val v = newVecs.select(col("vec_id"), col("embedding"),
-      l2normNative(col("embedding")).as("nrm"))
-    v.repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
-      .write.mode("append").option("parquet.block.size", 1L << 20)
-      .parquet(IndexSwap.sideAt(root, "vectors"))
-    ve6Of(v).select(col("vec_id"), q8Col(mna, spa, clamp = true).as("q8"))
-      .repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
-      .write.mode("append").parquet(IndexSwap.sideAt(root, "codes"))
-    // The measured DRIFT trigger (round 17 — the PQ/IVF/BinarySig
-    // deferred-marker pattern at this rung, with SQ8's OWN drift
-    // metric): the failure mode of a frozen affine envelope is
-    // SATURATION — appended values outside the build-time [mn, mn+sp]
-    // clamp to 0/255, collapsing their rank-stage distances — so the
-    // audit measures exactly that: the fraction of appended (row, dim)
-    // cells falling OUTSIDE the stored envelope, one O(new) aggregate
-    // over the batch just encoded. Past `maxOobRate` the append drops
-    // the due marker and returns at append cost; [[maintain]]
-    // re-stats the envelope over the grown lake on the maintenance
-    // cadence. In-distribution streams never fire it (build-corpus
-    // rows are in-envelope by construction).
-    autoRebalance.foreach { maxOobRate =>
+      autoRebalance: Option[Double] = None): Unit =
+    append(s, newVecs, path)((_, st) => autoRebalance.foreach { maxOobRate =>
       require(maxOobRate > 0 && maxOobRate < 1,
         s"appendToSq8Index: autoRebalance is an out-of-envelope RATE in (0, 1), got $maxOobRate")
+      val (mna, spa) = st()
       val hi = mna.zip(spa).map { case (m, sp) => m + sp }
-      val audit = ve6Of(v).select(
+      val audit = ve6Of(newVecs).select(
         sum(aggregate(transform(col("emb6"), (x, i) =>
             when(x < element_at(lit(mna), i + 1) ||
                  x > element_at(lit(hi), i + 1), 1L).otherwise(0L)),
@@ -210,8 +191,7 @@ object SQ8 extends IndexRung {
       val oob = if (audit.isNullAt(0)) 0L else audit.getLong(0)
       if (oob.toDouble / math.max(1L, audit.getLong(1) * mna.length) > maxOobRate)
         onRebalanceDue(s, path)
-    }
-  }
+    })
 
   /** Re-stat AND re-encode the whole index from its own cold lake (the
     * drift answer — appended vectors may saturate against the frozen
@@ -219,18 +199,8 @@ object SQ8 extends IndexRung {
     * re-encodes every byte vector). Crash-safe: the [[IndexSwap]]
     * versioned commit over all three sides. Deterministic: same lake
     * in, same index out. */
-  def rebalance(s: SparkSession, path: String): Unit = {
-    recover(s, path)
-    val root = IndexSwap.liveRoot(s, path)
-    // Tombstones reclaim physically here: the rebuild reads the cold
-    // lake minus the deleted ids, and the fresh version dir carries no
-    // deletes side at all.
-    val v = IndexSwap.exceptTombstones(s, root,
-      s.read.parquet(IndexSwap.sideAt(root, "vectors"))
-        .select(col("vec_id"), col("embedding"), col("nrm")))
-    stageSides(s, path, v, statsOf(ve6Of(v)))
-    IndexSwap.commit(s, path, sides)
-  }
+  def rebalance(s: SparkSession, path: String): Unit =
+    rebuild(s, path, IndexSwap.liveVectors(s, IndexSwap.liveRoot(s, path)))
 
   /** [[delete]] under the name existing callers use. */
   def deleteFromSq8Index(s: SparkSession, ids: DataFrame, path: String,
@@ -276,7 +246,7 @@ object SQ8 extends IndexRung {
     // out-of-corpus probe may fall outside it; identity for in-range
     // probes, so the qn38 parity is unaffected).
     val pq8 = ve6Of(probesV)
-      .select(col("vec_id").as("qid"), q8Col(mna, spa, clamp = true).as("pq8"))
+      .select(col("vec_id").as("qid"), q8Col(mna, spa).as("pq8"))
     // Rank loop is the native fused expression (round 15): the HOF
     // form allocated a zip_with array per candidate pair — the
     // measured probe wall at 1M (ladder battery). Bit-identical
@@ -372,7 +342,7 @@ object SQ8 extends IndexRung {
       java.util.Arrays.asList(probeRows: _*), probesRaw.schema)
     val pe6 = ve6Of(probesV)
     val pq8 = pe6.select(col("vec_id").as("qid"), col("emb6").as("pe6"),
-      q8Col(mna, spa, clamp = true).as("pq8"))
+      q8Col(mna, spa).as("pq8"))
     val spansLit = array(spa.map(lit(_)): _*)
     val lb = graft.functions.VectorExprs.intSqLowerBoundNative(
       col("q8"), col("pq8"), spansLit)

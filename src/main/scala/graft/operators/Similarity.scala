@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Concurrently, Q, Tables}
+import graft.{Q, Tables}
 import graft.functions.TextFns._
 import graft.functions.VectorExprs.{dotNative, l2normNative}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1648,6 +1648,18 @@ object Similarity extends IndexRung {
     CentArrays(cids, flat, cns, dim)
   }
 
+  /** A centroid table held on the driver: the local relation the
+    * window-form assignment joins and the flat arrays the native loops
+    * and the driver route bake in. */
+  private[graft] final case class Cents(local: DataFrame, arrays: CentArrays)
+
+  /** Collect a √N-row centroid frame ONCE into [[Cents]] (the arrays
+    * come from the local relation, no second job). */
+  private[graft] def centsOf(s: SparkSession, cents: DataFrame): Cents = {
+    val local = s.createDataFrame(java.util.Arrays.asList(cents.collect(): _*), cents.schema)
+    Cents(local, collectCents(local))
+  }
+
   /** In-process flat route over CACHED centroid arrays: score every
     * (probe, centroid) pair with [[ivfAssigned]]'s exact rules (e6
     * floor, lowest-cent_id ties) and return each probe's top-nProbe
@@ -1772,7 +1784,7 @@ object Similarity extends IndexRung {
     nativeAssignWith(v, collectCents(cents), keep, blockCells)
 
   /** [[nativeAssignBlocked]] over centroid arrays already collected. */
-  private def nativeAssignWith(v: DataFrame, ca: CentArrays, keep: Seq[String],
+  private[operators] def nativeAssignWith(v: DataFrame, ca: CentArrays, keep: Seq[String],
       blockCells: Int): DataFrame = {
     val byteCap = math.max(1L, PQ.nativeAssignMaxBytes / (ca.dim * 4L))
     val bc = math.max(1, math.min(blockCells.toLong, byteCap).toInt)
@@ -1825,33 +1837,41 @@ object Similarity extends IndexRung {
     })
   }
 
-  /** [[ivfAssigned]] for the BUILD paths: the blocked native argmax
-    * ([[nativeAssignBlocked]] — EXACT at any cell count, zero-shuffle;
-    * round 15 retired the round-14 4096-cell bound past which plain
-    * IVF builds fell back to the N x cells join+window wall). The
-    * window form survives only behind the total-payload guard
-    * ([[PQ.nativeAssignTotalOk]] — the centroid table must stay a
-    * plan-bakeable broadcast-class payload) and as the parity
-    * reference the specs replay. */
-  private[operators] def ivfAssignedDispatch(v: DataFrame, cents: DataFrame,
-      nCells: Long): DataFrame =
-    if (!PQ.nativeAssignTotalOk(nCells, centDim(cents))) ivfAssigned(v, cents)
-    else nativeAssignBlocked(v, cents, Seq("vec_id", "embedding", "nrm"))
+  /** [[ivfAssigned]] for the IVF and IvfSq8 builds, rebalances and
+    * appends: the blocked native argmax ([[nativeAssignBlocked]] —
+    * EXACT at any cell count, zero-shuffle; round 15 retired the
+    * round-14 4096-cell bound past which plain IVF builds fell back to
+    * the N x cells join+window wall). The window form survives only
+    * behind the total-payload guard ([[PQ.nativeAssignTotalOk]] — the
+    * centroid table must stay a plan-bakeable broadcast-class payload)
+    * and as the parity reference the specs replay. */
+  private[operators] def assign(v: DataFrame, cents: Cents): DataFrame =
+    if (!PQ.nativeAssignTotalOk(cents.arrays.cids.length, cents.arrays.dim))
+      ivfAssigned(v, cents.local)
+    else nativeAssignWith(v, cents.arrays, Seq("vec_id", "embedding", "nrm"),
+      PQ.nativeAssignMaxCells)
 
-  /** [[ivfAssignedDispatch]] for the append paths, over the centroid
-    * arrays their `load` already read from `root`: the native argmax
-    * takes the arrays as they are, and only past the total-payload
-    * guard does the window form read the centroid side again. */
-  private[operators] def ivfAssignedAt(s: SparkSession, v: DataFrame, ca: CentArrays,
-      root: String): DataFrame =
-    if (!PQ.nativeAssignTotalOk(ca.cids.length, ca.dim))
-      ivfAssigned(v, s.read.parquet(IndexSwap.sideAt(root, "centroids")))
-    else nativeAssignWith(v, ca, Seq("vec_id", "embedding", "nrm"), PQ.nativeAssignMaxCells)
-
-  /** Centroid width from a one-row peek (the dispatch guard's dim —
-    * a tiny single-file read or LocalTableScan). */
-  private def centDim(cents: DataFrame): Int =
-    cents.select(col("ce")).head().getSeq[Float](0).length
+  /** The rebuild input of the cell-partitioned rungs (IVF, IvfSq8, PQ),
+    * all read from ONE pinned root: the cold lake minus its tombstones,
+    * and fresh centroids — the √N surviving vectors with the lowest
+    * `xxhash64(vec_id)` (a global top-k: TakeOrderedAndProject, no
+    * sort materialization). The build-time stride rule needs a DENSE
+    * sample key and an appended lake's id space is arbitrary; the hash
+    * rule is deterministic, distribution-free over the ids, and adapts
+    * the cell count to the GROWN corpus instead of freezing the
+    * build-time k. N is the footer row count minus the tombstones (a
+    * no-op tombstone undercounts by one, which the ceil absorbs); the
+    * seed collect is √N rows — manifest-class up to ~1e12-vector lakes,
+    * the same table every probe routes against. */
+  private[operators] def reseed(s: SparkSession, root: String): (DataFrame, Cents) = {
+    val v = IndexSwap.liveVectors(s, root)
+    val total = math.max(1L, ivfCellStatsAt(s, root).values.sum -
+      IndexSwap.tombstonesAt(s, root).map(_.count()).getOrElse(0L))
+    val k = math.max(16L, math.ceil(math.sqrt(total.toDouble)).toLong)
+    (v, centsOf(s, v.orderBy(xxhash64(col("vec_id"), lit(1002)).asc, col("vec_id").asc)
+      .limit(k.toInt)
+      .select(col("vec_id").as("cent_id"), col("embedding").as("ce"), col("nrm").as("cn"))))
+  }
 
   /** Probe routing: the declared-query probe set (vec_id < 10). */
   private def ivfProbeCells(v: DataFrame, cents: DataFrame, nProbe: Int): DataFrame =
@@ -1987,34 +2007,37 @@ object Similarity extends IndexRung {
     new java.io.File(sys.props("java.io.tmpdir"), s"graft_ivf_q_$n").toString
   }
 
+  /** The IVF index's swappable sides (the [[IndexSwap]] protocol). */
+  val sides: Seq[String] = Seq("vectors", "centroids")
+
+  /** The assigned vectors one `cent_id=` directory per cell, as the
+    * writing tasks leave them; the centroid table one file. */
+  protected val layouts: Map[String, IndexSwap.Layout] = Map(
+    "vectors" -> IndexSwap.Layout.cells(),
+    "centroids" -> IndexSwap.Layout.single)
+
+  /** Assign (vec_id, embedding) rows to the centroids: the one data side. */
+  protected def encode(s: SparkSession, rows: DataFrame,
+      st: => State): Seq[(String, DataFrame)] =
+    Seq("vectors" -> assign(IndexSwap.normed(rows), st))
+
   /** Materialize the IVF index at `path` as a DATA LAYOUT: assigned
     * vectors in a cent_id-partitioned parquet lake plus the tiny
     * centroid table. One batch job (the same deterministic assignment
     * qn10 computes in-flight); after it, a probe's IO is bounded by its
     * probed cells' files — the other (nCentroids - nProbe)/nCentroids
     * of the corpus is never opened. At 100 TB this is the difference
-    * between an ANN service and a full scan per query batch. */
+    * between an ANN service and a full scan per query batch.
+    * Centroids are nCentroids rows by declaration: collected ONCE so
+    * the assignment and the centroid write don't each replay the
+    * corpus count + filter scan (round-10 review). Staged + committed
+    * like the rebuild paths (round 15): a crashed build leaves NOTHING
+    * half-visible at the index root. */
   def buildIvfIndex(s: SparkSession, dir: String, nCentroids: Int, path: String,
       pred: Column = lit(true), sampleKey: Column = col("vec_id")): Unit = {
-    recover(s, path) // drop any stale stage from a crashed build
     val v = vecs(s, dir).filter(pred)
-    // Centroids are nCentroids rows by declaration: collect ONCE into a
-    // local relation so the assignment write and the centroid write
-    // don't each replay the corpus count + filter scan (round-10
-    // review: the lazy frame cost two extra full-corpus jobs per build).
-    val cents = ivfCents(v, nCentroids, sampleKey)
-    val localCents = s.createDataFrame(
-      java.util.Arrays.asList(cents.collect(): _*), cents.schema)
-    // Staged + committed like the rebuild paths (round 15): the build
-    // becomes v1 through the same atomic version-dir rename, so a
-    // crashed build leaves NOTHING half-visible at the index root.
-    // Sides overlapped (round 18, guide §2.6).
-    Concurrently.run(Seq(
-      () => ivfAssignedDispatch(v, localCents, nCentroids.toLong).write.mode("overwrite")
-        .partitionBy("cent_id").parquet(IndexSwap.tmp(path, "vectors").toString),
-      () => localCents.coalesce(1).write.mode("overwrite")
-        .parquet(IndexSwap.tmp(path, "centroids").toString)))
-    IndexSwap.commit(s, path, sides)
+    val cents = centsOf(s, ivfCents(v, nCentroids, sampleKey))
+    stage(s, path, encode(s, v, cents) :+ ("centroids" -> cents.local))
   }
 
   /** Assign NEW vectors against the STORED centroids and append them to
@@ -2029,20 +2052,9 @@ object Similarity extends IndexRung {
     * instead of caller discipline ([[auditCellSkew]]): past it
     * [[rebalance]] runs inline. */
   def appendToIvfIndex(s: SparkSession, newVecs: DataFrame, path: String,
-      autoRebalance: Option[Int] = None): Unit = {
-    recover(s, path) // heal any interrupted prior swap first
-    // ONE version resolution for the centroid read, the vector write,
-    // and the trigger audit (round-15 ADVICE): never split an append
-    // across a mid-call rebalance commit.
-    val root = IndexSwap.liveRoot(s, path)
-    val ca = load(s, root)
-    val v = newVecs.select(col("vec_id"), col("embedding"),
-      l2normNative(col("embedding")).as("nrm"))
-    ivfAssignedAt(s, v, ca, root)
-      .write.mode("append")
-      .partitionBy("cent_id").parquet(IndexSwap.sideAt(root, "vectors"))
-    autoRebalance.foreach(auditCellSkew(s, path, root, ca.cids.length, _))
-  }
+      autoRebalance: Option[Int] = None): Unit =
+    append(s, newVecs, path)((root, st) =>
+      autoRebalance.foreach(auditCellSkew(s, path, root, st().arrays.cids.length, _)))
 
   /** [[delete]] under the name existing callers use. */
   def deleteFromIvfIndex(s: SparkSession, ids: DataFrame, path: String,
@@ -2084,14 +2096,7 @@ object Similarity extends IndexRung {
 
   /** Re-cluster a persisted IVF index IN PLACE from its own lake — the
     * drift answer ([[appendToIvfIndex]]'s trigger calls this; a caller
-    * can also run it on a cadence).
-    *
-    * Seeds: the build-time stride rule needs a DENSE sample key, and an
-    * appended lake's id space is arbitrary — so the rebuild seeds are
-    * the sqrt(N) vectors with the lowest `xxhash64(vec_id)` (a global
-    * top-k: TakeOrderedAndProject, no sort materialization), which is
-    * deterministic, distribution-free over the ids, and adapts the cell
-    * count to the GROWN corpus instead of freezing the build-time k.
+    * can also run it on a cadence), re-seeded by [[reseed]].
     *
     * Crash safety AND reader safety are the versioned [[IndexSwap]]
     * commit: both new lakes write COMPLETELY into the hidden stage,
@@ -2101,37 +2106,9 @@ object Similarity extends IndexRung {
     * partial stage [[recover]] drops (run by append and
     * rebalance entry) — no state loses the only copy of the index. */
   def rebalance(s: SparkSession, path: String): Unit = {
-    recover(s, path)
-    val rebRoot = IndexSwap.liveRoot(s, path)
-    // Tombstones reclaim physically here (the fresh version dir
-    // carries no deletes side).
-    val rebDel = IndexSwap.tombstonesAt(s, rebRoot)
-    val v = rebDel.foldLeft(
-      s.read.parquet(IndexSwap.sideAt(rebRoot, "vectors"))
-        .select(col("vec_id"), col("embedding"), col("nrm"))
-    ) { (c, d) => c.join(d, Seq("vec_id"), "left_anti") }
-    val total = math.max(1L, ivfCellStats(s, path).values.sum -
-      rebDel.map(_.count()).getOrElse(0L))
-    val k = math.max(16L, math.ceil(math.sqrt(total.toDouble)).toLong)
-    // Seed collect is sqrt(N) rows — manifest-class up to ~1e12-vector
-    // lakes (1M rows x ~300 B); the centroid table it becomes is the
-    // same size every probe already broadcasts.
-    val seeds = v.orderBy(xxhash64(col("vec_id"), lit(1002)).asc, col("vec_id").asc)
-      .limit(k.toInt)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("ce"), col("nrm").as("cn"))
-    val localCents = s.createDataFrame(
-      java.util.Arrays.asList(seeds.collect(): _*), seeds.schema)
-    // Sides overlapped (round 18, guide §2.6).
-    Concurrently.run(Seq(
-      () => ivfAssignedDispatch(v, localCents, k).write.mode("overwrite")
-        .partitionBy("cent_id").parquet(IndexSwap.tmp(path, "vectors").toString),
-      () => localCents.coalesce(1).write.mode("overwrite")
-        .parquet(IndexSwap.tmp(path, "centroids").toString)))
-    IndexSwap.commit(s, path, sides)
+    val (v, cents) = reseed(s, IndexSwap.liveRoot(s, path))
+    stage(s, path, encode(s, v, cents) :+ ("centroids" -> cents.local))
   }
-
-  /** The IVF index's swappable sides (the [[IndexSwap]] protocol). */
-  val sides: Seq[String] = Seq("vectors", "centroids")
 
   /** Probe a persisted IVF index: route probes via the stored centroid
     * table, then scan ONLY the probed cells — `cent_id IN (...)` lands
@@ -2188,7 +2165,7 @@ object Similarity extends IndexRung {
       l2normNative(col("embedding")).as("nrm"))
     // One row past the route bound is enough for driverRouteFrame to fail loudly.
     val probeRows = probesRaw.limit((maxRoutedPairs / math.max(1, nProbe)).toInt + 1).collect()
-    val (localPc, cells) = driverRouteFrame(s, probeRows, h.state, nProbe, "probe_id",
+    val (localPc, cells) = driverRouteFrame(s, probeRows, h.state.arrays, nProbe, "probe_id",
       withVectors = true)
     // Tombstones (if any delete landed on this version) are anti-joined
     // out before the rescoring top-k — a deleted row can neither
@@ -2204,12 +2181,12 @@ object Similarity extends IndexRung {
     ivfScoreTail(candidates, localPc, k)
   }
 
-  /** The centroid table as flat driver arrays. */
-  type State = CentArrays
+  /** The centroid table. */
+  type State = Cents
 
   /** The √N-row centroid side, collected. */
   protected def load(s: SparkSession, root: String): State =
-    collectCents(s.read.parquet(IndexSwap.sideAt(root, "centroids")))
+    centsOf(s, s.read.parquet(IndexSwap.sideAt(root, "centroids")))
 
   /** Cell-count bound past which [[cellScopedRead]] falls back to the
     * whole-lake listing: the scoped form's win is O(nProbe) listing vs

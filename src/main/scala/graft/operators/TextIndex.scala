@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Concurrently, Tables}
+import graft.Tables
 import graft.functions.TextFns._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -61,49 +61,34 @@ object TextIndex extends IndexRung {
   private def tokensOf(corpus: DataFrame): DataFrame =
     corpus.select(col("doc_id"), explode(tokens(col("text"))).as("term"))
 
-  /** Stage all three sides (shared by build and rebalance — one
-    * definition of the layout). */
-  private def stageSides(s: SparkSession, path: String,
-      corpus: DataFrame): Unit = {
-    val tk = tokensOf(corpus).localCheckpoint(true) // feeds all three sides
-    // Independent staging writes overlapped (round 18, guide §2.6).
-    Concurrently.run(Seq(
-      () => tk.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .repartitionByRange(col("term")).sortWithinPartitions("term")
-        .write.mode("overwrite").parquet(IndexSwap.tmp(path, "postings").toString),
-      () => tk.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-        .repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(IndexSwap.tmp(path, "doclen").toString),
-      () => {
-        val (nDocs, nTokens) = corpusStats(corpus)
-        statsDelta(s, nDocs, nTokens).write.mode("overwrite")
-          .parquet(IndexSwap.tmp(path, "stats").toString)
-      }))
+  /** Postings sorted by term, doclen by doc_id; stats deltas as one
+    * file each. */
+  protected val layouts: Map[String, IndexSwap.Layout] = Map(
+    "postings" -> IndexSwap.Layout.sorted("term"),
+    "doclen" -> IndexSwap.Layout.sorted("doc_id"),
+    "stats" -> IndexSwap.Layout.single)
+
+  /** Tokenize (doc_id, text) rows into all three sides: their postings,
+    * their doc lengths and ONE additive stats delta (n_docs, n_tokens).
+    * The delta is one aggregate over the rows: sum(size(tokens)) counts
+    * exactly what exploding `tokensOf` yields (explode drops empty
+    * arrays and NULLs), and greatest(., 0) makes the NULL-text
+    * accounting conf-independent (round-17 ADVICE): under ANSI
+    * size(NULL) is NULL (sum skips it), but legacy sizeOfNull returns
+    * -1, which would silently skew the BM25 corpus total. No stored
+    * state is read. */
+  protected def encode(s: SparkSession, docs: DataFrame,
+      st: => State): Seq[(String, DataFrame)] = {
+    val tk = tokensOf(docs).localCheckpoint(true) // feeds postings and doclen
+    Seq("postings" -> tk.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")),
+      "doclen" -> tk.groupBy("doc_id").agg(count(lit(1)).as("dl")),
+      "stats" -> docs.agg(count(lit(1)).as("n_docs"),
+        coalesce(sum(greatest(size(tokens(col("text"))), lit(0))), lit(0L)).as("n_tokens")))
   }
 
-  /** (n_docs, n_tokens) of a corpus in ONE pass/job (optimization round
-    * 17: the doc count and the token count each ran their own action —
-    * two scans where one agg answers both). sum(size(tokens)) counts
-    * exactly what exploding `tokensOf` yields: explode drops empty
-    * arrays and NULLs. greatest(., 0) makes the NULL-text accounting
-    * conf-independent (round-17 ADVICE): under ANSI size(NULL) is NULL
-    * (sum skips it), but legacy sizeOfNull returns -1, which would
-    * silently skew the BM25 corpus total — greatest clamps both to 0. */
-  private def corpusStats(corpus: DataFrame): (Long, Long) = {
-    val r = corpus.agg(count(lit(1)).as("n"),
-      coalesce(sum(greatest(size(tokens(col("text"))), lit(0))), lit(0L)).as("t")).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
-  private def statsDelta(s: SparkSession, nDocs: Long, nTokens: Long): DataFrame = {
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(org.apache.spark.sql.Row(nDocs, nTokens))
-    s.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n_docs",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("n_tokens",
-        org.apache.spark.sql.types.LongType, false))))
-  }
+  /** A one-row stats side holding the given totals. */
+  private def statsRow(s: SparkSession, nDocs: Long, nTokens: Long): DataFrame =
+    s.range(1).select(lit(nDocs).as("n_docs"), lit(nTokens).as("n_tokens"))
 
   /** Build from the corpus at `dir` — staged writes, atomic commit. */
   def buildTextIndex(s: SparkSession, dir: String, path: String): Unit =
@@ -112,37 +97,22 @@ object TextIndex extends IndexRung {
 
   /** Build from an arbitrary (doc_id, text) corpus frame. */
   def buildTextIndexFrom(s: SparkSession, corpus: DataFrame,
-      path: String): Unit = {
-    recover(s, path)
-    stageSides(s, path, corpus)
-    IndexSwap.commit(s, path, sides)
-  }
+      path: String): Unit =
+    stage(s, path, encode(s, corpus, (0L, 0L))) // the encoder reads no stored state
 
   /** Append NEW documents: O(new) — postings/doclen rows for the new
     * docs plus ONE stats delta row; nothing existing is read or
     * rewritten. doc_ids are permanent identities (the family
     * contract): re-appending a live or tombstoned id is a caller
-    * error that would double-count df. */
+    * error that would double-count df. Measured fragmentation trigger
+    * (the BinarySig/Matryoshka pattern): appends fragment the
+    * term-sorted point-read layout — past the file-count threshold the
+    * deferred marker drops and the append returns at append cost;
+    * [[maintain]] pays. */
   def appendToTextIndex(s: SparkSession, newDocs: DataFrame,
-      path: String, autoCompact: Option[Int] = None): Unit = {
-    recover(s, path)
-    val root = IndexSwap.liveRoot(s, path)
-    val tk = tokensOf(newDocs).localCheckpoint(true)
-    tk.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .repartitionByRange(col("term")).sortWithinPartitions("term")
-      .write.mode("append").parquet(IndexSwap.sideAt(root, "postings"))
-    tk.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      .repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")
-      .write.mode("append").parquet(IndexSwap.sideAt(root, "doclen"))
-    val (nNew, tNew) = corpusStats(newDocs)
-    statsDelta(s, nNew, tNew).write.mode("append")
-      .parquet(IndexSwap.sideAt(root, "stats"))
-    // Measured fragmentation trigger (the BinarySig/Matryoshka
-    // pattern): appends fragment the term-sorted point-read layout —
-    // past the file-count threshold the deferred marker drops and the
-    // append returns at append cost; [[maintain]] pays.
-    autoCompact.foreach(auditFileCount(s, path, root, "postings", _))
-  }
+      path: String, autoCompact: Option[Int] = None): Unit =
+    append(s, newDocs, path)((root, _) =>
+      autoCompact.foreach(auditFileCount(s, path, root, "postings", _)))
 
   /** [[delete]] under the name existing callers use: doc_id tombstones,
     * immediate candidate exclusion; df and the corpus stats stay the
@@ -164,32 +134,22 @@ object TextIndex extends IndexRung {
     * permanent-identity contract — deleting a never-indexed id is a
     * caller error here exactly as re-appending one is). */
   def rebalance(s: SparkSession, path: String): Unit = {
-    recover(s, path)
     val root = IndexSwap.liveRoot(s, path)
     def minusTombs(side: String): DataFrame =
       IndexSwap.exceptTombstones(s, root,
         s.read.parquet(IndexSwap.sideAt(root, side))
           .withColumnRenamed("doc_id", "vec_id"))
         .withColumnRenamed("vec_id", "doc_id")
-    minusTombs("postings")
-      .repartitionByRange(col("term")).sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(IndexSwap.tmp(path, "postings").toString)
-    val dlLive = minusTombs("doclen").localCheckpoint(true)
-    dlLive.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(IndexSwap.tmp(path, "doclen").toString)
-    val stored = s.read.parquet(IndexSwap.sideAt(root, "stats"))
-      .agg(sum(col("n_docs")).as("n"), sum(col("n_tokens")).as("t")).head()
-    val dead = IndexSwap.tombstonesAt(s, root) match {
+    val (n, t) = load(s, root)
+    val (deadDocs, deadTokens) = IndexSwap.tombstonesAt(s, root) match {
       case None => (0L, 0L)
       case Some(tombs) =>
-        val deadTokens = s.read.parquet(IndexSwap.sideAt(root, "doclen"))
+        (tombs.count(), s.read.parquet(IndexSwap.sideAt(root, "doclen"))
           .join(tombs.withColumnRenamed("vec_id", "doc_id"), Seq("doc_id"), "left_semi")
-          .agg(coalesce(sum(col("dl")), lit(0L))).head().getLong(0)
-        (tombs.count(), deadTokens)
+          .agg(coalesce(sum(col("dl")), lit(0L))).head().getLong(0))
     }
-    statsDelta(s, stored.getLong(0) - dead._1, stored.getLong(1) - dead._2)
-      .write.mode("overwrite").parquet(IndexSwap.tmp(path, "stats").toString)
-    IndexSwap.commit(s, path, sides)
+    stage(s, path, Seq("postings" -> minusTombs("postings"),
+      "doclen" -> minusTombs("doclen"), "stats" -> statsRow(s, n - deadDocs, t - deadTokens)))
   }
 
   /** Probe with the declared fixture query set (doc_id < 5) — the

@@ -21,11 +21,16 @@ class IndexRungSpec extends AnyFunSuite {
     * job count of one per-call probe (collected) when each rung still
     * had its own handle class and the IVF-tier rungs routed per call
     * with a Spark job. `deferred` is false for IVF, whose due reclaim
-    * runs inline. */
+    * runs inline. `append` is the rung's `appendTo*Index`;
+    * `appendJobsBefore` is the Spark job count of appending 5 rows, and
+    * `appendPassesBefore` how many times that append evaluated its new
+    * rows, when each rung still wrote its own append sides. */
   final case class Rung(name: String, rung: IndexRung, id: String,
       corpus: () => DataFrame, build: String => Unit,
       probe: (DataFrame, String) => DataFrame, serve: String => DataFrame => DataFrame,
-      jobsBefore: Int, deferred: Boolean = true)
+      append: (DataFrame, String) => Unit,
+      jobsBefore: Int, appendJobsBefore: Int, appendPassesBefore: Int,
+      deferred: Boolean = true)
 
   private def vecs = Tables.embeddings(spark, sf).select("vec_id", "embedding")
   private def docs = Tables.documents(spark, sf).select("doc_id", "text")
@@ -35,37 +40,44 @@ class IndexRungSpec extends AnyFunSuite {
       Similarity.buildIvfIndex(spark, sf, 16, _),
       (q, p) => Similarity.probeIvfIndexWith(spark, q, p, 4, 10),
       p => { val h = Similarity.open(spark, p); Similarity.probeWith(spark, h, _, 4, 10) },
-      jobsBefore = 10, deferred = false),
+      Similarity.appendToIvfIndex(spark, _, _),
+      jobsBefore = 10, appendJobsBefore = 3, appendPassesBefore = 1, deferred = false),
     Rung("SQ8", SQ8, "vec_id", () => vecs,
       SQ8.buildSq8Index(spark, sf, _),
       (q, p) => SQ8.probeSq8IndexWith(spark, q, p, 10),
       p => { val h = SQ8.open(spark, p); SQ8.probeWith(spark, h, _, 10) },
-      jobsBefore = 16),
+      SQ8.appendToSq8Index(spark, _, _),
+      jobsBefore = 16, appendJobsBefore = 10, appendPassesBefore = 4),
     Rung("IvfSq8", IvfSq8, "vec_id", () => vecs,
       IvfSq8.buildIvfSq8Index(spark, sf, 16, _),
       (q, p) => IvfSq8.probeIvfSq8IndexWith(spark, q, p, 4, 10),
       p => { val h = IvfSq8.open(spark, p); IvfSq8.probeWith(spark, h, _, 4, 10) },
-      jobsBefore = 21),
+      IvfSq8.appendToIvfSq8Index(spark, _, _),
+      jobsBefore = 21, appendJobsBefore = 12, appendPassesBefore = 1),
     Rung("PQ", PQ, "vec_id", () => vecs,
       PQ.buildPqIndex(spark, sf, _),
       (q, p) => PQ.probePqIndexWith(spark, q, p, 4, 10),
       p => { val h = PQ.open(spark, p); PQ.probeWith(spark, h, _, 4, 10) },
-      jobsBefore = 22),
+      PQ.appendToPqIndex(spark, _, _),
+      jobsBefore = 22, appendJobsBefore = 12, appendPassesBefore = 4),
     Rung("BinarySig", BinarySig, "vec_id", () => vecs,
       BinarySig.buildBinIndex(spark, sf, _),
       (q, p) => BinarySig.probeBinIndexWith(spark, q, p, 10),
       p => { val h = BinarySig.open(spark, p); BinarySig.probeWith(spark, h, _, 10) },
-      jobsBefore = 12),
+      BinarySig.appendToBinIndex(spark, _, _),
+      jobsBefore = 12, appendJobsBefore = 6, appendPassesBefore = 4),
     Rung("Matryoshka", Matryoshka, "vec_id", () => vecs,
       Matryoshka.buildMatryoshkaIndex(spark, sf, 16, _),
       (q, p) => Matryoshka.probeMatryoshkaIndexWith(spark, q, p, 10),
       p => { val h = Matryoshka.open(spark, p); Matryoshka.probeWith(spark, h, _, 10) },
-      jobsBefore = 16),
+      Matryoshka.appendToMatryoshkaIndex(spark, _, _),
+      jobsBefore = 16, appendJobsBefore = 10, appendPassesBefore = 4),
     Rung("TextIndex", TextIndex, "doc_id", () => docs,
       TextIndex.buildTextIndex(spark, sf, _),
       (q, p) => TextIndex.probeTextIndexWith(spark, q, p, 10),
       p => { val h = TextIndex.open(spark, p); TextIndex.probeWith(spark, h, _, 10) },
-      jobsBefore = 18))
+      TextIndex.appendToTextIndex(spark, _, _),
+      jobsBefore = 18, appendJobsBefore = 12, appendPassesBefore = 1))
 
   /** A private copy of the rung's once-per-session build. */
   private def fresh(r: Rung): String =
@@ -86,6 +98,10 @@ class IndexRungSpec extends AnyFunSuite {
     try { body; GraftSqlBridge.drainListeners(sc) } finally sc.removeSparkListener(counter)
     started.get
   }
+
+  /** (side -> n_rows) of the live version. */
+  private def described(path: String, r: Rung): Map[String, Long] =
+    r.rung.describe(spark, path).collect().map(x => x.getString(0) -> x.getLong(1)).toMap
 
   private def stageDir(path: String): java.io.File = new java.io.File(s"$path/.stage")
   private def marker(path: String): java.io.File = new java.io.File(s"$path/_rebalance_due")
@@ -173,6 +189,43 @@ class IndexRungSpec extends AnyFunSuite {
       assert(IndexSwap.liveVersion(spark, path) == v0 + 1, "no rebuild committed")
       assert(IndexSwap.tombstonesAt(spark, IndexSwap.liveRoot(spark, path)).isEmpty,
         "the rebuild kept the tombstones")
+    }
+
+    test(s"${r.name}: append grows each appended side by the new rows and a probe finds the copies, in at most ${r.appendJobsBefore} Spark jobs and ${r.appendPassesBefore} passes over the rows") {
+      val path = fresh(r)
+      val before = described(path, r)
+      val originals = probes(r).filter(col(r.id) < 5)
+      val offset = 1000000L
+      // Every evaluation of a new row counts once: an encoder that
+      // stopped materializing a frame several sides share re-reads
+      // its input.
+      val evaluated = spark.sparkContext.longAccumulator
+      val tap = udf { (id: Long) => evaluated.add(1); id }
+      val copies = originals.withColumn(r.id, tap(col(r.id)) + offset)
+      // What each side gains: one row per new vector, for the text rung
+      // one doclen row per document, its originals' postings again, and
+      // one additive stats row.
+      val gains: Map[String, Long] =
+        if (r.name == "TextIndex")
+          Map("doclen" -> 5L, "stats" -> 1L, "postings" ->
+            spark.read.parquet(IndexSwap.sideAt(IndexSwap.liveRoot(spark, path), "postings"))
+              .filter(col("doc_id") < 5).count())
+        else r.rung.sides.filter(Set("vectors", "codes", "prefix")).map(_ -> 5L).toMap
+      val jobs = jobsOf(r.append(copies, path))
+      val after = described(path, r)
+      assert(after.keySet == before.keySet, s"append changed the described sides: $after")
+      before.foreach { case (side, n) =>
+        assert(after(side) - n == gains.getOrElse(side, 0L),
+          s"$side grew from $n to ${after(side)}, expected +${gains.getOrElse(side, 0L)}")
+      }
+      val hits = r.probe(originals, path)
+      val qid = hits.columns.head // qid, or probe_id for IVF
+      val found = hits.filter(col(r.id) === col(qid) + offset).select(qid)
+        .collect().map(_.getLong(0)).toSet
+      assert(found == (0L until 5L).toSet, s"probes found the copies of $found only")
+      assert(jobs <= r.appendJobsBefore, s"append ran $jobs jobs")
+      assert(evaluated.value <= 5L * r.appendPassesBefore,
+        s"append evaluated its 5 new rows ${evaluated.value} times")
     }
   }
 }
