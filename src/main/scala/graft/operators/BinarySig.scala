@@ -124,7 +124,7 @@ object BinarySig extends IndexRung {
 
   /** Sign (vec_id, embedding) rows at the stored dim: the cold rows and
     * their signatures. */
-  protected def encode(s: SparkSession, rows: DataFrame,
+  protected def encode(rows: DataFrame,
       st: => State): Seq[(String, DataFrame)] = {
     val v = IndexSwap.normed(rows)
     Seq("vectors" -> v,
@@ -146,7 +146,7 @@ object BinarySig extends IndexRung {
     * both sides, same atomic commit. */
   def buildBinIndexFrom(s: SparkSession, corpus: DataFrame, path: String,
       dim: Int): Unit =
-    stage(s, path, encode(s, corpus, (dim != 64, dim)))
+    stage(s, path, encode(corpus, (dim != 64, dim)))
 
   /** The stored corpus dimensionality, from one cold-side row (the
     * multi-word form's rebalance and append re-encode against it; one
@@ -176,7 +176,7 @@ object BinarySig extends IndexRung {
     * under the [[IndexSwap]] two-phase swap. */
   def rebalance(s: SparkSession, path: String): Unit = {
     val root = IndexSwap.liveRoot(s, path)
-    stage(s, path, encode(s, IndexSwap.liveVectors(s, root), load(s, root)))
+    stage(s, path, encode(IndexSwap.liveVectors(s, root), load(s, root)))
   }
 
   /** [[delete]] under the name existing callers use. */

@@ -439,7 +439,7 @@ trait IndexRung {
     * surfaces, where an orphaned code row would be shortlisted and then
     * silently dropped by the refine join. `st` is by-name, so a rung
     * whose encoder needs no stored state never loads it. */
-  protected def encode(s: SparkSession, rows: DataFrame, st: => State): Seq[(String, DataFrame)]
+  protected def encode(rows: DataFrame, st: => State): Seq[(String, DataFrame)]
 
   /** Write a build's or a rebalance's sides — the encoded data sides
     * plus the state sides — into the stage dir, overlapped (independent
@@ -467,7 +467,7 @@ trait IndexRung {
     recover(s, path)
     val root = IndexSwap.liveRoot(s, path)
     lazy val st = load(s, root)
-    encode(s, rows, st).foreach { case (side, df) =>
+    encode(rows, st).foreach { case (side, df) =>
       layouts(side).write(df, "append", IndexSwap.sideAt(root, side))
     }
     audit(root, () => st)

@@ -74,7 +74,7 @@ object IvfSq8 extends IndexRung {
 
   /** Assign (vec_id, embedding) rows against the stored centroids and
     * encode them against the stored envelope. */
-  protected def encode(s: SparkSession, rows: DataFrame,
+  protected def encode(rows: DataFrame,
       st: => State): Seq[(String, DataFrame)] = {
     val (cents, mna, spa) = st
     cellSides(Similarity.assign(IndexSwap.normed(rows), cents)

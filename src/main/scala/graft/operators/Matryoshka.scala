@@ -74,7 +74,7 @@ object Matryoshka extends IndexRung {
 
   /** Slice (vec_id, embedding) rows at the stored widths: the cold rows
     * and their prefixes with the prefix norms. */
-  protected def encode(s: SparkSession, rows: DataFrame,
+  protected def encode(rows: DataFrame,
       st: => State): Seq[(String, DataFrame)] = {
     val (fullDim, prefix) = st
     val v = IndexSwap.normed(rows)
@@ -98,7 +98,7 @@ object Matryoshka extends IndexRung {
     require(prefix >= 1 && prefix < fullDim,
       s"Matryoshka: prefix $prefix must be in [1, $fullDim) — a prefix at the" +
         " full width is the exact scan, not an index")
-    stage(s, path, encode(s, corpus, (fullDim, prefix)))
+    stage(s, path, encode(corpus, (fullDim, prefix)))
   }
 
   /** The stored full dimensionality, from one cold-side row. */
@@ -129,7 +129,7 @@ object Matryoshka extends IndexRung {
     * [[IndexSwap]] two-phase swap. */
   def rebalance(s: SparkSession, path: String): Unit = {
     val root = IndexSwap.liveRoot(s, path)
-    stage(s, path, encode(s, IndexSwap.liveVectors(s, root), load(s, root)))
+    stage(s, path, encode(IndexSwap.liveVectors(s, root), load(s, root)))
   }
 
   /** [[delete]] under the name existing callers use. */

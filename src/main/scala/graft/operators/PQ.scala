@@ -1410,7 +1410,7 @@ object PQ extends IndexRung {
   /** Assign (vec_id, embedding) rows against the stored coarse
     * centroids and encode them in the index's code space against the
     * stored codebook (the realized sizing derives from it). */
-  protected def encode(s: SparkSession, rows: DataFrame,
+  protected def encode(rows: DataFrame,
       st: => State): Seq[(String, DataFrame)] = {
     val pq = st
     val v = IndexSwap.normed(rows)
@@ -1563,20 +1563,23 @@ object PQ extends IndexRung {
     * for a full rebuild cycle (the reader-grace contract). */
   def rebalance(s: SparkSession, path: String): Unit = {
     val root = IndexSwap.liveRoot(s, path)
-    val st = load(s, root)
+    // Only the meta row and the rotation: the centroids re-seed and the
+    // codebook retrains, so the stored ones are never read.
+    val (residual, p) = indexMetaAt(s, root)
+    val rotation = rotationAt(s, root)
     val (v, cents) = Similarity.reseed(s, root)
     val asg = assignCells(v, cents, useTwoTier(cents))
     // The stored rotation and encoding are PRESERVED across rebuilds
     // (model state — re-learning or flipping is a buildPqIndex
     // decision): the grown lake re-encodes through them.
-    val rve6 = codeSpace(v, asg, cents.local, st.residual, st.rotation)
+    val rve6 = codeSpace(v, asg, cents.local, residual, rotation)
     // Sizing is preserved from the stored meta; the REALIZED K of the
     // retrained codebook can differ (hashSeedVecs over a shrunk lake),
     // so the rewritten meta derives from the retrained rows.
-    val cb = cbPivot(lloydStepNative(rve6, hashSeedVecs(rve6, st.params.k), st.params))
+    val cb = cbPivot(lloydStepNative(rve6, hashSeedVecs(rve6, p.k), p))
       .localCheckpoint(true)
     stage(s, path, cellSides(v, asg, codesWith(rve6, cb)) ++
-      stateSides(s, cb, cents.local, st.residual, st.rotation))
+      stateSides(s, cb, cents.local, residual, rotation))
   }
 
   /** Probe a persisted IVFADC index: route each probe to its `nProbe`
@@ -1637,13 +1640,11 @@ object PQ extends IndexRung {
   /** The meta row, both metadata tables collected, and the rotation. */
   protected def load(s: SparkSession, root: String): State = {
     val (residual, p) = indexMetaAt(s, root)
-    def local(side: String): DataFrame = {
-      val df = s.read.parquet(IndexSwap.sideAt(root, side))
-      s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-    }
-    val cents = local("centroids")
-    PqState(residual, p, Similarity.Cents(cents, Similarity.collectCents(cents)),
-      local("codebooks"), rotationAt(s, root))
+    val cb = s.read.parquet(IndexSwap.sideAt(root, "codebooks"))
+    PqState(residual, p,
+      Similarity.centsOf(s, s.read.parquet(IndexSwap.sideAt(root, "centroids"))),
+      s.createDataFrame(java.util.Arrays.asList(cb.collect(): _*), cb.schema),
+      rotationAt(s, root))
   }
 
   /** The probe pipeline against a handle: every side reads from its

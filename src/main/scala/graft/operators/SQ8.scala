@@ -128,7 +128,7 @@ object SQ8 extends IndexRung {
 
   /** Quantize (vec_id, embedding) rows against the envelope: the cold
     * rows and their byte codes. */
-  protected def encode(s: SparkSession, rows: DataFrame,
+  protected def encode(rows: DataFrame,
       st: => State): Seq[(String, DataFrame)] = {
     val (mna, spa) = st
     val v = IndexSwap.normed(rows)
@@ -139,7 +139,7 @@ object SQ8 extends IndexRung {
     * body of build and rebalance. */
   private def rebuild(s: SparkSession, path: String, v: DataFrame): Unit = {
     val (mna, spa) = collectStats(statsOf(ve6Of(v)))
-    stage(s, path, encode(s, v, (mna, spa)) :+ ("stats" -> statsFrame(s, mna, spa)))
+    stage(s, path, encode(v, (mna, spa)) :+ ("stats" -> statsFrame(s, mna, spa)))
   }
 
   /** Build the persisted SQ8 index from the corpus at `dir` — staged

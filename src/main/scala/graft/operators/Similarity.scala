@@ -2017,7 +2017,7 @@ object Similarity extends IndexRung {
     "centroids" -> IndexSwap.Layout.single)
 
   /** Assign (vec_id, embedding) rows to the centroids: the one data side. */
-  protected def encode(s: SparkSession, rows: DataFrame,
+  protected def encode(rows: DataFrame,
       st: => State): Seq[(String, DataFrame)] =
     Seq("vectors" -> assign(IndexSwap.normed(rows), st))
 
@@ -2037,7 +2037,7 @@ object Similarity extends IndexRung {
       pred: Column = lit(true), sampleKey: Column = col("vec_id")): Unit = {
     val v = vecs(s, dir).filter(pred)
     val cents = centsOf(s, ivfCents(v, nCentroids, sampleKey))
-    stage(s, path, encode(s, v, cents) :+ ("centroids" -> cents.local))
+    stage(s, path, encode(v, cents) :+ ("centroids" -> cents.local))
   }
 
   /** Assign NEW vectors against the STORED centroids and append them to
@@ -2107,7 +2107,7 @@ object Similarity extends IndexRung {
     * rebalance entry) — no state loses the only copy of the index. */
   def rebalance(s: SparkSession, path: String): Unit = {
     val (v, cents) = reseed(s, IndexSwap.liveRoot(s, path))
-    stage(s, path, encode(s, v, cents) :+ ("centroids" -> cents.local))
+    stage(s, path, encode(v, cents) :+ ("centroids" -> cents.local))
   }
 
   /** Probe a persisted IVF index: route probes via the stored centroid

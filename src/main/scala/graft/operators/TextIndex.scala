@@ -77,7 +77,7 @@ object TextIndex extends IndexRung {
     * size(NULL) is NULL (sum skips it), but legacy sizeOfNull returns
     * -1, which would silently skew the BM25 corpus total. No stored
     * state is read. */
-  protected def encode(s: SparkSession, docs: DataFrame,
+  protected def encode(docs: DataFrame,
       st: => State): Seq[(String, DataFrame)] = {
     val tk = tokensOf(docs).localCheckpoint(true) // feeds postings and doclen
     Seq("postings" -> tk.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")),
@@ -98,7 +98,7 @@ object TextIndex extends IndexRung {
   /** Build from an arbitrary (doc_id, text) corpus frame. */
   def buildTextIndexFrom(s: SparkSession, corpus: DataFrame,
       path: String): Unit =
-    stage(s, path, encode(s, corpus, (0L, 0L))) // the encoder reads no stored state
+    stage(s, path, encode(corpus, (0L, 0L))) // the encoder reads no stored state
 
   /** Append NEW documents: O(new) — postings/doclen rows for the new
     * docs plus ONE stats delta row; nothing existing is read or
