@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.TextFns._
+import graft.sources.Parquet
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
@@ -215,7 +216,7 @@ object Battery {
     }
     val (_, zSec) = timed(ZoneMap.writeStats(s, lake, stats, Seq("o_orderkey")))
     // a key that exists in year=1997 (derived, not scanned-for)
-    val probeKey = s.read.parquet(s"$lake/year=1997").select(col("o_custkey"))
+    val probeKey = Parquet.read(s, s"$lake/year=1997").select(col("o_custkey"))
       .limit(1).head.getLong(0)
     val (pr, pSec) = timed {
       val r = ZoneMap.prunedScanThreeTier(s, lake, stats,
@@ -226,7 +227,7 @@ object Battery {
     println(f"""{"battery":"bloom","files":${pr._1.nFilesTotal},"part_survivors":${pr._1.nPartFiles},"zone_survivors":${pr._1.nZoneFiles},"bloom_survivors":${pr._1.nFilesRead},"rows":${pr._2},"fanout_engaged":$fanout,"probe_sec":$pSec%.2f,"write_sec":$wSec%.1f,"stats_sec":$zSec%.1f}""")
     require(fanout, s"zone survivors ${pr._1.nZoneFiles} <= 64: the fan-out path never engaged")
     // same candidate set, driver walk vs executor fan-out, timed head to head
-    val cand = s.read.parquet(stats)
+    val cand = Parquet.read(s, stats)
       .filter(col("file").contains("/year=1997/"))
       .select("file").collect().map(_.getString(0)).toSeq
     val (drv, dSec) = timed(BloomLake.probeLongWhere(s, cand, "o_custkey", probeKey, driverMax = Int.MaxValue))
@@ -296,8 +297,8 @@ object Battery {
       .withColumn("doc_id", col("doc_id") + n) // new docs, ids beyond the lake
       .write.parquet(s"$root/batch.parquet")
 
-    val lake = s.read.parquet(s"$root/documents.parquet")
-    val batch = s.read.parquet(s"$root/batch.parquet")
+    val lake = Parquet.read(s, s"$root/documents.parquet")
+    val batch = Parquet.read(s, s"$root/batch.parquet")
     def fpMap(df: DataFrame): Map[String, (Long, Long, Long)] =
       Curation.corpusFingerprint(df).collect()
         .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
@@ -364,7 +365,7 @@ object Battery {
     // cost is isolated (the rescore output is Theta(n^1.5) by the IVF
     // law and would swamp the measurement).
     import graft.functions.VectorExprs.l2normNative
-    val cents = s.read.parquet(operators.IndexSwap.side(s, path, "centroids"))
+    val cents = Parquet.read(s, operators.IndexSwap.side(s, path, "centroids"))
     val pv = probes.select(col("vec_id"), col("embedding"),
       l2normNative(col("embedding")).as("nrm"))
     val (fr, flatSec) = timed(Similarity.ivfRouteFlat(pv, cents, 4).count())
@@ -439,7 +440,7 @@ object Battery {
       cs.map(c => dirBytes(new java.io.File(s"${operators.IndexSwap.side(s, path, sub)}/cent_id=$c"))).sum
     locally {
       // The exact arm over the SAME probed cells as the PQ probe.
-      val cents = s.read.parquet(operators.IndexSwap.side(s, path, "centroids"))
+      val cents = Parquet.read(s, operators.IndexSwap.side(s, path, "centroids"))
       val probesRaw = Tables.embeddings(s, root).filter(col("vec_id") < 10)
         .select(col("vec_id"), col("embedding"), l2normNative(col("embedding")).as("nrm"))
       val probeRows = probesRaw.collect()
@@ -449,7 +450,7 @@ object Battery {
       def routedCells(np: Int): Seq[Long] =
         operators.Similarity.driverRoutePairs(probeRows, ca, np).map(_._2).distinct.toSeq
       def exactArm(cellFilter: Option[Seq[Long]]): Array[(Long, Long)] = {
-        val cold0 = s.read.parquet(operators.IndexSwap.side(s, path, "vectors"))
+        val cold0 = Parquet.read(s, operators.IndexSwap.side(s, path, "vectors"))
         val cold = cellFilter.fold(cold0)(cs => cold0.filter(col("cent_id").isin(cs: _*)))
           .select(col("vec_id"), col("embedding").as("de"), col("nrm").as("dn"))
         val sc = e6(cosine(dotNative(col("qe"), col("de")), col("qn"), col("dn")))
@@ -755,7 +756,7 @@ object Battery {
       .select("vec_id", "embedding")
     def cellFiles(sub: String, cs: Seq[Long]): Long =
       cs.map(c => dirBytes(new java.io.File(s"${operators.IndexSwap.side(s, path, sub)}/cent_id=$c"))).sum
-    val cents = s.read.parquet(operators.IndexSwap.side(s, path, "centroids"))
+    val cents = Parquet.read(s, operators.IndexSwap.side(s, path, "centroids"))
     for (np <- Seq(1, 2, 4, 8, 16)) {
       val probesRaw = Tables.embeddings(s, root).filter(col("vec_id") < 10)
         .select(col("vec_id"), col("embedding"),
@@ -920,7 +921,7 @@ object Battery {
       val r0 = operators.IndexSwap.liveRoot(s, path)
       val codesBytes = dirBytes(new java.io.File(s"$r0/codes"))
       val vecBytes = dirBytes(new java.io.File(s"$r0/vectors"))
-      val cents = s.read.parquet(s"$r0/centroids")
+      val cents = Parquet.read(s, s"$r0/centroids")
       val probesN = Tables.embeddings(s, root).filter(col("vec_id") < 10)
         .select(col("vec_id"), col("embedding"),
           graft.functions.VectorExprs.l2normNative(col("embedding")).as("nrm"))
@@ -1019,7 +1020,7 @@ object Battery {
       def lb(p: String) = dirBytes(new java.io.File(p.stripPrefix("file:")))
       val codesBytes = lb(s"$r0/codes")
       val vecBytes = lb(s"$r0/vectors")
-      val cents = s.read.parquet(s"$r0/centroids")
+      val cents = Parquet.read(s, s"$r0/centroids")
       val probesN = probes.withColumn("nrm",
         graft.functions.VectorExprs.l2normNative(col("embedding")))
       val cells = operators.Similarity.ivfRouteFlat(probesN, cents, 4)
@@ -1100,12 +1101,12 @@ object Battery {
       // definition; an inline replica here could drift from the plan
       // the verb actually runs).
       val (mna, spa) = SQ8.collectStats(
-        s.read.parquet(IndexSwap.sideAt(r0, "stats")))
+        Parquet.read(s, IndexSwap.sideAt(r0, "stats")))
       val pq8 = SQ8.ve6Of(probesDf)
         .select(col("vec_id").as("qid"),
           SQ8.q8Col(mna, spa).as("pq8"))
       val spansLit = array(spa.map(lit(_)): _*)
-      val surv = s.read.parquet(IndexSwap.sideAt(r0, "codes"))
+      val surv = Parquet.read(s, IndexSwap.sideAt(r0, "codes"))
         .join(broadcast(pq8), expr("true"))
         .filter(col("vec_id") =!= col("qid"))
         .filter(intSqLowerBoundNative(col("q8"), col("pq8"), spansLit) <= lit(t2))
@@ -1115,7 +1116,7 @@ object Battery {
         .select(col("vec_id").as("qid"), transform(col("embedding"),
           x => floor(x.cast("double") * 1000000).cast("long")).as("pe6"))
       val (bruteRows, bruteSec) = timed(
-        s.read.parquet(IndexSwap.sideAt(r0, "vectors"))
+        Parquet.read(s, IndexSwap.sideAt(r0, "vectors"))
           .select(col("vec_id"), transform(col("embedding"),
             x => floor(x.cast("double") * 1000000).cast("long")).as("de6"))
           .join(broadcast(pe6), expr("true"))
@@ -1495,7 +1496,7 @@ object Battery {
         val added = (listing(lake) -- preLake).toSeq.sorted
         val leaked =
           if (added.isEmpty) 0L
-          else s.read.parquet(added: _*).filter(col("doc_id").isin(plantedIds: _*)).count()
+          else Parquet.read(s, added: _*).filter(col("doc_id").isin(plantedIds: _*)).count()
         require(leaked == 0L, s"$tag: $leaked planted dups reached the lake")
         println(f"""{"battery":"ingest","form":"$tag","lake_docs":$n,"batch_docs":$batchN,"sec":$sec%.2f,"input_mb":${bytesRead.get / 1e6}%.1f,"exact_files":"$exS/$exT","band_files":"$bdS/$bdT","appended":${stats.appended}}""")
         // undo the append so the next form sees the identical lake
@@ -1611,7 +1612,7 @@ object Battery {
       val root = java.nio.file.Files.createTempDirectory(s"graft_battery_pair_$n").toString
       corpus(s, n, nearDups = true)
         .write.parquet(s"$root/documents.parquet")
-      val docs = s.read.parquet(s"$root/documents.parquet")
+      val docs = Parquet.read(s, s"$root/documents.parquet")
 
       // qn03 candidate volume: identical-set collapse, df-ascending vocab
       // ranks, prefix for J >= 3/5 — the registered pipeline's own head.

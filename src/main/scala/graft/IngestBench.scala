@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{DiscogsLake, DiscogsXml}
+import graft.sources.{DiscogsLake, DiscogsXml, Parquet}
 
 /** Ingest-throughput measurement: XML dump -> typed parse -> partitioned
   * parquet lake, end to end. Prints one JSON line with rows/sec and
@@ -46,7 +46,7 @@ object IngestBench {
     val df = DiscogsXml.read(spark, path, entity)
     DiscogsLake.writeDump(df, out, entity, 2024, "03")
     val secs = (System.nanoTime() - t0) / 1e9
-    val rows = spark.read.parquet(s"$out/$entity").count()
+    val rows = Parquet.read(spark, s"$out/$entity").count()
     println(f"""{"metric":"ingest","rows":$rows,"input_mb":${bytes / 1e6}%.1f,"sec":$secs%.2f,"rows_per_sec":${rows / secs}%.0f,"mb_per_sec":${bytes / 1e6 / secs}%.1f}""")
     // Gz dumps are single-split: the line above measured ONE task doing
     // everything. The pre-split path pays the sequential gunzip once,
@@ -74,9 +74,9 @@ object IngestBench {
       val nTasks = sdf.rdd.getNumPartitions
       DiscogsLake.writeDump(sdf, s"$out/presplit", entity, 2024, "03")
       val parseSecs = (System.nanoTime() - t2) / 1e9
-      val sRows = spark.read.parquet(s"$out/presplit/$entity").count()
-      val hashMatch = contentHash(spark.read.parquet(s"$out/presplit/$entity")) ==
-        contentHash(spark.read.parquet(s"$out/$entity"))
+      val sRows = Parquet.read(spark, s"$out/presplit/$entity").count()
+      val hashMatch = contentHash(Parquet.read(spark, s"$out/presplit/$entity")) ==
+        contentHash(Parquet.read(spark, s"$out/$entity"))
       println(f"""{"metric":"ingest_presplit","rows":$sRows,"blocks":${blocks.size},"tasks":$nTasks,"split_sec":$splitSecs%.2f,"parse_sec":$parseSecs%.2f,"total_sec":${splitSecs + parseSecs}%.2f,"rows_per_sec":${sRows / (splitSecs + parseSecs)}%.0f,"hash_match":$hashMatch}""")
     }
     spark.stop()

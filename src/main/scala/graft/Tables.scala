@@ -1,12 +1,13 @@
 package graft
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-generated testdata lake (TESTDATA.md).
   *
   * One parquet file per table under the scale-factor dir. At cluster scale
-  * the same layout holds with many files per table; `spark.read.parquet`
+  * the same layout holds with many files per table; [[Parquet.read]]
   * handles both, and filter/column pushdown applies either way.
   */
 object Tables {
@@ -15,7 +16,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   /** `events.ts` has shipped in two parquet encodings over time:
     * TIMESTAMP(NANOS) (which Spark's vectorized reader rejects —
@@ -88,7 +89,7 @@ object Tables {
         catch { case _: org.apache.spark.sql.AnalysisException => () }
       }
     nanosSession.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = nanosSession.read.parquet(s"$dir/events.parquet")
+    val df = Parquet.read(nanosSession, s"$dir/events.parquet")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.TextFns._
+import graft.sources.Parquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -152,7 +153,7 @@ object BinarySig extends IndexRung {
     * multi-word form's rebalance and append re-encode against it; one
     * point read against the 1 MB-row-group layout). */
   private def storedDim(s: SparkSession, root: String): Int =
-    s.read.parquet(IndexSwap.sideAt(root, "vectors"))
+    Parquet.read(s, IndexSwap.sideAt(root, "vectors"))
       .select(size(col("embedding"))).head().getInt(0)
 
   /** Sign NEW vectors and append to both tiers: O(new) work, encoding
@@ -225,7 +226,7 @@ object BinarySig extends IndexRung {
     // guard raises on mismatch, and the word count is checked here so
     // a wrong-width probe fails loudly instead of NULL-ranking.
     val codes = allowed.foldLeft(IndexSwap.exceptTombstones(s, root,
-      s.read.parquet(IndexSwap.sideAt(root, "codes")))) { (c, a) =>
+      Parquet.read(s, IndexSwap.sideAt(root, "codes")))) { (c, a) =>
       c.join(a.select(col("vec_id")), Seq("vec_id"), "left_semi") }
     val psig =
       if (!multiWord)
@@ -254,7 +255,7 @@ object BinarySig extends IndexRung {
     // vec_id pushdown against the sorted 1 MB-row-group cold layout
     // (the SQ8/PQ point-read discipline).
     IndexSwap.exactRefine(s, sl, probesV, k, Seq("hamming")) { (push, _) =>
-      s.read.parquet(IndexSwap.sideAt(root, "vectors")).filter(push)
+      Parquet.read(s, IndexSwap.sideAt(root, "vectors")).filter(push)
     }
   }
 

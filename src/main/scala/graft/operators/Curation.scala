@@ -4,6 +4,7 @@ import graft.{Q, Tables}
 import graft.functions.TextFns._
 import graft.streaming.StreamSemantic
 import graft.functions.VectorExprs.{dotNative, l2normNative}
+import graft.sources.Parquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
@@ -1092,14 +1093,13 @@ object Curation {
         // Everything the gate exists for — the crash, repairIndex, the
         // replay, batch 2 — still executes LIVE below, every invocation.
         val pre = preCrashBase.computeIfAbsent(dir, _ => {
-          val b = new java.io.File(sys.props("java.io.tmpdir"),
-            s"graft_ingbase_${Integer.toHexString(dir.hashCode)}")
-          rmIngestTree(b)
+          val b = TmpDirs.dir("graft_ingbase_", Integer.toHexString(dir.hashCode))
+          TmpDirs.rmTree(b)
           IngestClean.cleanBatch(s, batchOf(0), s"$b/lake", s"$b/index")
           b.toString
         })
-        copyTree(new java.io.File(s"$pre/lake"), new java.io.File(lake))
-        copyTree(new java.io.File(s"$pre/index"), new java.io.File(idx))
+        TmpDirs.copyTree(new java.io.File(s"$pre/lake"), new java.io.File(lake))
+        TmpDirs.copyTree(new java.io.File(s"$pre/index"), new java.io.File(idx))
         IngestClean.failpoint = Some("after_lake_append")
         try {
           try { IngestClean.cleanBatch(s, batchOf(1), lake, idx); () }
@@ -1109,8 +1109,8 @@ object Curation {
         IngestClean.cleanBatch(s, batchOf(1), lake, idx) // at-least-once replay
         IngestClean.cleanBatch(s, batchOf(2), lake, idx)
       }
-      val lakeIds = s.read.parquet(lake).select(col("doc_id")).withColumn("lk", lit(true))
-      val idxIds = s.read.parquet(idx).select(col("doc_id")).distinct()
+      val lakeIds = Parquet.read(s, lake).select(col("doc_id")).withColumn("lk", lit(true))
+      val idxIds = Parquet.read(s, idx).select(col("doc_id")).distinct()
         .withColumn("ix", lit(true))
       base.select(col("doc_id"))
         .join(lakeIds, Seq("doc_id"), "left")
@@ -1125,10 +1125,6 @@ object Curation {
   // ---- qp11 support ----------------------------------------------------
 
   private val ingestRun = new java.util.concurrent.atomic.AtomicInteger(0)
-  private def rmIngestTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(rmIngestTree)
-    f.delete(): Unit
-  }
   /** qp11's memoized pre-crash state: corpus dir -> the on-disk
     * lake+index left by batch 0 (deterministic, crash-free — safe to
     * reuse across invocations within one JVM; the testdata dir is
@@ -1136,30 +1132,12 @@ object Curation {
     * IngestClean lock as the choreography so a concurrent invocation's
     * armed failpoint can never crash the base build. */
   private val preCrashBase = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def copyTree(src: java.io.File, dst: java.io.File): Unit = {
-    if (src.isDirectory) {
-      dst.mkdirs()
-      Option(src.listFiles).getOrElse(Array.empty)
-        .foreach(f => copyTree(f, new java.io.File(dst, f.getName)))
-    } else java.nio.file.Files.copy(src.toPath, dst.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-  }
-  // First-use reclamation of prior JVMs' run dirs + a bounded in-JVM
-  // ring — the Similarity.newIndexDir fixture discipline. Prior JVMs'
-  // base snapshots go too (this JVM's memo map is empty at that point,
-  // so nothing live is swept).
-  private lazy val sweepStaleIngestRuns: Unit = {
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    Option(tmp.listFiles).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("graft_ingq_") ||
-        f.getName.startsWith("graft_ingbase_")).foreach(rmIngestTree)
-  }
+  // A bounded in-JVM ring (the Similarity.newIndexDir discipline); a
+  // dead JVM's run dirs and base snapshots go on first use (TmpDirs).
   private def newIngestRunDir(): String = {
-    sweepStaleIngestRuns
     val n = ingestRun.incrementAndGet()
-    val old = new java.io.File(sys.props("java.io.tmpdir"), s"graft_ingq_${n - 8}")
-    if (old.exists) rmIngestTree(old)
-    new java.io.File(sys.props("java.io.tmpdir"), s"graft_ingq_$n").toString
+    TmpDirs.rmTree(TmpDirs.dir("graft_ingq_", n - 8))
+    TmpDirs.dir("graft_ingq_", n).toString
   }
 
   /** qp11's oracle: the three-batch ingest unrolled in SQL — quality

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Q
-import graft.sources.{BloomLake, DiscogsLake, DiscogsXml, Manifest, ZoneMap}
+import graft.sources.{BloomLake, DiscogsLake, DiscogsXml, Manifest, Parquet, ZoneMap}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,42 +24,14 @@ object Discogs {
   val fixturesDir = "/root/repo/src/test/resources/fixtures"
 
   private[operators] val lakeRun = new java.util.concurrent.atomic.AtomicInteger(0)
-  // One-time (per JVM) reclamation of fixture dirs stranded by PRIOR
-  // JVMs. In-JVM sibling dirs must NOT be deleted: a caller may still
-  // hold (and later collect) a plan whose file index points at an
-  // earlier invocation's dir — e.g. the determinism sweep builds two
-  // plans before collecting either. At first invocation no plan of this
-  // JVM exists, so everything matching the prefixes is stale. The
-  // counter-replay rm alone misses leftovers whenever a changed sweep
-  // shape replays different counter values (round-8 advice).
-  private[operators] lazy val sweepStaleFixtures: Unit = {
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    Option(tmp.listFiles).getOrElse(Array.empty)
-      .filter(f => fixturePrefixes.exists(f.getName.startsWith))
-      .foreach(rmTree)
-  }
-
-  /** Every fixture-dir prefix in one set: the sweep reclaims exactly
-    * these, and [[freshFixtureDir]] refuses a prefix the sweep would
-    * never clean up (the strand-a-new-prefix footgun). */
-  private val fixturePrefixes = Set("graft_zonemap_q_", "graft_lake_fixture_")
-
-  private[operators] def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(rmTree)
-    f.delete(): Unit
-  }
 
   /** A fresh fixture dir under java.io.tmpdir — one per invocation,
     * because a plan returned by an earlier invocation still holds a file
-    * index over its own dir (see [[sweepStaleFixtures]], which reclaims
-    * prior-JVM leftovers on first use). */
+    * index over its own dir ([[TmpDirs]] reclaims dead JVMs' leftovers
+    * on first use and leaves this JVM's in place). */
   private[operators] def freshFixtureDir(prefix: String = "graft_zonemap_q_"): java.io.File = {
-    require(fixturePrefixes(prefix),
-      s"fixture prefix $prefix is not in the sweep filter — it would strand dirs across JVMs")
-    sweepStaleFixtures
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"$prefix${lakeRun.incrementAndGet()}")
-    rmTree(base)
+    val base = TmpDirs.dir(prefix, lakeRun.incrementAndGet())
+    TmpDirs.rmTree(base)
     base
   }
 
@@ -308,7 +280,7 @@ object Discogs {
         s"bloom filters missing: ${probe.nBloomPresent} of ${probe.nRowGroups} row groups")
       require(probe.nMaybe < probe.nRowGroups,
         s"blooms excluded nothing: ${probe.nMaybe} of ${probe.nRowGroups} row groups might contain $key")
-      s.read.parquet(dataDir).filter(col("o_custkey") === key)
+      Parquet.read(s, dataDir).filter(col("o_custkey") === key)
         .select("o_orderkey", "o_orderdate", "o_totalprice")
         .orderBy("o_orderkey")
     },

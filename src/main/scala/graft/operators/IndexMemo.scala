@@ -38,20 +38,6 @@ private[graft] object IndexMemo {
   private val memo =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), String]
 
-  // First-use reclamation of memo dirs stranded by PRIOR JVMs (the
-  // newIndexDir sweepStaleIndexes discipline; in-JVM trees stay — a
-  // live memo entry points at them).
-  private lazy val sweepStale: Unit = {
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    Option(tmp.listFiles).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("graft_idx_memo_")).foreach(rm)
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(rm)
-    f.delete(): Unit
-  }
-
   private val seq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** The pristine index path for (dir, tag), built at most once per
@@ -62,13 +48,11 @@ private[graft] object IndexMemo {
     * race the same key; the loser would strand a half-built dir). */
   def pristine(s: SparkSession, dir: String, tag: String)(build: String => Unit): String = {
     memo.keySet.filter(_._1.sparkContext.isStopped).foreach { k =>
-      memo.remove(k).foreach(p => rm(new java.io.File(p)))
+      memo.remove(k).foreach(p => TmpDirs.rmTree(new java.io.File(p)))
     }
     memo.get((s, dir, tag)).getOrElse(synchronized {
       memo.getOrElseUpdate((s, dir, tag), {
-        sweepStale
-        val p = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_idx_memo_${tag}_${seq.incrementAndGet()}").toString
+        val p = TmpDirs.dir("graft_idx_memo_", s"${tag}_${seq.incrementAndGet()}").toString
         build(p)
         p
       })
@@ -82,26 +66,15 @@ private[graft] object IndexMemo {
   def mutableCopy(s: SparkSession, dir: String, tag: String)(build: String => Unit): String = {
     val src = pristine(s, dir, tag)(build)
     val dst = Similarity.newIndexDir()
-    copyTree(new java.io.File(src), new java.io.File(dst))
+    TmpDirs.copyTree(new java.io.File(src), new java.io.File(dst))
     dst
-  }
-
-  private def copyTree(src: java.io.File, dst: java.io.File): Unit = {
-    if (src.isDirectory) {
-      dst.mkdirs(): Unit
-      Option(src.listFiles).getOrElse(Array.empty)
-        .foreach(f => copyTree(f, new java.io.File(dst, f.getName)))
-    } else {
-      java.nio.file.Files.copy(src.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-    }
   }
 
   /** Evict every memoized index for `s` and delete the trees — the
     * corpus-rewrite / test-isolation hook. */
   def clear(s: SparkSession): Unit =
     memo.keySet.filter(_._1 eq s).foreach { k =>
-      memo.remove(k).foreach(p => rm(new java.io.File(p)))
+      memo.remove(k).foreach(p => TmpDirs.rmTree(new java.io.File(p)))
     }
 
   /** Visible size of the memo for `s` (tests). */

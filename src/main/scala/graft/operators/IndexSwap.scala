@@ -3,6 +3,7 @@ package graft.operators
 import graft.Concurrently
 import graft.functions.TextFns.{cosine, e6}
 import graft.functions.VectorExprs.{dotNative, l2normNative}
+import graft.sources.Parquet
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -96,7 +97,7 @@ private[graft] object IndexSwap {
   def tombstonesAt(s: SparkSession, root: String): Option[org.apache.spark.sql.DataFrame] = {
     val p = new Path(deletesDir(root))
     if (p.getFileSystem(s.sessionState.newHadoopConf()).exists(p))
-      Some(s.read.parquet(deletesDir(root))
+      Some(Parquet.read(s, deletesDir(root))
         .select(org.apache.spark.sql.functions.col("vec_id")).distinct())
     else None
   }
@@ -188,7 +189,7 @@ private[graft] object IndexSwap {
     * vector rung's rebalance rebuilds from (the physical reclaim — the
     * fresh version dir carries no deletes side). */
   def liveVectors(s: SparkSession, root: String): DataFrame =
-    exceptTombstones(s, root, s.read.parquet(sideAt(root, "vectors"))
+    exceptTombstones(s, root, Parquet.read(s, sideAt(root, "vectors"))
       .select(col("vec_id"), col("embedding"), col("nrm")))
 
   /** The staging sibling a rebuild writes `side` into before commit. */

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.VectorExprs.intSqDistNative
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -226,7 +227,7 @@ object IvfSq8 extends IndexRung {
 
   /** The √N-row centroid side and the D-row stats side, collected. */
   protected def load(s: SparkSession, root: String): State = {
-    val (mna, spa) = SQ8.collectStats(s.read.parquet(IndexSwap.sideAt(root, "stats")))
-    (Similarity.centsOf(s, s.read.parquet(IndexSwap.sideAt(root, "centroids"))), mna, spa)
+    val (mna, spa) = SQ8.collectStats(Parquet.read(s, IndexSwap.sideAt(root, "stats")))
+    (Similarity.centsOf(s, Parquet.read(s, IndexSwap.sideAt(root, "centroids"))), mna, spa)
   }
 }

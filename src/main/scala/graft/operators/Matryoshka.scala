@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import graft.functions.TextFns._
 import graft.functions.VectorExprs.{dotNative, l2normNative}
+import graft.sources.Parquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -103,13 +104,13 @@ object Matryoshka extends IndexRung {
 
   /** The stored full dimensionality, from one cold-side row. */
   private def storedDim(s: SparkSession, root: String): Int =
-    s.read.parquet(IndexSwap.sideAt(root, "vectors"))
+    Parquet.read(s, IndexSwap.sideAt(root, "vectors"))
       .select(size(col("embedding"))).head().getInt(0)
 
   /** The stored prefix width, from one hot-side row — the persisted
     * model-declared parameter every later entry re-reads. */
   private def storedPrefix(s: SparkSession, root: String): Int =
-    s.read.parquet(IndexSwap.sideAt(root, "prefix"))
+    Parquet.read(s, IndexSwap.sideAt(root, "prefix"))
       .select(size(col("pre"))).head().getInt(0)
 
   /** Slice NEW vectors at the STORED prefix and append to both tiers:
@@ -177,7 +178,7 @@ object Matryoshka extends IndexRung {
       ppre.as("ppre"), l2normNative(ppre).as("ppn"))
     val wSl = Window.partitionBy(col("qid")).orderBy(col("pscore").desc, col("vec_id").asc)
     val sl = allowed.foldLeft(IndexSwap.exceptTombstones(s, root,
-        s.read.parquet(IndexSwap.sideAt(root, "prefix")))) { (c, a) =>
+        Parquet.read(s, IndexSwap.sideAt(root, "prefix")))) { (c, a) =>
         c.join(a.select(col("vec_id")), Seq("vec_id"), "left_semi") }
       .join(broadcast(psig), expr("true"))
       .filter(col("vec_id") =!= col("qid") && col("ppn") > 0 && col("pnrm") > 0)
@@ -188,7 +189,7 @@ object Matryoshka extends IndexRung {
     // Manifest-class shortlist (probes x 32, hard-bounded above) ->
     // vec_id pushdown against the sorted 1 MB-row-group cold layout.
     IndexSwap.exactRefine(s, sl, probesV, k) { (push, _) =>
-      s.read.parquet(IndexSwap.sideAt(root, "vectors")).filter(push)
+      Parquet.read(s, IndexSwap.sideAt(root, "vectors")).filter(push)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.functions.TextFns._
 import graft.functions.VectorExprs.{dotNative, l2normNative}
+import graft.sources.Parquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -445,7 +446,7 @@ object PQ extends IndexRung {
           "PQ index root). Rebuild it with buildPqIndex: the meta row now commits " +
           "atomically with the data sides, and pre-meta layouts are not auto-migrated " +
           "because deriving the realized sizing per call is exactly the cost meta removed.")
-    val r = s.read.parquet(metaDir.toString).head()
+    val r = Parquet.read(s, metaDir.toString).head()
     (r.getBoolean(0), PqParams(r.getInt(1), r.getInt(2), r.getInt(3)))
   }
 
@@ -830,7 +831,7 @@ object PQ extends IndexRung {
     val fs = p.getFileSystem(s.sessionState.newHadoopConf())
     if (!fs.exists(p)) None
     else {
-      val row = s.read.parquet(p.toString).head()
+      val row = Parquet.read(s, p.toString).head()
       Some((row.getSeq[Double](1).toArray, row.getInt(0)))
     }
   }
@@ -1640,9 +1641,9 @@ object PQ extends IndexRung {
   /** The meta row, both metadata tables collected, and the rotation. */
   protected def load(s: SparkSession, root: String): State = {
     val (residual, p) = indexMetaAt(s, root)
-    val cb = s.read.parquet(IndexSwap.sideAt(root, "codebooks"))
+    val cb = Parquet.read(s, IndexSwap.sideAt(root, "codebooks"))
     PqState(residual, p,
-      Similarity.centsOf(s, s.read.parquet(IndexSwap.sideAt(root, "centroids"))),
+      Similarity.centsOf(s, Parquet.read(s, IndexSwap.sideAt(root, "centroids"))),
       s.createDataFrame(java.util.Arrays.asList(cb.collect(): _*), cb.schema),
       rotationAt(s, root))
   }

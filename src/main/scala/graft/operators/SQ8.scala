@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.TextFns._
+import graft.sources.Parquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -256,7 +257,7 @@ object SQ8 extends IndexRung {
     // FILTERED search (the qn53 discipline at the flat rung): the
     // allowed-ids frame semi-joins the rank scan before the shortlist.
     val codesLive = allowed.foldLeft(IndexSwap.exceptTombstones(s, root,
-        s.read.parquet(IndexSwap.sideAt(root, "codes")))) { (c, a) =>
+        Parquet.read(s, IndexSwap.sideAt(root, "codes")))) { (c, a) =>
       c.join(a.select(col("vec_id")), Seq("vec_id"), "left_semi") }
     val sl = codesLive
       .join(broadcast(pq8), expr("true"))
@@ -269,7 +270,7 @@ object SQ8 extends IndexRung {
     // the sorted 1 MB-row-group layout — the [[PQ.probePqIndexWith]]
     // point-read discipline ([[IndexSwap.exactRefine]]).
     IndexSwap.exactRefine(s, sl, probesV, k, Seq("qd2")) { (push, _) =>
-      s.read.parquet(IndexSwap.sideAt(root, "vectors")).filter(push)
+      Parquet.read(s, IndexSwap.sideAt(root, "vectors")).filter(push)
     }
   }
 
@@ -347,7 +348,7 @@ object SQ8 extends IndexRung {
     val lb = graft.functions.VectorExprs.intSqLowerBoundNative(
       col("q8"), col("pq8"), spansLit)
     val codesLive = allowed.foldLeft(IndexSwap.exceptTombstones(s, root,
-        s.read.parquet(IndexSwap.sideAt(root, "codes")))) { (c, a) =>
+        Parquet.read(s, IndexSwap.sideAt(root, "codes")))) { (c, a) =>
       c.join(a.select(col("vec_id")), Seq("vec_id"), "left_semi") }
     val surv = codesLive
       .join(broadcast(pq8.select(col("qid"), col("pq8"))), expr("true"))
@@ -359,7 +360,7 @@ object SQ8 extends IndexRung {
     // not.
     val pe6b = broadcast(pq8.select(col("qid"), col("pe6")))
     val d2 = graft.functions.VectorExprs.intSqDistNative(col("de6"), col("pe6"))
-    val coldAll = s.read.parquet(IndexSwap.sideAt(root, "vectors"))
+    val coldAll = Parquet.read(s, IndexSwap.sideAt(root, "vectors"))
     val cap = rangeCollectMax(s)
     val survRows = surv.limit(cap + 1).collect()
     val refined = if (survRows.length <= cap) {
@@ -391,5 +392,5 @@ object SQ8 extends IndexRung {
 
   /** The D-row stats side, collected. */
   protected def load(s: SparkSession, root: String): State =
-    collectStats(s.read.parquet(IndexSwap.sideAt(root, "stats")))
+    collectStats(Parquet.read(s, IndexSwap.sideAt(root, "stats")))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.functions.TextFns._
 import graft.functions.VectorExprs.{dotNative, l2normNative}
+import graft.sources.Parquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -972,7 +973,7 @@ object Similarity extends IndexRung {
     val kr = TextIndex.probeTextIndexWith(s, queries, textPath, 10)
       .select(col("qid"), col("doc_id"), col("rnk").as("krnk"))
     val root = IndexSwap.liveRoot(s, vecPath)
-    val v = s.read.parquet(IndexSwap.sideAt(root, "vectors"))
+    val v = Parquet.read(s, IndexSwap.sideAt(root, "vectors"))
       .select(col("vec_id"), col("embedding"), col("nrm"))
     val p = v.filter(col("vec_id") < 5).select(col("vec_id").as("qid"),
       col("embedding").as("pe"), col("nrm").as("pn"))
@@ -1981,30 +1982,14 @@ object Similarity extends IndexRung {
 
   private val indexRun = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(rmTree)
-    f.delete(): Unit
-  }
-
-  // First-use reclamation of index dirs stranded by PRIOR JVMs (the
-  // Discogs.sweepStaleFixtures discipline: in-JVM siblings stay — an
-  // unexecuted plan may still point at an earlier invocation's dir).
-  private lazy val sweepStaleIndexes: Unit = {
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    Option(tmp.listFiles).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("graft_ivf_q_")).foreach(rmTree)
-  }
-
   private[graft] def newIndexDir(): String = {
-    sweepStaleIndexes
     val n = indexRun.incrementAndGet()
     // Bounded ring (round-10 review): reclaim generation n-8 so a
     // long-lived JVM holds at most 8 index lakes. 8 generations is far
     // beyond the concurrent-plan window — the widest holder is the
     // determinism sweep with 2 plans of one query alive at once.
-    val old = new java.io.File(sys.props("java.io.tmpdir"), s"graft_ivf_q_${n - 8}")
-    if (old.exists) rmTree(old)
-    new java.io.File(sys.props("java.io.tmpdir"), s"graft_ivf_q_$n").toString
+    TmpDirs.rmTree(TmpDirs.dir("graft_ivf_q_", n - 8))
+    TmpDirs.dir("graft_ivf_q_", n).toString
   }
 
   /** The IVF index's swappable sides (the [[IndexSwap]] protocol). */
@@ -2186,12 +2171,11 @@ object Similarity extends IndexRung {
 
   /** The √N-row centroid side, collected. */
   protected def load(s: SparkSession, root: String): State =
-    centsOf(s, s.read.parquet(IndexSwap.sideAt(root, "centroids")))
+    centsOf(s, Parquet.read(s, IndexSwap.sideAt(root, "centroids")))
 
   /** Cell-count bound past which [[cellScopedRead]] falls back to the
     * whole-lake listing: the scoped form's win is O(nProbe) listing vs
-    * O(cells), which inverts when a probe touches most of the lake —
-    * and the per-cell existence probes it issues stop being free. */
+    * O(cells), which inverts when a probe touches most of the lake. */
   private val cellScopedMaxCells = 4096
 
   /** Read a cent_id-partitioned index side listing ONLY the probed
@@ -2204,7 +2188,7 @@ object Similarity extends IndexRung {
     * inference as the full-listing read, so results are bit-identical
     * (qn39/qn40/qn10b ride the unchanged oracles). Cells whose
     * directory does not exist (a seeded centroid no vector chose) are
-    * skipped; an all-empty probe set, or one spanning more than
+    * skipped, judged from one listing of the side directory; an all-empty probe set, or one spanning more than
     * [[cellScopedMaxCells]] cells, takes the whole-lake listing the
     * callers' own cent_id filter then prunes. */
   private[graft] def cellScopedRead(s: SparkSession, path: String, side: String,
@@ -2217,14 +2201,16 @@ object Similarity extends IndexRung {
     * between the codes read and the cold read can't mix versions. */
   private[graft] def cellScopedReadAt(s: SparkSession, root: String, side: String,
       cells: Seq[Long]): DataFrame = {
-    val fs = graft.operators.IndexSwap.fsOf(s, root)
     val base = s"$root/$side"
     val dirs =
       if (cells.size > cellScopedMaxCells) Seq.empty
-      else cells.map(c => s"$base/cent_id=$c")
-        .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-    if (dirs.isEmpty) s.read.parquet(base)
-    else s.read.option("basePath", base).parquet(dirs: _*)
+      else {
+        val present = IndexSwap.fsOf(s, root)
+          .listStatus(new org.apache.hadoop.fs.Path(base)).map(_.getPath.getName).toSet
+        cells.map(c => s"cent_id=$c").filter(present).map(d => s"$base/$d")
+      }
+    if (dirs.isEmpty) Parquet.read(s, base)
+    else Parquet.readBase(s, base, dirs)
   }
 
   /** The CORPUS-SIZED probe path the [[probeIvfIndexWith]] contract
@@ -2263,7 +2249,7 @@ object Similarity extends IndexRung {
     // and the same tombstone exclusion as every other probe entry — a
     // deleted row's visibility must not depend on which entry serves.
     val root = IndexSwap.liveRoot(s, path)
-    val cents = s.read.parquet(IndexSwap.sideAt(root, "centroids"))
+    val cents = Parquet.read(s, IndexSwap.sideAt(root, "centroids"))
     val pv = probes.select(col("vec_id"), col("embedding"),
       l2normNative(col("embedding")).as("nrm"))
     // Routing DISPATCH by measured centroid count (the qn06 pattern —
@@ -2280,7 +2266,7 @@ object Similarity extends IndexRung {
       if (useCoarse) ivfRouteCoarse(pv, cents, nProbe)
       else ivfRoute(pv, cents, nProbe)
     val candidates = IndexSwap.exceptTombstones(s, root,
-        s.read.parquet(IndexSwap.sideAt(root, "vectors")))
+        Parquet.read(s, IndexSwap.sideAt(root, "vectors")))
       .select(col("vec_id"), col("embedding"), col("nrm"),
         col("cent_id").cast("long").as("cent_id"))
     ivfScoreTail(candidates, pc, k, broadcastProbes = false)

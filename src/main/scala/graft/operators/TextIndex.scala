@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.TextFns._
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -137,14 +138,14 @@ object TextIndex extends IndexRung {
     val root = IndexSwap.liveRoot(s, path)
     def minusTombs(side: String): DataFrame =
       IndexSwap.exceptTombstones(s, root,
-        s.read.parquet(IndexSwap.sideAt(root, side))
+        Parquet.read(s, IndexSwap.sideAt(root, side))
           .withColumnRenamed("doc_id", "vec_id"))
         .withColumnRenamed("vec_id", "doc_id")
     val (n, t) = load(s, root)
     val (deadDocs, deadTokens) = IndexSwap.tombstonesAt(s, root) match {
       case None => (0L, 0L)
       case Some(tombs) =>
-        (tombs.count(), s.read.parquet(IndexSwap.sideAt(root, "doclen"))
+        (tombs.count(), Parquet.read(s, IndexSwap.sideAt(root, "doclen"))
           .join(tombs.withColumnRenamed("vec_id", "doc_id"), Seq("doc_id"), "left_semi")
           .agg(coalesce(sum(col("dl")), lit(0L))).head().getLong(0))
     }
@@ -230,7 +231,7 @@ object TextIndex extends IndexRung {
       if (terms.isEmpty) lit(false)
       else if (terms.length <= IndexSwap.isinMaxIds(s)) col("term").isin(terms: _*)
       else lit(true) // over the bound: the semi-join below still prunes rows
-    val matched = s.read.parquet(IndexSwap.sideAt(root, "postings"))
+    val matched = Parquet.read(s, IndexSwap.sideAt(root, "postings"))
       .filter(termPush)
       .join(broadcast(qtDf.select(col("term")).distinct()), Seq("term"), "left_semi")
       .localCheckpoint(true) // ONE postings read feeds df AND candidates
@@ -245,7 +246,7 @@ object TextIndex extends IndexRung {
     }.withColumnRenamed("vec_id", "doc_id")
     val scored = cand
       .join(dfT.hint("SHUFFLE_HASH"), "term")
-      .join(s.read.parquet(IndexSwap.sideAt(root, "doclen")), "doc_id")
+      .join(Parquet.read(s, IndexSwap.sideAt(root, "doclen")), "doc_id")
       .withColumn("contrib", expr(
         s"(22 * tf * ((${n}L * 1000000L) div df)) div (10 * tf + 3 + (9 * dl * ${n}L) div ${t}L)"))
       .groupBy("qid", "doc_id").agg(sum(col("contrib")).as("kws"))
@@ -261,7 +262,7 @@ object TextIndex extends IndexRung {
 
   /** Sum the additive stats deltas. */
   protected def load(s: SparkSession, root: String): State = {
-    val stats = s.read.parquet(IndexSwap.sideAt(root, "stats"))
+    val stats = Parquet.read(s, IndexSwap.sideAt(root, "stats"))
       .agg(sum(col("n_docs")).as("n"), sum(col("n_tokens")).as("t")).head()
     (stats.getLong(0), stats.getLong(1))
   }

@@ -399,42 +399,3 @@ object BloomLake {
     }
   }
 }
-
-/** Recursive data-file listing shared by the planning-side walkers
-  * ([[BloomLake]] probes, [[ZoneMap.refreshStats]]): every `.parquet`
-  * file under the root EXCEPT hidden files and anything under a hidden
-  * dir — compaction tmp/aside dirs, `_spark_metadata` — because Spark
-  * readers never see those, and a planner that does (e.g. a stats row
-  * over a compaction aside holding copies of live rows) double-reads.
-  *
-  * Hidden-ness is judged on the path RELATIVE to the root: the root is
-  * qualified through the filesystem first so a relative or
-  * differently-schemed input still strips cleanly — judging the
-  * absolute path would mark every file hidden whenever an ANCESTOR of
-  * the lake is dot- or underscore-prefixed (a CI `_work` dir, a
-  * `~/.cache` lake) and silently empty the listing.
-  */
-private[graft] object LakeListing {
-  def dataFiles(conf: org.apache.hadoop.conf.Configuration, root: Path): Seq[Path] =
-    dataFileSizes(conf, root).map(_._1)
-
-  /** Same walk, keeping each file's byte length from the listing itself
-    * (the RemoteIterator already carries it — no per-file RPC), so
-    * callers that need both the count and the total bytes (the
-    * auto-compaction trigger) pay one listing. */
-  def dataFileSizes(conf: org.apache.hadoop.conf.Configuration,
-      root: Path): Seq[(Path, Long)] = {
-    val fs = root.getFileSystem(conf)
-    val qualifiedRoot = fs.makeQualified(root).toUri.getPath
-    val out = Seq.newBuilder[(Path, Long)]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val p = st.getPath
-      val rel = p.toUri.getPath.stripPrefix(qualifiedRoot)
-      val hidden = rel.split("/").exists(s => s.startsWith(".") || s.startsWith("_"))
-      if (p.getName.endsWith(".parquet") && !hidden) out += ((p, st.getLen))
-    }
-    out.result()
-  }
-}

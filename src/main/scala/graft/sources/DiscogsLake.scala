@@ -2,11 +2,13 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** Hive-partitioned Parquet lake, `<type>/year=YYYY/month=MM/` (reference
   * README.md:9-47, s3.py:40-52). `month` is a zero-padded STRING partition
   * value ("09") — DuckDB infers it varchar (README.md:89-90) — so reads
-  * disable partition-column type inference and re-cast only `year`.
+  * declare `year INT` and `month STRING` instead of inferring them, and
+  * leave the session's partition-type inference as it is.
   *
   * Scale notes: the write is `partitionBy(year, month)` dynamic
   * partitioning — each task writes only its partition's files, and reads
@@ -42,9 +44,9 @@ object DiscogsLake {
       .partitionBy("year", "month")
       .parquet(s"$baseDir/$dataType")
 
-  def read(spark: SparkSession, baseDir: String, dataType: String): DataFrame = {
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    spark.read.parquet(s"$baseDir/$dataType")
-      .withColumn("year", col("year").cast("int"))
-  }
+  private val partitions = StructType(Seq(
+    StructField("year", IntegerType), StructField("month", StringType)))
+
+  def read(spark: SparkSession, baseDir: String, dataType: String): DataFrame =
+    Parquet.readPartitioned(spark, s"$baseDir/$dataType", partitions)
 }

@@ -32,7 +32,7 @@ object ZoneMap {
                  cols: Seq[String]): Unit = {
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    spark.read.parquet(dataDir)
+    Parquet.read(spark, dataDir)
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .coalesce(1) // stats are KBs; one file keeps planning to one read
@@ -70,7 +70,7 @@ object ZoneMap {
       if (!fs.exists(new Path(statsPath)))
         (Array.empty[org.apache.spark.sql.Row], null: org.apache.spark.sql.types.StructType, -1)
       else {
-        val df = spark.read.parquet(statsPath)
+        val df = Parquet.read(spark, statsPath)
         (df.collect(), df.schema, df.schema.fieldIndex("file"))
       }
     val known: Set[String] = statsRows.map(r => norm(r.getString(fileIdx))).toSet
@@ -102,7 +102,7 @@ object ZoneMap {
     if (newFiles.nonEmpty) {
       val aggs = cols.flatMap(c =>
         Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-      spark.read.option("basePath", dataDir).parquet(newFiles: _*)
+      Parquet.readBase(spark, dataDir, newFiles)
         .groupBy(input_file_name().as("file"))
         .agg(aggs.head, aggs.tail: _*)
         .coalesce(1)
@@ -153,13 +153,23 @@ object ZoneMap {
   def prunedScanAll(spark: SparkSession, dataDir: String, statsPath: String,
                     preds: Seq[(String, Any, Any)]): Pruned = {
     require(preds.nonEmpty, "at least one (column, lo, hi) predicate")
-    val stats = spark.read.parquet(statsPath)
-    val nTotal = stats.count()
-    val keep = stats.filter(zoneOverlap(preds))
-      .select("file").collect().map(_.getString(0)).toIndexedSeq
+    val (stats, nTotal) = localStats(spark, statsPath)
+    val keep = files(stats.filter(zoneOverlap(preds)))
     val df = scanKeep(spark, dataDir, keep, rangeRowPreds(preds).reduce(_ && _))
     Pruned(df, nTotal, keep.length)
   }
+
+  /** The one planning read: the KB-scale stats table, collected once into
+    * a local relation, with its row count. A filter and collect over that
+    * relation runs on the driver (no job) with Spark's own comparison
+    * semantics. */
+  private def localStats(spark: SparkSession, statsPath: String): (DataFrame, Long) = {
+    val stats = Parquet.read(spark, statsPath)
+    val rows = stats.collect()
+    (spark.createDataFrame(java.util.Arrays.asList(rows: _*), stats.schema), rows.length.toLong)
+  }
+  private def files(stats: DataFrame): Seq[String] =
+    stats.select("file").collect().map(_.getString(0)).toIndexedSeq
 
   /** The zone-overlap predicate over the stats table: a file survives
     * only if EVERY conjunct's [min,max] intersects its range. */
@@ -185,9 +195,8 @@ object ZoneMap {
     * directory-derived columns. */
   private def scanKeep(spark: SparkSession, dataDir: String,
       keep: Seq[String], rowPred: Column): DataFrame =
-    if (keep.isEmpty) spark.read.parquet(dataDir).where(lit(false))
-    else spark.read.option("basePath", dataDir)
-      .parquet(keep.toIndexedSeq: _*).filter(rowPred)
+    if (keep.isEmpty) Parquet.read(spark, dataDir).where(lit(false))
+    else Parquet.readBase(spark, dataDir, keep).filter(rowPred)
 
   /** The shared planning read of the partitioned scans: total stats
     * rows, partition survivors, and the zone survivors WITHIN them.
@@ -200,16 +209,13 @@ object ZoneMap {
       partCols: Seq[(String, Any)], preds: Seq[(String, Any, Any)]): Survivors = {
     require(partCols.nonEmpty, "at least one (partitionColumn, value) equality")
     require(preds.nonEmpty, "at least one (column, lo, hi) predicate")
-    val stats = spark.read.parquet(statsPath)
-    val nTotal = stats.count()
+    val (stats, nTotal) = localStats(spark, statsPath)
     val partPred = partCols.map { case (k, v) =>
       col("file").contains(s"/$k=$v/")
     }.reduce(_ && _)
     val partStats = stats.filter(partPred)
-    val nPart = partStats.count()
-    val zoneKeep = partStats.filter(zoneOverlap(preds))
-      .select("file").collect().map(_.getString(0)).toIndexedSeq
-    Survivors(nTotal, nPart, zoneKeep)
+    Survivors(nTotal, partStats.collect().length.toLong,
+      files(partStats.filter(zoneOverlap(preds))))
   }
 
   /** A partition-pruned + zone-pruned scan with both prunings accounted:

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.{BloomLake, LakeListing}
+import graft.sources.{BloomLake, LakeListing, Parquet}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -206,7 +206,7 @@ object IngestClean {
     val staging = new org.apache.hadoop.fs.Path(indexDir, ".rebuild_tmp")
     if (fs.exists(staging)) fs.delete(staging, true)
     if (pathExists(spark, lakeDir)) {
-      val lake = spark.read.parquet(lakeDir).select("doc_id", "text", "us")
+      val lake = Parquet.read(spark, lakeDir).select("doc_id", "text", "us")
       StreamDedup.banded(lake).toDF().select("band", "doc_id")
         .write.options(BloomLake.writerOptions("band", bloomNdv(spark), bloomFpp(spark)))
         .mode(SaveMode.Overwrite).parquet(staging.toString)
@@ -346,7 +346,7 @@ object IngestClean {
         if (pruned.isEmpty) None
         else {
           // doc_id rides along for the quarantine's dup_of provenance
-          val scan = spark.read.parquet(pruned: _*).select(col("nrm"), col("doc_id"))
+          val scan = Parquet.read(spark, pruned: _*).select(col("nrm"), col("doc_id"))
           Some(probeKeys match {
             case Some((shas, _)) if shas.size <= maxSemiJoinKeys(spark) =>
               import spark.implicits._
@@ -396,7 +396,7 @@ object IngestClean {
         // actually hit — a compacted index file would otherwise feed
         // its whole multi-million-row key set into the shuffle.
         else {
-          val scan = spark.read.parquet(pruned: _*)
+          val scan = Parquet.read(spark, pruned: _*)
             .select(col("band"), col("doc_id").as("idx_doc"))
           val filtered = probeKeys match {
             case Some((_, bands)) if bands.size <= maxSemiJoinKeys(spark) =>
@@ -556,7 +556,7 @@ object IngestClean {
     // pass), restricted to those authoritative ids.
     val newFiles = (lakeFiles() -- preAppend).toSeq.sorted
     if (newFiles.nonEmpty) {
-      val appendedIds = spark.read.option("basePath", lakeDir).parquet(newFiles: _*)
+      val appendedIds = Parquet.readBase(spark, lakeDir, newFiles)
         .select("doc_id")
       bandedFirst.join(appendedIds, Seq("doc_id"), "left_semi")
         .select("band", "doc_id")
@@ -664,7 +664,7 @@ object IngestClean {
           .collect()
         if (idRows.isEmpty) None
         else {
-          val base = spark.read.parquet(lakeDir)
+          val base = Parquet.read(spark, lakeDir)
             .select(col("doc_id").as("partner"), col("text").as("p_text"))
           if (idRows.length <= maxSemiJoinKeys(spark))
             // pushed-down IN: parquet row-group stats prune a
@@ -760,10 +760,10 @@ object IngestClean {
   def repairIndex(spark: SparkSession, lakeDir: String, indexDir: String): Long = {
     if (!pathExists(spark, lakeDir)) return 0L
     ensureSignatureFamily(spark, lakeDir, indexDir)
-    val lake = spark.read.parquet(lakeDir).select("doc_id", "text", "us")
+    val lake = Parquet.read(spark, lakeDir).select("doc_id", "text", "us")
     val missing =
       if (!pathExists(spark, indexDir)) lake
-      else lake.join(spark.read.parquet(indexDir).select("doc_id").distinct(),
+      else lake.join(Parquet.read(spark, indexDir).select("doc_id").distinct(),
         Seq("doc_id"), "left_anti")
     val bands = StreamDedup.banded(missing).toDF()
       .select("band", "doc_id").localCheckpoint(true)

@@ -55,10 +55,8 @@ class ZoneMapSpec extends AnyFunSuite {
     val pruned = ZoneMap.prunedScan(spark, dataDir, s"$base/stats", "o_orderkey", 0L, 50L)
     assert(pruned.nFilesRead < pruned.nFilesTotal)
     // The directory-derived partition column survives the file-subset
-    // read (basePath), and its values are real. Compare through strings:
-    // DiscogsLake disables partition type inference session-wide (the
-    // lake contract keeps month a string), so depending on suite order
-    // o_year reads back as int or string.
+    // read (basePath), and its values are real. Compare through strings,
+    // so the check holds whatever the session's partition type inference.
     val rows = pruned.df.select("o_orderkey", "o_year").collect()
     assert(rows.nonEmpty)
     assert(rows.forall(_.get(1).toString.toInt >= 1992))
