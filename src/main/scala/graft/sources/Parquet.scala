@@ -5,6 +5,7 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
   ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
@@ -24,10 +25,11 @@ import scala.util.control.NonFatal
   *
   * Every read this cannot match exactly defers to `spark.read.parquet`
   * unchanged: a glob path, a `_metadata` / `_common_metadata` summary
-  * file in a visited directory, `spark.sql.parquet.mergeSchema` on, a
-  * first file that is not `.parquet` or whose footer does not read, a
-  * data column that shares a partition directory's name, and a path with
-  * no data files (which then raises Spark's own error).
+  * file named as a root or in a visited directory,
+  * `spark.sql.parquet.mergeSchema` on, a first file that is not
+  * `.parquet` or whose footer does not read, a data column that shares
+  * the name of a partition directory it does not declare, and a path
+  * with no data files (which then raises Spark's own error).
   */
 object Parquet {
 
@@ -47,20 +49,33 @@ object Parquet {
   private def load(spark: SparkSession, basePath: Option[String], partitions: StructType,
       paths: Seq[String]): DataFrame = {
     def reader = basePath.fold(spark.read)(spark.read.option("basePath", _))
-    def withParts(data: StructType) = StructType(
-      data.filterNot(f => partitions.fieldNames.contains(f.name)) ++ partitions)
-    footerSchema(spark, paths) match {
-      case Some(data) => reader.schema(withParts(data)).parquet(paths: _*)
+    val declared = partitions.fieldNames.map(_.toLowerCase).toSet
+    def declaring(data: StructType): DataFrame = {
+      val df = reader.schema(StructType(
+        data.filterNot(f => declared(f.name.toLowerCase)) ++ partitions)).parquet(paths: _*)
+      // Inference keeps a data column named like a partition at the data
+      // column's place, typed and valued as the partition; a declared
+      // schema puts it last, so the columns are put back in that order.
+      if (!data.fieldNames.exists(n => declared(n.toLowerCase))) df
+      else {
+        def inData(c: String) = data.fieldNames.exists(_.equalsIgnoreCase(c))
+        df.select((data.fieldNames.flatMap(n => df.columns.find(_.equalsIgnoreCase(n))) ++
+          df.columns.filterNot(inData)).map(col): _*)
+      }
+    }
+    footerSchema(spark, paths, declared) match {
+      case Some(data) if partitions.isEmpty => reader.schema(data).parquet(paths: _*)
+      case Some(data) => declaring(data)
       case None =>
         val inferred = reader.parquet(paths: _*)
-        if (partitions.isEmpty) inferred
-        else reader.schema(withParts(inferred.schema)).parquet(paths: _*)
+        if (partitions.isEmpty) inferred else declaring(inferred.schema)
     }
   }
 
   /** The data schema that inference would return for `paths`, read from
     * one footer on the driver; None where [[read]] defers. */
-  private[graft] def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] = {
+  private[graft] def footerSchema(spark: SparkSession, paths: Seq[String],
+      declared: Set[String] = Set.empty): Option[StructType] = {
     val sqlConf = spark.sessionState.conf
     if (paths.isEmpty || sqlConf.isParquetSchemaMergingEnabled ||
         paths.exists(_.exists("{}[]*?\\".contains(_)))) None
@@ -72,7 +87,7 @@ object Parquet {
         val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(leaf.getPath, meta),
           new ParquetToSparkSchemaConverter(sqlConf))
         val partKeys = leaf.getPath.toUri.getPath.split('/')
-          .filter(_.contains('=')).map(_.takeWhile(_ != '=').toLowerCase).toSet
+          .filter(_.contains('=')).map(_.takeWhile(_ != '=').toLowerCase).toSet -- declared
         if (schema.fieldNames.exists(n => partKeys(n.toLowerCase))) None else Some(schema)
       }
     } catch { case NonFatal(_) => None }
@@ -80,22 +95,30 @@ object Parquet {
 
   private final class Defer extends Exception(null, null, false, false)
 
-  /** The file schema inference would pick: the first visible leaf of the
-    * listing sorted by path, found by walking only until it. A root's
-    * leaves all sort under `root/`, so the roots are visited in that
-    * order and the walk stops at the first leaf. */
+  /** The file schema inference would pick: the least visible leaf path
+    * of the listing. Every leaf under a root sorts at or after the root's
+    * own path, so the roots are taken in path order (qualified with no
+    * filesystem call), and a root is stat'd and walked only while it
+    * sorts before the least leaf found so far: a file-subset or
+    * many-cell read stats one root and lists at most one directory chain. */
   private def firstDataFile(conf: org.apache.hadoop.conf.Configuration,
       paths: Seq[String]): Option[FileStatus] = {
+    if (paths.exists(p => isSummary(new Path(p).getName))) throw new Defer
     val roots = paths.map { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(conf)
-      (fs, fs.getFileStatus(path))
-    }.sortBy { case (_, st) => st.getPath.toString + (if (st.isDirectory) "/" else "") }
-    val first = roots.iterator.flatMap { case (fs, st) =>
-      if (st.isDirectory) firstUnder(fs, st.getPath)
-      else if (isSummary(st)) throw new Defer
-      else Some(st).filter(f => visible(f.getPath.getName))
-    }.nextOption()
+      (fs, fs.makeQualified(path))
+    }.sortBy(_._2.toString)
+    val first = roots.foldLeft(Option.empty[FileStatus]) { case (best, (fs, root)) =>
+      if (best.exists(_.getPath.toString <= root.toString)) best
+      else {
+        val st = fs.getFileStatus(root)
+        val leaf =
+          if (st.isDirectory) firstUnder(fs, st.getPath)
+          else Some(st).filter(f => visible(f.getPath.getName))
+        (best ++ leaf).minByOption(_.getPath.toString)
+      }
+    }
     if (first.exists(!_.getPath.getName.endsWith(".parquet"))) throw new Defer
     first
   }
@@ -104,14 +127,13 @@ object Parquet {
     * directory the walk visits defers the read. */
   private def firstUnder(fs: FileSystem, dir: Path): Option[FileStatus] = {
     val kids = fs.listStatus(dir).filter(k => visible(k.getPath.getName))
-    if (kids.exists(isSummary)) throw new Defer
+    if (kids.exists(k => !k.isDirectory && isSummary(k.getPath.getName))) throw new Defer
     kids.sortBy(k => k.getPath.getName + (if (k.isDirectory) "/" else "")).iterator
       .flatMap(k => if (k.isDirectory) firstUnder(fs, k.getPath) else Some(k))
       .nextOption()
   }
 
-  private def isSummary(st: FileStatus): Boolean =
-    !st.isDirectory && Set("_metadata", "_common_metadata")(st.getPath.getName)
+  private def isSummary(name: String): Boolean = Set("_metadata", "_common_metadata")(name)
 
   /** Spark's listing filter (`HadoopFSUtils.shouldFilterOutPathName`):
     * hidden are `.` names, `_` names without `=`, and `._COPYING_` files;

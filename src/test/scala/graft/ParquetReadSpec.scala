@@ -66,6 +66,24 @@ class ParquetReadSpec extends AnyFunSuite {
     }
   }
 
+  test("the root walk takes roots in path order and stats only those that can hold the least leaf") {
+    val dir = tmp("roots")
+    // "a-b/…" sorts before "a/…" ('-' < '/'), though root "a" sorts first.
+    spark.range(2).withColumn("x", lit(1)).coalesce(1).write.parquet(s"$dir/a")
+    spark.range(2).withColumn("y", lit("b")).coalesce(1).write.parquet(s"$dir/a-b")
+    Seq(Seq(s"$dir/a", s"$dir/a-b"), Seq(s"$dir/a-b", s"$dir/a"),
+        Seq(s"$dir/a", dataFiles(s"$dir/a-b").head), Seq(s"$dir/a") ++ dataFiles(s"$dir/a-b"))
+      .foreach(paths => sameAsInferred(spark, paths: _*))
+    assert(Parquet.read(spark, s"$dir/a", s"$dir/a-b").columns.contains("y"))
+    // A root that sorts after the first leaf is never stat'd: a missing one
+    // there still plans from the footer, and Spark's own check then fails.
+    val late = s"$dir/b_missing"
+    assert(Parquet.footerSchema(spark, Seq(late, s"$dir/a")).isDefined)
+    assert(Parquet.footerSchema(spark, Seq(s"$dir/a-a_missing", s"$dir/a")).isEmpty)
+    assert(intercept[AnalysisException](Parquet.read(spark, late, s"$dir/a")).getCondition ==
+      intercept[AnalysisException](spark.read.parquet(late, s"$dir/a")).getCondition)
+  }
+
   test("one footer gives the inferred schema of bloom-written IngestClean files") {
     val dir = tmp("ingest")
     val batch = spark.createDataFrame(Seq(
@@ -188,6 +206,29 @@ class ParquetReadSpec extends AnyFunSuite {
     assert(release.select("month").distinct().collect().map(_.getString(0)).toSeq == Seq("09"))
     assert((spark.read.parquet(side).schema, Parquet.read(spark, side).schema) == before)
     assert(before._1("cent_id").dataType == IntegerType)
+  }
+
+  test("DiscogsLake.read keeps the partition-typed schema, values and column order of a lake whose files carry a year column, with no job") {
+    val dir = tmp("yearcol")
+    val lake = s"$dir/lake"
+    // writeDump replaces the data `year` and partitionBy drops it from the
+    // files; files written straight into a partition directory keep theirs.
+    DiscogsLake.writeDump(mixed(6).drop("month"), lake, "master", 2020, "09")
+    assert(!Parquet.footerSchema(spark, Seq(s"$lake/master")).get.fieldNames.contains("year"))
+    mixed(6).select("id", "year", "str", "month", "arr").coalesce(1)
+      .write.parquet(s"$lake/hand/year=2021/month=10")
+    // The read before declared partition types: inference off, year cast.
+    val legacy = spark.newSession()
+    legacy.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
+    Seq("master" -> Seq(2020 -> "09"), "hand" -> Seq(2021 -> "10")).foreach { case (t, parts) =>
+      val before = legacy.read.parquet(s"$lake/$t").withColumn("year", col("year").cast("int"))
+      var read: DataFrame = null
+      assert(jobsOf { read = DiscogsLake.read(spark, lake, t) } == 0, t)
+      assert(read.schema == before.schema, t)
+      assert(read.orderBy("id").collect().toSeq == before.orderBy("id").collect().toSeq, t)
+      assert(read.select("year", "month").distinct().collect().map(r => r.getInt(0) -> r.getString(1))
+        .toSeq == parts, t)
+    }
   }
 
   test("a tmp-dir sweep removes an exited owner's dirs and keeps a live sibling's and its own") {
