@@ -1636,7 +1636,7 @@ object Battery {
       // projection-discipline note (inlining the native signature into
       // lshBands' 64 getItems re-runs all planes per item).
       val c04 = docs
-        .select(col("doc_id"), transform(tokenSet(col("text")), tokenHash(_)).as("hs"))
+        .select(col("doc_id"), functions.VectorExprs.tokenHashesNative(tokenSet(col("text"))).as("hs"))
         .filter(size(col("hs")) > 0)
         .select(functions.VectorExprs.minhashSigNative(col("hs"), 64).as("sig"))
         .select(explode(lshBands(col("sig"), 16, 4)).as("band"))
@@ -1652,9 +1652,9 @@ object Battery {
       // computed analytically from the per-chunk value histograms, the
       // join's true cardinality without running it twice.
       val ch = docs
-        .select(col("doc_id"), transform(tokenSet(col("text")), tokenHash60(_)).as("hs"))
+        .select(col("doc_id"), functions.VectorExprs.tokenHashes60Native(tokenSet(col("text"))).as("hs"))
         .filter(size(col("hs")) > 0)
-        .select(simhash(col("hs")).as("sim"))
+        .select(functions.VectorExprs.simhashNative(col("hs")).as("sim"))
         .select(explode(array((0 until 2).map(c =>
           lit(c.toLong << 30).bitwiseOR(
             shiftright(col("sim"), c * 30).bitwiseAND(lit((1L << 30) - 1)))): _*)).as("key"))

@@ -6,10 +6,26 @@ import org.apache.spark.sql.functions._
 /** Shared column-level text/vector primitives for the training-data
   * pipeline operators (dedup, similarity, text analysis).
   *
-  * Everything here is built from codegen'd built-in functions and
-  * higher-order array functions — zero UDFs, so Catalyst can still push,
-  * prune and fold around these expressions, and whole-stage codegen stays
-  * intact on the hot path.
+  * Everything here is built from built-in functions and higher-order
+  * array functions — zero UDFs, so Catalyst can still push, prune and
+  * fold around these expressions. Higher-order functions (`transform`,
+  * `aggregate`, `zip_with`) do NOT enter whole-stage codegen: Spark
+  * evaluates their lambdas interpreted, row by row. So the folds a hot
+  * path runs per token or per element have native twins in
+  * [[VectorExprs]], pinned bit-identical to the forms here in
+  * VectorExprsSpec:
+  *  - REFERENCE forms (the definitions the native kernels and the DuckDB
+  *    oracle strings must match; no signature or vector pass runs them —
+  *    only TrainPrep's count-min buckets (qn28) call [[polyHash]], once per
+  *    distinct term):
+  *    [[polyHash]], [[tokenHash]], [[tokenHash60]] (native:
+  *    `tokenHashesNative` / `tokenHashes60Native`, [[TokenHashes]]),
+  *    [[simhash]] (native: `simhashNative`, [[SimHash]]), [[minhashSig]]
+  *    (native: `minhashSigNative`, [[MinHashSig]]), [[dot]] and
+  *    [[l2norm]] (native: `dotNative` / `l2normNative`, [[DotProductFF]]),
+  *    and the [[seqSum]] / [[seqSumLong]] folds they are built from;
+  *  - HOT-PATH forms, run as written (built-ins only, codegen'd):
+  *    [[tokens]], [[tokenSet]], [[lshBands]], [[cosine]], [[e6]].
   *
   * Cross-engine determinism contract: each primitive has an exact DuckDB
   * SQL equivalent (see the oracle strings in the operator modules). Folds
@@ -39,9 +55,9 @@ object TextFns {
     * DuckDB `list_reduce(list_prepend(7, [unicode(ch) for ch in
     * split(t,'')]), (acc,x) -> (acc*mult + x) % prime)`.
     *
-    * `ascii` = code of first char = the char's codepoint for BMP text;
-    * the testdata corpus is ASCII. (A full-unicode variant would swap
-    * `ascii` for a codepoint expression; the fold shape is unchanged.)
+    * `ascii` of a one-character string is its code point, supplementary
+    * characters included (pinned in VectorExprsSpec against the native
+    * [[TokenHashes]]).
     */
   def polyHash(tok: Column, mult: Long, prime: Long): Column =
     aggregate(split(tok, ""), lit(7L), (acc, ch) => (acc * mult + ascii(ch)) % prime)

@@ -211,6 +211,197 @@ case class MinHashSig(child: Expression, nPlanes: Int)
     copy(child = newChild)
 }
 
+/** Native token hashes over an `array<string>` of tokens: every token
+  * mapped through [[TextFns.tokenHash]] (`wide = false`) or
+  * [[TextFns.tokenHash60]] (`wide = true`), the arrays that feed every
+  * MinHash and SimHash signature.
+  *
+  * Why a custom Expression: [[TextFns.polyHash]] is an `aggregate` over
+  * `split(tok, "")`, so per token the HOF form allocates one string per
+  * character, converts each back to a Java String for `ascii`, and folds
+  * through the interpreted lambda path (higher-order functions never
+  * enter whole-stage codegen). This expression reads each token's UTF-8
+  * bytes once, with exactly [[TextFns.polyHash]]'s fold: seed 7, then
+  * `h = (h*mult + codepoint) % prime` per character, 31/P1 and, for the
+  * wide form, 131/P2 in the same pass, packed as
+  * `h1 % 2^30 | (h2 % 2^30) << 30`.
+  *
+  * Semantics copy the HOF form as it evaluates (pinned in
+  * VectorExprsSpec), not as it reads:
+  *  - the empty token folds ONE `0` — `split("", "")` is `[""]` and
+  *    `ascii("")` is 0;
+  *  - a character is what `split(tok, "")` cuts, `numBytesForFirstByte`
+  *    bytes from its lead byte, and its code is what `ascii` reads from
+  *    it: the code point of a well-formed sequence, and for a malformed
+  *    one the first code point of Java's decoding (U+FFFD);
+  *  - a null token yields a null element, a null array a null array.
+  */
+@ExpressionDescription(
+  usage = "token_hashes(toks, wide) - polynomial hash of every token of a string array.")
+case class TokenHashes(child: Expression, wide: Boolean)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+
+  override def dataType: DataType = ArrayType(LongType,
+    containsNull = child.dataType.asInstanceOf[ArrayType].containsNull)
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(org.apache.spark.sql.types.StringType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"token_hashes requires array<string>, got $other")
+    }
+
+  override protected def nullSafeEval(toks: Any): Any =
+    TokenHashes.hashes(toks.asInstanceOf[ArrayData], wide)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, toks => s"graft.functions.TokenHashes.hashes($toks, $wide)")
+
+  override protected def withNewChildInternal(newChild: Expression): TokenHashes =
+    copy(child = newChild)
+}
+
+object TokenHashes {
+  import org.apache.spark.unsafe.types.UTF8String
+
+  /** The hash of every token of `toks`; a null token hashes to null. */
+  def hashes(toks: ArrayData, wide: Boolean): ArrayData = {
+    val n = toks.numElements()
+    val out = new Array[Long](n)
+    var anyNull = false
+    var i = 0
+    while (i < n) {
+      if (toks.isNullAt(i)) anyNull = true
+      else out(i) = hash(toks.getUTF8String(i), wide)
+      i += 1
+    }
+    if (!anyNull) org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+    else new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      Array.tabulate[Any](n)(j => if (toks.isNullAt(j)) null else out(j)))
+  }
+
+  private def hash(tok: UTF8String, wide: Boolean): Long = {
+    val n = tok.numBytes()
+    var h1 = 7L
+    var h2 = 7L
+    if (n == 0) { // split("", "") is [""], and ascii("") is 0
+      h1 = 7L * 31 % TextFns.P1
+      h2 = 7L * 131 % TextFns.P2
+    }
+    var i = 0
+    while (i < n) {
+      val len = UTF8String.numBytesForFirstByte(tok.getByte(i))
+      val cp = codePoint(tok, i, len)
+      h1 = (h1 * 31 + cp) % TextFns.P1
+      if (wide) h2 = (h2 * 131 + cp) % TextFns.P2
+      i += len
+    }
+    if (wide) (h1 % (1L << 30)) | ((h2 % (1L << 30)) << 30) else h1
+  }
+
+  /** `ascii` of the `len`-byte character `split(tok, "")` cuts at byte
+    * `i`. A malformed sequence decodes as Java decodes it, as `ascii`
+    * does. One cut short by the end of the token does too; there `ascii`
+    * itself would read `len` bytes, past the token's end. */
+  private def codePoint(tok: UTF8String, i: Int, len: Int): Int = {
+    val b0 = tok.getByte(i) & 0xFF
+    if (b0 < 0x80) return b0
+    val end = math.min(i + len, tok.numBytes())
+    if (len > 1 && end == i + len) {
+      var cp = b0 & (0xFF >> (len + 1))
+      var ok = true
+      var k = i + 1
+      while (k < end) {
+        val b = tok.getByte(k) & 0xFF
+        ok = ok && (b & 0xC0) == 0x80
+        cp = (cp << 6) | (b & 0x3F)
+        k += 1
+      }
+      val least = if (len == 2) 0x80 else if (len == 3) 0x800 else 0x10000
+      if (ok && cp >= least && cp <= Character.MAX_CODE_POINT &&
+          !(cp >= Character.MIN_SURROGATE && cp <= Character.MAX_SURROGATE)) return cp
+    }
+    val bytes = Array.tabulate[Byte](end - i)(k => tok.getByte(i + k))
+    new String(bytes, java.nio.charset.StandardCharsets.UTF_8).codePointAt(0)
+  }
+}
+
+/** Native SimHash over an `array<bigint>` of 60-bit token hashes — the
+  * [[TextFns.simhash]] HOF stack (60 `aggregate(transform(hs, ...))`
+  * bit counts, each a separate interpreted traversal) as ONE pass with
+  * a `long[60]` bit counter. Bit k is set iff `2 * count_k > size(hs)`
+  * (strict majority; ties clear).
+  *
+  * Semantics copy the HOF form as it evaluates (pinned in
+  * VectorExprsSpec): a null hash element nulls every bit count, and the
+  * HOF's `when(null > n, ...)` falls to 0 — so an array holding a null,
+  * and a null array, yield 0, never null; an empty array yields 0.
+  */
+@ExpressionDescription(
+  usage = "simhash60(hs) - 60-bit majority SimHash of a long-hash array.")
+case class SimHash(child: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false // null inputs -> 0, the HOF's when(null) fall-through
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(LongType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"simhash60 requires array<bigint>, got $other")
+    }
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val v = child.eval(input)
+    if (v == null) 0L else SimHash.of(v.asInstanceOf[ArrayData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code =
+      code"""
+         |${c.code}
+         |final long ${ev.value} = ${c.isNull} ? 0L : graft.functions.SimHash.of(${c.value});
+       """.stripMargin,
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): SimHash =
+    copy(child = newChild)
+}
+
+object SimHash {
+  private val Bits = 60
+
+  def of(hs: ArrayData): Long = {
+    val n = hs.numElements()
+    val counts = new Array[Long](Bits)
+    var j = 0
+    while (j < n) {
+      if (hs.isNullAt(j)) return 0L
+      val h = hs.getLong(j)
+      var k = 0
+      while (k < Bits) {
+        counts(k) += (h >> k) & 1L
+        k += 1
+      }
+      j += 1
+    }
+    var sig = 0L
+    var k = 0
+    while (k < Bits) {
+      if (2 * counts(k) > n) sig |= 1L << k
+      k += 1
+    }
+    sig
+  }
+}
+
 /** Native integer squared L2 distance over two `array<long>` columns
   * — the SQ8 rank loop ([[graft.operators.SQ8]]/qn38's `qd2`), taken
   * out of HOF land. The declarative form
@@ -599,6 +790,20 @@ object VectorExprs {
     * [[TextFns.minhashSig]] (equality pinned in VectorExprsSpec). */
   def minhashSigNative(hs: Column, nPlanes: Int): Column =
     GraftSqlBridge.column(MinHashSig(GraftSqlBridge.expression(hs), nPlanes))
+
+  /** Column wrapper for [[TokenHashes]] — drop-in for [[TextFns.tokenHash]]
+    * mapped over `toks` (equality pinned in VectorExprsSpec). */
+  def tokenHashesNative(toks: Column): Column =
+    GraftSqlBridge.column(TokenHashes(GraftSqlBridge.expression(toks), wide = false))
+
+  /** Column wrapper for [[TokenHashes]] — drop-in for
+    * [[TextFns.tokenHash60]] mapped over `toks`. */
+  def tokenHashes60Native(toks: Column): Column =
+    GraftSqlBridge.column(TokenHashes(GraftSqlBridge.expression(toks), wide = true))
+
+  /** Column wrapper for [[SimHash]] — drop-in for [[TextFns.simhash]]. */
+  def simhashNative(hs: Column): Column =
+    GraftSqlBridge.column(SimHash(GraftSqlBridge.expression(hs)))
 
   /** Column wrapper for [[HammingLL]]. */
   def hammingNative(a: Column, b: Column): Column =

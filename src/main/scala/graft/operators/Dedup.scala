@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.functions.TextFns._
 import graft.functions.{FirstAgreeingBand, PairwiseEqCount, SortedFirstCommon, SortedIntersectCount}
+import graft.functions.VectorExprs.{minhashSigNative, simhashNative, tokenHashes60Native, tokenHashesNative}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -716,13 +717,8 @@ object Dedup {
          |WHERE a.doc_id < b.doc_id AND len(list_intersect(a.bands, b.bands)) > 0
          |ORDER BY doc_a, doc_b""".stripMargin
     }) { (s, dir) =>
-      // Token-hash array materialized in its own projection: minhashSig
-      // references it 64 times, and an inlined expression would be
-      // re-evaluated (full re-hash of every token) per permutation.
       val sig = tokenized(s, dir)
-        .select(col("doc_id"), transform(col("toks"), tokenHash(_)).as("hs"))
-        .select(col("doc_id"),
-          graft.functions.VectorExprs.minhashSigNative(col("hs"), 64).as("sig"))
+        .select(col("doc_id"), minhashSigNative(tokenHashesNative(col("toks")), 64).as("sig"))
         // Materialization barrier: sig feeds the band explode and both
         // broadcast payloads (3 subtrees), and each would otherwise
         // re-run the 64-permutation MinHash over every document.
@@ -856,8 +852,7 @@ object Dedup {
          |FROM t ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
       tokenized(s, dir)
-        .select(col("doc_id"), transform(col("toks"), tokenHash60(_)).as("hs"))
-        .select(col("doc_id"), simhash(col("hs")).as("simhash"))
+        .select(col("doc_id"), simhashNative(tokenHashes60Native(col("toks"))).as("simhash"))
         .localCheckpoint(true) // materialize before sort (see jaccardPairs)
         .orderBy("doc_id")
     },
@@ -971,8 +966,7 @@ object Dedup {
     Q("qn06b_simhash_super_chunks", sqlSimhashPairsOracle) { (s, dir) =>
       memoized("simhashsuper", s, dir, 0, 0) {
         val sh = tokenized(s, dir)
-          .select(col("doc_id"), transform(col("toks"), tokenHash60(_)).as("hs"))
-          .select(col("doc_id"), simhash(col("hs")).as("simhash"))
+          .select(col("doc_id"), simhashNative(tokenHashes60Native(col("toks"))).as("simhash"))
           .localCheckpoint(true)
         simhashPairsSuperChunk(s, sh, sh.count()).localCheckpoint(true)
       }.orderBy("doc_a", "doc_b")
@@ -988,8 +982,7 @@ object Dedup {
     // the pair sets hash-match whichever branch runs.
     Q("qn06c_simhash_probe_enum", sqlSimhashPairsOracleWhere("doc_id < 300")) { (s, dir) =>
       val sh = tokenized(s, dir).filter(col("doc_id") < 300)
-        .select(col("doc_id"), transform(col("toks"), tokenHash60(_)).as("hs"))
-        .select(col("doc_id"), simhash(col("hs")).as("simhash"))
+        .select(col("doc_id"), simhashNative(tokenHashes60Native(col("toks"))).as("simhash"))
         .localCheckpoint(true)
       simhashPairsProbeEnum(s, sh, sh.count())
         .localCheckpoint(true).orderBy("doc_a", "doc_b")
@@ -1316,8 +1309,7 @@ object Dedup {
     * one definition regardless of branch. */
   private def simhashNearPairs(s: SparkSession, dir: String): DataFrame = {
       val sh = tokenized(s, dir)
-        .select(col("doc_id"), transform(col("toks"), tokenHash60(_)).as("hs"))
-        .select(col("doc_id"), simhash(col("hs")).as("simhash"))
+        .select(col("doc_id"), simhashNative(tokenHashes60Native(col("toks"))).as("simhash"))
         // Materialization barrier: both sides of the chunk self-join
         // would otherwise re-run the 60-bit SimHash per document.
         .localCheckpoint(true)

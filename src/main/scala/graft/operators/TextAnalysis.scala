@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.functions.TextFns._
+import graft.functions.VectorExprs.tokenHashesNative
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -196,7 +197,7 @@ object TextAnalysis {
       // per row: inlining `hs` into the per-gram element_at lambda makes
       // Spark re-evaluate the whole token-hash array per access — O(sz^2)
       // re-hashing that benched ~50x slower at sf0.1.
-      val hsCol = transform(toksCol, tokenHash(_))
+      val hsCol = tokenHashesNative(toksCol)
       // 1-based element_at mirrors DuckDB's 1-based list indexing; range
       // i in [1, len-2] yields all 3-gram start positions.
       val gramsCol = transform(sequence(lit(1), size(col("hs")) - 2), i =>

@@ -108,11 +108,17 @@ object IngestClean {
     spark.conf.getOption("spark.graft.ingest.maxSemiJoinKeys")
       .map(_.toLong).getOrElse(100000L)
 
-  /** Expected distinct keys per written file, sizing the bloom bitsets.
-    * With [[bloomFpp]] at its 1e-8 default, 100k ndv costs ~480 KB per
-    * file — under parquet-mr's 1 MB bloom cap; a much larger ndv would
-    * silently hit the cap and degrade the real fpp. Oversizing wastes
-    * kilobytes, undersizing raises the false-positive rate — both safe. */
+  /** Expected distinct keys per written file, sizing the bloom bitsets
+    * of writes whose key count is not known up front: the first batch's
+    * lake append (no probe keys are collected before a lake exists), a
+    * batch over [[maxProbeKeys]], and the index rebuild and repair. A
+    * batch append with a known count sizes its bitsets to that count
+    * instead — a 100k-ndv bitset is ~0.5–1 MB per file, which dwarfs a
+    * few-hundred-row batch file and is read back by every later batch's
+    * bloom walk. With [[bloomFpp]] at its 1e-8 default, 100k ndv stays
+    * under parquet-mr's 1 MB bloom cap; a much larger ndv would silently
+    * hit the cap and degrade the real fpp. Oversizing wastes space,
+    * undersizing raises the false-positive rate — both safe. */
   private def bloomNdv(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.ingest.bloomNdv")
       .map(_.toLong).getOrElse(100000L)
@@ -530,8 +536,11 @@ object IngestClean {
       (prevExcluded.toSeq :+
         "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
         .mkString(","))
+    // The sha bloom holds at most the batch's first-per-nrm shas, which
+    // the probe-key collect already counted.
+    val shaNdv = probeKeys.map(k => math.max(1L, k._1.size.toLong)).getOrElse(bloomNdv(spark))
     try
-      survivors.write.options(BloomLake.writerOptions("sha", bloomNdv(spark), bloomFpp(spark)))
+      survivors.write.options(BloomLake.writerOptions("sha", shaNdv, bloomFpp(spark)))
         .mode(SaveMode.Append).parquet(lakeDir)
     finally prevExcluded match {
       case Some(v) => execSession.conf.set(aqeExcludedKey, v)
@@ -554,13 +563,17 @@ object IngestClean {
     // authoritative record of what landed. The bands come from the
     // checkpoint (same deterministic expression — no second MinHash
     // pass), restricted to those authoritative ids.
+    // The band bloom is sized from the lake append's observed row count:
+    // each appended doc carries at most NBands bands.
+    val appended = obsApp.get("n").asInstanceOf[Long]
     val newFiles = (lakeFiles() -- preAppend).toSeq.sorted
     if (newFiles.nonEmpty) {
       val appendedIds = Parquet.readBase(spark, lakeDir, newFiles)
         .select("doc_id")
       bandedFirst.join(appendedIds, Seq("doc_id"), "left_semi")
         .select("band", "doc_id")
-        .write.options(BloomLake.writerOptions("band", bloomNdv(spark), bloomFpp(spark)))
+        .write.options(BloomLake.writerOptions("band",
+          math.max(1L, appended * StreamDedup.NBands), bloomFpp(spark)))
         .mode(SaveMode.Append).parquet(indexDir)
       if (!indexExists) writeMarker(spark, indexDir)
     }
@@ -595,7 +608,7 @@ object IngestClean {
       obsIn.get("n").asInstanceOf[Long],
       obsQuality.get("n").asInstanceOf[Long],
       obsNovel.get("n").asInstanceOf[Long],
-      obsApp.get("n").asInstanceOf[Long])
+      appended)
     // The finally matters for a LONG-RUNNING stream: the band
     // checkpoint pins ~NBands x batch rows in block storage per batch,
     // and relying on GC/ContextCleaner to release them lets thousands

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.TextFns._
+import graft.functions.VectorExprs.tokenHashesNative
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -74,13 +75,17 @@ object StreamDedup {
 
   /** Tokenize -> MinHash(64) -> 16 band keys, one row per (doc, band).
     * Pure Column expressions: works identically on batch and streaming
-    * frames. Input needs (doc_id, text, us). */
+    * frames. Input needs (doc_id, text, us). The token hashes and the
+    * signature are the native kernels ([[graft.functions.TokenHashes]],
+    * [[graft.functions.MinHashSig]]), which run inside whole-stage
+    * codegen; their HOF references in TextFns would run interpreted on
+    * every ingest batch. */
   def banded(docs: DataFrame): Dataset[BandDoc] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs
       .select(col("doc_id"), col("us"),
-        transform(tokenSet(col("text")), tokenHash(_)).as("hs"))
+        tokenHashesNative(tokenSet(col("text"))).as("hs"))
       .filter(size(col("hs")) > 0)
       .select(col("doc_id"), col("us"),
         graft.functions.VectorExprs.minhashSigNative(col("hs"), NPlanes).as("sig"))

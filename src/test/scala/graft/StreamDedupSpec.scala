@@ -237,6 +237,31 @@ class StreamDedupSpec extends AnyFunSuite {
     assert(kept == Set(1L, 4L, 7L))
   }
 
+  test("cleanBatch sizes its appends' bloom bitsets to the batch, and the bitsets hold the batch's keys") {
+    import graft.streaming.IngestClean
+    import graft.sources.{BloomLake, LakeListing}
+    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_bloom").toString
+    val (lake, idx) = (s"$dir/lake", s"$dir/index")
+    def batch(ids: Range) = spark.createDataFrame(ids.map(i =>
+      Doc(i, (1 to 12).map(j => s"w${i}x$j").mkString(" "), i * 1000000L)))
+    def files(d: String): Map[String, Long] = LakeListing.dataFileSizes(
+      spark.sessionState.newHadoopConf(), new org.apache.hadoop.fs.Path(d))
+      .map { case (p, n) => p.toString -> n }.toMap
+    assert(IngestClean.cleanBatch(spark, batch(1 to 30), lake, idx).appended == 30)
+    val lake1 = files(lake)
+    assert(IngestClean.cleanBatch(spark, batch(31 to 60), lake, idx).appended == 30)
+    // Capacity: every bitset holds its row group's keys at the ingest fpp
+    // (one sha per lake row, one band per index row).
+    BloomLake.assertBloomCapacity(spark, lake, "sha", fpp = 1e-8)
+    BloomLake.assertBloomCapacity(spark, idx, "band", fpp = 1e-8)
+    // Sized to the batch: a bitset for the 100k-key default alone is
+    // ~0.5 MB. The first batch's lake append is the one write with no
+    // count yet (no probe keys are collected before a lake exists).
+    val sized = (files(lake) -- lake1.keys) ++ files(idx)
+    assert(sized.nonEmpty)
+    sized.foreach { case (f, n) => assert(n < 64 * 1024, s"$f is $n bytes") }
+  }
+
   test("ingest keeps lake zone maps current with O(new-files) refreshes") {
     import graft.streaming.IngestClean
     import graft.sources.ZoneMap

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.TextFns
+import graft.functions.{TextFns, VectorExprs}
 import graft.functions.VectorExprs.dotNative
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -250,5 +250,138 @@ class VectorExprsSpec extends AnyFunSuite {
     val n = d.select(graft.functions.SortedIntersectCount(lit(null).cast("array<string>"), col("b")))
       .collect().map(_.isNullAt(0)).toSeq
     assert(n.forall(identity))
+  }
+
+  /** An ArrayData of longs as a Scala value: None for a null array, None
+    * for a null element. */
+  private def longs(a: org.apache.spark.sql.catalyst.util.ArrayData): Option[Seq[Option[Long]]] =
+    Option(a).map(a => (0 until a.numElements()).map(i =>
+      if (a.isNullAt(i)) None else Some(a.getLong(i))))
+
+  private def longs(r: org.apache.spark.sql.Row, i: Int): Option[Seq[Option[Long]]] =
+    Option(r.getSeq[Any](i)).map(_.map(x => Option(x).map(_.asInstanceOf[Long])))
+
+  test("native token hashes are bit-identical to the HOF fold, codegen and eval (incl. edge shapes)") {
+    import spark.implicits._
+    import graft.functions.TokenHashes
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    // ASCII, 2-byte, 3-byte and 4-byte (supplementary) code points, and
+    // the empty-string token
+    val words = Seq("alpha", "x", "café", "naïve", "€uro", "日本語",
+      "\uD834\uDD1E", "a\uD83D\uDE00b", "")
+    val toks: Seq[Seq[String]] = words.map(Seq(_)) ++
+      (0 until 60).map(i => Seq.tabulate(1 + i % 13)(j => words((i * 7 + j * 3) % words.size) + (i * j))) ++
+      Seq(Seq("a", null, "b"), Seq(null), Seq.empty[String], null)
+    val df = toks.toDF("toks")
+    val hof = df.select(
+      transform(col("toks"), TextFns.tokenHash(_)),
+      transform(col("toks"), TextFns.tokenHash60(_))).collect()
+    // The edge semantics, as the HOF form evaluates them: the empty token
+    // folds one 0, a null token hashes to null, a null array stays null.
+    assert(longs(hof(words.indexOf("")), 0) == Some(Seq(Some(7L * 31 % TextFns.P1))))
+    assert(longs(hof(toks.size - 4), 0) == Some(Seq(Some(7L * 31 + 'a'), None, Some(7L * 31 + 'b'))))
+    assert(longs(hof(toks.size - 1), 1).isEmpty)
+
+    val in = BoundReference(0, ArrayType(StringType, containsNull = true), nullable = true)
+    val exprs = Seq(TokenHashes(in, wide = false), TokenHashes(in, wide = true))
+    val codegen = GenerateUnsafeProjection.generate(exprs) // throws if doGenCode does not compile
+    val rows = df.queryExecution.toRdd.map(_.copy()).collect()
+    assert(rows.length == hof.length)
+    rows.zip(hof).zipWithIndex.foreach { case ((row, h), i) =>
+      val gen = codegen(row)
+      (0 to 1).foreach { w =>
+        val want = longs(h, w)
+        assert(longs(exprs(w).eval(row).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+          == want, s"eval, wide=${w == 1}, input ${toks(i)}")
+        assert(longs(if (gen.isNullAt(w)) null else gen.getArray(w)) == want,
+          s"codegen, wide=${w == 1}, input ${toks(i)}")
+      }
+    }
+    // and through the column wrappers in a query
+    val nat = df.select(VectorExprs.tokenHashesNative(col("toks")),
+      VectorExprs.tokenHashes60Native(col("toks"))).collect()
+    nat.zip(hof).foreach { case (n, h) => (0 to 1).foreach(w => assert(longs(n, w) == longs(h, w))) }
+  }
+
+  test("a malformed UTF-8 token hashes as the HOF fold reads it") {
+    import graft.functions.TokenHashes
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    // a lone continuation byte, a byte no UTF-8 sequence starts with, a
+    // UTF-8-encoded surrogate, and an overlong encoding, each mid-token
+    val bad = Seq(Array(0x61, 0x80, 0x62), Array(0x61, 0xFF, 0x62), Array(0x61, 0xED, 0xA0, 0x80, 0x62),
+      Array(0x61, 0xE0, 0x80, 0x80, 0x62), Array(0xC3, 0x61, 0x62, 0x63))
+      .map(b => UTF8String.fromBytes(b.map(_.toByte)))
+    val arr = new GenericArrayData(bad.toArray[Any])
+    val lit = Literal.create(arr, ArrayType(StringType, containsNull = false))
+    val hof = spark.range(1).select(
+      transform(org.apache.spark.sql.GraftSqlBridge.column(lit), TextFns.tokenHash60(_))).head()
+    val want = longs(hof, 0)
+    assert(longs(TokenHashes(lit, wide = true).eval(null)
+      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]) == want)
+    val in = BoundReference(0, ArrayType(StringType, containsNull = false), nullable = false)
+    val gen = GenerateUnsafeProjection.generate(Seq(TokenHashes(in, wide = true)))(
+      org.apache.spark.sql.catalyst.InternalRow(arr))
+    assert(longs(gen.getArray(0)) == want)
+  }
+
+  test("native SimHash is bit-identical to the HOF bit-majority stack, codegen and eval (incl. edge shapes)") {
+    import spark.implicits._
+    import graft.functions.SimHash
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val hs: Seq[Seq[java.lang.Long]] = (0 until 100).map { i =>
+      Seq.tabulate(1 + i % 11)(j => TextFns.mix64(i * 1000L + j) & ((1L << 60) - 1): java.lang.Long)
+    } ++ Seq(
+      Seq[java.lang.Long](1L, 1L, 0L, 0L), // a tie clears the bit
+      Seq[java.lang.Long](1L, 1L, 0L),
+      Seq[java.lang.Long](-1L, Long.MinValue),
+      Seq.empty[java.lang.Long],
+      Seq[java.lang.Long](7L, null, 11L),
+      null)
+    val df = hs.toDF("hs")
+    val hof = df.select(TextFns.simhash(col("hs"))).collect().map(_.getLong(0))
+    // The edge semantics, as the HOF form evaluates them: an empty array,
+    // an array holding a null hash and a null array all yield 0.
+    assert(hof.takeRight(3).toSeq == Seq(0L, 0L, 0L))
+    assert(hof(hs.size - 6) == 0L && hof(hs.size - 5) == 1L)
+
+    val in = BoundReference(0, ArrayType(LongType, containsNull = true), nullable = true)
+    val codegen = GenerateUnsafeProjection.generate(Seq(SimHash(in)))
+    val rows = df.queryExecution.toRdd.map(_.copy()).collect()
+    rows.zip(hof).zipWithIndex.foreach { case ((row, want), i) =>
+      assert(SimHash(in).eval(row) == want, s"eval, input ${hs(i)}")
+      assert(codegen(row).getLong(0) == want, s"codegen, input ${hs(i)}")
+    }
+    val nat = df.select(VectorExprs.simhashNative(col("hs"))).collect().map(_.getLong(0))
+    assert(nat.toSeq == hof.toSeq)
+  }
+
+  test("no src/main pass hashes token arrays or SimHash through the HOF forms outside TextFns") {
+    val call = """\b(?:tokenHash|tokenHash60|simhash)\(""".r
+    Seq("transform(col(\"toks\"), tokenHash(_))", "transform(t, TextFns.tokenHash60(_))",
+        "transform(t, x => tokenHash(x))", "simhash(col(\"hs\"))")
+      .foreach(code => assert(call.findFirstIn(code).isDefined, code))
+    Seq("tokenHashesNative(col(\"toks\"))", "simhashNative(h)", "sqlSimhash(hs)", "sqlTokenHash(\"t\")")
+      .foreach(code => assert(call.findFirstIn(code).isEmpty, code))
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
+    def scala(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(scala)
+      else Seq(f).filter(_.getName.endsWith(".scala"))
+    val offenders = scala(root).filterNot(_.getName == "TextFns.scala").flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      call.findAllMatchIn(text)
+        .map(m => s"${f.getPath}:${text.substring(0, m.start).count(_ == '\n') + 1}")
+    }
+    assert(offenders.isEmpty,
+      "hash tokens with VectorExprs.tokenHashesNative / tokenHashes60Native and SimHash with " +
+        s"simhashNative — the HOF forms run interpreted: ${offenders.mkString(", ")}")
   }
 }
