@@ -302,29 +302,17 @@ object TokenHashes {
   }
 
   /** `ascii` of the `len`-byte character `split(tok, "")` cuts at byte
-    * `i`. A malformed sequence decodes as Java decodes it, as `ascii`
-    * does. One cut short by the end of the token does too; there `ascii`
-    * itself would read `len` bytes, past the token's end. */
+    * `i`: Java's first code point of those bytes, as `ascii` reads it,
+    * so a malformed sequence decodes as `ascii` decodes it. One cut
+    * short by the end of the token decodes from the bytes that remain;
+    * there `ascii` itself would read `len` bytes, past the token's end. */
   private def codePoint(tok: UTF8String, i: Int, len: Int): Int = {
     val b0 = tok.getByte(i) & 0xFF
-    if (b0 < 0x80) return b0
-    val end = math.min(i + len, tok.numBytes())
-    if (len > 1 && end == i + len) {
-      var cp = b0 & (0xFF >> (len + 1))
-      var ok = true
-      var k = i + 1
-      while (k < end) {
-        val b = tok.getByte(k) & 0xFF
-        ok = ok && (b & 0xC0) == 0x80
-        cp = (cp << 6) | (b & 0x3F)
-        k += 1
-      }
-      val least = if (len == 2) 0x80 else if (len == 3) 0x800 else 0x10000
-      if (ok && cp >= least && cp <= Character.MAX_CODE_POINT &&
-          !(cp >= Character.MIN_SURROGATE && cp <= Character.MAX_SURROGATE)) return cp
+    if (b0 < 0x80) b0
+    else {
+      val bytes = Array.tabulate[Byte](math.min(len, tok.numBytes() - i))(k => tok.getByte(i + k))
+      new String(bytes, java.nio.charset.StandardCharsets.UTF_8).codePointAt(0)
     }
-    val bytes = Array.tabulate[Byte](end - i)(k => tok.getByte(i + k))
-    new String(bytes, java.nio.charset.StandardCharsets.UTF_8).codePointAt(0)
   }
 }
 

@@ -563,17 +563,25 @@ object IngestClean {
     // authoritative record of what landed. The bands come from the
     // checkpoint (same deterministic expression — no second MinHash
     // pass), restricted to those authoritative ids.
-    // The band bloom is sized from the lake append's observed row count:
-    // each appended doc carries at most NBands bands.
+    // The band bloom holds the distinct bands of the appended docs: at
+    // most the batch's distinct bands, which the probe-key collect
+    // counted. Where nothing was probed and no lake nrm was read, every
+    // first-per-nrm doc is exact-novel, so the novel count times NBands
+    // bounds them. The appended count alone would not: the semi-join is
+    // on doc_id, so a lake exact-dup row sharing a survivor's doc_id
+    // writes its bands too.
     val appended = obsApp.get("n").asInstanceOf[Long]
+    val bandNdv = probeKeys.map(k => math.max(1L, k._2.size.toLong))
+      .orElse(Option.when(seenNrm.isEmpty)(
+        math.max(1L, obsNovel.get("n").asInstanceOf[Long] * StreamDedup.NBands)))
+      .getOrElse(bloomNdv(spark))
     val newFiles = (lakeFiles() -- preAppend).toSeq.sorted
     if (newFiles.nonEmpty) {
       val appendedIds = Parquet.readBase(spark, lakeDir, newFiles)
         .select("doc_id")
       bandedFirst.join(appendedIds, Seq("doc_id"), "left_semi")
         .select("band", "doc_id")
-        .write.options(BloomLake.writerOptions("band",
-          math.max(1L, appended * StreamDedup.NBands), bloomFpp(spark)))
+        .write.options(BloomLake.writerOptions("band", bandNdv, bloomFpp(spark)))
         .mode(SaveMode.Append).parquet(indexDir)
       if (!indexExists) writeMarker(spark, indexDir)
     }

@@ -260,6 +260,21 @@ class StreamDedupSpec extends AnyFunSuite {
     val sized = (files(lake) -- lake1.keys) ++ files(idx)
     assert(sized.nonEmpty)
     sized.foreach { case (f, n) => assert(n < 64 * 1024, s"$f is $n bytes") }
+    // Four rows share a doc_id: three repeat docs 1-3 and are dropped
+    // as exact dups, the fourth is kept. With no index to flag the
+    // repeats' bands (a fresh index dir, as after a crash between the
+    // lake and index appends), the doc_id survives; the index append
+    // joins on doc_id, so it writes all four rows' bands while the lake
+    // append counts one row. (Parquet's bitset for 16 keys holds 53 at
+    // 1e-8, so a single repeat would not overflow it.)
+    val twins = spark.createDataFrame((1 to 3).map(i =>
+      Doc(100, (1 to 12).map(j => s"w${i}x$j").mkString(" "), (100 + i) * 1000000L)) :+
+      Doc(100, (1 to 12).map(j => s"w100x$j").mkString(" "), 104000000L))
+    val idx2 = s"$dir/index2"
+    assert(IngestClean.cleanBatch(spark, twins, lake, idx2).appended == 1)
+    assert(spark.read.parquet(idx2).filter(col("doc_id") === 100L).count() ==
+      4 * StreamDedup.NBands)
+    BloomLake.assertBloomCapacity(spark, idx2, "band", fpp = 1e-8)
   }
 
   test("ingest keeps lake zone maps current with O(new-files) refreshes") {
