@@ -1565,6 +1565,14 @@ object Battery {
     // per-batch cost and file counts stay flat like the manual form's,
     // and its verdicts are identical to both.
     val forms = Seq("plain", "compacted", "auto")
+    // Spark jobs per append, counted with a listener drained before each
+    // read ("auto" counts the compactions cleanBatch runs itself).
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobCounter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    s.sparkContext.addSparkListener(jobCounter)
     val statsByForm = forms.map { form =>
       val root = java.nio.file.Files.createTempDirectory(s"graft_battery_grow_$form").toString
       val lake = s"$root/lake"; val idx = s"$root/index"
@@ -1572,25 +1580,30 @@ object Battery {
         val batch = ingestCorpus(s, total)
           .filter(col("doc_id") >= b * batchN && col("doc_id") < (b + 1) * batchN)
           .select(col("doc_id"), col("text"), (col("doc_id") + 1L).as("us"))
+        GraftSqlBridge.drainListeners(s.sparkContext); jobs.set(0)
         val (st, sec) = timed(graft.streaming.IngestClean.cleanBatch(s, batch, lake, idx,
           autoCompact = if (form == "auto") Some(8) else None))
+        GraftSqlBridge.drainListeners(s.sparkContext)
+        val batchJobs = jobs.get
         val compactSec =
           if (form == "compacted" && (b + 1) % 10 == 0)
             timed(graft.streaming.IngestClean.compactIngest(s, lake, idx))._2
           else 0.0
         (st, sec, compactSec,
           graft.streaming.IngestClean.lastExactFiles,
-          graft.streaming.IngestClean.lastBandFiles)
+          graft.streaming.IngestClean.lastBandFiles, batchJobs)
       }
       // per-decile means: the growth curve in 4 numbers per form
       perBatch.grouped(10).zipWithIndex.foreach { case (g, i) =>
         val meanSec = g.map(_._2).sum / g.size
         val cSec = g.map(_._3).sum
         val lastEx = g.last._4; val lastBd = g.last._5
-        println(f"""{"battery":"ingestgrow","form":"$form","batches":"${i * 10 + 1}-${i * 10 + g.size}","mean_batch_sec":$meanSec%.2f,"compact_sec":$cSec%.1f,"exact_files":"${lastEx._2}/${lastEx._1}","band_files":"${lastBd._2}/${lastBd._1}"}""")
+        val meanJobs = g.map(_._6).sum.toDouble / g.size
+        println(f"""{"battery":"ingestgrow","form":"$form","batches":"${i * 10 + 1}-${i * 10 + g.size}","mean_batch_sec":$meanSec%.2f,"mean_batch_jobs":$meanJobs%.1f,"compact_sec":$cSec%.1f,"exact_files":"${lastEx._2}/${lastEx._1}","band_files":"${lastBd._2}/${lastBd._1}"}""")
       }
       perBatch.map(_._1)
     }
+    s.sparkContext.removeSparkListener(jobCounter)
     require(statsByForm(0) == statsByForm(1) && statsByForm(0) == statsByForm(2),
       "compaction changed batch verdicts — the rewrite is not transparent")
   }

@@ -1,13 +1,16 @@
 package graft
 
 /** Run a handful of INDEPENDENT Spark jobs concurrently (guide §2.6
-  * "overlap independent jobs"). Two callers:
+  * "overlap independent jobs"). Three callers:
   *  - an index rebuild stages its sides (`operators.IndexSwap`): the
   *    sides derive from already-materialized inputs and land in disjoint
   *    `.stage/<side>` dirs, and the atomic-rename commit happens strictly
   *    AFTER this returns;
   *  - the backfill ingests one month's dumps (`sources.Backfill`): each
-  *    dump appends into its own `<lake>/<type>` table.
+  *    dump appends into its own `<lake>/<type>` table;
+  *  - an ingest micro-batch walks its lake's and its index's bloom
+  *    footers (`streaming.IngestClean`): reads on the driver, or one
+  *    fan-out job each past 64 files.
   * Run sequentially each job pays full per-job latency while most cores
   * idle (a `.gz` dump or a fixture-scale side is one or a few tasks);
   * submitted from a small pool the next job's tasks back-fill the
@@ -15,7 +18,7 @@ package graft
   * priority at scale.
   *
   * At most `min(tasks, 4)` threads: every caller has at most four
-  * independent jobs (an index's sides, a month's four dump types), so
+  * independent tasks (an index's sides, a month's four dump types), so
   * the bound needs no knob.
   *
   * Failure: every task is waited for BEFORE the first error (in task

@@ -20,21 +20,22 @@ import org.apache.spark.sql.functions._
   *    ([[BloomLake.writerOptions]]). A batch's exact check collects its
   *    own distinct shas (one bounded O(batch) action), bloom-walks the
   *    lake's FOOTERS ([[BloomLake.pruneByStringSet]] — metadata only,
-  *    executor fan-out past 64 files), and anti-joins the batch against
-  *    ONLY the surviving files' `nrm` column. A mostly-novel batch — the
-  *    steady state — excludes nearly every file and scans almost
-  *    nothing. No `distinct()` over the lake: an anti-join needs no
-  *    deduplicated right side, so the corpus-wide shuffle the round-10
-  *    shape paid per batch is gone. Pre-upgrade lake files have no sha
-  *    column; the set-probe treats them as un-excludable (always
-  *    scanned) — correct, and self-amortizing as the lake turns over.
+  *    executor fan-out past 64 files), and left-joins the batch to ONLY
+  *    the surviving files' `nrm` column, flagging the hits. A
+  *    mostly-novel batch — the steady state — excludes nearly every
+  *    file and scans almost nothing. No `distinct()` over the lake: the
+  *    per-row group after the join absorbs its multiplicity, so the
+  *    corpus-wide shuffle the round-10 shape paid per batch is gone.
+  *    Pre-upgrade lake files have no sha column; the set-probe treats
+  *    them as un-excludable (always scanned) — correct, and
+  *    self-amortizing as the lake turns over.
   *  - NEAR tier: band-index appends carry a bloom filter on `band`; the
   *    batch's band keys (collected in the same O(batch) action) prune
-  *    the index files the same way, and the `distinct()` that feeds the
-  *    membership join runs over the PRUNED subset only.
+  *    the index files the same way, and the pruned rows meet the
+  *    batch's bands in one band window, with no `distinct()`.
   *
   * A batch too large for the bounded key collect (see `maxProbeKeys`)
-  * falls back to probing every file — the pre-round-13 cost, still
+  * runs the same plan over every file — the pre-round-13 cost, still
   * correct. The index also stores a SIGNATURE-FAMILY marker
   * ([[StreamDedup.signatureFamily]]): band strings are only comparable
   * under the constants that produced them, so a constant change
@@ -47,7 +48,8 @@ import org.apache.spark.sql.functions._
   * the quarantine tagged 'quality', never silently lost between two
   * three-valued filters); exact = normalized text seen before
   * (in-batch: keep lowest (us, doc_id)); near = shares any MinHash band
-  * with an indexed doc (the LSH candidate rule — deliberately the
+  * with an indexed doc or an earlier exact-novel arrival of the batch
+  * (the LSH candidate rule — deliberately the
   * recall-side approximation; verification-grade J >= p/q runs in the
   * batch engine when the workload needs it).
   *
@@ -67,15 +69,16 @@ import org.apache.spark.sql.functions._
   * unverified collider survives and appends its bands — which is
   * exactly why the verified tier checks content, not band membership.)
   *
-  * Job discipline: the per-stage counts ride the lake-write pass as
-  * `observe` metrics — a steady-state micro-batch executes FOUR
-  * actions, every one O(batch): the band checkpoint (the single MinHash
-  * pass, reused by three consumers), the probe-key collect, the lake
-  * append, and the index append (the optional quarantine and zone
-  * refresh each add their own). Never a `.count()` per stage. The
-  * in-batch near check is a per-band window (min arrival per band), not
-  * a band self-join — linear in a hot band's bucket size where the
-  * self-join was quadratic.
+  * Job discipline: a steady-state micro-batch executes FOUR actions,
+  * every one O(batch): the spine checkpoint (the one nrm window and the
+  * one MinHash pass), the probe-key collect off that checkpoint, the
+  * lake append, and the index append (the optional quarantine and zone
+  * refresh each add their own) — 11 Spark jobs (pinned in
+  * StreamDedupSpec) where the double-built spine took 19–20. The lake
+  * append is the decision: one plan of a left join, one band window and
+  * one per-row group, which also feeds the quarantine. The stage counts
+  * ride the checkpoint and the lake append as `observe` metrics; never
+  * a `.count()` per stage.
   */
 object IngestClean {
 
@@ -85,7 +88,8 @@ object IngestClean {
     regexp_replace(lower(trim(c)), "\\s+", " ")
 
   /** Bound on the per-batch probe-key collect (1 sha + NBands band keys
-    * per first-per-nrm doc). Over the bound, pruning is skipped — every
+    * per first-per-nrm doc, checked on the checkpoint's observed count
+    * before collecting). Over the bound, pruning is skipped — every
     * file is probed, the pre-pruning cost — rather than letting the
     * collect grow with an unbounded batch. The default bounds the
     * driver-side key bytes, not just rows: at ~80 B per sha/band string
@@ -102,23 +106,22 @@ object IngestClean {
     * fix): a broadcast ships every key to every executor, so its safe
     * ceiling is well under the collect's. Between this and
     * [[maxProbeKeys]], file-level bloom pruning still runs on the
-    * collected keys but the scan feeds the anti-join whole files — the
+    * collected keys but the scan feeds the join whole files — the
     * pre-compaction cost, still correct. */
   private def maxSemiJoinKeys(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.ingest.maxSemiJoinKeys")
       .map(_.toLong).getOrElse(100000L)
 
   /** Expected distinct keys per written file, sizing the bloom bitsets
-    * of writes whose key count is not known up front: the first batch's
-    * lake append (no probe keys are collected before a lake exists), a
-    * batch over [[maxProbeKeys]], and the index rebuild and repair. A
-    * batch append with a known count sizes its bitsets to that count
-    * instead — a 100k-ndv bitset is ~0.5–1 MB per file, which dwarfs a
-    * few-hundred-row batch file and is read back by every later batch's
-    * bloom walk. With [[bloomFpp]] at its 1e-8 default, 100k ndv stays
-    * under parquet-mr's 1 MB bloom cap; a much larger ndv would silently
-    * hit the cap and degrade the real fpp. Oversizing wastes space,
-    * undersizing raises the false-positive rate — both safe. */
+    * of writes whose key count is not known up front: the index rebuild
+    * and repair. A batch append sizes its bitsets to the counts its
+    * spine checkpoint observed instead — a 100k-ndv bitset is ~0.5–1 MB
+    * per file, which dwarfs a few-hundred-row batch file and is read
+    * back by every later batch's bloom walk. With [[bloomFpp]] at its
+    * 1e-8 default, 100k ndv stays under parquet-mr's 1 MB bloom cap; a
+    * much larger ndv would silently hit the cap and degrade the real
+    * fpp. Oversizing wastes space, undersizing raises the false-positive
+    * rate — both safe. */
   private def bloomNdv(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.ingest.bloomNdv")
       .map(_.toLong).getOrElse(100000L)
@@ -263,19 +266,31 @@ object IngestClean {
 
     ensureSignatureFamily(spark, lakeDir, indexDir)
 
-    // The exact-dedup spine, built twice from `batch`: once UNOBSERVED
-    // (feeding the band/dup analysis and the quarantine tags, which run
-    // as their own actions and must not re-fire the lake write's
-    // observations) and once OBSERVED (the lake-write lineage, where one
-    // pass collects every stage count for free).
-    def spine(qualityRows: DataFrame): (DataFrame, DataFrame) = {
-      val withRn = qualityRows.withColumn("nrm", nrm(col("text")))
-        .withColumn("sha", sha2(col("nrm"), 256))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("nrm").orderBy(col("us").asc, col("doc_id").asc)))
-      (withRn, withRn.filter(col("rn") === 1).drop("rn"))
-    }
-    val (withRn, inBatchFirst) = spine(batch.filter(qualityOk))
+    // THE SPINE, checkpointed once: every batch row with its quality flag
+    // `q`, nrm, sha, whether it is its nrm's in-batch keeper (`first`: the
+    // lowest (us, doc_id) among the quality rows, text breaking a full
+    // tie) and the keeper's doc_id (`keep`), plus the keepers' band keys —
+    // the batch's ONE MinHash pass. Every later step reads the checkpoint,
+    // so the nrm window shuffle runs once. Keepers have distinct nrm, so
+    // `sha` is their row key: every verdict below is decided per row, and
+    // two rows sharing a doc_id never share one. The counts ride the
+    // checkpoint action as an observation, so they cost no job.
+    val byNrm = Window.partitionBy("q", "nrm").orderBy(col("us"), col("doc_id"), col("text"))
+    val obsSpine = Observation()
+    val spine = StreamDedup.withBands(
+        batch.select(col("doc_id"), col("text"), col("us"), qualityOk.as("q"))
+          .withColumn("nrm", nrm(col("text")))
+          .withColumn("sha", sha2(col("nrm"), 256))
+          .withColumn("first", col("q") && row_number().over(byNrm) === 1)
+          .withColumn("keep", first(col("doc_id")).over(byNrm)),
+        col("first"))
+      .observe(obsSpine, count(lit(1)).as("in"), count_if(col("q")).as("quality"),
+        count_if(col("first")).as("first"), count_if(col("bands").isNotNull).as("banded"))
+      .localCheckpoint(true)
+    // AQE drops an observation whose input it proves empty and completes
+    // it with an empty map; what it would have counted is then zero.
+    def counted(o: Observation, k: String): Long = o.get.get(k).fold(0L)(_.asInstanceOf[Long])
+    val keepers = spine.filter(col("first")).select("doc_id", "text", "us", "nrm", "sha", "bands")
 
     val hadoopConf = spark.sessionState.newHadoopConf()
     val lakePath = new org.apache.hadoop.fs.Path(lakeDir)
@@ -285,161 +300,112 @@ object IngestClean {
     val lakeExists = pathExists(spark, lakeDir)
     val indexExists = pathExists(spark, indexDir)
     val preAppend = lakeFiles()
-
-    // The batch's band rows, computed ONCE per batch and checkpointed:
-    // the 64-plane MinHash is the single most expensive per-batch
-    // expression, and three consumers need its output — the probe-key
-    // collect, the near-dup analysis, and the index append. Banding
-    // inBatchFirst (not exactNovel) breaks the cycle with the pruned
-    // lake read; the dup analysis re-restricts to exact-novel docs
-    // below, so verdicts are unchanged. Only (band, doc_id, us)
-    // survives into the checkpoint — the signature arrays would
-    // multiply its footprint ~10x for nothing.
-    val bandedFirst = StreamDedup.banded(inBatchFirst.select("doc_id", "text", "us"))
-      .toDF().select("band", "doc_id", "us").localCheckpoint(true)
     try {
 
-    // ONE bounded O(batch) action collects the probe keys both tiers
-    // prune with: the batch's shas (exact tier; already distinct —
-    // inBatchFirst is first-per-nrm) and its distinct band keys (near
-    // tier — from inBatchFirst, a SUPERSET of the exact-novel docs that
-    // are actually band-checked, so pruning with it is conservative),
-    // tagged into one column so one job serves both. Skipped entirely
-    // when there is nothing to prune; over maxProbeKeys, both tiers
-    // fall back to all-files.
+    // ONE bounded O(batch) collect reads the probe keys both tiers prune
+    // with off the checkpoint: the keepers' shas (exact tier; distinct by
+    // construction) and their band keys, deduped on the driver (near
+    // tier). Skipped when there is nothing to prune. When the observed
+    // keeper count puts the keys over maxProbeKeys, nothing is collected
+    // and both tiers probe every file: the same plan over unpruned files.
     val probeKeys: Option[(Seq[String], Seq[String])] =
-      if (!lakeExists && !indexExists) None
+      if ((!lakeExists && !indexExists) ||
+        counted(obsSpine, "first") * (1 + StreamDedup.NBands) > maxProbeKeys(spark)) None
       else {
-        val maxKeys = maxProbeKeys(spark)
-        val rows = inBatchFirst.select(concat(lit("s:"), col("sha")).as("k"))
-          .unionByName(bandedFirst.select(concat(lit("b:"), col("band")).as("k")).distinct())
-          .limit(math.min(maxKeys + 1, Int.MaxValue.toLong).toInt).collect()
-        if (rows.length > maxKeys) None
-        else {
-          val ks = rows.map(_.getString(0))
-          Some((
-            ks.collect { case k if k.startsWith("s:") => k.drop(2) }.toSeq,
-            ks.collect { case k if k.startsWith("b:") => k.drop(2) }.toSeq))
-        }
+        val rows = keepers.select("sha", "bands").collect()
+        Some((rows.map(_.getString(0)).toSeq,
+          rows.iterator.filterNot(_.isNullAt(1)).flatMap(_.getSeq[String](1)).toSeq.distinct))
+      }
+    val (shas, bandKeys) = (probeKeys.map(_._1), probeKeys.map(_._2))
+    // Bloom-walk one table's files with the batch's keys (metadata only):
+    // no keys at all means the batch cannot hit, no probe means every file.
+    def touched(files: Seq[String], keyCol: String, keys: Option[Seq[String]]): Seq[String] =
+      keys match {
+        case Some(ks) if ks.nonEmpty => BloomLake.pruneByStringSet(spark, files, keyCol, ks)
+        case Some(_) => Seq.empty
+        case None => files
+      }
+    // File-level exclusion is the wrong granularity once compaction
+    // merges a table into few big files (a 100 MB file with millions of
+    // keys survives almost any probe, and feeding it whole into the
+    // join made post-compaction batches SLOWER than uncompacted ones —
+    // measured in the ingestgrow battery), so a surviving file's rows are
+    // re-filtered map-side against the batch's own keys (broadcast — they
+    // were already collected) before any shuffle. Over the broadcast
+    // bound the scan feeds whole files: the pre-compaction cost, still
+    // correct.
+    def narrowed(scan: DataFrame, key: Column, keys: Option[Seq[String]]): DataFrame =
+      keys match {
+        case Some(ks) if ks.size <= maxSemiJoinKeys(spark) =>
+          import spark.implicits._
+          scan.join(broadcast(ks.toDF("k")), key === col("k"), "left_semi")
+        case _ => scan
       }
 
-    // EXACT tier: bloom-prune the lake's files with the batch's shas,
-    // then anti-join on nrm against ONLY the survivors. No distinct —
-    // the anti/semi joins are multiplicity-blind, so the corpus-wide
-    // shuffle the distinct() cost is simply not needed. Surviving files
-    // are additionally semi-joined against the BATCH's keys map-side
-    // (broadcast — the keys were already collected): file-level
-    // exclusion is the wrong granularity once compaction merges a lake
-    // into few big files (a 100 MB file with millions of keys survives
-    // almost any probe, and feeding it whole into the anti-join made
-    // post-compaction batches SLOWER than uncompacted ones — measured
-    // in the ingestgrow battery), so the scan keeps only rows whose key
-    // the batch actually probes before any join shuffle. The sha here
-    // is recomputed from nrm, never read: pre-upgrade lake files have
-    // no sha column, and sha2 over the scanned nrm is exactly the same
-    // deterministic key.
-    val seenNrm: Option[DataFrame] =
-      if (!lakeExists) { lastExactFiles = (0, 0); None }
-      else {
-        val all = preAppend.toSeq.sorted
-        val pruned = probeKeys match {
-          case Some((shas, _)) if shas.nonEmpty =>
-            BloomLake.pruneByStringSet(spark, all, "sha", shas)
-          case Some(_) => Seq.empty // no quality docs: nothing can be a dup
-          case None => all
-        }
-        lastExactFiles = (all.size, pruned.size)
-        if (pruned.isEmpty) None
-        else {
-          // doc_id rides along for the quarantine's dup_of provenance
-          val scan = Parquet.read(spark, pruned: _*).select(col("nrm"), col("doc_id"))
-          Some(probeKeys match {
-            case Some((shas, _)) if shas.size <= maxSemiJoinKeys(spark) =>
-              import spark.implicits._
-              scan.join(broadcast(shas.toDF("sha")),
-                sha2(col("nrm"), 256) === col("sha"), "left_semi")
-            case _ => scan // over the broadcast bound: whole files, still correct
-          })
-        }
-      }
-    def novel(firstPerNrm: DataFrame): DataFrame = seenNrm match {
-      case None => firstPerNrm
-      case Some(nrms) => firstPerNrm.join(nrms, Seq("nrm"), "left_anti")
-    }
+    // The two bloom walks are independent footer reads: run side by side.
+    val lakeAll = preAppend.toSeq.sorted
+    val idxAll = if (!indexExists) Seq.empty[String] else LakeListing.dataFiles(hadoopConf,
+      new org.apache.hadoop.fs.Path(indexDir)).map(_.toString)
+    val walked = Array.fill(2)(Seq.empty[String])
+    graft.Concurrently.run(Seq(() => walked(0) = touched(lakeAll, "sha", shas),
+      () => walked(1) = touched(idxAll, "band", bandKeys)))
+    lastExactFiles = (lakeAll.size, walked(0).size)
+    lastBandFiles = (idxAll.size, walked(1).size)
+    // EXACT tier: the surviving lake files' nrm (and doc_id, the dup_of
+    // provenance). The sha is recomputed from nrm, never read: pre-upgrade
+    // lake files have no sha column, and sha2 over the scanned nrm is the
+    // same deterministic key.
+    val lakeHits = Option.when(walked(0).nonEmpty)(narrowed(
+      Parquet.read(spark, walked(0): _*).select(col("nrm"), col("doc_id").as("lake_doc")),
+      sha2(col("nrm"), 256), shas))
+    // NEAR tier: the surviving index files' (band, carrier doc) rows.
+    val idxRows = Option.when(walked(1).nonEmpty)(narrowed(
+      Parquet.read(spark, walked(1): _*).select(col("band"), col("doc_id").as("idx_doc")),
+      col("band"), bandKeys))
 
-    val exactNovel = novel(inBatchFirst)
-
-    // Near-dup doc_ids, decided per band WITHOUT a self-join: a doc is an
-    // in-batch near-dup iff some band it occupies saw an earlier arrival
-    // (min (us, doc_id) over the band partition — linear where the
-    // band⋈band join was quadratic in a hot bucket), and a lake near-dup
-    // iff any of its bands is in the persisted index (left join a marker
-    // on the distinct PRUNED index bands). Same verdicts as the join
-    // formulation: if any earlier y shares a band, that band's min ≤ y.
-    // The semi-join re-restricts the checkpointed bands to exact-novel
-    // docs BEFORE the window: a lake-exact-dup's bands must not become a
-    // band's earliest arrival and mark a genuinely novel doc near-dup.
-    val banded = bandedFirst.join(exactNovel.select("doc_id"), Seq("doc_id"), "left_semi")
-    val idxBands: Option[DataFrame] =
-      if (!indexExists) { lastBandFiles = (0, 0); None }
-      else {
-        val all = LakeListing.dataFiles(hadoopConf,
-          new org.apache.hadoop.fs.Path(indexDir)).map(_.toString)
-        val pruned = probeKeys match {
-          case Some((_, bands)) if bands.nonEmpty =>
-            BloomLake.pruneByStringSet(spark, all, "band", bands)
-          case Some(_) => Seq.empty
-          case None => all
-        }
-        lastBandFiles = (all.size, pruned.size)
-        if (pruned.isEmpty) None
-        // distinct over the PRUNED subset only — O(touched files), and
-        // needed here (unlike the exact tier) because the membership
-        // LEFT join would otherwise multiply batch rows per index hit.
-        // Same granularity discipline as the exact tier: semi-join the
-        // scan against the batch's own band keys FIRST (map-side,
-        // broadcast), so the distinct shuffles only bands the batch can
-        // actually hit — a compacted index file would otherwise feed
-        // its whole multi-million-row key set into the shuffle.
-        else {
-          val scan = Parquet.read(spark, pruned: _*)
-            .select(col("band"), col("doc_id").as("idx_doc"))
-          val filtered = probeKeys match {
-            case Some((_, bands)) if bands.size <= maxSemiJoinKeys(spark) =>
-              import spark.implicits._
-              scan.join(broadcast(bands.toDF("band")), Seq("band"), "left_semi")
-            case _ => scan // over the broadcast bound: whole files, still correct
-          }
-          // per-band dedup (the old distinct), keeping the lowest member
-          // doc as the band's provenance witness for dup_of
-          Some(filtered.groupBy(col("band"))
-            .agg(min(col("idx_doc")).as("idx_dup_of"))
-            .withColumn("idx_hit", lit(1)))
-        }
-      }
-    val withIdx = idxBands match {
-      case None => banded.withColumn("idx_hit", lit(0))
-        .withColumn("idx_dup_of", lit(null).cast("long"))
-      case Some(ib) => banded.join(ib, Seq("band"), "left")
-    }
-    val arrival = struct(col("us"), col("doc_id"))
-    val bandFirsted = withIdx
-      .withColumn("band_first", min(arrival).over(Window.partitionBy("band")))
-    val anyBandDups = bandFirsted
-      .groupBy(col("doc_id"), col("us"))
-      .agg(max(col("idx_hit")).as("lake_hit"), min(col("band_first")).as("earliest"),
-        min(col("idx_dup_of")).as("idx_partner"))
-      .filter(coalesce(col("lake_hit"), lit(0)) === 1 || col("earliest") < arrival)
-      // provenance: the lake doc whose band was hit, else the earliest
+    // THE DECISION, one plan. The lake exact hit is a flag (`lake_doc`,
+    // the lowest lake doc with the row's nrm) from a left join; the
+    // join's multiplicity is absorbed by the per-row group below, so the
+    // lake side needs no distinct. Each keeper then explodes to one row
+    // per band (one null-band row if it has none), carrying its text on
+    // one of them only, and the index rows join it through ONE
+    // band window, again with no distinct: per band, the earliest
+    // exact-novel arrival (a row is an in-batch near dup iff some band of
+    // it saw an earlier one — linear in a hot band, where a band
+    // self-join was quadratic) and the lowest index carrier (a lake near
+    // dup, and its dup_of provenance). A lake exact dup's bands never
+    // count as an arrival, so they cannot mark a novel row.
+    val flagged = lakeHits.fold(keepers.withColumn("lake_doc", lit(null).cast("long")))(
+      keepers.join(_, Seq("nrm"), "left"))
+    val arrival = struct(col("us"), col("doc_id"), col("sha"))
+    val bandRows = flagged
+      .select(col("sha"), col("doc_id"), col("us"), col("lake_doc"), col("text"),
+        posexplode_outer(col("bands")).as(Seq("pos", "band")))
+      .select(col("sha"), col("doc_id"), col("us"), col("lake_doc"), col("band"),
+        lit(null).cast("long").as("idx_doc"),
+        when(coalesce(col("pos"), lit(0)) === 0, col("text")).as("text"))
+    val byBand = Window.partitionBy("band")
+    val windowed = idxRows.fold(bandRows)(bandRows.unionByName(_, allowMissingColumns = true))
+      .withColumn("band_first", min(when(col("band").isNotNull && col("sha").isNotNull &&
+        col("lake_doc").isNull, arrival)).over(byBand))
+      .withColumn("carrier", min(col("idx_doc")).over(byBand))
+      .filter(col("sha").isNotNull)
+    // One per-row group: every keeper back to one row with its verdict.
+    val grouped = windowed.groupBy("sha", "doc_id", "us")
+      .agg(first(col("text"), ignoreNulls = true).as("text"),
+        min(col("lake_doc")).as("lake_doc"), min(col("carrier")).as("carrier"),
+        min(when(col("band_first") < arrival, col("band_first"))).as("prior"))
+    val nearOf = verifyNearDups match {
+      // provenance: the indexed doc whose band was hit, else the earliest
       // in-batch band partner — the "because of doc Y" the audit needs
-      .select(col("doc_id"),
-        when(coalesce(col("lake_hit"), lit(0)) === 1, col("idx_partner"))
-          .otherwise(col("earliest.doc_id")).as("dup_of"))
-    val dupIds = verifyNearDups match {
-      case None => anyBandDups
-      case Some((p, q)) => verifiedDups(spark, bandFirsted, inBatchFirst,
-        lakeDir, lakeExists, arrival, p, q)
+      case None => grouped.withColumn("near_of", coalesce(col("carrier"), col("prior.doc_id")))
+      case Some((p, q)) => grouped.join(verifiedDups(spark, windowed, keepers, lakeDir,
+        lakeExists, arrival, p, q), Seq("sha"), "left")
     }
+    val decided = nearOf
+      .withColumn("reason", when(col("lake_doc").isNotNull, lit("exact_dup"))
+        .when(col("near_of").isNotNull, lit("near_dup")))
+      .withColumn("dup_of", coalesce(col("lake_doc"), col("near_of")))
 
     // Audit trail FIRST — before the lake append: every dropped row
     // lands in the quarantine with the stage that rejected it — the
@@ -448,11 +414,11 @@ object IngestClean {
     // explicit pre-append files, so nothing here can see this batch's
     // own survivors — but the quarantine must still precede the append
     // so a crash between them never loses the explanation for a row the
-    // lake already rejected. Stage tags are ROW-level (the quality tag
-    // re-evaluates the null-safe predicate; the exact tags come from the
-    // rn>1 frame and the pruned-lake semi-join), so two same-doc_id rows
-    // in one batch each get their own verdict. Layout is uniformly
-    // Hive-partitioned by batch: with `batchId` set (the foreachBatch
+    // lake already rejected. Stage tags are ROW-level (quality and
+    // in-batch exact dup straight off the spine, the rest from the
+    // per-row verdicts), so two same-doc_id rows in one batch each get
+    // their own verdict. Layout is uniformly Hive-partitioned by batch:
+    // with `batchId` set (the foreachBatch
     // id) each attempt OVERWRITES its own batch=<id> partition, so a
     // replay after a partial failure leaves one record per decision —
     // the log reflects the LAST attempt's view (a doc both in the lake
@@ -484,68 +450,30 @@ object IngestClean {
       // doc X not in the lake" has a one-row answer. dup_of is an
       // additive schema change: pre-provenance quarantine files lack the
       // column (read the mixed table with mergeSchema to surface it).
-      def tagged(df: DataFrame, reason: String, dupOf: Column) =
-        df.select(col("doc_id"), col("text"), col("us"), dupOf.cast("long").as("dup_of"))
-          .withColumn("reason", lit(reason))
-      val droppedQuality = tagged(batch.filter(!qualityOk), "quality", lit(null))
-      val withKeep = withRn.withColumn("keep",
-        min(struct(col("us"), col("doc_id"))).over(Window.partitionBy("nrm")))
-      val inBatchDups = tagged(withKeep.filter(col("rn") > 1), "exact_dup",
-        col("keep.doc_id"))
-      val lakeDups = seenNrm.map { nrms =>
-        val seenMin = nrms.groupBy(col("nrm")).agg(min(col("doc_id")).as("lake_doc"))
-        tagged(inBatchFirst.join(seenMin, Seq("nrm")), "exact_dup", col("lake_doc"))
-      }
-      val droppedNear = tagged(exactNovel.join(dupIds, Seq("doc_id")), "near_dup",
-        col("dup_of"))
-      val log = Seq(Some(droppedQuality), Some(inBatchDups), lakeDups, Some(droppedNear))
-        .flatten.reduce(_ unionByName _)
+      val log = spine.filter(!col("first"))
+        .select(col("doc_id"), col("text"), col("us"), when(col("q"), col("keep")).as("dup_of"),
+          when(col("q"), lit("exact_dup")).otherwise(lit("quality")).as("reason"))
+        .unionByName(decided.filter(col("reason").isNotNull)
+          .select("doc_id", "text", "us", "dup_of", "reason"))
       val mode = if (batchId >= 0) SaveMode.Overwrite else SaveMode.Append
       log.write.mode(mode).parquet(s"$qd/batch=$batchId")
     }
 
-    // The observed lake-write lineage: every stage count rides this ONE
-    // pass as a CollectMetrics node (no per-stage .count() actions). The
-    // dup analysis joins in UNOBSERVED, so each observation appears
-    // exactly once in the plan. The append carries the sha column under
-    // a bloom filter — the artifact the NEXT batch's exact tier prunes
-    // with.
-    val obsIn = Observation(); val obsQuality = Observation()
-    val obsNovel = Observation(); val obsApp = Observation()
-    val (_, inBatchFirstObs) = spine(
-      batch.observe(obsIn, count(lit(1)).as("n"))
-        .filter(qualityOk).observe(obsQuality, count(lit(1)).as("n")))
-    val survivors = novel(inBatchFirstObs).observe(obsNovel, count(lit(1)).as("n"))
-      .join(dupIds, Seq("doc_id"), "left_anti")
-      .observe(obsApp, count(lit(1)).as("n"))
-    // AQE's empty-relation propagation is excluded for THIS write only:
-    // when a replayed batch dedups to zero survivors, the rule replaces
-    // the empty join stage's whole subtree — CollectMetrics nodes
-    // included — and Spark then completes the matched Observations with
-    // EMPTY maps (the in/quality/novel counts vanish; measured in
-    // StreamDedupSpec's replay). Empty-propagation buys nothing on an
-    // append that would write zero rows anyway; the rest of AQE (skew,
-    // coalescing) stays on for the at-scale anti-joins.
-    // ... and it must be set on the session the WRITE executes under:
-    // inside foreachBatch the lineage is bound to the micro-batch's
-    // cloned session, whose SQLConf is independent of the caller's.
-    val execSession = survivors.sparkSession
-    val aqeExcludedKey = "spark.sql.adaptive.optimizer.excludedRules"
-    val prevExcluded = execSession.conf.getOption(aqeExcludedKey)
-    execSession.conf.set(aqeExcludedKey,
-      (prevExcluded.toSeq :+
-        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
-        .mkString(","))
-    // The sha bloom holds at most the batch's first-per-nrm shas, which
-    // the probe-key collect already counted.
-    val shaNdv = probeKeys.map(k => math.max(1L, k._1.size.toLong)).getOrElse(bloomNdv(spark))
-    try
-      survivors.write.options(BloomLake.writerOptions("sha", shaNdv, bloomFpp(spark)))
-        .mode(SaveMode.Append).parquet(lakeDir)
-    finally prevExcluded match {
-      case Some(v) => execSession.conf.set(aqeExcludedKey, v)
-      case None => execSession.conf.unset(aqeExcludedKey)
-    }
+    // The lake append: the per-row verdicts' survivors, with the
+    // exact-novel and appended counts observed on the same pass, and the
+    // sha column under a bloom filter sized to the keepers — the artifact
+    // the NEXT batch's exact tier prunes with. One file per append: every
+    // later batch's bloom walk reads one footer per file, and the per-row
+    // exchange alone coalesces to two partitions at 5k docs.
+    val obsDecided = Observation()
+    decided.observe(obsDecided, count_if(col("lake_doc").isNull).as("novel"),
+        count_if(col("reason").isNull).as("appended"))
+      .filter(col("reason").isNull)
+      .select(col("doc_id"), col("text"), col("us"), nrm(col("text")).as("nrm"), col("sha"))
+      .coalesce(1)
+      .write.options(BloomLake.writerOptions("sha",
+        math.max(1L, counted(obsSpine, "first")), bloomFpp(spark)))
+      .mode(SaveMode.Append).parquet(lakeDir)
 
     failpoint.filter(_ == "after_lake_append").foreach { _ =>
       throw new IllegalStateException(
@@ -555,33 +483,21 @@ object IngestClean {
     // Index append — LAKE-FIRST for crash consistency (a crash here
     // leaves lake rows the next batch still exact-dedups; index-first
     // would leave phantom bands that suppress their own replay forever).
-    // The doc_ids derive from the files THIS append added (an fs listing
-    // diff — manifest-class, like the zone refresh), not from the
-    // survivors frame: re-running the survivors lineage after the append
-    // would re-run its probe-pruned anti-joins against a listing that
+    // The rows derive from the files THIS append added (an fs listing
+    // diff — manifest-class, like the zone refresh), matched to the
+    // keepers on sha, not from the verdicts: re-running that lineage
+    // after the append would re-run its probes against a listing that
     // may have been refreshed, so the written files are the one
     // authoritative record of what landed. The bands come from the
-    // checkpoint (same deterministic expression — no second MinHash
-    // pass), restricted to those authoritative ids.
-    // The band bloom holds the distinct bands of the appended docs: at
-    // most the batch's distinct bands, which the probe-key collect
-    // counted. Where nothing was probed and no lake nrm was read, every
-    // first-per-nrm doc is exact-novel, so the novel count times NBands
-    // bounds them. The appended count alone would not: the semi-join is
-    // on doc_id, so a lake exact-dup row sharing a survivor's doc_id
-    // writes its bands too.
-    val appended = obsApp.get("n").asInstanceOf[Long]
-    val bandNdv = probeKeys.map(k => math.max(1L, k._2.size.toLong))
-      .orElse(Option.when(seenNrm.isEmpty)(
-        math.max(1L, obsNovel.get("n").asInstanceOf[Long] * StreamDedup.NBands)))
-      .getOrElse(bloomNdv(spark))
+    // checkpoint (no second MinHash pass). The band bloom holds at most
+    // the batch's distinct bands, which the probe-key collect counted,
+    // else the keepers' band keys, which the checkpoint counted.
     val newFiles = (lakeFiles() -- preAppend).toSeq.sorted
     if (newFiles.nonEmpty) {
-      val appendedIds = Parquet.readBase(spark, lakeDir, newFiles)
-        .select("doc_id")
-      bandedFirst.join(appendedIds, Seq("doc_id"), "left_semi")
-        .select("band", "doc_id")
-        .write.options(BloomLake.writerOptions("band", bandNdv, bloomFpp(spark)))
+      val bandNdv = bandKeys.fold(counted(obsSpine, "banded") * StreamDedup.NBands)(_.size.toLong)
+      keepers.join(Parquet.readBase(spark, lakeDir, newFiles).select("sha"), Seq("sha"), "left_semi")
+        .select(explode(col("bands")).as("band"), col("doc_id"))
+        .write.options(BloomLake.writerOptions("band", math.max(1L, bandNdv), bloomFpp(spark)))
         .mode(SaveMode.Append).parquet(indexDir)
       if (!indexExists) writeMarker(spark, indexDir)
     }
@@ -612,18 +528,15 @@ object IngestClean {
         }
       if (over(lakeDir) || over(indexDir)) compactIngest(spark, lakeDir, indexDir)
     }
-    BatchStats(
-      obsIn.get("n").asInstanceOf[Long],
-      obsQuality.get("n").asInstanceOf[Long],
-      obsNovel.get("n").asInstanceOf[Long],
-      appended)
-    // The finally matters for a LONG-RUNNING stream: the band
-    // checkpoint pins ~NBands x batch rows in block storage per batch,
-    // and relying on GC/ContextCleaner to release them lets thousands
-    // of micro-batches accumulate dead blocks (the clearMemo pattern,
-    // applied per batch).
+    BatchStats(counted(obsSpine, "in"), counted(obsSpine, "quality"),
+      counted(obsDecided, "novel"), counted(obsDecided, "appended"))
+    // The finally matters for a LONG-RUNNING stream: the spine
+    // checkpoint pins the batch and its band keys in block storage per
+    // batch, and relying on GC/ContextCleaner to release them lets
+    // thousands of micro-batches accumulate dead blocks (the clearMemo
+    // pattern, applied per batch).
     } finally {
-      try bandedFirst.queryExecution.analyzed.foreach {
+      try spine.queryExecution.analyzed.foreach {
         case lr: org.apache.spark.sql.execution.LogicalRDD =>
           lr.rdd.unpersist(blocking = false)
         case _ => ()
@@ -637,12 +550,12 @@ object IngestClean {
     * drop — the any-band rule's known over-drop on stopword-determined
     * bands (object doc) becomes a verified decision. Cost is
     * O(candidate pairs), never O(batch^2): candidates are one pair per
-    * (doc, band-with-a-hit) — the band's earliest in-batch arrival, and
+    * (row, band-with-a-hit) — the band's earliest in-batch arrival, and
     * the indexed band's lowest carrier — exactly the rows the any-band
-    * rule already computes.
+    * rule's band window already computes.
     *
     * Declared semantics (precision over the any-band rule's recall): a
-    * doc is dropped iff SOME candidate partner passes the exact check.
+    * row is dropped iff SOME candidate partner passes the exact check.
     * The candidate per band is its FIRST carrier — a true dup whose
     * only shared band is carried first by an unrelated doc is not
     * dropped (it survives, carrying its own content bands into the
@@ -650,37 +563,34 @@ object IngestClean {
     * bounded and self-healing where the any-band over-drop was neither:
     * a wrongly dropped doc is gone forever; a wrongly kept one is one
     * more lake row the batch engine's full J >= p/q dedup (qn18) can
-    * still reconcile.
+    * still reconcile. An indexed carrier with the row's own doc_id is no
+    * candidate; an in-batch partner is another row by construction.
     *
-    * Partner text fetch: in-batch partners read from the batch frame;
+    * Partner text fetch: in-batch partners read from the keepers by sha;
     * lake partners (a bounded id set — one per hit band) are fetched by
     * a pushed-down `doc_id IN (...)` scan when the set fits
     * [[maxSemiJoinKeys]] (row-group stats prune a doc_id-clustered lake)
     * and by a semi-join otherwise. Verify mode therefore adds ONE
     * bounded collect (the partner ids) to the batch's action count —
-    * priced per batch in the ingest battery. */
-  private def verifiedDups(spark: SparkSession, bandFirsted: DataFrame,
-      inBatchFirst: DataFrame, lakeDir: String, lakeExists: Boolean,
+    * priced per batch in the ingest battery. Returns (sha, near_of). */
+  private def verifiedDups(spark: SparkSession, windowed: DataFrame,
+      keepers: DataFrame, lakeDir: String, lakeExists: Boolean,
       arrival: Column, p: Int, q: Int): DataFrame = {
     import graft.functions.TextFns.tokenSet
-    // one candidate row per (doc, hit band): the lake carrier and/or the
-    // in-batch first arrival
-    val cand = bandFirsted.select(col("doc_id"),
-      when(coalesce(col("idx_hit"), lit(0)) === 1, col("idx_dup_of")).as("lake_p"),
-      when(col("band_first") < arrival, col("band_first.doc_id")).as("batch_p"))
-    val pairs = cand.select(col("doc_id"), col("lake_p").as("partner"),
-        lit(true).as("from_lake"))
-      .unionByName(cand.select(col("doc_id"), col("batch_p").as("partner"),
-        lit(false).as("from_lake")))
-      .filter(col("partner").isNotNull && col("partner") =!= col("doc_id"))
+    // one candidate row per (row, hit band): the lake carrier (p_sha
+    // null) and/or the in-batch first arrival
+    val cand = windowed.filter(col("lake_doc").isNull)
+    val pairs = cand.filter(col("carrier").isNotNull && col("carrier") =!= col("doc_id"))
+      .select(col("sha"), col("carrier").as("partner"), lit(null).cast("string").as("p_sha"))
+      .unionByName(cand.filter(col("band_first") < arrival).select(col("sha"),
+        col("band_first.doc_id").as("partner"), col("band_first.sha").as("p_sha")))
       .distinct()
-    val batchTexts = inBatchFirst
-      .select(col("doc_id").as("partner"), col("text").as("p_text"))
+    val lakePairs = pairs.filter(col("p_sha").isNull).drop("p_sha")
     val lakeScan: Option[DataFrame] =
       if (!lakeExists) None
       else {
         // the bounded collect: lake-partner ids, one per hit band
-        val idRows = pairs.filter(col("from_lake")).select(col("partner")).distinct()
+        val idRows = lakePairs.select(col("partner")).distinct()
           .limit(math.min(maxSemiJoinKeys(spark) + 1, Int.MaxValue.toLong).toInt)
           .collect()
         if (idRows.isEmpty) None
@@ -692,30 +602,21 @@ object IngestClean {
             // doc_id-clustered lake to the touched groups
             Some(base.filter(col("partner").isin(idRows.map(_.getLong(0)).toSeq: _*)))
           else
-            Some(base.join(pairs.filter(col("from_lake")).select("partner").distinct(),
-              Seq("partner"), "left_semi"))
+            Some(base.join(lakePairs.select("partner").distinct(), Seq("partner"), "left_semi"))
         }
       }
-    val partnerTexts = lakeScan match {
-      case None => batchTexts.withColumn("p_lake", lit(false))
-      case Some(lk) => batchTexts.withColumn("p_lake", lit(false))
-        .unionByName(lk.withColumn("p_lake", lit(true)))
-    }
-    // exact J >= p/q on token SETS — the qn03 rule verbatim. The join on
-    // (partner, from_lake == p_lake) keys each pair to the right text
-    // source: batch and lake doc_id spaces may overlap.
-    val dToks = inBatchFirst.select(col("doc_id"), tokenSet(col("text")).as("d_toks"))
-    pairs.join(partnerTexts,
-        pairs("partner") === partnerTexts("partner") &&
-          pairs("from_lake") === partnerTexts("p_lake"))
-      .drop(partnerTexts("partner"))
-      .join(dToks, Seq("doc_id"))
+    val batchPairs = pairs.filter(col("p_sha").isNotNull)
+      .join(keepers.select(col("sha").as("p_sha"), col("text").as("p_text")), Seq("p_sha"))
+      .drop("p_sha")
+    // exact J >= p/q on token SETS — the qn03 rule verbatim
+    lakeScan.fold(batchPairs)(lk => batchPairs.unionByName(lakePairs.join(lk, Seq("partner"))))
+      .join(keepers.select(col("sha"), tokenSet(col("text")).as("d_toks")), Seq("sha"))
       .withColumn("p_toks", tokenSet(col("p_text")))
       .withColumn("n_inter", size(array_intersect(col("d_toks"), col("p_toks"))))
       .withColumn("n_union",
         size(col("d_toks")) + size(col("p_toks")) - col("n_inter"))
       .filter(col("n_union") > 0 && lit(q) * col("n_inter") >= lit(p) * col("n_union"))
-      .groupBy(col("doc_id")).agg(min(col("partner")).as("dup_of"))
+      .groupBy(col("sha")).agg(min(col("partner")).as("near_of"))
   }
 
   /** Periodic maintenance for an ingest lake + band index: small-file

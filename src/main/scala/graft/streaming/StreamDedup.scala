@@ -95,6 +95,17 @@ object StreamDedup {
       .as[BandDoc]
   }
 
+  /** [[banded]]'s head kept at one row per doc: adds `bands`, the row's
+    * NBands band keys as one array, where `on` holds and the token set
+    * is non-empty, else null. The signature gets its own projection, as
+    * above, so MinHash runs once per banded row. */
+  def withBands(docs: DataFrame, on: Column): DataFrame =
+    docs.withColumn("hs", when(on, tokenHashesNative(tokenSet(col("text")))))
+      .withColumn("sig", when(size(col("hs")) > 0,
+        graft.functions.VectorExprs.minhashSigNative(col("hs"), NPlanes)))
+      .withColumn("bands", when(col("sig").isNotNull, lshBands(col("sig"), NBands, RowsPerBand)))
+      .drop("hs", "sig")
+
   private def firstAgree(a: Seq[Long], b: Seq[Long]): Int =
     (0 until NBands).indexWhere(bd =>
       (0 until RowsPerBand).forall(r => a(bd * RowsPerBand + r) == b(bd * RowsPerBand + r)))

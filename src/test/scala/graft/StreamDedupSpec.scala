@@ -255,25 +255,22 @@ class StreamDedupSpec extends AnyFunSuite {
     BloomLake.assertBloomCapacity(spark, lake, "sha", fpp = 1e-8)
     BloomLake.assertBloomCapacity(spark, idx, "band", fpp = 1e-8)
     // Sized to the batch: a bitset for the 100k-key default alone is
-    // ~0.5 MB. The first batch's lake append is the one write with no
-    // count yet (no probe keys are collected before a lake exists).
+    // ~0.5 MB. (The first batch's lake file has its own case below.)
     val sized = (files(lake) -- lake1.keys) ++ files(idx)
     assert(sized.nonEmpty)
     sized.foreach { case (f, n) => assert(n < 64 * 1024, s"$f is $n bytes") }
     // Four rows share a doc_id: three repeat docs 1-3 and are dropped
-    // as exact dups, the fourth is kept. With no index to flag the
-    // repeats' bands (a fresh index dir, as after a crash between the
-    // lake and index appends), the doc_id survives; the index append
-    // joins on doc_id, so it writes all four rows' bands while the lake
-    // append counts one row. (Parquet's bitset for 16 keys holds 53 at
-    // 1e-8, so a single repeat would not overflow it.)
+    // as exact dups, the fourth is kept (into a fresh index dir, as
+    // after a crash between the lake and index appends). The index
+    // append matches the appended row, not its doc_id, so it writes that
+    // one row's bands, and the bitset holds them.
     val twins = spark.createDataFrame((1 to 3).map(i =>
       Doc(100, (1 to 12).map(j => s"w${i}x$j").mkString(" "), (100 + i) * 1000000L)) :+
       Doc(100, (1 to 12).map(j => s"w100x$j").mkString(" "), 104000000L))
     val idx2 = s"$dir/index2"
     assert(IngestClean.cleanBatch(spark, twins, lake, idx2).appended == 1)
     assert(spark.read.parquet(idx2).filter(col("doc_id") === 100L).count() ==
-      4 * StreamDedup.NBands)
+      StreamDedup.NBands)
     BloomLake.assertBloomCapacity(spark, idx2, "band", fpp = 1e-8)
   }
 
@@ -775,5 +772,108 @@ class StreamDedupSpec extends AnyFunSuite {
     val got = runStream(Seq(Seq(a), Seq(late, inside)), h)
     assert(!got.exists { case (x, _, _) => x == 1L }, s"cross-horizon pair leaked: $got")
     assert(got.exists { case (x, y, _) => x == 2L && y == 3L }, s"missing in-horizon pair: $got")
+  }
+
+  test("cleanBatch decides per row: two rows sharing a doc_id each get their own verdict") {
+    // The two batches first seen while building the bloom case: doc_id
+    // 100 twice, once a reordered copy (near dup) and once an exact copy
+    // of a lake doc, each beside one novel row on the same doc_id. Keyed
+    // on doc_id, a flag on either row dropped both (0 appended) and the
+    // index picked up the lake copy's bands.
+    import graft.streaming.IngestClean
+    val textL = "zebra yak xylophone walrus vulture tiger snake rabbit quail panda otter"
+    def bandsOf(text: String): Set[String] =
+      StreamDedup.banded(spark.createDataFrame(Seq(Doc(0, text, 0L))).toDF())
+        .collect().map(_.band).toSet
+    def run(copy: String, novel: String, reason: String): Unit = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_ingest_perrow").toString
+      val (lake, idx, quar) = (s"$dir/lake", s"$dir/index", s"$dir/quarantine")
+      IngestClean.cleanBatch(spark, spark.createDataFrame(Seq(Doc(1, textL, 1000000L))), lake, idx)
+      val st = IngestClean.cleanBatch(spark, spark.createDataFrame(Seq(
+          Doc(100, copy, 100000000L), Doc(100, novel, 101000000L))), lake, idx,
+        quarantineDir = Some(quar), batchId = 1L)
+      assert(st.appended == 1L, s"$reason batch: $st")
+      val kept = spark.read.parquet(lake).select("doc_id", "text")
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(kept == Set(1L -> textL, 100L -> novel), s"$reason batch: lake held $kept")
+      val indexed = spark.read.parquet(idx).filter(col("doc_id") === 100L)
+        .select("band").collect().map(_.getString(0)).toSet
+      assert(indexed == bandsOf(novel), s"$reason batch: index holds bands of another row")
+      val quarRows = spark.read.parquet(quar).select("doc_id", "text", "reason", "dup_of")
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
+      assert(quarRows == Set((100L, copy, reason, 1L)), s"$reason batch: quarantine held $quarRows")
+    }
+    run(textL.split(' ').reverse.mkString(" "),
+      "one unique sentence mentioning parquet shuffles catalyst codegen and watermarks today",
+      "near_dup")
+    run(textL,
+      "another novel line about band windows per row keys and lake appends here",
+      "exact_dup")
+  }
+
+  test("cleanBatch sizes the first batch's lake sha bloom from the spine's observed count") {
+    import graft.streaming.IngestClean
+    import graft.sources.{BloomLake, LakeListing}
+    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_bloom1").toString
+    val (lake, idx) = (s"$dir/lake", s"$dir/index")
+    val docs = (1 to 30).map(i => Doc(i, (1 to 12).map(j => s"f${i}x$j").mkString(" "), i * 1000000L))
+    assert(IngestClean.cleanBatch(spark, spark.createDataFrame(docs), lake, idx).appended == 30)
+    BloomLake.assertBloomCapacity(spark, lake, "sha", fpp = 1e-8)
+    BloomLake.assertBloomCapacity(spark, idx, "band", fpp = 1e-8)
+    val sizes = Seq(lake, idx).flatMap(d => LakeListing.dataFileSizes(
+      spark.sessionState.newHadoopConf(), new org.apache.hadoop.fs.Path(d)))
+    assert(sizes.size == 2)
+    // a bitset for the 100k-key default alone is ~0.5 MB
+    sizes.foreach { case (f, n) => assert(n < 64 * 1024, s"$f is $n bytes") }
+  }
+
+  test("a steady-state cleanBatch append runs 11 Spark jobs (19 with the double-built spine)") {
+    // One batch with an exact and a near dup, so both tiers keep files
+    // after their bloom walks and the whole plan runs: the spine
+    // checkpoint 2 (its nrm exchange and the checkpoint), the probe-key
+    // collect 1, the lake append 6 (the two key broadcasts, the lake-hit
+    // broadcast, the band and the per-row exchanges, the write) and the
+    // index append 2 (the new files' sha broadcast, the write).
+    import graft.streaming.IngestClean
+    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_jobcount").toString
+    val (lake, idx) = (s"$dir/lake", s"$dir/index")
+    def doc(id: Long) = Doc(id, (0 until 12).map(i => s"j${id}x$i").mkString(" "), id * 1000000L)
+    IngestClean.cleanBatch(spark, spark.createDataFrame((0 until 20).map(i => doc(i.toLong))), lake, idx)
+    val batch = spark.createDataFrame((100 until 120).map(i => doc(i.toLong)) ++ Seq(
+      doc(3).copy(doc_id = 200L, us = 999000000L),
+      Doc(201L, doc(7).text.split(' ').reverse.mkString(" "), 999100000L)))
+    var st: IngestClean.BatchStats = null
+    val jobs = IndexRungSpec.jobsOf { st = IngestClean.cleanBatch(spark, batch, lake, idx) }
+    assert(st == IngestClean.BatchStats(22, 22, 21, 20), s"stats: $st")
+    assert(IngestClean.lastExactFiles._2 == 1 && IngestClean.lastBandFiles._2 == 1)
+    assert(jobs == 11, s"expected 11 Spark jobs per steady-state append, saw $jobs")
+  }
+
+  test("the spine checkpoint runs MinHash once: one MinHashSig in its executed plan") {
+    // StreamDedup's PROJECTION DISCIPLINE: inlining the signature into
+    // the band extraction re-runs all 64 planes per extracted item.
+    import graft.streaming.IngestClean
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_minhash").toString
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        if (funcName == "localCheckpoint") plans.add(qe.executedPlan): Unit
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      IngestClean.cleanBatch(spark, spark.createDataFrame(Seq(
+        Doc(1, "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo", 1000000L),
+        Doc(2, "zebra yak xylophone walrus vulture tiger snake rabbit quail panda otter", 2000000L))),
+        s"$dir/lake", s"$dir/index")
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size == 1, s"expected one spine checkpoint, saw ${plans.size}")
+    val helper = new AdaptiveSparkPlanHelper {}
+    val sigs = helper.collectWithSubqueries(plans.peek()) { case p => p }
+      .flatMap(_.expressions.flatMap(_.collect { case m: graft.functions.MinHashSig => m }))
+    assert(sigs.size == 1, s"expected one MinHashSig in the spine checkpoint, saw ${sigs.size}")
   }
 }
