@@ -16,6 +16,4 @@ final case class Q(
 object Q {
   def apply(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, Some(oracle))
-  def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, None)
 }

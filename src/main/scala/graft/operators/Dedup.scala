@@ -105,7 +105,7 @@ object Dedup {
     // data under `dir` is immutable within a session (true for the lake
     // contract); call [[clearMemo]] after rewriting a corpus in place.
     val confSig = s"${broadcastCap(s)}:${allPairsMaxGroups(s)}:" +
-      s"${allPairsBuckets(s)}:${allPairsMargin(s)}:${vocabDriverRankMaxTokens(s)}"
+      s"${allPairsMargin(s)}:${vocabDriverRankMaxTokens(s)}"
     pairMemo.getOrElseUpdate((s, dir, tag, p, q, confSig), build)
   }
 
@@ -174,12 +174,11 @@ object Dedup {
     * MATCH the band arm's, so the crossover tracks the row gap much
     * closer: measured at sf0.1, gap 2.13x, narrow all-pairs 2.1-2.3 s vs
     * band 3.6-4.3 s for the identical rep-pair stage. 1.5 keeps a safety
-    * factor for the bucket-explode overhead near parity. Falls back to
-    * `allPairsMargin` when only the shared conf is set (tests pin both
-    * arms through it). */
+    * factor for the bucket-explode overhead near parity. Yields to
+    * `allPairsMargin` when that shared conf is set (tests pin both arms
+    * through it). */
   private[operators] def allPairsMarginMinhash(s: SparkSession): Double =
-    s.conf.getOption("spark.graft.pairJoin.allPairsMarginMinhash")
-      .orElse(s.conf.getOption("spark.graft.pairJoin.allPairsMargin"))
+    s.conf.getOption("spark.graft.pairJoin.allPairsMargin")
       .map(_.toDouble).getOrElse(1.5)
 
   /** Vocab size up to which the dictionary ranks are computed ON THE
@@ -202,9 +201,7 @@ object Dedup {
     * (L - bucket) times, the build side is probed per bucket, so L
     * trades probe-side width against per-match fan-out. 64 keeps the
     * replicated side tiny at every group count the cap admits. */
-  private[operators] def allPairsBuckets(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.pairJoin.allPairsBuckets")
-      .map(_.toInt).getOrElse(64)
+  private val AllPairsBuckets = 64
 
   /** Last candidate-path decision per (session, family) — "all_pairs"
     * vs "prefix"/"band". Diagnostics for tests, the [[sideChoices]]
@@ -237,7 +234,7 @@ object Dedup {
     * (all callers do: intersection counts, agreement counts). */
   private def bucketedAllPairs(s: SparkSession, ep: DataFrame, cols: Seq[String],
       nRows: Long, avgRowBytes: Long): DataFrame = {
-    val L = math.max(1, allPairsBuckets(s))
+    val L = AllPairsBuckets
     def side(sfx: String) = ep.select(
       col("doc_id").as(s"doc_$sfx") +: cols.map(c => col(c).as(s"${c}_$sfx")): _*)
     def bktOf(d: Column) = pmod(xxhash64(d), lit(L.toLong)).cast("int")

@@ -1744,12 +1744,6 @@ object Similarity extends IndexRung {
       rows.map(_.getLong(1)).distinct.toSeq)
   }
 
-  private[graft] def ivfArgmaxCol(cents: DataFrame): Column = {
-    val ca = collectCents(cents)
-    graft.functions.PqExprs.ivfArgmaxNative(
-      col("embedding"), col("nrm"), ca.cids, ca.flat, ca.cns, ca.dim)
-  }
-
   /** EXACT native assignment at ANY cell count. Two payload routes,
     * same expression semantics (scores, e6 floor, lowest-cent_id ties
     * — [[ivfAssigned]]'s rules exactly, pinned in BlockedArgmaxSpec):

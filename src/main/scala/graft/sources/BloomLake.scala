@@ -2,13 +2,15 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.column.values.bloomfilter.BloomFilter
+import org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 /** Parquet split-block bloom filters: the point-predicate complement to
   * [[ZoneMap]].
@@ -41,7 +43,9 @@ import scala.jdk.CollectionConverters._
   * that predates the column holds only NULLs for it, so its row groups
   * are excluded (correctly — they cannot match a point equality), while
   * a column found in NO probed file is treated as a caller typo and
-  * errors.
+  * errors. Every probe runs the same walk (one verdict per row group:
+  * column absent, no bloom, hit or miss); the set probe
+  * [[pruneByStringSet]] differs only in which verdicts keep a file.
   *
   * Scale shape: the probe reads footer metadata + one bloom bitset
   * (kilobytes) per row group — O(row groups), never data pages; the same
@@ -137,47 +141,33 @@ object BloomLake {
     * `path` may be flat or Hive-partitioned: listing is recursive.
     */
   def probeLong(spark: SparkSession, path: String, colName: String, value: Long): BloomProbe =
-    probeAll(spark, listParquet(spark, path), colName, LongKey(value))
+    probeAll(spark, path, colName, longKey(value))
 
   /** String-key variant — the content-address lookup ("which row groups
     * could hold THIS sha?") over BINARY/UTF8 columns.
     */
   def probeString(spark: SparkSession, path: String, colName: String, value: String): BloomProbe =
-    probeAll(spark, listParquet(spark, path), colName, StringKey(value))
-
-  /** Explicit-file-list variant: the composition hook — a planner that
-    * has already pruned to a candidate file set (partition dirs, zone
-    * maps) probes ONLY the survivors, so the tiers multiply
-    * (`ZoneMap.prunedScanThreeTier`).
-    */
-  def probeLongAt(spark: SparkSession, files: Seq[String], colName: String,
-      value: Long): BloomProbe =
-    probeAll(spark, files.map(new Path(_)), colName, LongKey(value))
+    probeAll(spark, path, colName, stringKeys(Seq(value)))
 
   /** Which of `files` might contain `colName = value` — the planning
     * filter of the three-tier scan; returns the empty list for empty
     * input (a filter, not a dir probe). Small candidate sets
     * (<= driverMax, the common case once partitions and zones have
     * pruned) walk footers on the driver; larger sets fan the walk out
-    * as one Spark job (a footer+bitset read per file, no data pages),
-    * so planning cost scales with the CLUSTER, not the driver, when a
-    * predicate is too weak for the earlier tiers. The executors walk
-    * with the SESSION's Hadoop conf, serialized into the closure — a
-    * fresh `new Configuration()` would drop programmatic
-    * `spark.hadoop.*` session settings (object-store credentials set on
-    * the SparkSession), making the fan-out fail on S3/ABFS lakes where
-    * the driver-side walk works. Input order is preserved either way.
+    * as one Spark job ([[perFile]]), so planning cost scales with the
+    * CLUSTER, not the driver, when a predicate is too weak for the
+    * earlier tiers. Input order is preserved either way.
     */
   def probeLongWhere(spark: SparkSession, files: Seq[String], colName: String,
       value: Long, driverMax: Int = 64): Seq[String] =
-    probeWhere(spark, files, colName, LongKey(value), driverMax)
+    probeWhere(spark, files, colName, longKey(value), driverMax)
 
   /** String-key variant of [[probeLongWhere]] — the content-address
     * filter ("which candidate files could hold THIS sha?").
     */
   def probeStringWhere(spark: SparkSession, files: Seq[String], colName: String,
       value: String, driverMax: Int = 64): Seq[String] =
-    probeWhere(spark, files, colName, StringKey(value), driverMax)
+    probeWhere(spark, files, colName, stringKeys(Seq(value)), driverMax)
 
   /** SET-probe: which of `files` might contain `colName = v` for ANY of
     * `values` — the per-micro-batch pruning filter of the streaming
@@ -185,133 +175,125 @@ object BloomLake {
     * excludes every index/lake file that provably holds none of them, so
     * the dedup joins scan O(touched files), not O(corpus).
     *
-    * Two deliberate semantic differences from the single-key
-    * [[probeStringWhere]], both because the probed column may POSTDATE
-    * old files (the sha column is added to an already-running lake):
+    * Same walk as the single-key [[probeStringWhere]]; two deliberate
+    * differences, both because the probed column may POSTDATE old files
+    * (the sha column is added to an already-running lake):
     *
-    *  - a row group whose column is ABSENT is a MAYBE (must be scanned —
-    *    its rows exist, their key values are simply not indexed), where
-    *    the single-key probe excludes it (there the column is declared
-    *    table schema, so absence means all-NULL);
-    *  - no `columnSeen` require: a lake with zero post-upgrade files has
-    *    the column nowhere, and the correct answer is "scan everything",
-    *    not an error.
+    *  - a row group whose column is ABSENT keeps its file (it must be
+    *    scanned — its rows exist, their key values are simply not
+    *    indexed), where the single-key probe excludes it (there the
+    *    column is declared table schema, so absence means all-NULL);
+    *  - no "column not found" require: a lake with zero post-upgrade
+    *    files has the column nowhere, and the correct answer is "scan
+    *    everything", not an error.
     *
-    * Row groups short-circuit on the first hitting key. Empty `values`
-    * means no key can hit anywhere EXCEPT in column-absent row groups —
-    * callers should treat an empty batch as "nothing to probe" instead.
-    * Cost: O(files) footer walks (fanned out as one Spark job past
-    * `driverMax`) x O(|values|) hash probes per row group worst case —
-    * metadata-class, no data pages.
+    * A file's walk stops at its first kept row group, a row group's at
+    * its first hitting key. Empty `values` means no key can hit anywhere
+    * EXCEPT in column-absent row groups — callers should treat an empty
+    * batch as "nothing to probe" instead. Cost: `values` hashed once,
+    * then O(files) footer walks (fanned out as one Spark job past
+    * `driverMax`) x O(|values|) bitset lookups per row group worst case
+    * — metadata-class, no data pages.
     */
   def pruneByStringSet(spark: SparkSession, files: Seq[String], colName: String,
-      values: Seq[String], driverMax: Int = 64): Seq[String] = {
-    if (files.isEmpty) return Seq.empty
-    val keys = values.toArray
-    def anyMaybe(conf: Configuration, file: Path): Boolean = {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-      try {
-        reader.getFooter.getBlocks.asScala.exists { block =>
-          block.getColumns.asScala.find(_.getPath.toDotString == colName) match {
-            case None => true // pre-column file: values unknown, must scan
-            case Some(cc) =>
-              val t = cc.getPrimitiveType.getPrimitiveTypeName
-              require(t == PrimitiveTypeName.BINARY,
-                s"bloom set-probe type mismatch on $colName in $file: column is $t, probe " +
-                  "hashes BINARY — hashes would never collide (silent false negatives)")
-              val bf = reader.getBloomFilterDataReader(block).readBloomFilter(cc)
-              if (bf == null) true // no bloom -> cannot exclude
-              else keys.exists(v =>
-                bf.findHash(bf.hash(org.apache.parquet.io.api.Binary.fromString(v))))
-          }
-        }
-      } finally reader.close()
-    }
-    if (files.length <= driverMax) {
-      val conf = spark.sessionState.newHadoopConf()
-      files.filter(f => anyMaybe(conf, new Path(f)))
-    } else {
-      val serConf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-      val maybe = spark.sparkContext
-        .parallelize(files, math.min(files.length, 256))
-        .map(f => f -> anyMaybe(serConf.value, new Path(f)))
-        .collect().toMap
-      files.filter(maybe) // preserve input order
-    }
-  }
+      values: Seq[String], driverMax: Int = 64): Seq[String] =
+    files.zip(perFile(spark, files, colName, stringKeys(values), driverMax)(_.exists(_ != Miss)))
+      .collect { case (f, true) => f }
 
   private def probeWhere(spark: SparkSession, files: Seq[String], colName: String,
-      key: ProbeKey, driverMax: Int): Seq[String] = {
-    if (files.isEmpty) return Seq.empty
-    val walked: Seq[(String, FileProbe)] =
-      if (files.length <= driverMax) {
-        val conf = spark.sessionState.newHadoopConf()
-        files.map(f => f -> walkFile(conf, new Path(f), colName, key))
-      } else {
-        val serConf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-        val byFile = spark.sparkContext
-          .parallelize(files, math.min(files.length, 256))
-          .map { f =>
-            f -> walkFile(serConf.value, new Path(f), colName, key)
-          }.collect().toMap
-        files.map(f => f -> byFile(f)) // restore input order
-      }
-    require(walked.exists(_._2.columnSeen),
+      keys: ProbeKeys, driverMax: Int): Seq[String] =
+    if (files.isEmpty) Seq.empty
+    else files.zip(pointWalk(spark, files, colName, keys, driverMax))
+      .collect { case (f, groups) if groups.exists(_.maybe) => f }
+
+  private def probeAll(spark: SparkSession, path: String, colName: String,
+      keys: ProbeKeys): BloomProbe = {
+    val files = LakeListing.dataFiles(spark.sessionState.newHadoopConf(), new Path(path))
+    require(files.nonEmpty, "no parquet files to probe — wrong directory?")
+    val groups = pointWalk(spark, files.map(_.toString), colName, keys, Int.MaxValue).flatten
+    BloomProbe(groups.size, groups.count(g => g == Hit || g == Miss), groups.count(_.maybe))
+  }
+
+  /** The single-key probes' walk: every row group's verdict, per file. A
+    * column found in no probed file is a caller typo (class doc). */
+  private def pointWalk(spark: SparkSession, files: Seq[String], colName: String,
+      keys: ProbeKeys, driverMax: Int): Seq[Vector[Verdict]] = {
+    val walked = perFile(spark, files, colName, keys, driverMax)(_.toVector)
+    require(walked.exists(_.exists(_ != Absent)),
       s"column $colName not found in any of ${files.length} probed files — caller typo?")
-    walked.filter(_._2.maybe > 0).map(_._1)
+    walked
   }
 
-  /** The probe key, carrying its hash AND the physical type it is valid
-    * against — see the class doc's probe-safety contract.
+  /** One row group's answer to "might it hold a probe key?". `maybe` is
+    * the single-key reading: a group without a bloom cannot be excluded,
+    * and a group of a file that predates the column holds only NULLs
+    * for it, which cannot match a point equality. */
+  private sealed abstract class Verdict(val maybe: Boolean) extends Serializable
+  private case object Absent extends Verdict(false)
+  private case object NoBloom extends Verdict(true)
+  private case object Hit extends Verdict(true)
+  private case object Miss extends Verdict(false)
+
+  /** A probe's keys, hashed ONCE on the driver with parquet's own
+    * split-block hash (XXH64 of the PLAIN-encoded value, the one hash
+    * strategy the format defines, so any filter instance hashes as the
+    * written ones do), and the physical type those hashes are valid
+    * against — see the class doc's probe-safety contract. */
+  private final case class ProbeKeys(hashes: Array[Long], physical: PrimitiveTypeName)
+
+  private def hasher = new BlockSplitBloomFilter(BlockSplitBloomFilter.LOWER_BOUND_BYTES)
+
+  private def longKey(v: Long): ProbeKeys =
+    ProbeKeys(Array(hasher.hash(v)), PrimitiveTypeName.INT64)
+
+  private def stringKeys(vs: Seq[String]): ProbeKeys = {
+    val h = hasher
+    ProbeKeys(vs.map(v => h.hash(Binary.fromString(v))).toArray, PrimitiveTypeName.BINARY)
+  }
+
+  /** Each file's row-group verdicts, reduced by `summarize` while the
+    * footer is open (a summary that stops early reads no further
+    * bitsets), in input order. Up to `driverMax` files walk on the
+    * driver; more fan out as ONE Spark job — a footer and bitset read per
+    * file, no data pages. The executors walk with the SESSION's Hadoop
+    * conf, serialized into the closure: a fresh `new Configuration()`
+    * would drop programmatic `spark.hadoop.*` session settings
+    * (object-store credentials set on the SparkSession), making the
+    * fan-out fail on S3/ABFS lakes where the driver walk works.
     */
-  private sealed trait ProbeKey extends Serializable {
-    def hashIn(bf: BloomFilter): Long
-    def accepts(t: PrimitiveTypeName): Boolean
-    def expected: String
-  }
-  private final case class LongKey(v: Long) extends ProbeKey {
-    def hashIn(bf: BloomFilter): Long = bf.hash(v)
-    def accepts(t: PrimitiveTypeName): Boolean = t == PrimitiveTypeName.INT64
-    def expected: String = "INT64"
-  }
-  private final case class StringKey(v: String) extends ProbeKey {
-    def hashIn(bf: BloomFilter): Long =
-      bf.hash(org.apache.parquet.io.api.Binary.fromString(v))
-    def accepts(t: PrimitiveTypeName): Boolean = t == PrimitiveTypeName.BINARY
-    def expected: String = "BINARY"
+  private def perFile[A: ClassTag](spark: SparkSession, files: Seq[String], colName: String,
+      keys: ProbeKeys, driverMax: Int)(summarize: Iterator[Verdict] => A): Seq[A] = {
+    val conf = spark.sessionState.newHadoopConf()
+    if (files.length <= driverMax)
+      files.map(f => walkFile(conf, new Path(f), colName, keys)(summarize))
+    else {
+      val serConf = new SerializableHadoopConf(conf)
+      spark.sparkContext.parallelize(files, math.min(files.length, 256))
+        .map(f => walkFile(serConf.value, new Path(f), colName, keys)(summarize))
+        .collect().toSeq
+    }
   }
 
-  private final case class FileProbe(groups: Int, present: Int, maybe: Int,
-      columnSeen: Boolean)
-
-  /** One file's footer walk — static and spark-free so the distributed
-    * path ships it to executors as-is.
+  /** One file's footer walk, its row groups' verdicts produced lazily —
+    * static and spark-free so the fan-out ships it as-is.
     */
-  private def walkFile(conf: Configuration, file: Path, colName: String,
-      key: ProbeKey): FileProbe = {
+  private def walkFile[A](conf: Configuration, file: Path, colName: String, keys: ProbeKeys)(
+      summarize: Iterator[Verdict] => A): A = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      var g = 0; var p = 0; var m = 0; var seen = false
-      reader.getFooter.getBlocks.asScala.foreach { block =>
-        g += 1
-        block.getColumns.asScala.find(_.getPath.toDotString == colName) match {
-          case None => () // pre-column file: all NULLs, cannot match a point equality
-          case Some(cc) =>
-            seen = true
-            val t = cc.getPrimitiveType.getPrimitiveTypeName
-            require(key.accepts(t),
-              s"bloom probe type mismatch on $colName in $file: column is $t, probe hashes " +
-                s"${key.expected} — hashes would never collide (silent false negatives)")
-            val bf = reader.getBloomFilterDataReader(block).readBloomFilter(cc)
-            if (bf == null) { m += 1 } // no bloom -> cannot exclude
-            else {
-              p += 1
-              if (bf.findHash(key.hashIn(bf))) m += 1
-            }
-        }
+    try summarize(reader.getFooter.getBlocks.asScala.iterator.map[Verdict] { block =>
+      block.getColumns.asScala.find(_.getPath.toDotString == colName) match {
+        case None => Absent
+        case Some(cc) =>
+          val t = cc.getPrimitiveType.getPrimitiveTypeName
+          require(t == keys.physical,
+            s"bloom probe type mismatch on $colName in $file: column is $t, probe hashes " +
+              s"${keys.physical} — hashes would never collide (silent false negatives)")
+          val bf = reader.getBloomFilterDataReader(block).readBloomFilter(cc)
+          if (bf == null) NoBloom
+          else if (keys.hashes.exists(bf.findHash)) Hit
+          else Miss
       }
-      FileProbe(g, p, m, seen)
-    } finally reader.close()
+    }) finally reader.close()
   }
 
   /** Post-write bloom CAPACITY audit: fail loudly if any row group's
@@ -340,7 +322,7 @@ object BloomLake {
   def assertBloomCapacity(spark: SparkSession, path: String, colName: String,
       fpp: Double, keysPerRow: Double = 1.0): Unit = {
     val conf = spark.sessionState.newHadoopConf()
-    val files = listParquet(spark, path)
+    val files = LakeListing.dataFiles(conf, new Path(path))
     require(files.nonEmpty, s"no parquet files under $path — wrong directory?")
     val bad = Seq.newBuilder[String]
     var seen = false
@@ -366,19 +348,6 @@ object BloomLake {
       s"bloom capacity audit failed on $path — an undersized bitset saturates and " +
         "excludes NOTHING (probes silently stop pruning):\n" + problems.mkString("\n"))
   }
-
-  private def probeAll(spark: SparkSession, files: Seq[Path], colName: String,
-      key: ProbeKey): BloomProbe = {
-    require(files.nonEmpty, "no parquet files to probe — wrong directory?")
-    val conf = spark.sessionState.newHadoopConf()
-    val walked = files.map(walkFile(conf, _, colName, key))
-    require(walked.exists(_.columnSeen),
-      s"column $colName not found in any of ${files.length} probed files — caller typo?")
-    BloomProbe(walked.map(_.groups).sum, walked.map(_.present).sum, walked.map(_.maybe).sum)
-  }
-
-  private def listParquet(spark: SparkSession, path: String): Seq[Path] =
-    LakeListing.dataFiles(spark.sessionState.newHadoopConf(), new Path(path))
 
   /** Hadoop `Configuration` is not `Serializable`; this wrapper ships one
     * inside a task closure via Hadoop's own Writable encoding (the same

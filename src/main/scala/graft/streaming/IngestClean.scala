@@ -108,32 +108,25 @@ object IngestClean {
     * [[maxProbeKeys]], file-level bloom pruning still runs on the
     * collected keys but the scan feeds the join whole files — the
     * pre-compaction cost, still correct. */
-  private def maxSemiJoinKeys(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.ingest.maxSemiJoinKeys")
-      .map(_.toLong).getOrElse(100000L)
+  private val MaxSemiJoinKeys = 100000L
 
   /** Expected distinct keys per written file, sizing the bloom bitsets
     * of writes whose key count is not known up front: the index rebuild
     * and repair. A batch append sizes its bitsets to the counts its
     * spine checkpoint observed instead — a 100k-ndv bitset is ~0.5–1 MB
     * per file, which dwarfs a few-hundred-row batch file and is read
-    * back by every later batch's bloom walk. With [[bloomFpp]] at its
-    * 1e-8 default, 100k ndv stays under parquet-mr's 1 MB bloom cap; a
-    * much larger ndv would silently hit the cap and degrade the real
-    * fpp. Oversizing wastes space, undersizing raises the false-positive
-    * rate — both safe. */
-  private def bloomNdv(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.ingest.bloomNdv")
-      .map(_.toLong).getOrElse(100000L)
+    * back by every later batch's bloom walk. At [[BloomFpp]], 100k ndv
+    * stays under parquet-mr's 1 MB bloom cap; a much larger ndv would
+    * silently hit the cap and degrade the real fpp. Oversizing wastes
+    * space, undersizing raises the false-positive rate — both safe. */
+  private val BloomNdv = 100000L
 
   /** Bloom false-positive rate. A SET probe tests up to maxProbeKeys
     * keys per row group, so expected false survivors per file are
     * K x fpp — the parquet default 0.01 excludes NOTHING under a 1e5-key
     * batch (measured in the ingest battery). 1e-8 keeps K x fpp << 1 at
     * the default key bound for ~38 bits/key. */
-  private def bloomFpp(spark: SparkSession): Double =
-    spark.conf.getOption("spark.graft.ingest.bloomFpp")
-      .map(_.toDouble).getOrElse(1e-8)
+  private val BloomFpp = 1e-8
 
   // Test probes (the lastNearPairPath pattern): how many candidate files
   // each tier saw and how many survived its bloom walk on the most
@@ -217,7 +210,7 @@ object IngestClean {
     if (pathExists(spark, lakeDir)) {
       val lake = Parquet.read(spark, lakeDir).select("doc_id", "text", "us")
       StreamDedup.banded(lake).toDF().select("band", "doc_id")
-        .write.options(BloomLake.writerOptions("band", bloomNdv(spark), bloomFpp(spark)))
+        .write.options(BloomLake.writerOptions("band", BloomNdv, BloomFpp))
         .mode(SaveMode.Overwrite).parquet(staging.toString)
     }
     if (fs.exists(idxPath))
@@ -336,7 +329,7 @@ object IngestClean {
     // correct.
     def narrowed(scan: DataFrame, key: Column, keys: Option[Seq[String]]): DataFrame =
       keys match {
-        case Some(ks) if ks.size <= maxSemiJoinKeys(spark) =>
+        case Some(ks) if ks.size <= MaxSemiJoinKeys =>
           import spark.implicits._
           scan.join(broadcast(ks.toDF("k")), key === col("k"), "left_semi")
         case _ => scan
@@ -472,7 +465,7 @@ object IngestClean {
       .select(col("doc_id"), col("text"), col("us"), nrm(col("text")).as("nrm"), col("sha"))
       .coalesce(1)
       .write.options(BloomLake.writerOptions("sha",
-        math.max(1L, counted(obsSpine, "first")), bloomFpp(spark)))
+        math.max(1L, counted(obsSpine, "first")), BloomFpp))
       .mode(SaveMode.Append).parquet(lakeDir)
 
     failpoint.filter(_ == "after_lake_append").foreach { _ =>
@@ -497,7 +490,7 @@ object IngestClean {
       val bandNdv = bandKeys.fold(counted(obsSpine, "banded") * StreamDedup.NBands)(_.size.toLong)
       keepers.join(Parquet.readBase(spark, lakeDir, newFiles).select("sha"), Seq("sha"), "left_semi")
         .select(explode(col("bands")).as("band"), col("doc_id"))
-        .write.options(BloomLake.writerOptions("band", math.max(1L, bandNdv), bloomFpp(spark)))
+        .write.options(BloomLake.writerOptions("band", math.max(1L, bandNdv), BloomFpp))
         .mode(SaveMode.Append).parquet(indexDir)
       if (!indexExists) writeMarker(spark, indexDir)
     }
@@ -569,7 +562,7 @@ object IngestClean {
     * Partner text fetch: in-batch partners read from the keepers by sha;
     * lake partners (a bounded id set — one per hit band) are fetched by
     * a pushed-down `doc_id IN (...)` scan when the set fits
-    * [[maxSemiJoinKeys]] (row-group stats prune a doc_id-clustered lake)
+    * [[MaxSemiJoinKeys]] (row-group stats prune a doc_id-clustered lake)
     * and by a semi-join otherwise. Verify mode therefore adds ONE
     * bounded collect (the partner ids) to the batch's action count —
     * priced per batch in the ingest battery. Returns (sha, near_of). */
@@ -591,13 +584,13 @@ object IngestClean {
       else {
         // the bounded collect: lake-partner ids, one per hit band
         val idRows = lakePairs.select(col("partner")).distinct()
-          .limit(math.min(maxSemiJoinKeys(spark) + 1, Int.MaxValue.toLong).toInt)
+          .limit(math.min(MaxSemiJoinKeys + 1, Int.MaxValue.toLong).toInt)
           .collect()
         if (idRows.isEmpty) None
         else {
           val base = Parquet.read(spark, lakeDir)
             .select(col("doc_id").as("partner"), col("text").as("p_text"))
-          if (idRows.length <= maxSemiJoinKeys(spark))
+          if (idRows.length <= MaxSemiJoinKeys)
             // pushed-down IN: parquet row-group stats prune a
             // doc_id-clustered lake to the touched groups
             Some(base.filter(col("partner").isin(idRows.map(_.getLong(0)).toSeq: _*)))
@@ -654,10 +647,10 @@ object IngestClean {
       expectedKeysPerFile: Long = 1000000L): Unit = {
     if (pathExists(spark, lakeDir))
       graft.sources.LakeMaintenance.compact(spark, lakeDir, targetBytes,
-        BloomLake.writerOptions("sha", expectedKeysPerFile, bloomFpp(spark))): Unit
+        BloomLake.writerOptions("sha", expectedKeysPerFile, BloomFpp)): Unit
     if (pathExists(spark, indexDir))
       graft.sources.LakeMaintenance.compact(spark, indexDir, targetBytes,
-        BloomLake.writerOptions("band", expectedKeysPerFile, bloomFpp(spark))): Unit
+        BloomLake.writerOptions("band", expectedKeysPerFile, BloomFpp)): Unit
   }
 
   /** Repair the band index after the one crash window [[cleanBatch]]
@@ -691,7 +684,7 @@ object IngestClean {
       .select("band", "doc_id").localCheckpoint(true)
     val n = bands.select("doc_id").distinct().count()
     if (n > 0) {
-      bands.write.options(BloomLake.writerOptions("band", bloomNdv(spark), bloomFpp(spark)))
+      bands.write.options(BloomLake.writerOptions("band", BloomNdv, BloomFpp))
         .mode(SaveMode.Append).parquet(indexDir)
       if (readMarker(spark, indexDir).isEmpty) writeMarker(spark, indexDir)
     }

@@ -112,6 +112,41 @@ class BloomLakeSpec extends AnyFunSuite {
     val drv = BloomLake.probeLongWhere(spark, files, "o_custkey", key, driverMax = 1000)
     assert(dist == drv)
     assert(dist.nonEmpty && dist.size < files.size)
+
+    // The set probe's fan-out arm, over the three files it must tell
+    // apart: one whose only hit sits in a later row group (kept), one
+    // with no hit (excluded) and one that predates the sha column (kept:
+    // its key values are not indexed).
+    import graft.sources.LakeListing
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val base = Files.createTempDirectory("bloomset").toString
+    val conf = spark.sessionState.newHadoopConf()
+    def shas(prefix: String) =
+      spark.range(0, 3000, 1, 1).select(format_string(s"$prefix%05d", col("id")).as("sha"))
+    shas("k").write.options(BloomLake.writerOptions("sha", 3000L, fpp = 1e-8))
+      .option("parquet.block.size", "4096").parquet(s"$base/later")
+    shas("m").write.options(BloomLake.writerOptions("sha", 3000L, fpp = 1e-8))
+      .parquet(s"$base/miss")
+    spark.range(0, 10, 1, 1).toDF("doc_id").write.parquet(s"$base/old")
+    val Seq(later, miss, old) = Seq("later", "miss", "old").map { d =>
+      val fs = LakeListing.dataFiles(conf, new Path(s"$base/$d"))
+      assert(fs.size == 1, s"$d: expected one data file, got $fs")
+      fs.head.toString
+    }
+    val sha = "k02999" // the last row written, so not in the first row group
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(later), conf))
+    try assert(reader.getFooter.getBlocks.size >= 2, "later: expected several row groups")
+    finally reader.close()
+    val set = Seq(later, miss, old)
+    val keys = Seq("absent_a", sha, "absent_b")
+    val setDist = BloomLake.pruneByStringSet(spark, set, "sha", keys, driverMax = 0)
+    val setDrv = BloomLake.pruneByStringSet(spark, set, "sha", keys, driverMax = 1000)
+    assert(setDist == setDrv)
+    assert(setDrv == Seq(later, old))
+    // the single-key probe, same walk, excludes the pre-column file
+    assert(BloomLake.probeStringWhere(spark, set, "sha", sha, driverMax = 0) == Seq(later))
   }
 
   test("probe guards: type mismatch and typo'd columns fail loudly; pre-column files exclude") {
