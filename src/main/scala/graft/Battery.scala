@@ -39,8 +39,6 @@ import org.apache.spark.sql.functions._
   *                              lake, with vs without compaction
   *   pq [vectors=500000]        IVFADC two-temperature index: disk +
   *                              rank-stage bytes ADC vs exact, recall
-  *   pqdispatch [vectors=125000] [cells=32,...,1024]
-  *                              assignment dispatch over a cell sweep
   *   pqserve [vectors=4000000]  nProbe serving curve at the 4M point
   *   pqiters [vectors=500000]   Lloyd depth at fixed compression
   *   pqopq [vectors=500000] [corr]
@@ -53,8 +51,9 @@ import org.apache.spark.sql.functions._
   *   ladderdim [vectors=500000] [dims=256]
   *                              the flat rungs at production width
   *   argmaxsweep [rows=50000] [cells=65536,262144,1024000]
-  *                              exact vs two-tier assignment at
-  *                              production cell counts
+  *                              the exact assignment (broadcast
+  *                              native argmax) at production cell
+  *                              counts
   *   pqlife [vectors=4000000]   build -> drift append -> maintain ->
   *                              serve, recall before/after rebalance
   *   tombstone [vectors=1000000] probe cost of tombstones, filtered
@@ -86,9 +85,6 @@ object Battery {
       case Some("ingestgrow") => ingestGrow(spark,
         args.lift(1).map(_.toInt).getOrElse(40))
       case Some("pq")         => pq(spark, args.lift(1).map(_.toLong).getOrElse(500000L))
-      case Some("pqdispatch") => pqDispatch(spark, args.lift(1).map(_.toLong).getOrElse(125000L),
-        args.lift(2).map(_.split(",").toSeq.map(_.trim.toInt))
-          .getOrElse(Seq(32, 64, 128, 256, 512, 1024)))
       case Some("pqserve")    => pqServe(spark, args.lift(1).map(_.toLong).getOrElse(4000000L))
       case Some("pqiters")    => pqIters(spark, args.lift(1).map(_.toLong).getOrElse(500000L))
       case Some("pqopq")      => pqOpq(spark, args.lift(1).map(_.toLong).getOrElse(500000L),
@@ -106,7 +102,7 @@ object Battery {
       case Some("tombstone")  => tombstone(spark, args.lift(1).map(_.toLong).getOrElse(1000000L))
       case Some("range")      => rangeB(spark, args.lift(1).map(_.toLong).getOrElse(1000000L))
       case Some("text")       => textB(spark, args.lift(1).map(_.toLong).getOrElse(1000000L))
-      case other => sys.error(s"unknown battery: $other (skew|bloom|governance|paircurve|ivfjoin|ingest|ingestgrow|pq|pqdispatch|pqserve|pqiters|pqopq|pqopqserve|pqlat|ladder|ladderdim|pqlife|argmaxsweep|tombstone|range|text)")
+      case other => sys.error(s"unknown battery: $other (skew|bloom|governance|paircurve|ivfjoin|ingest|ingestgrow|pq|pqserve|pqiters|pqopq|pqopqserve|pqlat|ladder|ladderdim|pqlife|argmaxsweep|tombstone|range|text)")
     }
     spark.stop()
   }
@@ -368,7 +364,7 @@ object Battery {
     val cents = Parquet.read(s, operators.IndexSwap.side(s, path, "centroids"))
     val pv = probes.select(col("vec_id"), col("embedding"),
       l2normNative(col("embedding")).as("nrm"))
-    val (fr, flatSec) = timed(Similarity.ivfRouteFlat(pv, cents, 4).count())
+    val (fr, flatSec) = timed(Similarity.ivfRoute(pv, cents, 4).count())
     val (cr, coarseSec) = timed(Similarity.ivfRouteCoarse(pv, cents, 4).count())
     println(f"""{"battery":"ivfroute","vectors":$n,"cells":$nCent,"flat_sec":$flatSec%.1f,"coarse_sec":$coarseSec%.1f,"flat_routes":$fr,"coarse_routes":$cr}""")
   }
@@ -412,21 +408,13 @@ object Battery {
       .write.parquet(s"$root/embeddings.parquet")
     val nCells = math.max(16, math.sqrt(n.toDouble).toInt)
     val path = operators.Similarity.newIndexDir()
-    // Explicitly FLAT: this arm is the exact-assignment baseline the
-    // fast arm below races (round 14: the flat branch is the native
-    // argmax expression — exact AND the default inside the payload
-    // budget).
-    val (_, bSec) = timed(PQ.buildPqIndex(s, root, path, nCells, fastAssign = Some(false)))
+    val (_, bSec) = timed(PQ.buildPqIndex(s, root, path, nCells))
     def dirBytes(f: java.io.File): Long =
       if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).map(dirBytes).sum
       else if (f.getName.endsWith(".parquet")) f.length else 0L
     val codesBytes = dirBytes(new java.io.File(operators.IndexSwap.side(s, path, "codes")))
     val vecBytes = dirBytes(new java.io.File(operators.IndexSwap.side(s, path, "vectors")))
     println(f"""{"battery":"pq","vectors":$n,"cells":$nCells,"build_sec":$bSec%.1f,"codes_bytes":$codesBytes,"vectors_bytes":$vecBytes,"bytes_ratio":${vecBytes.toDouble / codesBytes}%.1f}""")
-    // The fast-build arm: two-tier assignment (N x 2 sqrt(cells) score
-    // rows instead of N x cells) — build wall vs the recall it costs.
-    val pathFast = operators.Similarity.newIndexDir()
-    val (_, bfSec) = timed(PQ.buildPqIndex(s, root, pathFast, nCells, fastAssign = Some(true)))
 
     // IO accounting is FILESYSTEM-DERIVED: bytes of the probed cells'
     // files per lake side — the rank-stage read each arm cannot avoid
@@ -484,11 +472,6 @@ object Battery {
       val cb2: Long = codesBytes
       val vb2: Long = vecBytes
       println(f"""{"battery":"pqprobe","arm":"fullscan","vectors":$n,"adc_sec":$fpqSec%.1f,"rank_bytes_adc":$cb2,"exact_sec":$fexSec%.1f,"rank_bytes_exact":$vb2,"recall_at5":"$fullRecall/${fexTop.length}"}""")
-      val (ffTop, ffSec) = timed(
-        PQ.probePqIndexWith(s, probeFrame, pathFast, nCells, 5).select("qid", "vec_id")
-          .collect().map(r => (r.getLong(0), r.getLong(1))))
-      val fastRecall = recall(ffTop, fexTop)
-      println(f"""{"battery":"pqprobe","arm":"fullscan_fastbuild","vectors":$n,"build_sec":$bfSec%.1f,"adc_sec":$ffSec%.1f,"recall_at5":"$fastRecall/${fexTop.length}"}""")
 
       // The nProbe SERVING curve — recall@5 (vs the exact full scan,
       // so IVF route misses count) against rank-stage bytes, PQ codes
@@ -559,65 +542,13 @@ object Battery {
       // stored codebooks (self-describing index).
       val pathMk = operators.Similarity.newIndexDir()
       val (_, bmkSec) = timed(PQ.buildPqIndex(s, root, pathMk, nCells,
-        fastAssign = Some(true), params = PQ.PqParams(8, 8, 256)))
+        params = PQ.PqParams(8, 8, 256)))
       val mkCodesBytes = dirBytes(new java.io.File(operators.IndexSwap.side(s, pathMk, "codes")))
       val (mkTop, mkSec) = timed(
         PQ.probePqIndexWith(s, probeFrame, pathMk, nCells, 5).select("qid", "vec_id")
           .collect().map(r => (r.getLong(0), r.getLong(1))))
       val mkRecall = recall(mkTop, fexTop)
       println(f"""{"battery":"pqprobe","arm":"fullscan_m8k256","vectors":$n,"build_sec":$bmkSec%.1f,"adc_sec":$mkSec%.1f,"codes_bytes":$mkCodesBytes,"bytes_ratio":${vecBytes.toDouble / mkCodesBytes}%.1f,"recall_at5":"$mkRecall/${fexTop.length}"}""")
-    }
-  }
-
-  // ---- pqdispatch -------------------------------------------------------
-
-  /** Brackets the assignment dispatch over a CELL-COUNT sweep at fixed
-    * n: full-build walls for the two real branches (flat = the BLOCKED
-    * native exact argmax since round 15 — exact at any cell count;
-    * fast = the two-tier approximate route), plus ASSIGNMENT-ONLY
-    * walls for all three forms (native blocked / two-tier / the
-    * join+window argmax) so the dispatch subject is isolated from the
-    * per-cell write fan-out the build walls share. The shared
-    * codebook/codes memo is prewarmed first. The window arm is skipped
-    * past 4096 cells: it materializes N x cells rows, its wall is
-    * linear in cells by construction, and the 136.8 s-class point was
-    * already priced at fixture scale in round 16. */
-  private def pqDispatch(s: SparkSession, n: Long,
-      cellSweep: Seq[Int] = Seq(32, 64, 128, 256, 512, 1024)): Unit = {
-    import operators.{PQ, Similarity}
-    import graft.functions.VectorExprs.l2normNative
-    val dim = 64
-    val root = java.nio.file.Files.createTempDirectory("graft_battery_pqd").toString
-    val nClusters = math.max(16L, n / 8)
-    val cl = col("id") % nClusters
-    val emb = transform(sequence(lit(0), lit(dim - 1)), i =>
-      (((pmod(xxhash64(cl, i, lit(7)), lit(2000)).cast("double") / 1000.0) - 1.0) +
-        (pmod(xxhash64(col("id"), i, lit(11)), lit(2000)).cast("double") / 1000000.0)).cast("float"))
-    s.range(n).select(col("id").as("vec_id"), emb.as("embedding"), lit(0).as("label"))
-      .repartitionByRange(256, col("vec_id"))
-      .write.parquet(s"$root/embeddings.parquet")
-    PQ.buildPqIndex(s, root, operators.Similarity.newIndexDir(), 32,
-      fastAssign = Some(false)) // prewarm the codebook/codes memo
-    val v = Tables.embeddings(s, root)
-      .select(col("vec_id"), col("embedding"), l2normNative(col("embedding")).as("nrm"))
-    cellSweep.foreach { c =>
-      val cents = PQ.coarseCents(v, c)
-      val localCents = s.createDataFrame(
-        java.util.Arrays.asList(cents.collect(): _*), cents.schema)
-      def drain(df: org.apache.spark.sql.DataFrame): Unit = {
-        df.agg(sum(col("cent_id"))).head(); ()
-      }
-      val (_, asgNative) = timed(drain(
-        Similarity.nativeAssignBlocked(v, localCents, Seq("vec_id"))))
-      val (_, asgFast) = timed(drain(PQ.fastCoarseAssign(v, localCents)))
-      val asgWindow =
-        if (c > 4096) -1.0
-        else timed(drain(PQ.coarseAssign(v, localCents)))._2
-      val (_, flatSec) = timed(PQ.buildPqIndex(s, root,
-        operators.Similarity.newIndexDir(), c, fastAssign = Some(false)))
-      val (_, fastSec) = timed(PQ.buildPqIndex(s, root,
-        operators.Similarity.newIndexDir(), c, fastAssign = Some(true)))
-      println(f"""{"battery":"pqdispatch","vectors":$n,"cells":$c,"flat_sec":$flatSec%.1f,"fast_sec":$fastSec%.1f,"asg_native_sec":$asgNative%.1f,"asg_fast_sec":$asgFast%.1f,"asg_window_sec":$asgWindow%.1f,"block_cells":${PQ.nativeAssignMaxCells}}""")
     }
   }
 
@@ -628,13 +559,11 @@ object Battery {
     * INDEPENDENT at 262k cells (every task Java-deserialized the
     * ~68 MB baked payload); round 17 routed the beyond-literal payload
     * through a broadcast variable, so this sweep now prices the
-    * broadcast-native exact argmax against two-tier fastAssign. Rows
+    * broadcast-native exact argmax every build assigns through. Rows
     * are the measurement subject's multiplier, not the corpus: per-row
-    * cost is O(cells x dim) for exact vs O(sqrt(cells) x dim) for
-    * two-tier, so the table prices where the recall-first exact
-    * default stops being advisable on wall grounds. */
+    * cost is O(cells x dim). */
   private def argmaxSweep(s: SparkSession, nRows: Long, cellSweep: Seq[Int]): Unit = {
-    import operators.{PQ, Similarity}
+    import operators.Similarity
     import graft.functions.VectorExprs.l2normNative
     val dim = 64
     val root = java.nio.file.Files.createTempDirectory("graft_battery_amx").toString
@@ -664,10 +593,10 @@ object Battery {
       df.agg(sum(col("cent_id"))).head(); ()
     }
     cellSweep.foreach { c =>
-      val cents = PQ.coarseCents(v, c)
+      val cents = Similarity.ivfCents(v, c)
       val localCents = s.createDataFrame(
         java.util.Arrays.asList(cents.collect(): _*), cents.schema)
-      val nBlocks = (c + PQ.nativeAssignMaxCells - 1) / PQ.nativeAssignMaxCells
+      val nBlocks = (c + Similarity.nativeAssignMaxCells - 1) / Similarity.nativeAssignMaxCells
       // Two reps of the same drain: rep1 carries the one-time costs
       // (codegen, broadcast creation + first-task fetch), rep2 is the
       // steady state — under the retired literal route the gap was the
@@ -678,15 +607,14 @@ object Battery {
         Similarity.nativeAssignBlocked(subject, localCents, Seq("vec_id"))))
       val (_, blockedSec2) = timed(drain(
         Similarity.nativeAssignBlocked(subject, localCents, Seq("vec_id"))))
-      val (_, fastSec) = timed(drain(PQ.fastCoarseAssign(subject, localCents)))
-      println(f"""{"battery":"argmaxsweep","rows":$nRows,"cells":$c,"blocks":$nBlocks,"blocked_sec":$blockedSec%.1f,"blocked_rep2_sec":$blockedSec2%.1f,"two_tier_sec":$fastSec%.1f}""")
+      println(f"""{"battery":"argmaxsweep","rows":$nRows,"cells":$c,"blocks":$nBlocks,"blocked_sec":$blockedSec%.1f,"blocked_rep2_sec":$blockedSec2%.1f}""")
     }
   }
 
   // ---- pqserve ----------------------------------------------------------
 
-  /** Shared clustered-corpus generator for the PQ arms (the pq /
-    * pqdispatch fixture shape: n/8 clusters of 8 near-identical
+  /** Shared clustered-corpus generator for the PQ arms (the pq
+    * battery's fixture shape: n/8 clusters of 8 near-identical
     * members — see [[pq]] for why uniform noise would measure the
     * corpus, not the operator). */
   private def pqClusteredCorpus(s: SparkSession, n: Long, tag: String): String = {
@@ -729,20 +657,16 @@ object Battery {
     a.count { case (q, v) => bm.getOrElse(q, Set.empty)(v) }
   }
 
-  /** The 4M-scale serve point (round-13 verdict task 7): ONE two-tier
-    * byte-code build at sqrt(n) cells, then the nProbe serving curve —
-    * recall@5 vs the exact full scan (route misses count), rank-stage
-    * bytes filesystem-derived per tier. The flat-assignment baseline
-    * arm is deliberately absent: at 4M x 2000 cells the flat argmax is
-    * the measured N^1.5 wall the dispatch exists to avoid. */
+  /** The 4M-scale serve point (round-13 verdict task 7): ONE byte-code
+    * build at sqrt(n) cells, then the nProbe serving curve — recall@5
+    * vs the exact full scan (route misses count), rank-stage bytes
+    * filesystem-derived per tier. */
   private def pqServe(s: SparkSession, n: Long): Unit = {
     import operators.PQ
     val root = pqClusteredCorpus(s, n, "pqs")
     val nCells = math.max(16, math.sqrt(n.toDouble).toInt)
     val path = operators.Similarity.newIndexDir()
-    // Default dispatch (round 14): native EXACT assignment at <= 1024
-    // cells, two-tier beyond — so this arm measures what a production
-    // build actually runs at this scale.
+    // The default build: what a production build runs at this scale.
     val (_, bSec) = timed(PQ.buildPqIndex(s, root, path, nCells,
       params = PQ.PqParams(8, 8, 256)))
     def dirBytes(f: java.io.File): Long =
@@ -787,7 +711,7 @@ object Battery {
     for (it <- Seq(1, 2, 3)) {
       val path = operators.Similarity.newIndexDir()
       val (_, bSec) = timed(PQ.buildPqIndex(s, root, path, nCells,
-        fastAssign = Some(true), params = PQ.PqParams(8, 8, 256), iters = it))
+        params = PQ.PqParams(8, 8, 256), iters = it))
       val (top, sec) = timed(
         PQ.probePqIndexWith(s, probeFrame, path, nCells, 5).select("qid", "vec_id")
           .collect().map(r => (r.getLong(0), r.getLong(1))))
@@ -810,8 +734,7 @@ object Battery {
     val root = pqClusteredCorpus(s, n, "pql")
     val nCells = math.max(16, math.sqrt(n.toDouble).toInt)
     val path = operators.Similarity.newIndexDir()
-    PQ.buildPqIndex(s, root, path, nCells,
-      fastAssign = Some(true), params = PQ.PqParams(8, 8, 256))
+    PQ.buildPqIndex(s, root, path, nCells, params = PQ.PqParams(8, 8, 256))
     val probeFrame = Tables.embeddings(s, root).filter(col("vec_id") < 10)
       .select("vec_id", "embedding")
     val (_, metaSec) = timed(PQ.indexMeta(s, path))
@@ -925,7 +848,7 @@ object Battery {
       val probesN = Tables.embeddings(s, root).filter(col("vec_id") < 10)
         .select(col("vec_id"), col("embedding"),
           graft.functions.VectorExprs.l2normNative(col("embedding")).as("nrm"))
-      val cells = operators.Similarity.ivfRouteFlat(probesN, cents, 4)
+      val cells = operators.Similarity.ivfRoute(probesN, cents, 4)
         .select("cent_id").distinct().collect().map(_.getLong(0))
       val rankBytes = cells.map(c =>
         dirBytes(new java.io.File(s"$r0/codes/cent_id=$c"))).sum
@@ -1023,7 +946,7 @@ object Battery {
       val cents = Parquet.read(s, s"$r0/centroids")
       val probesN = probes.withColumn("nrm",
         graft.functions.VectorExprs.l2normNative(col("embedding")))
-      val cells = operators.Similarity.ivfRouteFlat(probesN, cents, 4)
+      val cells = operators.Similarity.ivfRoute(probesN, cents, 4)
         .select("cent_id").distinct().collect().map(_.getLong(0))
       val rankBytes = cells.map(c => lb(s"$r0/codes/cent_id=$c")).sum
       val (top, pSec) = timed(
@@ -1355,7 +1278,7 @@ object Battery {
         ("learned", Some(learned), learnSec)).foreach { case (arm, r, lSec) =>
       val path = operators.Similarity.newIndexDir()
       val (_, bSec) = timed(PQ.buildPqIndex(s, root, path, 16,
-        fastAssign = Some(false), params = p, learnedR = r))
+        params = p, learnedR = r))
       val (viaCall, pSec) = timed(PQ.probePqIndexWith(s, probeFrame, path, 4, 5)
         .collect().map(_.toString).toSeq)
       val handle = PQ.open(s, path)

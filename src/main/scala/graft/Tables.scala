@@ -18,6 +18,14 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     Parquet.read(spark, s"$dir/$name.parquet")
 
+  /** One nanos sibling per caller session, created lazily and reused —
+    * events() is on the hot path of ~15 registered queries, and a fresh
+    * SessionState per call is needless churn. Weak keys: a discarded
+    * caller session must not pin its sibling. */
+  private val nanosSessions =
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession, SparkSession]())
+
   /** `events.ts` has shipped in two parquet encodings over time:
     * TIMESTAMP(NANOS) (which Spark's vectorized reader rejects —
     * [PARQUET_TYPE_ILLEGAL] — unless read as raw longs via the legacy
@@ -51,14 +59,6 @@ object Tables {
     * contract are pinned by fixture tests in RelationalSpec ("events
     * loader survives both parquet timestamp encodings").
     */
-  /** One nanos sibling per caller session, created lazily and reused —
-    * events() is on the hot path of ~15 registered queries, and a fresh
-    * SessionState per call is needless churn. Weak keys: a discarded
-    * caller session must not pin its sibling. */
-  private val nanosSessions =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, SparkSession]())
-
   def events(spark: SparkSession, dir: String): DataFrame = {
     val nanosSession = nanosSessions.synchronized {
       val cached = nanosSessions.get(spark)

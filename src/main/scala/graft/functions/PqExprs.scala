@@ -160,9 +160,9 @@ case class PqEncode(child: Expression, cb: Array[Long], m: Int, k: Int, subDim: 
   * Why ([[PqEncode]]'s rationale, applied to the other build wall): the
   * declarative argmax — crossJoin the broadcast centroids, score, rn=1
   * window — materializes N x cells rows and shuffles their top-1
-  * partials; the two-tier `fastCoarseAssign` cut that to
-  * N x 2 sqrt(cells) at the price of a DECLARED approximation (the
-  * coarse-MISS recall dip). This expression is both EXACT and cheaper:
+  * partials. This expression is EXACT and cheaper; every IVF, IvfSq8
+  * and PQ build assigns through it or its broadcast twin
+  * ([[IvfArgmaxBcast]]) in `Similarity.assign`:
   * the centroids bake into the generated class, each row pays one
   * tight loop over all cells with zero extra rows and zero shuffle —
   * a broadcast join in spirit, without ever manifesting the joined

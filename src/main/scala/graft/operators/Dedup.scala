@@ -53,36 +53,6 @@ object Dedup {
   private val sqlTokenized =
     s"SELECT doc_id, ${sqlTokenSet("text")} AS toks, len(${sqlTokenSet("text")}) AS sz FROM documents"
 
-  /** All pairs with token-set Jaccard >= p/q as `(doc_a, doc_b, n_inter,
-    * n_union)`, via dictionary encoding + lossless prefix filter + the
-    * first-common-token dedup. Documents with EMPTY token sets never
-    * pair: J = 0/0 is undefined and the explode/encode stage drops them
-    * — oracles must carry the matching `sz > 0` predicate. One wide stage: the prefix equi-join and
-    * both broadcast payload joins and every filter codegen together; the
-    * only shuffles are the tiny encode groupBy and the caller's sort.
-    *
-    * Token sets are dictionary-encoded: vocab ids are dense ranks by
-    * (document frequency asc, token) — a bijection, so intersections and
-    * unions of the id arrays have exactly the cardinalities of the token
-    * sets (no hashing, no collision caveat), and the prefix filter stays
-    * lossless (it holds under any consistent total order) while prefixes
-    * hold the RAREST tokens — the fewest candidate collisions. Rank
-    * assignment is distributed (range partition + per-partition
-    * row_number + offsets); no global window anywhere.
-    *
-    * Two physical verify paths, chosen by measured vocab size at plan
-    * build (one tiny driver job — the same trick AQE plays with runtime
-    * stats):
-    *  - vocab <= 64: each token set is ONE bitmap long; `|A∩B|` is
-    *    `bit_count(a & b)` and the first-common-prefix-token test is a
-    *    lowest-set-bit compare — every per-candidate op is a single
-    *    codegen'd machine instruction (measured 4x over the merge walks
-    *    on the 89M-row candidate stream at sf0.1).
-    *  - otherwise: sorted int-id arrays with the
-    *    [[graft.functions.SortedIntersectCount]] /
-    *    [[graft.functions.SortedFirstCommon]] merge walks (still int
-    *    compares, never string compares).
-    */
   /** Session-scoped memo of the checkpointed pair frames. qn03 and qn18
     * need the identical (token-set, 3/5) pair set, and qn06/qn17 the
     * identical simhash pair set: within one session these deterministic
@@ -246,15 +216,6 @@ object Dedup {
       .drop("jb", "bx")
   }
 
-  /** Join-side strategy chosen by MEASURED size at plan build, not hope.
-    * Every candidate side here derives from a `localCheckpoint`, whose
-    * LogicalRDD stats default to "huge" — Catalyst left alone would plan a
-    * sort-merge join whose many-to-many group buffering dominates the
-    * candidate emission. Under the cap the side broadcasts (map-side
-    * join, zero shuffle); over it — the 100 TB corpus case — it hashes on
-    * the join key instead of OOMing the driver. The probe is a count on
-    * an already-materialized frame: the same runtime-stats trick AQE
-    * plays, paid once per plan build. */
   /** Record of recent sized()/sizedWide() decisions, keyed by the session
     * that made them: (session, probed rows, "broadcast" | "shuffle_hash").
     * A diagnostics probe — the pair frames are memoized checkpoints, so
@@ -288,6 +249,15 @@ object Dedup {
     c
   }
 
+  /** Join-side strategy chosen by MEASURED size at plan build, not hope.
+    * Every candidate side here derives from a `localCheckpoint`, whose
+    * LogicalRDD stats default to "huge" — Catalyst left alone would plan a
+    * sort-merge join whose many-to-many group buffering dominates the
+    * candidate emission. Under the cap the side broadcasts (map-side
+    * join, zero shuffle); over it — the 100 TB corpus case — it hashes on
+    * the join key instead of OOMing the driver. The probe is a count on
+    * an already-materialized frame: the same runtime-stats trick AQE
+    * plays, paid once per plan build. */
   private[operators] def sized(s: SparkSession, df: DataFrame, probedRows: Long): DataFrame =
     if (choose(s, probedRows, probedRows <= broadcastCap(s)) == "broadcast") broadcast(df)
     else df.hint("SHUFFLE_HASH")
@@ -342,6 +312,36 @@ object Dedup {
     vocab.sortBy { case (tok, df) =>
       (df, org.apache.spark.unsafe.types.UTF8String.fromString(tok)) }
 
+  /** All pairs with token-set Jaccard >= p/q as `(doc_a, doc_b, n_inter,
+    * n_union)`, via dictionary encoding + lossless prefix filter + the
+    * first-common-token dedup. Documents with EMPTY token sets never
+    * pair: J = 0/0 is undefined and the explode/encode stage drops them
+    * — oracles must carry the matching `sz > 0` predicate. One wide stage: the prefix equi-join and
+    * both broadcast payload joins and every filter codegen together; the
+    * only shuffles are the tiny encode groupBy and the caller's sort.
+    *
+    * Token sets are dictionary-encoded: vocab ids are dense ranks by
+    * (document frequency asc, token) — a bijection, so intersections and
+    * unions of the id arrays have exactly the cardinalities of the token
+    * sets (no hashing, no collision caveat), and the prefix filter stays
+    * lossless (it holds under any consistent total order) while prefixes
+    * hold the RAREST tokens — the fewest candidate collisions. Rank
+    * assignment is distributed (range partition + per-partition
+    * row_number + offsets); no global window anywhere.
+    *
+    * Two physical verify paths, chosen by measured vocab size at plan
+    * build (one tiny driver job — the same trick AQE plays with runtime
+    * stats):
+    *  - vocab <= 64: each token set is ONE bitmap long; `|A∩B|` is
+    *    `bit_count(a & b)` and the first-common-prefix-token test is a
+    *    lowest-set-bit compare — every per-candidate op is a single
+    *    codegen'd machine instruction (measured 4x over the merge walks
+    *    on the 89M-row candidate stream at sf0.1).
+    *  - otherwise: sorted int-id arrays with the
+    *    [[graft.functions.SortedIntersectCount]] /
+    *    [[graft.functions.SortedFirstCommon]] merge walks (still int
+    *    compares, never string compares).
+    */
   private def jaccardPairs(t: DataFrame, p: Int, q: Int,
       tag: String = "tokenset"): DataFrame = {
     // Materialization barrier. The token-set expression is referenced by
@@ -1188,14 +1188,12 @@ object Dedup {
     * `(doc_id, comp)` — iterative min-label propagation, the GraphX-style
     * DataFrame loop: propagate the minimum reachable doc_id along edges
     * until fixpoint, checkpointing each round so lineage stays flat.
-    * Iterations = component diameter. Shared by qn17 and the canonical-
-    * selection composition (qp02). */
-  /** Near-dup component labels (min-label propagation to fixpoint),
-    * memoized per (session, dir) under tag "components": qn17, qp02 and
-    * qp04 all consume the identical labels, and the propagation loop is
-    * the expensive part — within a session it's a materialized view.
-    * Bench clears this tag before each qn17 rep so the measurement
-    * stays a cold propagation over warm pair inputs. */
+    * Iterations = component diameter. Memoized per (session, dir) under
+    * tag "components": qn17, qp02 and qp04 all consume the identical
+    * labels, and the propagation loop is the expensive part — within a
+    * session it's a materialized view. Bench clears this tag before
+    * each qn17 rep so the measurement stays a cold propagation over
+    * warm pair inputs. */
   private[graft] def componentLabels(s: SparkSession, dir: String): DataFrame =
     memoized("components", s, dir, 0, 0)(componentLabelsBuild(s, dir))
 

@@ -351,15 +351,15 @@ object PQ extends IndexRung {
       codesWith(ve(s, dir), codebook(s, dir)).localCheckpoint(true)
     }
 
-  /** [[codebook]] for an arbitrary sizing — the fixture sizing shares
-    * [[codebook]]'s cache; other sizings memoize under a
-    * params-qualified tag (a byte-code build and the fixture build
-    * must never share a cached frame). */
   /** Memo-tag suffix for a non-default training depth — an iters=3
     * codebook and the single-step default must never share a cached
     * frame (the nCells/params key reasoning). */
   private def itag(iters: Int): String = if (iters == 1) "" else s":it$iters"
 
+  /** [[codebook]] for an arbitrary sizing — the fixture sizing shares
+    * [[codebook]]'s cache; other sizings memoize under a
+    * params-qualified tag (a byte-code build and the fixture build
+    * must never share a cached frame). */
   private def codebookP(s: SparkSession, dir: String, p: PqParams,
       iters: Int = 1): DataFrame =
     if (p == fixturePq && iters == 1) codebook(s, dir)
@@ -697,16 +697,10 @@ object PQ extends IndexRung {
         |  t(variant, recall_ok) ORDER BY variant""".stripMargin) { (s, dir) =>
       val v = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("embedding"), l2normNative(col("embedding")).as("nrm"))
-      val cents = coarseCents(v)
-      val asg = coarseAssign(v, cents)
-      val cScore = e6(cosine(dotNative(col("ce"), col("embedding")), col("cn"), col("nrm")))
+      val cents = Similarity.ivfCents(v, 16)
+      val asg = Similarity.ivfAssigned(v, cents, Seq("vec_id"))
       val probesV = v.filter(col("vec_id") < 10)
-      val wRoute = Window.partitionBy(col("probe_id")).orderBy(col("cscore").desc, col("cent_id").asc)
-      val pc = probesV.select(col("vec_id").as("probe_id"), col("embedding"), col("nrm"))
-        .join(broadcast(cents), expr("true"))
-        .select(col("probe_id"), col("cent_id"), cScore.as("cscore"))
-        .withColumn("rn", row_number().over(wRoute)).filter(col("rn") <= 4)
-        .select(col("probe_id"), col("cent_id"))
+      val pc = Similarity.ivfRoute(probesV, cents, 4).select("probe_id", "cent_id")
       // The exact-in-cell top-5: full-precision cosine over exactly the
       // candidates the route admits — what a perfect compressed tier
       // would return.
@@ -1103,16 +1097,10 @@ object PQ extends IndexRung {
     val v = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"), l2normNative(col("embedding")).as("nrm"))
     // IVF coarse tier: the Similarity stride rule, cosine argmax.
-    val cents = coarseCents(v)
-    val asg = coarseAssign(v, cents)
-    val cScore = e6(cosine(dotNative(col("ce"), col("embedding")), col("cn"), col("nrm")))
+    val cents = Similarity.ivfCents(v, 16)
+    val asg = Similarity.ivfAssigned(v, cents, Seq("vec_id"))
     val probesV = v.filter(col("vec_id") < 10)
-    val wRoute = Window.partitionBy(col("probe_id")).orderBy(col("cscore").desc, col("cent_id").asc)
-    val pc = probesV.select(col("vec_id").as("probe_id"), col("embedding"), col("nrm"))
-      .join(broadcast(cents), expr("true"))
-      .select(col("probe_id"), col("cent_id"), cScore.as("cscore"))
-      .withColumn("rn", row_number().over(wRoute)).filter(col("rn") <= 4)
-      .select(col("probe_id"), col("cent_id"))
+    val pc = Similarity.ivfRoute(probesV, cents, 4).select("probe_id", "cent_id")
     val cand = asg.join(broadcast(pc), Seq("cent_id"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id").as("qid"), col("vec_id"))
@@ -1193,8 +1181,8 @@ object PQ extends IndexRung {
   private def qn36Plan(s: SparkSession, dir: String): DataFrame = {
       val v = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("embedding"), l2normNative(col("embedding")).as("nrm"))
-      val cents = coarseCents(v)
-      val asg = coarseAssign(v, cents)
+      val cents = Similarity.ivfCents(v, 16)
+      val asg = Similarity.ivfAssigned(v, cents, Seq("vec_id"))
       val cent6 = cents.select(col("cent_id"),
         transform(col("ce"), x => floor(x.cast("double") * 1000000).cast("long")).as("c6full"))
       val veF = ve(s, dir)
@@ -1206,14 +1194,8 @@ object PQ extends IndexRung {
         codesWith(rve, rcb).localCheckpoint(true)
       }
       // Flat routing of the declared probes (the qn33 shape).
-      val cScore = e6(cosine(dotNative(col("ce"), col("embedding")), col("cn"), col("nrm")))
       val probesV = v.filter(col("vec_id") < 10)
-      val wRoute = Window.partitionBy(col("probe_id")).orderBy(col("cscore").desc, col("cent_id").asc)
-      val pc = probesV.select(col("vec_id").as("probe_id"), col("embedding"), col("nrm"))
-        .join(broadcast(cents), expr("true"))
-        .select(col("probe_id"), col("cent_id"), cScore.as("cscore"))
-        .withColumn("rn", row_number().over(wRoute)).filter(col("rn") <= 4)
-        .select(col("probe_id"), col("cent_id"))
+      val pc = Similarity.ivfRoute(probesV, cents, 4).select("probe_id", "cent_id")
       // One residual table per (probe, probed cell).
       val pr = pc.join(veF.withColumnRenamed("vec_id", "probe_id"), Seq("probe_id"))
         .join(broadcast(cent6), Seq("cent_id"))
@@ -1266,45 +1248,24 @@ object PQ extends IndexRung {
     * sqrt(N) cells the un-repartitioned write is a small-file
     * explosion.
     *
-    * The assignment defaults to the NATIVE flat argmax (round 14,
-    * [[assignCells]]): exact, zero-shuffle, bit-parity with
-    * qn33 up to the measured [[nativeAssignMaxCells]] bound.
-    * `fastAssign = Some(true)` pins the two-tier coarse route instead
-    * (the beyond-the-bound default branch;
-    * ~N x 2 sqrt(nCells) score rows) — APPROXIMATE by
-    * declaration: a vector whose true nearest fine cell sits outside
-    * its 2 probed coarse cells lands in a near-optimal cell instead
-    * (the qn10e coarse-MISS semantics, applied to layout). Probes
-    * still find it whenever their nProbe cells cover where it LANDED,
-    * so the cost is a small recall dip, not correctness — priced in
-    * the pq battery. `Some(false)` pins the exact native branch. */
+    * The assignment is [[Similarity.assign]], the one IVF and IvfSq8
+    * use: the exact native argmax, a pure map over the scan at any
+    * cell count, bit-identical to qn33's window form. */
   def buildPqIndex(s: SparkSession, dir: String, path: String,
-      nCells: Int = 16, fastAssign: Option[Boolean] = None,
-      residual: Boolean = false, params: PqParams = fixturePq,
+      nCells: Int = 16, residual: Boolean = false, params: PqParams = fixturePq,
       iters: Int = 1, learnedR: Option[Array[Double]] = None): Unit = {
     require(learnedR.isEmpty || !residual,
       "buildPqIndex: learned rotation composes with whole-space codes only — " +
         "residual encoding subtracts RAW-space centroids, which a rotated " +
         "codebook cannot score")
     val v = IndexSwap.normed(Tables.embeddings(s, dir))
-    val cents = Similarity.centsOf(s, coarseCents(v, nCells))
-    // Assignment DISPATCH, round-14 form: the default is the NATIVE
-    // flat argmax ([[graft.functions.IvfArgmax]] — exact, bit-parity
-    // with qn33, zero shuffle; it retired the join+window explosion
-    // that made the two-tier approximation worth its recall dip at
-    // build scale). The two-tier route remains the branch for centroid
-    // tables too large to bake into the task binary
-    // ([[nativeAssignMaxBytes]]) — and `fastAssign = Some(true)` pins
-    // it for the battery and the coarse-MISS parity specs;
-    // `Some(false)` pins the exact branch.
-    val useFast = fastAssign.getOrElse(useTwoTier(cents))
-    val asg = assignCells(v, cents, useFast)
+    val cents = Similarity.centsOf(s, Similarity.ivfCents(v, nCells))
+    val asg = Similarity.assign(v, cents, Seq("vec_id"))
     // `residual = true` stores the qn36 encoding (codebooks trained on
     // v - coarse_centroid; the `meta` side makes the probe's scoring
     // dispatch self-describing). Memo keys carry nCells: the
     // residuals depend on the coarse layout, so a 16-cell build and a
     // sqrt(N)-cell build must never share a cached frame.
-    val fastKey = if (useFast) 1 else 0
     // Non-fixture sizings memoize under a params-qualified tag — a
     // 16x256 build and the fixture 4x16 build must never share a
     // cached frame (same reasoning as the nCells key).
@@ -1320,13 +1281,13 @@ object PQ extends IndexRung {
     val cb =
       if (lr6.isDefined)
         cbPivot(trainCodebookLong(lr6.get, params, iters)).localCheckpoint(true)
-      else if (residual) Dedup.memoized(s"pqrcb$ptag", s, dir, nCells.toLong, fastKey) {
+      else if (residual) Dedup.memoized(s"pqrcb$ptag", s, dir, nCells.toLong, 0) {
         cbPivot(trainCodebookLong(rve, params, iters)).localCheckpoint(true)
       }
       else codebookP(s, dir, params, iters)
     val codes =
       if (lr6.isDefined) codesWith(lr6.get, cb)
-      else if (residual) Dedup.memoized(s"pqrcodes$ptag", s, dir, nCells.toLong, fastKey) {
+      else if (residual) Dedup.memoized(s"pqrcodes$ptag", s, dir, nCells.toLong, 0) {
         codesWith(rve, cb).localCheckpoint(true)
       }
       else codesArrP(s, dir, params, iters)
@@ -1351,8 +1312,8 @@ object PQ extends IndexRung {
   private[graft] def buildPqIndexFrom(s: SparkSession, vecs: DataFrame,
       path: String, nCells: Int, params: PqParams, iters: Int = 1): Unit = {
     val v = IndexSwap.normed(vecs).localCheckpoint(true)
-    val cents = Similarity.centsOf(s, coarseCents(v, nCells))
-    val asg = assignCells(v, cents, useTwoTier(cents))
+    val cents = Similarity.centsOf(s, Similarity.ivfCents(v, nCells))
+    val asg = Similarity.assign(v, cents, Seq("vec_id"))
     val ve6 = SQ8.ve6Of(v)
     val cb = cbPivot(trainCodebookLong(ve6, params, iters)).localCheckpoint(true)
     stage(s, path, cellSides(v, asg, codesWith(ve6, cb)) ++
@@ -1415,69 +1376,10 @@ object PQ extends IndexRung {
       st: => State): Seq[(String, DataFrame)] = {
     val pq = st
     val v = IndexSwap.normed(rows)
-    val asg = assignCells(v, pq.cents, useTwoTier(pq.cents))
+    val asg = Similarity.assign(v, pq.cents, Seq("vec_id"))
     cellSides(v, asg,
       codesWith(codeSpace(v, asg, pq.cents.local, pq.residual, pq.rotation), pq.localCb))
   }
-
-  /** Literal-route bound of the native exact assignment
-    * ([[Similarity.nativeAssignBlocked]]): centroid tables up to this
-    * many cells bake into the plan as ONE
-    * [[graft.functions.IvfArgmax]] literal; larger tables route the
-    * payload through a broadcast variable
-    * ([[graft.functions.IvfArgmaxBcast]]) — same loop, same tie rules,
-    * payload out of the task binary (round 17; rounds 15-16's
-    * per-block literal slicing + cross-block fold are retired — the
-    * per-TASK Java deserialization of the baked payload was itself the
-    * wall, measured ~255 s row-count-independent at 262k cells).
-    * 4096 is the `pqdispatch` bracket point (native wins or ties
-    * through it at both measured corpus sizes). */
-  private[graft] val nativeAssignMaxCells = 4096
-
-  /** Literal-route payload cap: a plan-baked centroid literal stays
-    * modest even at unusual dims (the round-14 ADVICE guard —
-    * [[Similarity.nativeAssignBlocked]] switches to the broadcast
-    * route past it structurally). */
-  private[graft] val nativeAssignMaxBytes: Long = 64L << 20
-
-  /** TOTAL payload guard for the native branch: the centroid table is
-    * collected to the driver and (past the literal bound) shipped as a
-    * broadcast variable, so it must stay executor-memory-class end to
-    * end. 2 GB covers √N sizing for any corpus this engine will meet
-    * — 17B vectors at 1536 dims (the 100 TB shape) is ~130k cells ≈
-    * 800 MB (round 17 raised this from the 256 MB plan-bake era: a
-    * broadcast payload never rides the task binary). The two-tier
-    * approximation survives only as the declared-semantics branch for
-    * `fastAssign = Some(true)` pins and beyond-guard tables. */
-  private[graft] val nativeAssignTotalMaxBytes: Long = 2L << 30
-
-  /** True when the whole centroid table stays a collectable,
-    * broadcastable payload ([[nativeAssignTotalMaxBytes]]) — the
-    * shared dispatch predicate of every build-side assignment. */
-  private[graft] def nativeAssignTotalOk(nCells: Long, dim: Int): Boolean =
-    nCells * dim * 4L <= nativeAssignTotalMaxBytes
-
-  /** The two-tier dispatch predicate: only beyond the TOTAL payload
-    * guard (round 15 — the blocked argmax retired the cell-count
-    * bound). */
-  private def useTwoTier(cents: Similarity.Cents): Boolean =
-    !nativeAssignTotalOk(cents.arrays.cids.length, cents.arrays.dim)
-
-  /** The coarse assignment (vec_id, cent_id) of every build, append and
-    * rebalance: `fast` takes the two-tier route ([[fastCoarseAssign]]),
-    * otherwise the EXACT BLOCKED native argmax
-    * ([[Similarity.nativeAssignBlocked]]): the centroid table flattens
-    * into ≤[[nativeAssignMaxCells]]-cell per-block expressions
-    * (ascending cent_id — the tie rule), each corpus row pays one
-    * codegen'd loop per block plus a reference-only fold, and the
-    * assignment is a pure map over the scan — no N x cells rows, no
-    * window shuffle, at ANY cell count. Bit-identical to
-    * [[coarseAssign]] (same fold, same e6 floor, same tie-break;
-    * pinned by qn39/qn40 parity, PqRebalanceSpec's driver replay, and
-    * BlockedArgmaxSpec's forced-multi-block parity). */
-  private def assignCells(v: DataFrame, cents: Similarity.Cents, fast: Boolean): DataFrame =
-    if (fast) fastCoarseAssign(v, cents.local)
-    else Similarity.nativeAssignWith(v, cents.arrays, Seq("vec_id"), nativeAssignMaxCells)
 
   /** RESIDUAL e6 view of an e6 corpus frame: emb6 - assigned coarse
     * centroid (e6-floored), per [[buildPqIndex]]'s `residual` encoding.
@@ -1553,8 +1455,8 @@ object PQ extends IndexRung {
     * The stored encoding is PRESERVED: a residual index retrains its
     * codebooks on the residuals against the NEW coarse centroids (the
     * `meta` side is re-read, never flipped — a flip is a
-    * [[buildPqIndex]] decision). The assignment uses the same
-    * [[nativeAssignMaxBytes]] payload dispatch as the build.
+    * [[buildPqIndex]] decision). The assignment is the build's
+    * ([[Similarity.assign]]).
     *
     * Crash safety is the [[IndexSwap]] versioned commit over all five
     * sides: one staged write set, one atomic version-dir rename — a
@@ -1569,7 +1471,7 @@ object PQ extends IndexRung {
     val (residual, p) = indexMetaAt(s, root)
     val rotation = rotationAt(s, root)
     val (v, cents) = Similarity.reseed(s, root)
-    val asg = assignCells(v, cents, useTwoTier(cents))
+    val asg = Similarity.assign(v, cents, Seq("vec_id"))
     // The stored rotation and encoding are PRESERVED across rebuilds
     // (model state — re-learning or flipping is a buildPqIndex
     // decision): the grown lake re-encodes through them.
@@ -1741,82 +1643,5 @@ object PQ extends IndexRung {
       Similarity.cellScopedReadAt(s, root, "vectors", cells)
         .filter(col("cent_id").isin(cells: _*) && push)
     }
-  }
-
-  /** The coarse IVF tier shared by qn33 and the persisted build: the
-    * Similarity stride rule. */
-  private[graft] def coarseCents(v: DataFrame, nCells: Int = 16): DataFrame = {
-    val strideF = v.agg(count(lit(1)).as("n_vec"))
-      .select(greatest(lit(1L), expr(s"n_vec div $nCells")).as("stride"))
-    v.crossJoin(strideF)
-      .filter(col("vec_id") % col("stride") === 0 && col("vec_id") < col("stride") * nCells)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("ce"), col("nrm").as("cn"))
-  }
-
-  /** Two-tier coarse assignment for [[buildPqIndex]]'s `fastAssign`:
-    * the qn10e routing shape recast for an N-SIZED input frame. Every
-    * window input here is SKINNY — the embedding drops before any
-    * shuffle and re-joins by vec_id exactly once, and the fine tier
-    * scores through a per-coarse-cell ARRAY under a fold instead of an
-    * N x fine-cells row explosion. (The probe-batch router
-    * [[Similarity.ivfRouteCoarse]] carries the probe vector through
-    * its windows and joins — right for 10-row probe frames, and an
-    * OOM at a 500k-vector assignment, measured: its fine join held
-    * 26M rows each with a full embedding.) Semantics match the flat
-    * argmax whenever the true cell's coarse parent is among the
-    * vector's [[Similarity.coarseProbeCells]] probed coarse cells —
-    * the declared coarse-MISS rule. */
-  private[graft] def fastCoarseAssign(v: DataFrame, cents: DataFrame): DataFrame = {
-    val cidx = cents.withColumn("cent_idx",
-      row_number().over(Window.orderBy(col("cent_id"))) - 1)
-    val cst = cidx.agg(count(lit(1)).as("ck"))
-      .select(greatest(lit(4L), ceil(sqrt(col("ck"))).cast("long")).as("k2"), col("ck"))
-      .select(col("k2"), greatest(lit(1L), expr("ck div k2")).as("cstride"))
-    val cc = cidx.crossJoin(cst)
-      .filter(col("cent_idx") % col("cstride") === 0 &&
-        col("cent_idx") < col("cstride") * col("k2"))
-      .select(expr("cent_idx div cstride").as("coarse_id"),
-        col("ce").as("gce"), col("cn").as("gcn"))
-    val wFine = Window.partitionBy(col("cent_id"))
-      .orderBy(col("gscore").desc, col("coarse_id").asc)
-    val casg = cidx.join(broadcast(cc), expr("true"))
-      .select(col("cent_id"), col("ce"), col("cn"), col("coarse_id"),
-        e6(cosine(dotNative(col("gce"), col("ce")), col("gcn"), col("cn"))).as("gscore"))
-      .withColumn("rn", row_number().over(wFine)).filter(col("rn") === 1)
-      .select(col("coarse_id"), col("cent_id"), col("ce"), col("cn"))
-    val fineByCoarse = casg.groupBy("coarse_id")
-      .agg(collect_list(struct(col("cent_id"), col("ce"), col("cn"))).as("fines"))
-    val wCoarse = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cscore").desc, col("coarse_id").asc)
-    val picks = v.join(broadcast(cc), expr("true"))
-      .select(col("vec_id"), col("coarse_id"),
-        e6(cosine(dotNative(col("gce"), col("embedding")), col("gcn"), col("nrm"))).as("cscore"))
-      .withColumn("rn", row_number().over(wCoarse))
-      .filter(col("rn") <= Similarity.coarseProbeCells)
-      .select(col("vec_id"), col("coarse_id"))
-    val scored = picks.join(v, Seq("vec_id"))
-      .join(broadcast(fineByCoarse), Seq("coarse_id"))
-    val best = aggregate(col("fines"),
-      struct(lit(Long.MinValue).as("sc"), lit(Long.MaxValue).as("cid")),
-      (acc, f) => {
-        val sc = e6(cosine(dotNative(f.getField("ce"), col("embedding")),
-          f.getField("cn"), col("nrm")))
-        when(sc > acc.getField("sc") ||
-            (sc === acc.getField("sc") && f.getField("cent_id") < acc.getField("cid")),
-          struct(sc.as("sc"), f.getField("cent_id").as("cid"))).otherwise(acc)
-      })
-    val wBest = Window.partitionBy(col("vec_id")).orderBy(col("sc").desc, col("cid").asc)
-    scored.select(col("vec_id"), best.getField("sc").as("sc"), best.getField("cid").as("cid"))
-      .withColumn("rn", row_number().over(wBest)).filter(col("rn") === 1)
-      .select(col("vec_id"), col("cid").as("cent_id"))
-  }
-
-  private[graft] def coarseAssign(v: DataFrame, cents: DataFrame): DataFrame = {
-    val cScore = e6(cosine(dotNative(col("ce"), col("embedding")), col("cn"), col("nrm")))
-    val wAsg = Window.partitionBy(col("vec_id")).orderBy(col("cscore").desc, col("cent_id").asc)
-    v.join(broadcast(cents), expr("true"))
-      .select(col("vec_id"), col("cent_id"), cScore.as("cscore"))
-      .withColumn("rn", row_number().over(wAsg)).filter(col("rn") === 1)
-      .select(col("vec_id"), col("cent_id"))
   }
 }

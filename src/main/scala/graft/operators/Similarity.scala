@@ -1591,7 +1591,7 @@ object Similarity extends IndexRung {
     * even-ids build with an odd stride yields HALF the declared
     * centroids — caught in round-10 review), so a filtered build passes
     * the re-densified key (qn10c: `vec_id div 2`). */
-  private[operators] def ivfCents(v: DataFrame, nCentroids: Int,
+  private[graft] def ivfCents(v: DataFrame, nCentroids: Int,
       sampleKey: Column = col("vec_id")): DataFrame = {
     val st = v.agg(count(lit(1)).as("n_vec"))
       .select(greatest(lit(1L), expr(s"n_vec div $nCentroids")).as("stride"))
@@ -1607,25 +1607,26 @@ object Similarity extends IndexRung {
     ivfScoreTail(ivfAssigned(v, cents), ivfProbeCells(v, cents, nProbe), k)
   }
 
+  /** The rows of `v` a cell assignment keeps beside `cent_id` unless
+    * told otherwise: the cold-side row shape of IVF and IvfSq8. */
+  private val vecCols = Seq("vec_id", "embedding", "nrm")
+
   /** Cell assignment: argmax cosine to a centroid (one broadcast join +
-    * per-row max; ties break to the lowest cent_id). */
-  private def ivfAssigned(v: DataFrame, cents: DataFrame): DataFrame = {
+    * per-row max; ties break to the lowest cent_id), keeping the `keep`
+    * columns of `v` beside `cent_id`. The declarative form the queries
+    * and the oracle share, and the parity reference of the native
+    * argmax ([[assign]]). */
+  private[graft] def ivfAssigned(v: DataFrame, cents: DataFrame,
+      keep: Seq[String] = vecCols): DataFrame = {
     val wAssign = Window.partitionBy(col("vec_id"))
       .orderBy(col("cscore").desc, col("cent_id").asc)
     v.join(broadcast(cents), expr("true"))
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id"),
-        e6(cosine(dotNative(col("ce"), col("embedding")), col("cn"), col("nrm"))).as("cscore"))
+      .select(keep.map(col) ++ Seq(col("cent_id"),
+        e6(cosine(dotNative(col("ce"), col("embedding")), col("cn"), col("nrm"))).as("cscore")): _*)
       .withColumn("rn", row_number().over(wAssign)).filter(col("rn") === 1)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id"))
+      .select(keep.map(col) :+ col("cent_id"): _*)
   }
 
-  /** The native exact argmax COLUMN for an (embedding, nrm) row
-    * against a centroid frame, collected to a plan-time literal
-    * ([[graft.functions.IvfArgmax]] — same fold, same e6 floor, same
-    * lowest-cent_id tie rule as [[ivfAssigned]]'s window; the
-    * IvfRebalanceSpec/PqRebalanceSpec driver replays pin the argmax
-    * independently). Centroid tables are sqrt(N) rows by construction
-    * — manifest-class collects. */
   /** The centroid table collected to flat driver arrays — the
     * plan-time payload the native argmax expressions bake in.
     * Centroid tables are sqrt(N) rows by construction — manifest-class
@@ -1748,8 +1749,8 @@ object Similarity extends IndexRung {
     * same expression semantics (scores, e6 floor, lowest-cent_id ties
     * — [[ivfAssigned]]'s rules exactly, pinned in BlockedArgmaxSpec):
     *
-    *  - Tables within [[PQ.nativeAssignMaxCells]] AND the
-    *    [[PQ.nativeAssignMaxBytes]] payload cap stay the round-14
+    *  - Tables within [[nativeAssignMaxCells]] AND the
+    *    [[nativeAssignMaxBytes]] payload cap stay the round-14
     *    plan-baked literal [[graft.functions.IvfArgmax]] — the payload
     *    rides the plan, nothing extra to distribute, the plan cache
     *    sees a pure literal expression.
@@ -1767,21 +1768,20 @@ object Similarity extends IndexRung {
     * Both routes are a pure map over the scan: zero joins, zero
     * shuffles, zero extra rows at ANY cell count — a 100 TB index
     * wants √N ≈ 10k-130k cells (17B vectors at 1536 dims → ~800 MB of
-    * centroids: plan-unbakeable, broadcast-routine), where the old
-    * alternatives were the N x cells join+window wall (plain IVF) or
-    * two-tier's permanent coarse-MISS recall dip (PQ builds).
+    * centroids: plan-unbakeable, broadcast-routine), where the
+    * join+window form is an N x cells wall.
     *
     * `keep` is the output column set alongside `cent_id`; `blockCells`
     * is spec-pinnable (BlockedArgmaxSpec forces the broadcast route on
     * fixture-sized tables by shrinking it). */
   private[graft] def nativeAssignBlocked(v: DataFrame, cents: DataFrame,
-      keep: Seq[String], blockCells: Int = PQ.nativeAssignMaxCells): DataFrame =
+      keep: Seq[String], blockCells: Int = nativeAssignMaxCells): DataFrame =
     nativeAssignWith(v, collectCents(cents), keep, blockCells)
 
   /** [[nativeAssignBlocked]] over centroid arrays already collected. */
   private[operators] def nativeAssignWith(v: DataFrame, ca: CentArrays, keep: Seq[String],
       blockCells: Int): DataFrame = {
-    val byteCap = math.max(1L, PQ.nativeAssignMaxBytes / (ca.dim * 4L))
+    val byteCap = math.max(1L, nativeAssignMaxBytes / (ca.dim * 4L))
     val bc = math.max(1, math.min(blockCells.toLong, byteCap).toInt)
     if (ca.cids.length <= bc)
       v.select(keep.map(col) :+ graft.functions.PqExprs.ivfArgmaxNative(
@@ -1832,19 +1832,45 @@ object Similarity extends IndexRung {
     })
   }
 
-  /** [[ivfAssigned]] for the IVF and IvfSq8 builds, rebalances and
-    * appends: the blocked native argmax ([[nativeAssignBlocked]] —
-    * EXACT at any cell count, zero-shuffle; round 15 retired the
-    * round-14 4096-cell bound past which plain IVF builds fell back to
-    * the N x cells join+window wall). The window form survives only
-    * behind the total-payload guard ([[PQ.nativeAssignTotalOk]] — the
-    * centroid table must stay a plan-bakeable broadcast-class payload)
-    * and as the parity reference the specs replay. */
-  private[operators] def assign(v: DataFrame, cents: Cents): DataFrame =
-    if (!PQ.nativeAssignTotalOk(cents.arrays.cids.length, cents.arrays.dim))
-      ivfAssigned(v, cents.local)
-    else nativeAssignWith(v, cents.arrays, Seq("vec_id", "embedding", "nrm"),
-      PQ.nativeAssignMaxCells)
+  /** Literal-route bound of the native exact assignment
+    * ([[nativeAssignBlocked]]): centroid tables up to this many cells
+    * bake into the plan as ONE [[graft.functions.IvfArgmax]] literal;
+    * larger tables route the payload through a broadcast variable
+    * ([[graft.functions.IvfArgmaxBcast]]) — same loop, same tie rules,
+    * payload out of the task binary (round 17: the per-TASK Java
+    * deserialization of a baked payload was itself the wall, measured
+    * ~255 s row-count-independent at 262k cells). 4096 is the bracket
+    * point where the literal route still won or tied at both measured
+    * corpus sizes. */
+  private[graft] val nativeAssignMaxCells = 4096
+
+  /** Literal-route payload cap: a plan-baked centroid literal stays
+    * modest even at unusual dims (the round-14 guard —
+    * [[nativeAssignBlocked]] switches to the broadcast route past it). */
+  private val nativeAssignMaxBytes: Long = 64L << 20
+
+  /** TOTAL payload guard of the native argmax: the centroid table is
+    * collected to the driver and (past the literal bound) shipped as a
+    * broadcast variable, so it must stay executor-memory-class end to
+    * end. 2 GB covers √N sizing for any corpus this engine will meet
+    * — 17B vectors at 1536 dims (the 100 TB shape) is ~130k cells ≈
+    * 800 MB. */
+  private val nativeAssignTotalMaxBytes: Long = 2L << 30
+
+  /** The one cell assignment of every IVF, IvfSq8 and PQ build,
+    * rebalance and append, keeping the `keep` columns of `v` beside
+    * `cent_id`: the native argmax ([[nativeAssignWith]] — EXACT at any
+    * cell count, a pure map over the scan, the plan-baked literal up
+    * to [[nativeAssignMaxCells]] and the broadcast payload past it).
+    * Only a centroid table past [[nativeAssignTotalMaxBytes]] takes the
+    * window form ([[ivfAssigned]] — same scores, same e6 floor, same
+    * lowest-cent_id tie rule, so the two branches agree row for row;
+    * pinned in BlockedArgmaxSpec). */
+  private[operators] def assign(v: DataFrame, cents: Cents,
+      keep: Seq[String] = vecCols): DataFrame =
+    if (cents.arrays.cids.length.toLong * cents.arrays.dim * 4L > nativeAssignTotalMaxBytes)
+      ivfAssigned(v, cents.local, keep)
+    else nativeAssignWith(v, cents.arrays, keep, nativeAssignMaxCells)
 
   /** The rebuild input of the cell-partitioned rungs (IVF, IvfSq8, PQ),
     * all read from ONE pinned root: the cold lake minus its tombstones,
@@ -1934,14 +1960,12 @@ object Similarity extends IndexRung {
   }
 
   /** Route an arbitrary (vec_id, embedding, nrm) probe frame to its
-    * nProbe nearest cells — FLAT (probe x all centroids): right for
-    * declared probe batches against a 16-cell fixture index; the
-    * corpus-sized path goes through [[ivfRouteCoarse]]. Exposed to the
-    * ivfjoin battery for the routing head-to-head. */
-  private[graft] def ivfRouteFlat(pv: DataFrame, cents: DataFrame, nProbe: Int): DataFrame =
-    ivfRoute(pv, cents, nProbe)
-
-  private def ivfRoute(pv: DataFrame, cents: DataFrame, nProbe: Int): DataFrame = {
+    * nProbe nearest cells as (probe_id, pe, pn, cent_id) — FLAT (probe
+    * x all centroids, ties to the lowest cent_id): right for declared
+    * probe batches, the qn33/qn36/qn41 route; the corpus-sized path
+    * goes through [[ivfRouteCoarse]] (the ivfjoin battery's routing
+    * head-to-head). */
+  private[graft] def ivfRoute(pv: DataFrame, cents: DataFrame, nProbe: Int): DataFrame = {
     val wProbe = Window.partitionBy(col("probe_id"))
       .orderBy(col("cscore").desc, col("cent_id").asc)
     pv.select(col("vec_id").as("probe_id"), col("embedding").as("pe"), col("nrm").as("pn"))

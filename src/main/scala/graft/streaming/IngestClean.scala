@@ -612,6 +612,12 @@ object IngestClean {
       .groupBy(col("sha")).agg(min(col("partner")).as("near_of"))
   }
 
+  /** The compaction target file size — shared by [[compactIngest]]'s
+    * default and the [[cleanBatch]] auto-compaction trigger's ideal-
+    * file-count derivation (the two must agree or the trigger's "ideal"
+    * drifts from what compaction actually produces). */
+  private[streaming] val defaultTargetBytes: Long = 128L * 1024 * 1024
+
   /** Periodic maintenance for an ingest lake + band index: small-file
     * compaction with the BLOOM writer options threaded through the
     * rewrite — compacting either table without them would silently drop
@@ -636,12 +642,6 @@ object IngestClean {
     * whenever targetBytes grows.
     * Crash-safety is compact's own two-phase swap; the signature-family
     * marker is not a data file and survives in place. */
-  /** The compaction target file size — shared by [[compactIngest]]'s
-    * default and the [[cleanBatch]] auto-compaction trigger's ideal-
-    * file-count derivation (the two must agree or the trigger's "ideal"
-    * drifts from what compaction actually produces). */
-  private[streaming] val defaultTargetBytes: Long = 128L * 1024 * 1024
-
   def compactIngest(spark: SparkSession, lakeDir: String, indexDir: String,
       targetBytes: Long = defaultTargetBytes,
       expectedKeysPerFile: Long = 1000000L): Unit = {

@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BlockedArgmaxSpec extends AnyFunSuite {
   import TestSpark._
-  import graft.operators.{PQ, Similarity}
+  import graft.operators.Similarity
 
   private val dim = 8
 
@@ -54,7 +54,7 @@ class BlockedArgmaxSpec extends AnyFunSuite {
   test("forced broadcast-route assignment == literal native == join+window argmax") {
     val v = corpus(400)
     val c = cents(23) // 23 cells, blockCells=5 -> 5 blocks, last one ragged
-    val windowed = asMap(PQ.coarseAssign(v, c))
+    val windowed = asMap(Similarity.ivfAssigned(v, c, Seq("vec_id")))
     val single = asMap(Similarity.nativeAssignBlocked(v, c, Seq("vec_id")))
     val blocked = asMap(Similarity.nativeAssignBlocked(v, c, Seq("vec_id"), blockCells = 5))
     assert(single == windowed, "literal native diverged from the window form")
@@ -79,7 +79,7 @@ class BlockedArgmaxSpec extends AnyFunSuite {
         graft.functions.VectorExprs.l2normNative(
           col("embedding").cast("array<float>")).as("nrm"))
     val blocked = asMap(Similarity.nativeAssignBlocked(v, c, Seq("vec_id"), blockCells = 3))
-    val windowed = asMap(PQ.coarseAssign(v, c))
+    val windowed = asMap(Similarity.ivfAssigned(v, c, Seq("vec_id")))
     assert(windowed(0L) == 2L, s"window form picked ${windowed(0L)} — fixture broken")
     assert(blocked(0L) == 2L, s"broadcast-route tie resolved to ${blocked(0L)}, not the lowest cent_id")
   }
@@ -90,7 +90,7 @@ class BlockedArgmaxSpec extends AnyFunSuite {
     // fixture-sized table would exercise by accident.
     val v = corpus(300)
     val c = cents(1000) // blockCells=4 -> broadcast route
-    val windowed = asMap(PQ.coarseAssign(v, c))
+    val windowed = asMap(Similarity.ivfAssigned(v, c, Seq("vec_id")))
     val blocked = asMap(Similarity.nativeAssignBlocked(v, c, Seq("vec_id"), blockCells = 4))
     assert(blocked == windowed, "broadcast route diverged from the window form")
     // Tie between distant cent_ids under the broadcast route: a
@@ -121,7 +121,7 @@ class BlockedArgmaxSpec extends AnyFunSuite {
     val c = cents(7)
     val one = asMap(Similarity.nativeAssignBlocked(v, c, Seq("vec_id"), blockCells = 7))
     val many = asMap(Similarity.nativeAssignBlocked(v, c, Seq("vec_id"), blockCells = 2))
-    val windowed = asMap(PQ.coarseAssign(v, c))
+    val windowed = asMap(Similarity.ivfAssigned(v, c, Seq("vec_id")))
     assert(one == windowed && many == windowed)
   }
 

@@ -4,11 +4,16 @@ import java.io.File
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guard on the engine's `spark.graft.*` knobs: a key earns its
-  * place only where a test or a measured crossover needs it, so every key
-  * `src/main` reads is on one reviewed list, and every listed key is set
-  * by at least one spec or by `Battery` (a key nothing sets is an
-  * untested constant). */
+/** Source guards on `src/main`.
+  *
+  * The `spark.graft.*` knobs: a key earns its place only where a test or
+  * a measured crossover needs it, so every key `src/main` reads is on one
+  * reviewed list, and every listed key is set by at least one spec or by
+  * `Battery` (a key nothing sets is an untested constant).
+  *
+  * Doc blocks: Scaladoc keeps only the last of two back-to-back doc
+  * blocks, so the first is silently dropped or read as the doc of the
+  * wrong definition. */
 class ConfKeySpec extends AnyFunSuite {
 
   private val allowed = Set(
@@ -47,5 +52,15 @@ class ConfKeySpec extends AnyFunSuite {
     }
     assert(unset.isEmpty,
       s"keys no spec or Battery sets — make them constants: ${unset.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("no two doc blocks stand back to back in src/main") {
+    val backToBack = """\*/[ \t]*\n(?:[ \t]*\n)*[ \t]*/\*\*""".r
+    val orphans = scalaFiles(new File("src/main/scala")).flatMap { f =>
+      val src = read(f)
+      backToBack.findAllMatchIn(src).map(m => s"${f.getPath}:${src.take(m.start).count(_ == '\n') + 1}")
+    }
+    assert(orphans.isEmpty,
+      s"a doc block followed by another doc block (move it onto its definition): ${orphans.mkString(", ")}")
   }
 }

@@ -47,6 +47,26 @@ class IndexRungSpec extends AnyFunSuite {
     assert(!stageDir(path).exists, "recover left the stage behind")
   }
 
+  test("IVF, IvfSq8 and PQ put every vector in the same cell, built and rebalanced") {
+    // One assignment (Similarity.assign) over one centroid rule: the
+    // stride seeds at build, Similarity.reseed at rebalance.
+    val cellRungs = Seq("IVF", "IvfSq8", "PQ").map(n => rungs.find(_.name == n).get)
+    val paths = cellRungs.map(fresh)
+    def cells(path: String): Map[Long, Long] =
+      spark.read.parquet(IndexSwap.side(spark, path, "vectors"))
+        .select(col("vec_id"), col("cent_id").cast("long"))
+        .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    def agree(when: String): Unit = {
+      val Seq(ivf, sq8, pq) = paths.map(cells)
+      assert(ivf.size == vecs.count() && ivf.values.toSet.size > 1, s"IVF cells $when")
+      assert(sq8 == ivf, s"IvfSq8 and IVF disagree $when")
+      assert(pq == ivf, s"PQ and IVF disagree $when")
+    }
+    agree("after the build")
+    cellRungs.zip(paths).foreach { case (r, p) => r.rung.rebalance(spark, p) }
+    agree("after a rebalance")
+  }
+
   rungs.foreach { r =>
     test(s"${r.name}: a per-call probe runs at most ${r.jobsBefore} Spark jobs, an open handle's no more") {
       val path = IndexMemo.pristine(spark, sf, s"rungspec_${r.name}")(r.build)

@@ -45,7 +45,7 @@ class IvfSq8Spec extends AnyFunSuite {
     val probes = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
       .select(col("vec_id"), col("embedding"),
         graft.functions.VectorExprs.l2normNative(col("embedding")).as("nrm"))
-    val cells = graft.operators.Similarity.ivfRouteFlat(probes, cents, 4)
+    val cells = graft.operators.Similarity.ivfRoute(probes, cents, 4)
       .select("cent_id").distinct().collect().map(_.getLong(0)).toSeq
     val codesRead = graft.operators.Similarity
       .cellScopedRead(spark, path, "codes", cells)
@@ -253,7 +253,7 @@ class IvfSq8Spec extends AnyFunSuite {
     val probes = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
       .select(col("vec_id"), col("embedding"),
         graft.functions.VectorExprs.l2normNative(col("embedding")).as("nrm"))
-    val routed = graft.operators.Similarity.ivfRouteFlat(probes, cents, 4)
+    val routed = graft.operators.Similarity.ivfRoute(probes, cents, 4)
       .select(col("probe_id").as("qid"), col("cent_id"))
     val offCell = res.join(asg, Seq("vec_id"))
       .join(routed, Seq("qid", "cent_id"), "left_anti")

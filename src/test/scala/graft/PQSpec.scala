@@ -403,39 +403,6 @@ class PQSpec extends AnyFunSuite {
       val resHits = exact.map { case (q, ex) => (res.getOrElse(q, Set.empty) & ex).size }.sum
       assert(resHits >= 40, s"residual recall@5 = $resHits/50")
 
-      // The fast (two-tier) build's declared recall dip stays small on
-      // the same corpus: co-members still co-locate (they route through
-      // the same coarse cells), so the floor holds for it too.
-      val pathFast = graft.operators.Similarity.newIndexDir()
-      graft.operators.PQ.buildPqIndex(spark, tmp.toString, pathFast, 16, fastAssign = Some(true))
-      val fast = graft.operators.PQ.probePqIndex(spark, tmp.toString, pathFast, 4, 5)
-        .select("qid", "vec_id").collect()
-        .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-      val fastHits = exact.map { case (q, ex) => (fast.getOrElse(q, Set.empty) & ex).size }.sum
-      assert(fastHits >= 40, s"fastAssign recall@5 = $fastHits/50")
-      // The two-tier assignment must never silently DROP a vector
-      // (pathological corpora could route a vector only to fine-less
-      // coarse cells; the tie-break analysis says no, this pins it).
-      assert(spark.read.parquet(graft.operators.IndexSwap.side(spark, pathFast, "codes")).count() == 200L,
-        "fastAssign dropped or duplicated vectors")
-
-      // residual x fastAssign COMBINED: the memo keys carry both
-      // (fastKey), and the qn36 run above already cached the
-      // flat-assignment residual frames for this corpus — a stale-memo
-      // bug that ignored fastKey would pair fast assignments with
-      // flat-residual codes and silently mis-encode every vector,
-      // which cannot clear the recall floor.
-      val pathRF = graft.operators.Similarity.newIndexDir()
-      graft.operators.PQ.buildPqIndex(spark, tmp.toString, pathRF, 16,
-        fastAssign = Some(true), residual = true)
-      assert(graft.operators.PQ.indexMeta(spark, pathRF)._1)
-      val rf = graft.operators.PQ.probePqIndex(spark, tmp.toString, pathRF, 4, 5)
-        .select("qid", "vec_id").collect()
-        .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-      val rfHits = exact.map { case (q, ex) => (rf.getOrElse(q, Set.empty) & ex).size }.sum
-      assert(rfHits >= 40, s"residual+fastAssign recall@5 = $rfHits/50")
-      assert(spark.read.parquet(graft.operators.IndexSwap.side(spark, pathRF, "codes")).count() == 200L)
-
       // Non-fixture sizing (M=8, byte-class K): the persisted index
       // SELF-DESCRIBES via its codebook table, so the unchanged probe
       // path serves it — any leftover fixture constant in the ADC
