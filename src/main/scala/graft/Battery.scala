@@ -1027,7 +1027,7 @@ object Battery {
         Parquet.read(s, IndexSwap.sideAt(r0, "stats")))
       val pq8 = SQ8.ve6Of(probesDf)
         .select(col("vec_id").as("qid"),
-          SQ8.q8Col(mna, spa).as("pq8"))
+          SQ8.q8Col(lit(mna), lit(spa)).as("pq8"))
       val spansLit = array(spa.map(lit(_)): _*)
       val surv = Parquet.read(s, IndexSwap.sideAt(r0, "codes"))
         .join(broadcast(pq8), expr("true"))

@@ -38,7 +38,7 @@ object Plans {
     "qn09_ann_lsh_topk" -> "band equi-join vs broadcast probes; first-agreeing-band pair dedup as a scalar filter (no SortAggregate over array payloads)",
     "qn14b_sharded_packing" -> "shard-keyed packing: partitioned window cumsum, no global sort",
     "qn19_kmeans_step" -> "k-means assignment through partial+final TopKPerGroup; centroids via one (cluster, pos) partial-agg shuffle; vectors never shuffle whole",
-    "qn20_semantic_dedup" -> "centroids broadcast under a byte gate (chunked assignment over it); argmax via partial-aggregating groupBy; within-cluster pairs via cent_id equi-join (measured-size gated) — quadratic work bounded per cluster, never a corpus cross join",
+    "qn20_semantic_dedup" -> "centroids collected once, every vector assigned by the native exact argmax (Similarity.assign: a map over the scan, no candidate rows, no shuffle); within-cluster pairs via cent_id equi-join (measured-size gated) — quadratic work bounded per cluster, never a corpus cross join",
     "q0z_zonemap_scan" -> "zone-map pruned scan: planning reads the stats table, the data scan lists only surviving files, row predicate re-applied",
     "q0zp_zonemap_partition_pruned" -> "partition pruning composed with zone pruning: partition equalities filter the stats table first, zones prune within surviving partitions, both re-applied to rows",
     "qn20d_semantic_dedup_sharded" -> "executor-sharded streaming dedup: coarse tier broadcast only, fine centroids ride the shuffle as marker rows, one groupByKey on coarse_id into state",

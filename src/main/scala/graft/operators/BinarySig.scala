@@ -62,9 +62,9 @@ object BinarySig extends IndexRung {
   /** Sign-bit signature over a 64-dim float `embedding`: bit d set iff
     * dim d > 0, folded into one long. Bit 63 wraps to Long.MinValue
     * under Java shift semantics (qn34's oracle spells that bit as a
-    * literal because DuckDB's << checks overflow) — this is the qn34
-    * in-flight fold verbatim, so a persisted probe hash-matches the
-    * in-flight oracle.
+    * literal because DuckDB's << checks overflow) — qn34's in-flight
+    * plan signs through this same column, so a persisted probe
+    * hash-matches the in-flight oracle.
     *
     * Width/NULL guard (the [[SQ8.q8Col]] loud-failure discipline): a
     * non-64-dim or NULL-element row would otherwise sign into a

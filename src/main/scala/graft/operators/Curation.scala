@@ -68,21 +68,6 @@ object Curation {
     * one literal, never two settings that can drift. */
   private[graft] val ivfNProbe = 3
 
-  /** Byte budget for qn20's centroid broadcast. k grows ~sqrt(N), so at
-    * corpus scale the centroid table is NOT automatically broadcast-safe
-    * (1e6 centroids x 768 dims ~ 3 GB); over the budget, assignment runs
-    * in centroid chunks instead (see qn20). Conf-overridable so the
-    * chunked path is testable at spec scale. */
-  private def centroidBudgetBytes(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.semdedup.centroidBroadcastMaxBytes")
-      .map(_.toLong).getOrElse(300L * 1024 * 1024)
-
-  /** Chunk count of the most recent qn20 assignment — a test probe
-    * (CurationSpec): the chunk Union collapses behind the assignment
-    * checkpoint's LogicalRDD, so the physical choice is not visible in
-    * the final plan. */
-  @volatile private[graft] var lastAssignChunks: Long = 0L
-
   /** qn23's frequent-gram document-frequency cap: an 8-gram appearing in
     * more than this many documents is treated as boilerplate and dropped
     * before the positional self-join (f docs sharing a gram emit ~f^2
@@ -222,9 +207,9 @@ object Curation {
 
   /** Memoized one-row stats probe over the corpus embeddings: (row
     * count, max dimension). Drives every driver-side decision downstream
-    * — the seed rule (stride, k), the centroid byte gate, the pair-join
-    * side gate, and qn08's grid-vs-cluster dimension dispatch. Budget-
-    * independent, so it is keyed only by (session, corpus). */
+    * — the seed rule (stride, k), the pair-join side gate, and qn08's
+    * grid-vs-cluster dimension dispatch. Keyed only by (session,
+    * corpus). */
   private[operators] def embedStats(s: SparkSession, dir: String): (Long, Int) = {
     val v = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"), l2normNative(col("embedding")).as("nrm"))
@@ -233,99 +218,46 @@ object Curation {
     (stats.getLong(0), if (stats.isNullAt(1)) 0 else stats.getInt(1))
   }
 
-  /** The sqrt(N)-centroid assignment pipeline shared by qn20 and qn08b:
-    * chunk-gated centroid broadcast, packed-long argmax, measured-size
-    * payload rejoin. Returns the CHECKPOINTED (vec_id, embedding, nrm,
-    * cent_id) frame plus the probed row count and max dimension (the
-    * inputs every downstream byte gate needs). */
+  /** The sqrt(N)-centroid assignment shared by qn20, qn08 and qn08b:
+    * the stride seeds collected once and every vector assigned through
+    * [[Similarity.assign]]. Returns the CHECKPOINTED (vec_id,
+    * embedding, nrm, cent_id) frame plus the probed row count and max
+    * dimension (the inputs every downstream byte gate needs). */
   private[graft] def semAssignment(s: SparkSession, dir: String): (DataFrame, Long, Int) = {
     val v = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"), l2normNative(col("embedding")).as("nrm"))
     val (nV, dim) = embedStats(s, dir)
-    (semAssignmentOver(s, v, nV, dim, dir), nV, dim)
+    (semAssignmentOver(s, v, nV, dir), nV, dim)
   }
 
-  /** The assignment pipeline over an arbitrary (vec_id, embedding, nrm)
+  /** The assignment over an arbitrary (vec_id, embedding, nrm)
     * corpus — qn08c routes its planted-near-dup corpus through the
     * IDENTICAL machinery. `memoKey` keys the session memo: a derived
     * corpus must never answer queries posed over the raw one, so callers
-    * pass a distinct key per corpus derivation. */
-  private[graft] def semAssignmentOver(s: SparkSession, v: DataFrame, nV: Long, dim: Int,
+    * pass a distinct key per corpus derivation.
+    *
+    * The seeds keep their own `vec_id` as `cent_id` (the stride lattice
+    * point `cent_idx * stride`, the oracle's id) and collect to the
+    * driver once — k ~ sqrt(N) rows, the IVF centroid table's class.
+    * [[Similarity.assign]] scores every vector against them in one
+    * native map over the scan with the oracle's rules (e6 cosine,
+    * lowest cent_id on ties): no candidate rows, no shuffle. True
+    * SemDeDup scale would swap brute force for ANN assignment (qn20c's
+    * IVF tier). */
+  private[graft] def semAssignmentOver(s: SparkSession, v: DataFrame, nV: Long,
       memoKey: String): DataFrame = {
-    // Both the checkpointed assignment and its one-row stats probe ride
-    // the session memo (the qn17-pairs pattern): qn20, qn08b and any
-    // future consumer share ONE assignment build per (session, corpus,
-    // caps) — exactly what a production pipeline does with its cluster
-    // assignment. The centroid byte budget joins the key via `p` AS A
-    // LONG (an Int key would wrap budgets >= 2 GiB onto each other): it
-    // changes the physical build (chunk count), so a frame built under
-    // one budget must not answer a query posed under another
-    // (CurationSpec forces a 1 KB budget to test the chunked path).
-    val budgetKey = centroidBudgetBytes(s)
+    // The checkpointed assignment rides the session memo (the
+    // qn17-pairs pattern): qn20, qn08b and any future consumer share
+    // ONE assignment build per (session, corpus) — exactly what a
+    // production pipeline does with its cluster assignment.
     val (stride, k) = centroidSeeds(nV)
-    val rowBytes = 48L + 8L * dim
-    val chunkKey = (s, memoKey, budgetKey)
-    val asg = Dedup.memoized("semasg", s, memoKey, budgetKey, 0) {
-    val cents0 = v
-      .filter(col("vec_id") % stride === 0 && col("vec_id") < stride * k)
-      .select(expr(s"vec_id div ${stride}L").as("cent_idx"),
-        col("embedding").as("ce"), col("nrm").as("cn"))
-    // Assignment: centroids ride map-side (the batch `broadcast(cents)`
-    // shape) — but k grows ~sqrt(N), so the broadcast is BYTE-gated
-    // like every other wide side here: over the budget, the centroid
-    // table splits into under-budget index-range chunks, each chunk
-    // broadcasts and scores map-side. True SemDeDup scale (k ~ 1e6)
-    // would swap brute force for ANN assignment (qn10's IVF shape);
-    // chunking keeps exact assignment correct and driver-safe far past
-    // the single-broadcast ceiling.
-    val nChunks = math.max(1L, math.ceil(k * rowBytes / centroidBudgetBytes(s).toDouble).toLong)
-    chunksMemo(chunkKey) = nChunks
-    val cents = if (nChunks > 1) cents0.localCheckpoint(true) else cents0
-    val perChunk = (k + nChunks - 1) / nChunks
-    // The candidate stream is THREE LONGS per (vector, centroid) — the
-    // payload never rides it (keys travel, payloads rejoin).
-    val scored = (0L until nChunks).map { i =>
-      val chunk = cents.filter(col("cent_idx") >= i * perChunk &&
-        col("cent_idx") < math.min(k, (i + 1) * perChunk))
-      v.join(broadcast(chunk), expr("true"))
-        .select(col("vec_id"), col("cent_idx"),
-          e6(cosine(dotNative(col("ce"), col("embedding")), col("cn"), col("nrm"))).as("cscore"))
-    }.reduce(_ unionByName _)
-    // argmax by (cscore desc, cent_id asc), packed into ONE long so
-    // the aggregate stays a codegen'd HashAggregate with map-side
-    // combine — all of one vector's candidates are co-located within a
-    // chunk's scan, so each partition reduces to one row per vec_id
-    // BEFORE the exchange (an N-row shuffle, not N*k). The obvious
-    // max(struct(...)) instead plans as a SortAggregate that sorts the
-    // whole candidate stream (measured 3x qn20's cold wall at sf0.1).
-    // Layout: (cscore + 1e6) < 2^21 in the high bits; the centroid
-    // index (< k <= 2^42 for any conceivable corpus) rides the low 42
-    // bits INVERTED, so score ties break to the lowest cent_id —
-    // exactly the oracle's (cscore DESC, cent_id ASC) rank order.
-    val IdxBits = 42
-    val mask = (1L << IdxBits) - 1
-    val best = scored
-      .groupBy("vec_id")
-      .agg(max(shiftleft(col("cscore") + 1000000L, IdxBits) +
-        (lit(mask) - col("cent_idx"))).as("b"))
-      .select(col("vec_id"),
-        ((lit(mask) - col("b").bitwiseAND(mask)) * stride).as("cent_id"))
-    // Payload rejoin: best is N NARROW rows (two longs), so it rides
-    // the measured-size gate — broadcast under the cap makes the
-    // rejoin map-side (v never exchanges); over it, shuffled-hash on
-    // vec_id. Checkpointed: feeds multiple downstream subtrees.
-    v.join(Dedup.sized(s, best, nV), "vec_id")
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id"))
-      .localCheckpoint(true)
+    Dedup.memoized("semasg", s, memoKey, 0, 0) {
+      val seeds = v.filter(col("vec_id") % stride === 0 && col("vec_id") < stride * k)
+        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"), col("nrm").as("cn"))
+      // An empty corpus has no seeds to collect and nothing to assign.
+      if (nV == 0) v.withColumn("cent_id", lit(null).cast("long"))
+      else Similarity.assign(v, Similarity.centsOf(s, seeds)).localCheckpoint(true)
     }
-    // On a memo hit the build closure never ran, so the diagnostic chunk
-    // probe reads the count recorded by whichever call built this frame.
-    // Same hygiene as the pair memo: drop stopped sessions' entries so
-    // the map never pins dead SparkSessions.
-    chunksMemo.keySet.filter(_._1.sparkContext.isStopped)
-      .foreach(chunksMemo.remove)
-    lastAssignChunks = chunksMemo.getOrElse(chunkKey, 1L)
-    asg
   }
 
   /** The coarse table plus routing frames of the IVF assignment: collects
@@ -397,10 +329,16 @@ object Curation {
       val scored = vr.join(Dedup.sizedWide(s, cents, k, rowBytes), "coarse_id")
         .select(col("vec_id"), col("cent_idx"),
           e6(cosine(dotNative(col("ce"), col("embedding")), col("cn"), col("nrm"))).as("cscore"))
-      // Packed-long argmax, identical layout to the exact tier: with the
-      // broadcast side each vector's candidates are co-located, so the
-      // HashAggregate reduces to one row per vec_id before the exchange;
-      // with the shuffled side, to at most nProbe rows.
+      // argmax by (cscore desc, cent_id asc) over each vector's own
+      // candidate subset, packed into ONE long so the aggregate stays a
+      // codegen'd HashAggregate with map-side combine (max(struct(...))
+      // plans as a SortAggregate over the whole candidate stream). With
+      // the broadcast side each vector's candidates are co-located, so
+      // it reduces to one row per vec_id before the exchange; with the
+      // shuffled side, to at most nProbe rows. Layout: (cscore + 1e6) <
+      // 2^21 in the high bits; the centroid index (< k <= 2^42) rides
+      // the low 42 bits INVERTED, so score ties break to the lowest
+      // cent_id — the oracle's (cscore DESC, cent_id ASC) rank order.
       val IdxBits = 42
       val mask = (1L << IdxBits) - 1
       val best = scored
@@ -484,11 +422,6 @@ object Curation {
       .filter(col("score_e6") >= 990000)
       .orderBy("vec_a", "vec_b")
   }
-
-  /** Chunk count per (session, corpus, budget) assignment build —
-    * consulted so [[lastAssignChunks]] stays truthful on memo hits. */
-  private val chunksMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), Long]
 
   val all: Seq[Q] = Seq(
 

@@ -70,7 +70,7 @@ object IvfSq8 extends IndexRung {
   private def cellSides(asg: DataFrame, mna: Array[Long],
       spa: Array[Long]): Seq[(String, DataFrame)] =
     Seq("vectors" -> asg,
-      "codes" -> SQ8.ve6Of(asg).select(col("vec_id"), SQ8.q8Col(mna, spa).as("q8"))
+      "codes" -> SQ8.ve6Of(asg).select(col("vec_id"), SQ8.q8Col(lit(mna), lit(spa)).as("q8"))
         .join(asg.select(col("vec_id"), col("cent_id")), Seq("vec_id")))
 
   /** Assign (vec_id, embedding) rows against the stored centroids and
@@ -183,7 +183,7 @@ object IvfSq8 extends IndexRung {
     // Probe bytes: quantize against the stored envelope, clamped
     // (identity for in-corpus probes — the qn45 oracle parity).
     val pq8 = SQ8.ve6Of(probesV)
-      .select(col("vec_id").as("qid"), SQ8.q8Col(mna, spa).as("pq8"))
+      .select(col("vec_id").as("qid"), SQ8.q8Col(lit(mna), lit(spa)).as("pq8"))
     // Rank WITHIN the probed cells: the cell-scoped listing bounds the
     // files opened at O(probed cells); the native int loop bounds the
     // per-row cost. Tombstoned rows are anti-joined out HERE — before

@@ -71,34 +71,35 @@ object SQ8 extends IndexRung {
       .groupBy("pos").agg(min(col("x")).as("mn"),
         greatest(lit(1L), max(col("x")) - min(col("x"))).as("sp"))
 
-  /** The affine byte map over an `emb6` column, stats as plan-time
-    * literal arrays. Integer floor division as (a - a%b)/b: the
-    * long/long `/` is a double, but an exactly-divisible numerator
+  /** The affine byte map over an `emb6` column, the envelope as two
+    * pos-major array columns (`lit` of the stored arrays, or qn38's
+    * crossJoined in-flight row). Integer floor division as (a - a%b)/b:
+    * the long/long `/` is a double, but an exactly-divisible numerator
     * below 2^53 divides exactly, so the floor matches DuckDB's `//`
     * bit-for-bit. Every byte saturates to [0, 255] — identity for
-    * values inside the stored envelope (every build-corpus row by
+    * values inside the envelope (every build-corpus row by
     * construction, so the qn38 oracle parity is unaffected), the
     * declared append/serve semantics outside it.
     *
     * Width/NULL guard (the [[PQ]] vsubKeyed loud-failure discipline —
-    * round-14 ADVICE): a row whose width differs from the stored
-    * envelope's D, or with a NULL element, would otherwise quantize
-    * through out-of-bounds `element_at` / null arithmetic into NULL q8
-    * bytes — and a NULL qd2 sorts FIRST in the ascending shortlist
-    * window, so malformed rows would silently dominate every probe's
-    * shortlist (a valid-looking index with degraded recall). O(D)
-    * per row, same cost class as the transform itself. */
-  private[graft] def q8Col(mna: Array[Long], spa: Array[Long]): Column = {
-    val d = mna.length
-    val checked = when(size(col("emb6")) === d &&
+    * round-14 ADVICE): a row whose width differs from the envelope's D,
+    * or with a NULL element, would otherwise quantize through
+    * out-of-bounds `element_at` / null arithmetic into NULL q8 bytes —
+    * and a NULL qd2 sorts FIRST in the ascending shortlist window, so
+    * malformed rows would silently dominate every probe's shortlist (a
+    * valid-looking index with degraded recall). O(D) per row, same
+    * cost class as the transform itself. */
+  private[graft] def q8Col(mna: Column, spa: Column): Column = {
+    val checked = when(size(col("emb6")) === size(mna) &&
         !exists(col("emb6"), x => x.isNull), col("emb6"))
       .otherwise(raise_error(concat(
         lit("SQ8: embedding width "), size(col("emb6")).cast("string"),
-        lit(s" != stats dim $d, or NULL element — the corpus must match the stored" +
+        lit(" != stats dim "), size(mna).cast("string"),
+        lit(", or NULL element — the corpus must match the stored" +
           " envelope's dimensionality and carry no NULLs; clean/resize before encoding"))))
     transform(checked, (x, i) => {
-      val a = (x - element_at(lit(mna), i + 1)) * 255L
-      val sp = element_at(lit(spa), i + 1)
+      val a = (x - element_at(mna, i + 1)) * 255L
+      val sp = element_at(spa, i + 1)
       least(greatest(((a - (a % sp)) / sp).cast("long"), lit(0L)), lit(255L))
     })
   }
@@ -133,7 +134,8 @@ object SQ8 extends IndexRung {
       st: => State): Seq[(String, DataFrame)] = {
     val (mna, spa) = st
     val v = IndexSwap.normed(rows)
-    Seq("vectors" -> v, "codes" -> ve6Of(v).select(col("vec_id"), q8Col(mna, spa).as("q8")))
+    Seq("vectors" -> v,
+      "codes" -> ve6Of(v).select(col("vec_id"), q8Col(lit(mna), lit(spa)).as("q8")))
   }
 
   /** Stat the envelope over `v` and stage all three sides — the shared
@@ -247,7 +249,7 @@ object SQ8 extends IndexRung {
     // out-of-corpus probe may fall outside it; identity for in-range
     // probes, so the qn38 parity is unaffected).
     val pq8 = ve6Of(probesV)
-      .select(col("vec_id").as("qid"), q8Col(mna, spa).as("pq8"))
+      .select(col("vec_id").as("qid"), q8Col(lit(mna), lit(spa)).as("pq8"))
     // Rank loop is the native fused expression (round 15): the HOF
     // form allocated a zip_with array per candidate pair — the
     // measured probe wall at 1M (ladder battery). Bit-identical
@@ -343,7 +345,7 @@ object SQ8 extends IndexRung {
       java.util.Arrays.asList(probeRows: _*), probesRaw.schema)
     val pe6 = ve6Of(probesV)
     val pq8 = pe6.select(col("vec_id").as("qid"), col("emb6").as("pe6"),
-      q8Col(mna, spa).as("pq8"))
+      q8Col(lit(mna), lit(spa)).as("pq8"))
     val spansLit = array(spa.map(lit(_)): _*)
     val lb = graft.functions.VectorExprs.intSqLowerBoundNative(
       col("q8"), col("pq8"), spansLit)

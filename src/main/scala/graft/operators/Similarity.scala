@@ -100,10 +100,9 @@ object Similarity extends IndexRung {
   }
 
   /** Which branch qn08's dimension dispatch took on its most recent
-    * plan build ("grid" | "cluster") — a test probe, like
-    * [[Curation.lastAssignChunks]]: the cluster branch's assignment
-    * collapses behind a checkpoint, so the choice is not reliably
-    * readable from the final plan string. */
+    * plan build ("grid" | "cluster") — a test probe: the cluster
+    * branch's assignment collapses behind a checkpoint, so the choice
+    * is not reliably readable from the final plan string. */
   @volatile private[graft] var lastNearPairPath: String = ""
 
   private def vecs(spark: SparkSession, dir: String): DataFrame =
@@ -291,7 +290,7 @@ object Similarity extends IndexRung {
       // vec_id is dense [0, nV0) (pinned by the recall spec), so the
       // plant adds exactly min(plantCount, nV0) rows — no extra count job.
       val nV = nV0 + math.min(plantCount.toLong, nV0)
-      val asg = Curation.semAssignmentOver(s, plantedVecs(s, dir), nV, dim, dir + "#planted")
+      val asg = Curation.semAssignmentOver(s, plantedVecs(s, dir), nV, dir + "#planted")
       Curation.clusterPairsOf(s, asg, nV, dim)
     },
 
@@ -399,7 +398,7 @@ object Similarity extends IndexRung {
     // cent_id (the plan the probeIvfIndexWith contract names for
     // over-bound probe sets). At the 16-cell fixture the routing
     // DISPATCH ([[coarseRouteMinCentroids]]) picks FLAT routing — the
-    // coarse tier's fixed overhead loses until ~256 centroids — so the
+    // coarse tier's fixed overhead loses until ~700 centroids — so the
     // oracle replays the flat route; the coarse branch is pinned by
     // qn10e below. The oracle replays the identical pipeline with the
     // probe filter widened to the whole corpus, so the assignment-join
@@ -1278,17 +1277,13 @@ object Similarity extends IndexRung {
     Map("binary" -> 5L, "matryoshka" -> 4L, "sq8" -> 20L)
 
   /** qn34's plan (shared by the in-flight gate and qn44's floor):
-    * sign signature — one fold over the vector, bit d set iff dim
-    * d > 0; shiftleft(1L, 63) wraps to Long.MinValue in Java
-    * semantics (the oracle spells that bit as a literal because
-    * DuckDB's << checks overflow) — 16-wide Hamming shortlist, exact
-    * cosine re-rank. */
+    * sign signature through the BinarySig rung's encoder
+    * ([[BinarySig.sigCol]]: bit d set iff dim d > 0, bit 63 wrapping
+    * to Long.MinValue) — 16-wide Hamming shortlist, exact cosine
+    * re-rank. */
   private[graft] def qn34Plan(s: SparkSession, dir: String): DataFrame = {
     val v = vecs(s, dir)
-    val sig = aggregate(sequence(lit(0), lit(63)), lit(0L), (acc, d) =>
-      acc.bitwiseOR(when(element_at(col("embedding"), d + 1).cast("double") > 0,
-        call_function("shiftleft", lit(1L), d)).otherwise(lit(0L))))
-    val sg = v.withColumn("sig", sig).localCheckpoint(true)
+    val sg = v.withColumn("sig", BinarySig.sigCol(col("embedding"))).localCheckpoint(true)
     val probes = sg.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("pe"),
         col("nrm").as("pn"), col("sig").as("psig"))
@@ -1350,31 +1345,21 @@ object Similarity extends IndexRung {
       .orderBy("qid", "rnk")
   }
 
-  /** qn38's plan (shared with qn44): per-dim envelope — ONE 64-group
-    * partial agg, assembled pos-major (the cbPivot pattern) into one
-    * broadcastable row — affine byte map (integer floor division as
-    * (a - a%b)/b: the long/long `/` is a double, but an
-    * exactly-divisible numerator below 2^53 divides exactly, so the
-    * floor matches DuckDB's `//` bit-for-bit), integer-L2 rank,
+  /** qn38's plan (shared with qn44), through the SQ8 rung's encoders:
+    * the e6 view ([[SQ8.ve6Of]]) and per-dim envelope
+    * ([[SQ8.statsOf]] — ONE 64-group partial agg), assembled pos-major
+    * (the cbPivot pattern) into one broadcastable row that the affine
+    * byte map ([[SQ8.q8Col]]) reads as columns; integer-L2 rank,
     * 16-wide shortlist, exact cosine re-rank. */
   private[graft] def qn38Plan(s: SparkSession, dir: String): DataFrame = {
-    val ve6 = Tables.embeddings(s, dir).select(col("vec_id"),
-      transform(col("embedding"),
-        x => floor(x.cast("double") * 1000000).cast("long")).as("emb6"))
-    val st = ve6.select(posexplode(col("emb6")).as(Seq("pos", "x")))
-      .groupBy("pos").agg(min(col("x")).as("mn"),
-        greatest(lit(1L), max(col("x")) - min(col("x"))).as("sp"))
-    val sta = st.agg(
+    val ve6 = SQ8.ve6Of(Tables.embeddings(s, dir))
+    val sta = SQ8.statsOf(ve6).agg(
       transform(array_sort(collect_list(struct(col("pos"), col("mn")))),
         z => z.getField("mn")).as("mna"),
       transform(array_sort(collect_list(struct(col("pos"), col("sp")))),
         z => z.getField("sp")).as("spa"))
-    val q8 = transform(col("emb6"), (x, i) => {
-      val a = (x - element_at(col("mna"), i + 1)) * 255L
-      val sp = element_at(col("spa"), i + 1)
-      ((a - (a % sp)) / sp).cast("long")
-    })
-    val qv = ve6.crossJoin(broadcast(sta)).select(col("vec_id"), q8.as("q8"))
+    val qv = ve6.crossJoin(broadcast(sta))
+      .select(col("vec_id"), SQ8.q8Col(col("mna"), col("spa")).as("q8"))
     val v = vecs(s, dir)
     val probes = qv.filter(col("vec_id") < 10).join(v, Seq("vec_id"))
       .select(col("vec_id").as("qid"), col("q8").as("pq8"),
@@ -1858,7 +1843,8 @@ object Similarity extends IndexRung {
   private val nativeAssignTotalMaxBytes: Long = 2L << 30
 
   /** The one cell assignment of every IVF, IvfSq8 and PQ build,
-    * rebalance and append, keeping the `keep` columns of `v` beside
+    * rebalance and append, and of SemDeDup's exact clusters (qn20,
+    * qn08, qn08b, qn08c), keeping the `keep` columns of `v` beside
     * `cent_id`: the native argmax ([[nativeAssignWith]] — EXACT at any
     * cell count, a pure map over the scan, the plan-baked literal up
     * to [[nativeAssignMaxCells]] and the broadcast payload past it).

@@ -26,7 +26,6 @@ class ConfKeySpec extends AnyFunSuite {
     "spark.graft.pairJoin.allPairsMaxGroups",
     "spark.graft.pairJoin.broadcastMaxRows",
     "spark.graft.pairJoin.vocabDriverRankMaxTokens",
-    "spark.graft.semdedup.centroidBroadcastMaxBytes",
     "spark.graft.sq8.rangeCollectMax")
 
   private val key = """spark\.graft\.[a-zA-Z0-9]+\.[A-Za-z0-9]+""".r

@@ -252,22 +252,56 @@ class CurationSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.pairJoin.broadcastMaxRows")
   }
 
-  test("qn20 centroid broadcast is byte-gated: chunked assignment matches single-broadcast") {
-    def run() = SparkEntry.queries("qn20_semantic_dedup")(spark, sf)
-    // The chunk Union collapses behind the assignment checkpoint, so the
-    // physical choice is observed via the planning probe, not the plan.
-    val wholeRows = run().collect().map(_.toString).toSeq
-    assert(graft.operators.Curation.lastAssignChunks == 1L,
-      "default budget should assign against ONE broadcast centroid table")
-    try {
-      // A one-KB budget forces k*rowBytes over it -> multiple chunks.
-      spark.conf.set("spark.graft.semdedup.centroidBroadcastMaxBytes", "1024")
-      val chunkedRows = run().collect().map(_.toString).toSeq
-      assert(graft.operators.Curation.lastAssignChunks > 1L,
-        "tiny budget should split the centroid table into chunks")
-      // identical accounting either way: chunking is physical only
-      assert(chunkedRows == wholeRows)
-    } finally spark.conf.unset("spark.graft.semdedup.centroidBroadcastMaxBytes")
+  /** The qn20 seed table over a (vec_id, embedding, nrm) frame: the
+    * stride seeds keyed by their own vec_id, the oracle's cent_id. */
+  private def semSeeds(v: org.apache.spark.sql.DataFrame, n: Long) = {
+    val (stride, k) = graft.operators.Curation.centroidSeeds(n)
+    v.filter(col("vec_id") % stride === 0 && col("vec_id") < stride * k)
+      .select(col("vec_id").as("cent_id"), col("embedding").as("ce"), col("nrm").as("cn"))
+  }
+
+  private def normed(dir: String) = Tables.embeddings(spark, dir).select(col("vec_id"),
+    col("embedding"), graft.functions.VectorExprs.l2normNative(col("embedding")).as("nrm"))
+
+  private def cellsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Option[Long]] =
+    df.select(col("vec_id"), col("cent_id")).collect()
+      .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Long])).toMap
+
+  test("qn20's assignment gives every vector IVF's cell over the same seeds, on both native routes") {
+    import graft.operators.Similarity
+    val (asg, n, _) = graft.operators.Curation.semAssignment(spark, sf)
+    val got = cellsOf(asg)
+    val v = normed(sf)
+    val seeds = semSeeds(v, n)
+    assert(got.size == n && got.values.flatten.toSet.size > 1, "assignment covers the corpus")
+    assert(got == cellsOf(Similarity.ivfAssigned(v, seeds, Seq("vec_id"))),
+      "the window form disagrees")
+    // The broadcast payload route, forced at fixture size.
+    assert(got == cellsOf(Similarity.nativeAssignBlocked(v, seeds, Seq("vec_id"), blockCells = 4)),
+      "the broadcast route disagrees")
+  }
+
+  test("qn20's assignment takes IVF's rules on a zero-norm and a NULL-embedding row") {
+    import spark.implicits._
+    // 64 unit vectors on a circle plus one zero vector (id 64) and one
+    // NULL embedding (id 65); neither is a seed (stride 7). A zero norm
+    // scores NaN against every seed, which the native argmax floors to
+    // 0, so the row lands on the lowest cent_id (the window form's
+    // ANSI division throws DIVIDE_BY_ZERO here); a NULL embedding
+    // assigns to no cell.
+    val dir = java.nio.file.Files.createTempDirectory("graft_qn20_edge").toString
+    ((0 until 64).map { i =>
+      val th = 2.0 * math.Pi * i / 64
+      (i.toLong, Array(math.cos(th).toFloat, math.sin(th).toFloat))
+    } ++ Seq(64L -> Array(0f, 0f), 65L -> (null: Array[Float])))
+      .toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
+    val (asg, n, _) = graft.operators.Curation.semAssignment(spark, dir)
+    val got = cellsOf(asg)
+    assert(n == 66 && got.size == 66)
+    assert(got(64L).contains(0L), s"zero-norm row: ${got(64L)}")
+    assert(got(65L).isEmpty, s"NULL-embedding row: ${got(65L)}")
+    assert(got == cellsOf(graft.operators.Similarity.nativeAssignBlocked(
+      normed(dir), semSeeds(normed(dir), n), Seq("vec_id"))))
   }
 
   test("qp02 per-cluster argmax plans through TopKPerGroup") {
